@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: one JSON line with per-query wall seconds at
   * SPARK_GRAFT_SF_DIR. Every query is first run once at sf0.001 so JVM
@@ -18,44 +17,19 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Sessions.cpus
+    val spark = Sessions.local(cpus)
     // optional comma-separated query-name filter for local iteration
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val names = SparkEntry.queries.keys.toSeq.sorted
       .filter(n => only.forall(_.contains(n)))
-    // Warmup pass: triggers codegen + JIT per plan shape before timing.
-    // SPARK_GRAFT_WARMUP selects the rhythm:
-    //   tiny  (default) — one pass at sf0.001: cheap, but the tiny inputs
-    //           train C2 profiles on short-loop paths, and on array-heavy
-    //           fused kernels (q_hybrid_rank_scale) that pollution makes
-    //           whole JVMs land bimodal at the target SF (~2.6 vs ~5.2 s
-    //           — see BASELINE's JIT-profile analysis);
-    //   target — warm up on the BENCH SF itself: profiles train on the
-    //           loop shapes the timed pass measures (costs one extra
-    //           full-scale pass; the de-pollution option);
-    //   none  — no separate pass (the timed min-of-2's first run absorbs
-    //           compilation; useful for isolating JIT effects).
-    val warmupDir = sys.env.getOrElse("SPARK_GRAFT_WARMUP", "tiny") match {
-      case "tiny"   => Some("/root/testdata/sf0.001")
-      case "target" => Some(sfDir)
-      case "none"   => None
-      case other    => throw new IllegalArgumentException(
-        s"SPARK_GRAFT_WARMUP='$other' (expected tiny | target | none)")
-    }
-    warmupDir.foreach { dir =>
-      names.foreach { name =>
-        try SparkEntry.queries(name)(spark, dir).count()
-        catch { case _: Throwable => () }
-      }
+    // Warmup pass at sf0.001: triggers codegen + JIT per plan shape
+    // before timing. (Warming up on the bench SF itself, or not at all,
+    // was priced in BASELINE.md: neither removes q_hybrid_rank_scale's
+    // bimodal JVMs, so the cheap tiny pass stays the only rhythm.)
+    names.foreach { name =>
+      try SparkEntry.queries(name)(spark, "/root/testdata/sf0.001").count()
+      catch { case _: Throwable => () }
     }
     // deterministic clean slate between timed runs: blocking-unpersist
     // every lingering localCheckpoint block instead of waiting for GC +

@@ -1,16 +1,9 @@
 // plan-inspection main: `sbt "runMain graft.Explain q_name ..."` prints
 // the formatted physical plan of any contract query at sf0.01
 package graft
-import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus)
     val dir = "/root/testdata/sf0.01"
     args.foreach { q =>
       println(s"===== $q =====")

@@ -33,15 +33,7 @@ object LexicalZipfGate {
     val sfDir = args(0)
     val championSize = args.lift(1).map(_.toInt).getOrElse(64)
     val rareRank = args.lift(2).map(_.toInt).getOrElse(4000)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
     import graft.ops.{Lexical, Similarity}
 
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")

@@ -4,8 +4,10 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.connectors.rest.{HttpTransport, RestConfig, RestEngine, StaticPagesTransport}
+import graft.connectors.rest.RestEngine.RestSource
 import graft.core._
-import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis, UrlFrontier}
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2, with a DuckDB-equivalent `oracleSql` for every
@@ -44,6 +46,17 @@ object SparkEntry {
     */
   private def streamEvents(s: SparkSession, dir: String): DataFrame =
     EventTime.streamTable(s, dir, "events.parquet")
+
+  /** The documents table as a file stream (streaming sources don't
+    * infer a schema).
+    */
+  private def streamDocuments(s: SparkSession, dir: String): DataFrame =
+    s.readStream
+      .schema(StructType(Seq(
+        StructField("doc_id", LongType), StructField("text", StringType),
+        StructField("lang", StringType), StructField("source", StringType),
+        StructField("n_chars", LongType))))
+      .parquet(s"$dir/[d]ocuments.parquet")
 
   /** Literal cast to the column's own (possibly NTZ) timestamp type. */
   private def tsLit(df: DataFrame, colName: String, v: String): Column =
@@ -163,6 +176,334 @@ object SparkEntry {
         (e, MediaCodecs.encodeGifGrayFrames(w, h, nF,
           (f, x, y) => ((g * 23 + 13 * f + 7 * x + 11 * y + v) % 256).toInt))
       }.toDF("media_id", "content")
+  }
+
+  /** The sign-quantized fixed IVF quantizer of the embedding contracts:
+    * 8 dim-32 centroids with ±0.125 components (exact binary fractions),
+    * so cell assignment, probe order and within-cell cosine all replay
+    * bit-exactly in SQL; scaling the ±1/√dim quantizer to ±0.125
+    * preserves every argmax.
+    */
+  private def signCentroids: Seq[(Int, Array[Double])] =
+    Similarity.fixedCentroids(dim = 32, k = 8)
+      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+
+  /** The fixed pre-trained quantizer of the dim-64 `embeddings` ANN
+    * contracts (index BUILD is a separate, spec'd phase).
+    */
+  private def annCentroids: Seq[(Int, Array[Double])] =
+    Similarity.fixedCentroids(dim = 64, k = 8)
+
+  /** Hashed-BoW dim-32 embeddings of `docs`, pinned: both ANN sides
+    * derive from them, so the embed kernel (one md5 per token) runs once
+    * — vectors are tiny (id + 32 doubles), so the checkpoint is cheap at
+    * any corpus size. The repartition spreads the local fixture's ONE
+    * parquet split across cores for the CPU-bound kernel + scoring; at
+    * corpus scale the scan already yields thousands of splits.
+    */
+  private def embedded(s: SparkSession, docs: DataFrame): DataFrame =
+    graft.ops.Embedding.embedDocuments(
+      docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
+      .localCheckpoint(true)
+
+  /** ANN sides of `df`: queries (`q_id`, `q_vec`) where `isQuery`,
+    * candidates (`n_id`, `n_vec`) where `isCand`.
+    */
+  private def vecSides(df: DataFrame, vecCol: String, isQuery: Column,
+      isCand: Column): (DataFrame, DataFrame) =
+    (df.filter(isQuery).select(col("vec_id").as("q_id"), col(vecCol).as("q_vec")),
+      df.filter(isCand).select(col("vec_id").as("n_id"), col(vecCol).as("n_vec")))
+
+  /** The embed contracts' split of `embedded` docs: every 100th doc is a
+    * query, the rest the corpus.
+    */
+  private def embedSides(emb: DataFrame): (DataFrame, DataFrame) =
+    (emb.filter(col("doc_id") % 100 === 0)
+      .select(col("doc_id").as("q_id"), col("embedding").as("q_vec")),
+      emb.filter(col("doc_id") % 100 =!= 0)
+        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec")))
+
+  /** Top-k ANN result as (q_id, rank as long, n_id) in rank order. */
+  private def annRanked(df: DataFrame): DataFrame =
+    df.select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
+      .orderBy("q_id", "rank")
+
+  /** A fresh frontier root and its state store. */
+  private def frontierRoot(prefix: String): (String, StateStore) = {
+    val dest = java.nio.file.Files.createTempDirectory(prefix).toString
+    (dest, new StateStore(java.nio.file.Paths.get(dest, "state.json")))
+  }
+
+  /** The frontier contracts' fetch: each to-do URL lands as a page tagged
+    * with its `wave`, so a page re-fetched in a later wave duplicates its
+    * url_canon and breaks the oracle hash.
+    */
+  private def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
+    todo.select(col("url_canon"), lit(wave.toLong).as("wave"))
+
+  /** [[fetchWave]] with an md5 content hash per page. */
+  private def fetchWaveHashed(wave: Int)(todo: DataFrame): DataFrame =
+    todo.select(col("url_canon"), md5(col("url_canon")).as("content_hash"),
+      lit(wave.toLong).as("wave"))
+
+  /** The politeness contracts' constant plan: events < 3500 as URLs over
+    * 7 hosts, every other one in a non-canonical surface form.
+    */
+  private def politePlan(s: SparkSession, dir: String): DataFrame =
+    t(s, dir, "events").filter(col("event_id") < 3500)
+      .select(concat(
+        when(col("event_id") % 2 === 0, lit("http://")).otherwise(lit("HTTPS://www.")),
+        lit("h"), (col("event_id") % 7).cast("string"),
+        lit(".example.com/p/"), col("event_id").cast("string")).as("url"))
+
+  /** Most URLs one host fetched in a landed wave; coalesce(0): a tiny
+    * corpus can drain early, leaving an empty frame whose max is null.
+    */
+  private def busiestHost(landed: DataFrame): Long =
+    landed.groupBy(regexp_extract(col("url_canon"), "^[^/?]+", 0)).count()
+      .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+
+  /** The committed pages archive as (host, wave, url_canon). */
+  private def hostPages(s: SparkSession, dest: String, state: StateStore): DataFrame =
+    UrlFrontier.committedPages(s, dest, state)
+      .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
+        col("wave"), col("url_canon"))
+
+  /** Pages per (host, wave) with the first and last URL. */
+  private def hostWaveCounts(pages: DataFrame): DataFrame =
+    pages.groupBy("host", "wave")
+      .agg(count(lit(1)).as("n_pages"),
+        min("url_canon").as("first_url"), max("url_canon").as("last_url"))
+      .orderBy("host", "wave")
+
+  /** The robots contracts' two-wave crawl: wave 1 under `rules`, then the
+    * sites relax their rules and wave 2 drains exactly the held-back URLs
+    * (they never entered the seen-set); pages by URL.
+    */
+  private def crawlUnderRobots(s: SparkSession, prefix: String, planned: DataFrame,
+      rules: DataFrame): DataFrame = {
+    val (dest, state) = frontierRoot(prefix)
+    UrlFrontier.runWave(s, dest, state, planned, "url", robots = Some(rules))(fetchWave(1))
+    UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(2))
+    require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(3)).isEmpty,
+      "frontier not drained after the rules lifted")
+    hostPages(s, dest, state).orderBy("url_canon")
+  }
+
+  /** The q_fleet_* fixture: documents with doc_id < 250 as GitHub issue
+    * JSON (1-3 labels by n_chars), in pages of 100.
+    */
+  private def issueChunks(s: SparkSession, dir: String): Seq[Seq[String]] =
+    t(s, dir, "documents").filter(col("doc_id") < 250)
+      .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect().toSeq
+      .map { r =>
+        val k = (r.getLong(2) % 3).toInt + 1
+        val labels = (0 until k).map(i => s"""{"name":"l$i"}""").mkString(",")
+        s"""{"id":${r.getLong(0)},"updated_at":"2024-01-01T00:00:00Z","lang":"${r.getString(1)}","labels":[$labels]}"""
+      }.grouped(100).toSeq
+
+  /** page_number pagination of `chunks`, terminated by an empty page;
+    * transport keys carry alphabetically-sorted params.
+    */
+  private def pageNumberPages(chunks: Seq[Seq[String]]): Map[String, String] = {
+    def pageKey(n: Option[Int]) = "repos/octo/repo/issues?direction=asc" +
+      n.fold("")(p => s"&page=$p") + "&per_page=100&sort=updated&state=all"
+    chunks.zipWithIndex.map { case (chunk, i) =>
+      pageKey(if (i == 0) None else Some(i + 1)) -> chunk.mkString("[", ",", "]")
+    }.toMap + (pageKey(Some(chunks.size + 1)) -> "[]")
+  }
+
+  /** RFC 5988 header_link pagination of `chunks`: every page but the last
+    * carries a Link rel=next header; the last page's MISSING link — not
+    * an empty page — terminates the loop.
+    */
+  private def headerLinkTransport(chunks: Seq[Seq[String]]): StaticPagesTransport = {
+    val firstKey = "repos/octo/repo/issues?direction=asc&sort=updated&state=all"
+    def pageKey(i: Int) = if (i == 0) firstKey else s"repos/octo/repo/issues?page=${i + 1}"
+    def linkTo(i: Int) =
+      s"""<https://api.github.com/repos/octo/repo/issues?page=${i + 1}>; rel="next", """ +
+        s"""<https://api.github.com/repos/octo/repo/issues?page=${chunks.size}>; rel="last""""
+    StaticPagesTransport(
+      chunks.zipWithIndex.map { case (chunk, i) => pageKey(i) -> chunk.mkString("[", ",", "]") }.toMap,
+      chunks.indices.dropRight(1).map(i => pageKey(i) -> Map("link" -> linkTo(i + 1))).toMap)
+  }
+
+  /** The q_fleet_* github issues source as a config DOCUMENT, with
+    * `paginator` as the endpoint's paginator value (None: no key).
+    */
+  private def githubIssuesConfig(paginator: Option[String]): RestSource =
+    RestConfig.fromJson(s"""
+      {"name": "github",
+       "client": {"base_url": "https://api.github.com",
+                  "headers": {"Accept": "application/vnd.github+json"}},
+       "resources": [
+         {"name": "issues",
+          "endpoint": {"path": "repos/octo/repo/issues",
+                       "params": {"state": "all", "sort": "updated", "direction": "asc",
+                                  "since": "{incremental.start_value}"},
+                       ${paginator.fold("")(p => s""""paginator": $p,""")}
+                       "incremental": {"cursor_path": "updated_at"}},
+          "primary_key": "id",
+          "write_disposition": "merge"}
+       ]}""")
+
+  /** Lands `src`'s issues resource over `transport` through a Pipeline
+    * run (normalize → labels child table → merge disposition) and joins
+    * the LANDED root and child tables back on _dlt_id, per language.
+    */
+  private def landedIssueLabels(s: SparkSession, src: RestSource, transport: HttpTransport,
+      name: String): DataFrame = {
+    import graft.pipeline.{Pipeline, ResourceDef, SourceDef}
+    val issuesRes = src.resources.find(_.name == "issues").get
+    val dest = java.nio.file.Files.createTempDirectory(s"graft_$name").toString
+    val stateDir = java.nio.file.Files.createTempDirectory(s"graft_${name}_state").toString
+    new Pipeline(s, s"verify_$name", dest, stateDir).run(SourceDef(src.name, Seq(ResourceDef(
+      name = "issues",
+      hints = issuesRes.hints,
+      build = ctx => RestEngine.readResource(ctx.spark, src, issuesRes, transport, Some(ctx.state))))))
+    val root = s.read.parquet(s"$dest/issues")
+    val labels = s.read.parquet(s"$dest/issues__labels")
+    root.select(col("lang"), col("_dlt_id"))
+      .join(labels.select(col("_dlt_parent_id")), col("_dlt_id") === col("_dlt_parent_id"))
+      .groupBy("lang")
+      .agg(countDistinct(col("_dlt_id")).as("n_issues"), count(lit(1)).as("n_labels"))
+      .orderBy("lang")
+  }
+
+  /** The q_rest_* fixture: documents under `maxId` as JSON items in
+    * doc_id order, plus a planted `secret` field when asked.
+    */
+  private def docItems(s: SparkSession, dir: String, maxId: Int,
+      secret: Boolean = false): Seq[String] =
+    t(s, dir, "documents").filter(col("doc_id") < maxId)
+      .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect().toSeq.map { r =>
+        val planted = if (secret) s""","secret":"s${r.getLong(0)}"""" else ""
+        s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)}$planted}"""
+      }
+
+  /** Offset pagination of `items` under `docs`, terminated by an empty page. */
+  private def offsetPages(items: Seq[String], pageSize: Int): Map[String, String] = {
+    val chunks = items.grouped(pageSize).toSeq
+    chunks.zipWithIndex.map { case (chunk, i) =>
+      s"docs?limit=$pageSize&offset=${i * pageSize}" -> s"""{"data":[${chunk.mkString(",")}]}"""
+    }.toMap + (s"docs?limit=$pageSize&offset=${chunks.size * pageSize}" -> """{"data":[]}""")
+  }
+
+  /** Rows and total n_chars per language. */
+  private def langTotals(df: DataFrame): DataFrame =
+    df.groupBy("lang").agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
+      .orderBy("lang")
+
+  /** The URL-dedup family's planted `url`: five surface forms per page
+    * group (`id` div 5) sharing one canonical page — scheme/www/host
+    * case, trailing slash + scrambled param order, tracking params,
+    * fragment. [[plantedUrlExpr]] is its SQL twin.
+    */
+  private def plantedUrl(id: String): Column = {
+    val g = expr(s"$id div 5").cast("string")
+    val v = col(id) % 5
+    when(v === 0, concat(lit("http://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2")))
+      .when(v === 1, concat(lit("HTTPS://WWW.SITE"), g, lit(".EXAMPLE.COM/p/"), g, lit("?a=1&b=2")))
+      .when(v === 2, concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("/?b=2&a=1")))
+      .when(v === 3, concat(lit("http://site"), g, lit(".example.com/p/"), g,
+        lit("?a=1&b=2&utm_source=feed&fbclid=X"), g))
+      .otherwise(concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2#sec"), v))
+      .as("url")
+  }
+
+  /** The lexical contracts' queries: the first six words of every 97th doc. */
+  private def lexQueries(docs: DataFrame): DataFrame =
+    docs.filter(col("doc_id") % 97 === 0)
+      .select(col("doc_id").as("q_id"),
+        concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+
+  /** The C4 fixture: multi-line docs synthesized around each text (a
+    * too-short line, an unpunctuated line, a kept header, conditional
+    * JS/cookie boilerplate, the body as tail); doc_id % 97 == 5 docs get
+    * ONLY bad lines and must vanish.
+    */
+  private def c4Lined(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      when(col("doc_id") % 97 === 5, lit("all bad\nno punct here\nshort."))
+        .otherwise(concat(
+          lit("too short.\nthis line has no terminal punctuation\ndoc "),
+          col("doc_id"), lit(" body follows now.\n"),
+          when(col("doc_id") % 4 === 0,
+            lit("please enable JavaScript to continue.\n")).otherwise(lit("")),
+          when(col("doc_id") % 7 === 0,
+            lit("We use cookies on this site.\n")).otherwise(lit("")),
+          col("text"), lit(" tail marker ends here."))).as("text"))
+
+  /** A by-hand PDF of `text`: 8-word lines, 3-line pages, even ids
+    * Flate-compressed. Empty words drop on BOTH sides (here and the
+    * oracles): an all-empty 8-word group would render as an empty PDF
+    * line, which the extractor rightly doesn't emit.
+    */
+  private def renderPdf(id: Long, text: String): Array[Byte] = {
+    val words = text.split(" ", -1).filter(_.nonEmpty).toSeq
+    val lines = words.grouped(8).map(_.mkString(" ")).toSeq
+    val pages = if (lines.isEmpty) Seq(Seq("")) else lines.grouped(3).toSeq
+    graft.ops.Pdf.encodePdf(pages, compress = id % 2 == 0)
+  }
+
+  /** Every document rendered to PDF and parsed back as (doc_id, text),
+    * line breaks normalized to spaces. Empty-text docs drop on BOTH sides
+    * (oracle: len(ws) > 0): an empty string splits to [''] and would score
+    * empty-term matches the filtered-word oracle cannot model. Render +
+    * parse runs once for the corpus and query sides: persisted (not
+    * localCheckpoint) — a corpus-sized frame keeps its lineage
+    * recoverable; the caller unpersists.
+    */
+  private def parsedPdfs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    val blobs = t(s, dir, "documents").select(col("doc_id"), col("text"))
+      .as[(Long, String)].map { case (id, text) => (id, renderPdf(id, text)) }
+      .toDF("doc_id", "content")
+    graft.ops.Pdf.extract(blobs, "doc_id", "content")
+      .filter(col("format") === "pdf")
+      .select(col("doc_id"), translate(col("text"), "\n", " ").as("text"))
+      .filter(length(col("text")) > 0)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+  }
+
+  /** The CDC contracts' replicated table: accounts(user_id key,
+    * event_id, value).
+    */
+  private val accountsRel = {
+    import graft.connectors.cdc.PgOutput.{ColumnMeta, RelationMeta}
+    RelationMeta(1, "public", "accounts", 'd', Seq(
+      ColumnMeta("user_id", 20, -1, isKey = true),
+      ColumnMeta("event_id", 20, -1, isKey = false),
+      ColumnMeta("value", 701, -1, isKey = false),
+    ))
+  }
+
+  /** Events under `maxId` as (event_id, user_id, event_type, value) rows. */
+  private def cdcEvents(s: SparkSession, dir: String, maxId: Int): Array[org.apache.spark.sql.Row] =
+    t(s, dir, "events").filter(col("event_id") < maxId)
+      .select("event_id", "user_id", "event_type", "value").orderBy("event_id").collect()
+
+  /** One event as pgoutput DML on accounts: 'error' events are key-only
+    * Deletes, the rest Inserts (event_id doubles as the row's lsn).
+    */
+  private def cdcDml(r: org.apache.spark.sql.Row): Array[Byte] = {
+    import graft.connectors.cdc.PgOutput.Encode
+    if (r.getString(2) == "error") Encode.delete(1, Seq(Some(r.getLong(1).toString), None, None))
+    else Encode.insert(1,
+      Seq(Some(r.getLong(1).toString), Some(r.getLong(0).toString), Some(r.getDouble(3).toString)))
+  }
+
+  /** Decodes pgoutput `frames`, consumes them at transaction boundaries
+    * and merges the accounts changes (lsn-dedup + hard delete).
+    */
+  private def mergedAccounts(s: SparkSession, frames: Seq[(Long, Array[Byte])]): DataFrame = {
+    import graft.connectors.cdc.ChangeBatch
+    val consumed = ChangeBatch.consume(frames.iterator, targetBatchSize = Int.MaxValue)
+    val changes = consumed.batch.byRelation("accounts")
+    val typed = ChangeBatch.toTypedDf(ChangeBatch.changeRows(s, accountsRel, changes), accountsRel)
+    MergeEngine.mergePlan(None, typed, ChangeBatch.mergeHints(accountsRel))
+      .select("user_id", "event_id", "value")
+      .orderBy("user_id")
   }
 
   private val dec18_2 = DecimalType(18, 2)
@@ -815,23 +1156,11 @@ object SparkEntry {
     // flow as one engine pipeline. Integer-count vectors make the oracle
     // replay bit-exact.
     "q_embed_ann" -> ((s, dir) => {
-      // pin the embedded frame: both ANN sides derive from it, and the
-      // embed kernel (1 md5/token) must run ONCE — vectors are tiny
-      // (id + 32 doubles), so the checkpoint is cheap at any corpus size.
-      // The repartition spreads the local fixture's ONE parquet split
-      // across cores for the CPU-bound kernel + scoring; at corpus scale
-      // the scan already yields thousands of splits and it's dropped.
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val queries = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
+      val emb = embedded(s, docs)
+      val (queries, corpus) = embedSides(emb)
       Similarity.bruteForceTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec", k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // the same seam composed with the SCALE-path ANN: text → embed → IVF
@@ -844,19 +1173,11 @@ object SparkEntry {
     // scaling the ±1/√dim quantizer to ±0.125 preserves every argmax.
     "q_embed_ivf" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val queries = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val emb = embedded(s, docs)
+      val (queries, corpus) = embedSides(emb)
       Similarity.ivfTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
-        cents, nProbe = 2, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        signCentroids, nProbe = 2, k = 5)
+        .transform(annRanked)
     }),
 
     // the LSH-bucketed composition of the same seam: text → embed →
@@ -867,17 +1188,11 @@ object SparkEntry {
     // both scale-path index families the ANN suite ships.
     "q_embed_lsh" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val queries = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
+      val emb = embedded(s, docs)
+      val (queries, corpus) = embedSides(emb)
       Similarity.lshTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
         dim = 32, nBits = 4, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // continuous retrieval: the q_embed_ivf pipeline with the query side
@@ -890,20 +1205,14 @@ object SparkEntry {
       import graft.streaming.StreamingRetrieval
       val root = java.nio.file.Files.createTempDirectory("graft_sretr").toString
       val docs = t(s, dir, "documents")
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val cents = signCentroids
       val corpus = graft.ops.Embedding.embedDocuments(
         docs.filter(col("doc_id") % 100 =!= 0).repartition(s.sparkContext.defaultParallelism),
         "doc_id", "text", dim = 32)
         .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
       val index = Similarity.ivfAssign(corpus, "n_vec", cents).localCheckpoint(true)
       withFewShufflePartitions(s, 8) {
-        val stream = s.readStream
-          .schema(StructType(Seq(
-            StructField("doc_id", LongType), StructField("text", StringType),
-            StructField("lang", StringType), StructField("source", StringType),
-            StructField("n_chars", LongType))))
-          .parquet(s"$dir/[d]ocuments.parquet")
+        val stream = streamDocuments(s, dir)
           .filter(col("doc_id") % 100 === 0)
           .select("doc_id", "text")
         val q = StreamingRetrieval.start(stream, index, "doc_id", "text", cents,
@@ -927,8 +1236,7 @@ object SparkEntry {
       import graft.streaming.StreamingRetrieval
       val root = java.nio.file.Files.createTempDirectory("graft_sidx").toString
       val docs = t(s, dir, "documents")
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val cents = signCentroids
       val corpus = graft.ops.Embedding.embedDocuments(
         docs.filter(col("doc_id") % 100 =!= 0).repartition(s.sparkContext.defaultParallelism),
         "doc_id", "text", dim = 32)
@@ -971,17 +1279,10 @@ object SparkEntry {
     // comparison bit-exact in the oracle replay.
     "q_rerank" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val queries = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val emb = embedded(s, docs)
+      val (queries, corpus) = embedSides(emb)
       val stage1 = Similarity.ivfTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
-        cents, nProbe = 2, k = 20)
+        signCentroids, nProbe = 2, k = 20)
         .select("q_id", "n_id")
       val texts = docs.select(col("doc_id"), col("text"))
       val cand = stage1
@@ -1006,12 +1307,8 @@ object SparkEntry {
     // bit-for-bit (60 bits of md5 as a nonnegative long).
     "q_semantic_dedup" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-      graft.ops.Dedup.semanticDedup(emb, "doc_id", "embedding", cents, threshold = 0.75,
+      val emb = embedded(s, docs)
+      graft.ops.Dedup.semanticDedup(emb, "doc_id", "embedding", signCentroids, threshold = 0.75,
         maxCellSize = 60)
         .orderBy("doc_id")
     }),
@@ -1022,13 +1319,9 @@ object SparkEntry {
     // mix, the embedding-space analog of stratifiedExact's language quotas.
     "q_cluster_sample" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val emb = graft.ops.Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
+      val emb = embedded(s, docs)
         .join(docs.select(col("doc_id"), col("n_chars")), Seq("doc_id"))
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-      graft.ops.Corpus.clusterBalancedSample(emb, "doc_id", "embedding", cents,
+      graft.ops.Corpus.clusterBalancedSample(emb, "doc_id", "embedding", signCentroids,
         perCluster = 3, scoreCol = col("n_chars"))
         .select(col("cell"), col("rank"), col("doc_id"), col("score"))
         .orderBy("cell", "rank")
@@ -1037,11 +1330,9 @@ object SparkEntry {
     // brute-force cosine top-k ANN baseline
     "q_ann_cosine" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 5).select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
+      val (queries, corpus) = vecSides(emb, "embedding", col("vec_id") < 5, col("vec_id") >= 5)
       Similarity.bruteForceTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec", k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // LSH-bucketed ANN (scale path). The ±1 hyperplanes are deterministic
@@ -1049,11 +1340,9 @@ object SparkEntry {
     // ranking exactly in SQL — full-fidelity check of the approximate path
     "q_ann_lsh" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 5).select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
+      val (queries, corpus) = vecSides(emb, "embedding", col("vec_id") < 5, col("vec_id") >= 5)
       Similarity.lshTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec", dim = 64, nBits = 4, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // multi-probe LSH: each query also probes every Hamming-1 bucket (one
@@ -1062,12 +1351,10 @@ object SparkEntry {
     // side; the oracle replays the XOR probe set bit-exactly in SQL
     "q_ann_lsh_probe" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 5).select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
+      val (queries, corpus) = vecSides(emb, "embedding", col("vec_id") < 5, col("vec_id") >= 5)
       Similarity.lshTopKMultiProbe(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
         dim = 64, nBits = 4, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // IVF ANN (scale path: corpus shuffles once by cell; queries probe
@@ -1078,15 +1365,11 @@ object SparkEntry {
     // literals also let the oracle replicate assignment + probe in SQL
     "q_ann_ivf" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 13)
-        .select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
-      val centroids = graft.ops.Similarity.fixedCentroids(dim = 64, k = 8)
-      graft.ops.Similarity.ivfTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
-        centroids, nProbe = 2, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+      val (queries, corpus) = vecSides(emb, "embedding",
+        col("vec_id") >= 8 && col("vec_id") < 13, col("vec_id") >= 13)
+      Similarity.ivfTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
+        annCentroids, nProbe = 2, k = 5)
+        .transform(annRanked)
     }),
 
     // recall@k of the IVF scale path against the exact brute-force
@@ -1096,13 +1379,10 @@ object SparkEntry {
     // measurement itself is oracle-gated end-to-end.
     "q_ann_recall" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 13)
-        .select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
-      val centroids = graft.ops.Similarity.fixedCentroids(dim = 64, k = 8)
+      val (queries, corpus) = vecSides(emb, "embedding",
+        col("vec_id") >= 8 && col("vec_id") < 13, col("vec_id") >= 13)
       val ivf = Similarity.ivfTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
-        centroids, nProbe = 2, k = 5)
+        annCentroids, nProbe = 2, k = 5)
       val brute = Similarity.bruteForceTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec", k = 5)
       Similarity.recallAtK(ivf, brute, "q_id", "n_id").orderBy("q_id")
     }),
@@ -1114,16 +1394,12 @@ object SparkEntry {
     // encoding, ADC scoring, shortlist, and rerank bit-for-bit in SQL
     "q_ann_ivfpq" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      val queries = emb.filter(col("vec_id") >= 8 && col("vec_id") < 13)
-        .select(col("vec_id").as("q_id"), col("embedding").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 13)
-        .select(col("vec_id").as("n_id"), col("embedding").as("n_vec"))
-      val cents = Similarity.fixedCentroids(dim = 64, k = 8)
+      val (queries, corpus) = vecSides(emb, "embedding",
+        col("vec_id") >= 8 && col("vec_id") < 13, col("vec_id") >= 13)
       val cbs = Similarity.pqCodebooks(dim = 64, m = 8, kSub = 16)
       Similarity.ivfPqTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec",
-        cents, cbs, nProbe = 2, shortlist = 16, k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        annCentroids, cbs, nProbe = 2, shortlist = 16, k = 5)
+        .transform(annRanked)
     }),
 
     // random-projection ANN: rank in a 16-dim JL sketch of the 64-dim
@@ -1133,11 +1409,9 @@ object SparkEntry {
       val planes = Similarity.projectionPlanes(dimIn = 64, dimOut = 16)
       val emb = t(s, dir, "embeddings")
         .withColumn("p_vec", Similarity.randomProject(col("embedding"), planes))
-      val queries = emb.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("p_vec").as("q_vec"))
-      val corpus = emb.filter(col("vec_id") >= 5).select(col("vec_id").as("n_id"), col("p_vec").as("n_vec"))
+      val (queries, corpus) = vecSides(emb, "p_vec", col("vec_id") < 5, col("vec_id") >= 5)
       Similarity.bruteForceTopK(corpus, queries, "n_id", "n_vec", "q_id", "q_vec", k = 5)
-        .select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
-        .orderBy("q_id", "rank")
+        .transform(annRanked)
     }),
 
     // structured extraction through the model-client seam: field->question
@@ -1260,16 +1534,7 @@ object SparkEntry {
       // line pass and the 8-regex PII scrub — v3's dominant narrow
       // kernels — to ONE task (min-of-3 JVMs: 6.94 spread vs 8.06 s not)
       val docs = spread(t(s, dir, "documents"))
-      val lined = docs.select(col("doc_id"),
-        when(col("doc_id") % 97 === 5, lit("all bad\nno punct here\nshort."))
-          .otherwise(concat(
-            lit("too short.\nthis line has no terminal punctuation\ndoc "),
-            col("doc_id"), lit(" body follows now.\n"),
-            when(col("doc_id") % 4 === 0,
-              lit("please enable JavaScript to continue.\n")).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0,
-              lit("We use cookies on this site.\n")).otherwise(lit("")),
-            col("text"), lit(" tail marker ends here."))).as("text"))
+      val lined = c4Lined(docs)
       val s1 = TextAnalysis.c4LineFilter(lined, "doc_id", "text")
         .select("doc_id", "text").localCheckpoint(true)
       val s2 = Redact.scrubAndFilter(plantPii(s1), "doc_id", "text", maxPerDoc = 3L)
@@ -1309,16 +1574,7 @@ object SparkEntry {
     // oracle replays every rule, the rejoin, and the doc-level drop
     "q_c4_lines" -> ((s, dir) => {
       val docs = t(s, dir, "documents")
-      val lined = docs.select(col("doc_id"),
-        when(col("doc_id") % 97 === 5, lit("all bad\nno punct here\nshort."))
-          .otherwise(concat(
-            lit("too short.\nthis line has no terminal punctuation\ndoc "),
-            col("doc_id"), lit(" body follows now.\n"),
-            when(col("doc_id") % 4 === 0,
-              lit("please enable JavaScript to continue.\n")).otherwise(lit("")),
-            when(col("doc_id") % 7 === 0,
-              lit("We use cookies on this site.\n")).otherwise(lit("")),
-            col("text"), lit(" tail marker ends here."))).as("text"))
+      val lined = c4Lined(docs)
       TextAnalysis.c4LineFilter(lined, "doc_id", "text")
         .select("doc_id", "text", "n_lines", "n_kept").orderBy("doc_id")
     }),
@@ -1342,16 +1598,7 @@ object SparkEntry {
     // fragment strips) and the group counts.
     "q_url_dedup" -> ((s, dir) => {
       import graft.ops.Url
-      val g = expr("doc_id div 5").cast("string")
-      val v = col("doc_id") % 5
-      val urls = t(s, dir, "documents").select(col("doc_id"),
-        when(v === 0, concat(lit("http://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2")))
-          .when(v === 1, concat(lit("HTTPS://WWW.SITE"), g, lit(".EXAMPLE.COM/p/"), g, lit("?a=1&b=2")))
-          .when(v === 2, concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("/?b=2&a=1")))
-          .when(v === 3, concat(lit("http://site"), g, lit(".example.com/p/"), g,
-            lit("?a=1&b=2&utm_source=feed&fbclid=X"), g))
-          .otherwise(concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2#sec"), v))
-          .as("url"))
+      val urls = t(s, dir, "documents").select(col("doc_id"), plantedUrl("doc_id"))
       Url.dedupByUrl(urls, "doc_id", "url")
         .select(col("doc_id"), col("url_canon"), col("n_dups"), col("kept"))
         .orderBy("doc_id")
@@ -1378,27 +1625,12 @@ object SparkEntry {
     // read back through the committed pages list (committedPages): the
     // exactly-once read path a raw pages/* glob does not provide.
     "q_url_frontier" -> ((s, dir) => {
-      import graft.ops.UrlFrontier
-      val dest = java.nio.file.Files.createTempDirectory("graft_frontier").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
-      def listing(maxId: Long) = {
-        val g = expr("event_id div 5").cast("string")
-        val v = col("event_id") % 5
+      val (dest, state) = frontierRoot("graft_frontier")
+      def listing(maxId: Long) =
         t(s, dir, "events").filter(col("event_id") < maxId)
-          .select(col("event_id"),
-            when(v === 0, concat(lit("http://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2")))
-              .when(v === 1, concat(lit("HTTPS://WWW.SITE"), g, lit(".EXAMPLE.COM/p/"), g, lit("?a=1&b=2")))
-              .when(v === 2, concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("/?b=2&a=1")))
-              .when(v === 3, concat(lit("http://site"), g, lit(".example.com/p/"), g,
-                lit("?a=1&b=2&utm_source=feed&fbclid=X"), g))
-              .otherwise(concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2#sec"), v))
-              .as("url"))
-      }
-      def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
-        todo.select(col("url_canon"), md5(col("url_canon")).as("content_hash"),
-          lit(wave.toLong).as("wave"))
-      val w1 = UrlFrontier.runWave(s, dest, state, listing(1500), "url")(fetchWave(1))
-      val w2 = UrlFrontier.runWave(s, dest, state, listing(3000), "url")(fetchWave(2))
+          .select(col("event_id"), plantedUrl("event_id"))
+      val w1 = UrlFrontier.runWave(s, dest, state, listing(1500), "url")(fetchWaveHashed(1))
+      val w2 = UrlFrontier.runWave(s, dest, state, listing(3000), "url")(fetchWaveHashed(2))
       // compact the two committed seen generations into one, then prove
       // fetch-exactly-once ACROSS the compaction: wave 3 re-lists
       // everything and must fetch only the genuinely new pages (the
@@ -1409,7 +1641,7 @@ object SparkEntry {
         s"compaction must leave a single seen generation, got $compacted")
       require(UrlFrontier.seenSet(s, dest, state).count() == before,
         "compaction changed the seen-set cardinality")
-      val w3 = UrlFrontier.runWave(s, dest, state, listing(4000), "url")(fetchWave(3))
+      val w3 = UrlFrontier.runWave(s, dest, state, listing(4000), "url")(fetchWaveHashed(3))
       require(w1.columns.sameElements(w3.columns) && w2.columns.sameElements(w3.columns),
         "wave schema drifted")
       // the archive is the user-facing artifact: bin-pack the per-wave
@@ -1438,36 +1670,18 @@ object SparkEntry {
     // capped wave — also require()d in-contract) and fetch-exactly-once
     // across all four waves (one row per canonical URL, wave tag pinned)
     "q_url_frontier_polite" -> ((s, dir) => {
-      import graft.ops.UrlFrontier
       val cap = 150
-      val dest = java.nio.file.Files.createTempDirectory("graft_polite").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
-      val planned = t(s, dir, "events").filter(col("event_id") < 3500)
-        .select(concat(
-          when(col("event_id") % 2 === 0, lit("http://")).otherwise(lit("HTTPS://www.")),
-          lit("h"), (col("event_id") % 7).cast("string"),
-          lit(".example.com/p/"), col("event_id").cast("string")).as("url"))
-      def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
-        todo.select(col("url_canon"), lit(wave.toLong).as("wave"))
+      val (dest, state) = frontierRoot("graft_polite")
+      val planned = politePlan(s, dir)
       (1 to 3).foreach { w =>
         val landed = UrlFrontier.runWave(s, dest, state, planned, "url", Some(cap))(fetchWave(w))
-        // coalesce(0): a tiny corpus can drain before wave 3, leaving an
-        // empty landed frame whose max(count) is null
-        val worst = landed
-          .groupBy(regexp_extract(col("url_canon"), "^[^/?]+", 0)).count()
-          .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+        val worst = busiestHost(landed)
         require(worst <= cap, s"wave $w fetched $worst URLs from one host (cap $cap)")
       }
       UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(4))
       require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(5)).isEmpty,
         "frontier not drained after the uncapped wave")
-      UrlFrontier.committedPages(s, dest, state)
-        .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
-          col("wave"), col("url_canon"))
-        .groupBy("host", "wave")
-        .agg(count(lit(1)).as("n_pages"),
-          min("url_canon").as("first_url"), max("url_canon").as("last_url"))
-        .orderBy("host", "wave")
+      hostWaveCounts(hostPages(s, dest, state))
     }),
 
     // crawl politeness in TIME on the frontier's logical wave clock: with
@@ -1480,17 +1694,9 @@ object SparkEntry {
     // 151-300 → wave 3, …), proving the exclusion window, the cap, and
     // fetch-exactly-once across all nine waves in one hash
     "q_url_frontier_gap" -> ((s, dir) => {
-      import graft.ops.UrlFrontier
       val cap = 150
-      val dest = java.nio.file.Files.createTempDirectory("graft_gap").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
-      val planned = t(s, dir, "events").filter(col("event_id") < 3500)
-        .select(concat(
-          when(col("event_id") % 2 === 0, lit("http://")).otherwise(lit("HTTPS://www.")),
-          lit("h"), (col("event_id") % 7).cast("string"),
-          lit(".example.com/p/"), col("event_id").cast("string")).as("url"))
-      def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
-        todo.select(col("url_canon"), lit(wave.toLong).as("wave"))
+      val (dest, state) = frontierRoot("graft_gap")
+      val planned = politePlan(s, dir)
       (1 to 9).foreach { w =>
         val landed = UrlFrontier.runWave(s, dest, state, planned, "url",
           maxPerHost = Some(cap), minWaveGapPerHost = 1)(fetchWave(w))
@@ -1498,19 +1704,11 @@ object SparkEntry {
           require(landed.isEmpty,
             s"wave $w fetched ${landed.count()} URLs — every host is inside its gap window")
         else if (w < 9) {
-          val worst = landed
-            .groupBy(regexp_extract(col("url_canon"), "^[^/?]+", 0)).count()
-            .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
+          val worst = busiestHost(landed)
           require(worst <= cap, s"wave $w fetched $worst URLs from one host (cap $cap)")
         } else require(landed.isEmpty, "frontier not drained by wave 7 (500 URLs/host at 150/wave)")
       }
-      UrlFrontier.committedPages(s, dest, state)
-        .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
-          col("wave"), col("url_canon"))
-        .groupBy("host", "wave")
-        .agg(count(lit(1)).as("n_pages"),
-          min("url_canon").as("first_url"), max("url_canon").as("last_url"))
-        .orderBy("host", "wave")
+      hostWaveCounts(hostPages(s, dest, state))
     }),
 
     // robots.txt politeness on the frontier (RFC 9309, completing the
@@ -1531,9 +1729,6 @@ object SparkEntry {
     // rule change
     "q_url_frontier_robots" -> ((s, dir) => {
       import s.implicits._
-      import graft.ops.UrlFrontier
-      val dest = java.nio.file.Files.createTempDirectory("graft_robots").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
       val planned = t(s, dir, "events").filter(col("event_id") < 3500)
         .select(concat(lit("http://h"), (col("event_id") % 7).cast("string"),
           lit(".example.com/p/"), col("event_id").cast("string")).as("url"))
@@ -1547,20 +1742,8 @@ object SparkEntry {
         ("h5.example.com", "User-agent: *\nDisallow:\n"),
         // h6 publishes no robots.txt at all
       ).toDF("host", "robots_txt")
-      val rules = UrlFrontier.robotsRules(bodies, agent = "graftbot")
-      def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
-        todo.select(col("url_canon"), lit(wave.toLong).as("wave"))
-      UrlFrontier.runWave(s, dest, state, planned, "url",
-        robots = Some(rules))(fetchWave(1))
-      // the sites relax their rules: wave 2 drains exactly the held-back
-      // URLs (they never entered the seen-set)
-      UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(2))
-      require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(3)).isEmpty,
-        "frontier not drained after the rules lifted")
-      UrlFrontier.committedPages(s, dest, state)
-        .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
-          col("wave"), col("url_canon"))
-        .orderBy("url_canon")
+      crawlUnderRobots(s, "graft_robots", planned,
+        UrlFrontier.robotsRules(bodies, agent = "graftbot"))
     }),
 
     // robots.txt politeness, FULL RFC 9309 pattern grammar: the wildcard
@@ -1578,9 +1761,6 @@ object SparkEntry {
     // replays each URL's verdict semantically in one hash
     "q_url_frontier_robots_wild" -> ((s, dir) => {
       import s.implicits._
-      import graft.ops.UrlFrontier
-      val dest = java.nio.file.Files.createTempDirectory("graft_robots_wild").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
       val ids = col("event_id").cast("string")
       val path = when(col("event_id") % 3 === 0, concat(lit("/p/"), ids))
         .when(col("event_id") % 3 === 1, concat(lit("/p/"), ids, lit("?sid="), ids))
@@ -1598,18 +1778,8 @@ object SparkEntry {
         ("w5.example.com", "User-agent: graftbot\nDisallow: /p/*0$\nAllow: /p/*00$\n"),
         ("w6.example.com", "User-agent: graftling\nDisallow: /\n"),
       ).toDF("host", "robots_txt")
-      val rules = UrlFrontier.robotsRules(bodies, agent = "graftbot/1.0")
-      def fetchWave(wave: Int)(todo: DataFrame): DataFrame =
-        todo.select(col("url_canon"), lit(wave.toLong).as("wave"))
-      UrlFrontier.runWave(s, dest, state, planned, "url",
-        robots = Some(rules))(fetchWave(1))
-      UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(2))
-      require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(3)).isEmpty,
-        "frontier not drained after the rules lifted")
-      UrlFrontier.committedPages(s, dest, state)
-        .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
-          col("wave"), col("url_canon"))
-        .orderBy("url_canon")
+      crawlUnderRobots(s, "graft_robots_wild", planned,
+        UrlFrontier.robotsRules(bodies, agent = "graftbot/1.0"))
     }),
 
     // Model-based quality classification (CCNet fastText / GPT-3 LR
@@ -1664,15 +1834,7 @@ object SparkEntry {
         .as[(Long, String)].map { case (id, text) =>
           val bytes =
             if (id % 97 == 0) "not a pdf".getBytes("ISO-8859-1")
-            else {
-              // empty words dropped on BOTH sides (here and the oracle):
-              // an all-empty 8-word group would render as an empty PDF
-              // line, which the extractor rightly doesn't emit
-              val words = text.split(" ", -1).filter(_.nonEmpty).toSeq
-              val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-              val pages = if (lines.isEmpty) Seq(Seq("")) else lines.grouped(3).toSeq
-              Pdf.encodePdf(pages, compress = id % 2 == 0)
-            }
+            else renderPdf(id, text)
           (id, bytes)
         }.toDF("doc_id", "content")
       Pdf.extract(blobs, "doc_id", "content").orderBy("doc_id")
@@ -1784,29 +1946,10 @@ object SparkEntry {
     // through ranking (parsed text == original once line breaks
     // normalize back to spaces)
     "q_pdf_pipeline" -> ((s, dir) => {
-      import graft.ops.{Lexical, Pdf}
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val blobs = docs.as[(Long, String)].map { case (id, text) =>
-        val words = text.split(" ", -1).filter(_.nonEmpty).toSeq
-        val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-        val pages = if (lines.isEmpty) Seq(Seq("")) else lines.grouped(3).toSeq
-        (id, Pdf.encodePdf(pages, compress = id % 2 == 0))
-      }.toDF("doc_id", "content")
-      val parsed = Pdf.extract(blobs, "doc_id", "content")
-        .filter(col("format") === "pdf")
-        .select(col("doc_id"), translate(col("text"), "\n", " ").as("text"))
-        // empty-text docs drop on BOTH sides (oracle: len(ws) > 0): an
-        // empty string splits to [''] and would score empty-term matches
-        // the filtered-word oracle cannot model
-        .filter(length(col("text")) > 0)
-        // render+parse once, corpus and query sides reuse; persist (not
-        // localCheckpoint) — corpus-sized frame, keep lineage recoverable
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      import graft.ops.Lexical
+      val parsed = parsedPdfs(s, dir)
       val corpus = parsed.filter(col("doc_id") % 97 =!= 0)
-      val queries = parsed.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+      val queries = lexQueries(parsed)
       // topKDocs materializes its k x queries result eagerly, so the
       // parsed-corpus cache can be released before returning instead of
       // pinning block-manager memory for the session's lifetime
@@ -1824,24 +1967,10 @@ object SparkEntry {
     // queries x matched postings and exceeds local spill disk at sf10,
     // while this one is bounded at queries x query_terms x 32
     "q_pdf_pipeline_champion" -> ((s, dir) => {
-      import graft.ops.{Lexical, Pdf}
-      import s.implicits._
-      val docs = t(s, dir, "documents").select(col("doc_id"), col("text"))
-      val blobs = docs.as[(Long, String)].map { case (id, text) =>
-        val words = text.split(" ", -1).filter(_.nonEmpty).toSeq
-        val lines = words.grouped(8).map(_.mkString(" ")).toSeq
-        val pages = if (lines.isEmpty) Seq(Seq("")) else lines.grouped(3).toSeq
-        (id, Pdf.encodePdf(pages, compress = id % 2 == 0))
-      }.toDF("doc_id", "content")
-      val parsed = Pdf.extract(blobs, "doc_id", "content")
-        .filter(col("format") === "pdf")
-        .select(col("doc_id"), translate(col("text"), "\n", " ").as("text"))
-        .filter(length(col("text")) > 0)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      import graft.ops.Lexical
+      val parsed = parsedPdfs(s, dir)
       val corpus = parsed.filter(col("doc_id") % 97 =!= 0)
-      val queries = parsed.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+      val queries = lexQueries(parsed)
       val out = Lexical.topKDocs(corpus, "doc_id", "text", queries, "q_id", "q_text",
         k = 10, championSize = 32)
         .orderBy("q_id", "rank")
@@ -1922,9 +2051,7 @@ object SparkEntry {
       import graft.ops.Lexical
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 97 =!= 0)
-      val queries = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+      val queries = lexQueries(docs)
       Lexical.topKDocs(corpus, "doc_id", "text", queries, "q_id", "q_text", k = 10)
         .orderBy("q_id", "rank")
     }),
@@ -1938,9 +2065,7 @@ object SparkEntry {
       import graft.ops.Lexical
       val docs = t(s, dir, "documents")
       val corpus = docs.filter(col("doc_id") % 97 =!= 0)
-      val queries = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+      val queries = lexQueries(docs)
       Lexical.topKDocs(corpus, "doc_id", "text", queries, "q_id", "q_text",
         k = 10, championSize = 32)
         .orderBy("q_id", "rank")
@@ -1960,9 +2085,7 @@ object SparkEntry {
           concat(lit("zzfresh "), col("text")).as("text"))
       Lexical.Index.build(base, "doc_id", "text", s"$root/idx", championSize = 32)
       Lexical.Index.append(batch, "doc_id", "text", s"$root/idx", appendId = 0L)
-      val queries = docs.filter(col("doc_id") % 97 === 0)
-        .select(col("doc_id").as("q_id"),
-          concat_ws(" ", slice(split(col("text"), " "), 1, 6)).as("q_text"))
+      val queries = lexQueries(docs)
         .unionByName(s.createDataFrame(Seq((9999999L, "zzfresh"))).toDF("q_id", "q_text"))
       Lexical.Index.search(s, s"$root/idx", queries, "q_id", "q_text", k = 10)
         .withColumnRenamed("id", "doc_id")
@@ -1976,13 +2099,8 @@ object SparkEntry {
     "q_hybrid_rank" -> ((s, dir) => {
       import graft.ops.{Embedding, Lexical}
       val docs = t(s, dir, "documents")
-      val emb = Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val qv = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val cv = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
+      val emb = embedded(s, docs)
+      val (qv, cv) = embedSides(emb)
       val ann = Similarity.bruteForceTopK(cv, qv, "n_id", "n_vec", "q_id", "q_vec", k = 5)
         .select(col("q_id"), col("n_id"), col("rank"))
       val lex = Lexical.topKDocs(
@@ -2008,17 +2126,10 @@ object SparkEntry {
     "q_hybrid_rank_scale" -> ((s, dir) => {
       import graft.ops.{Embedding, Lexical}
       val docs = t(s, dir, "documents")
-      val emb = Embedding.embedDocuments(
-        docs.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val qv = emb.filter(col("doc_id") % 100 === 0)
-        .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
-      val cv = emb.filter(col("doc_id") % 100 =!= 0)
-        .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val emb = embedded(s, docs)
+      val (qv, cv) = embedSides(emb)
       val ann = Similarity.ivfTopK(cv, qv, "n_id", "n_vec", "q_id", "q_vec",
-        cents, nProbe = 2, k = 5)
+        signCentroids, nProbe = 2, k = 5)
         .select(col("q_id"), col("n_id"), col("rank"))
       val lex = Lexical.topKDocs(
         docs.filter(col("doc_id") % 100 =!= 0), "doc_id", "text",
@@ -2168,15 +2279,11 @@ object SparkEntry {
         Seq("doc_id"), "left_anti")
         .localCheckpoint(true)
       // 4. capped semantic dedup over the survivors' embeddings
-      val emb = graft.ops.Embedding.embedDocuments(
-        s3.repartition(s.sparkContext.defaultParallelism), "doc_id", "text", dim = 32)
-        .localCheckpoint(true)
-      val cents = Similarity.fixedCentroids(dim = 32, k = 8)
-        .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
+      val emb = embedded(s, s3)
       // 0.875 = 7/8, threshold² = 49/64 — still a binary fraction, so
       // the drop decision stays oracle-exact; 0.75 saturates here for
       // the same shared-vocabulary reason as the Jaccard stage
-      val semKept = graft.ops.Dedup.semanticDedup(emb, "doc_id", "embedding", cents,
+      val semKept = graft.ops.Dedup.semanticDedup(emb, "doc_id", "embedding", signCentroids,
         threshold = 0.875, maxCellSize = 60)
         .filter(col("kept") === 1).select("doc_id")
       val s4 = s3.join(semKept, Seq("doc_id")).localCheckpoint(true)
@@ -2403,37 +2510,20 @@ object SparkEntry {
     // boundaries) → typed rows → merge with lsn-dedup + hard delete.
     // 'error' events are emitted as key-only Deletes; latest lsn wins.
     "q_cdc_pipeline" -> ((s, dir) => {
-      import graft.connectors.cdc.{ChangeBatch, PgOutput}
-      import PgOutput._
-      val rel = RelationMeta(1, "public", "accounts", 'd', Seq(
-        ColumnMeta("user_id", 20, -1, isKey = true),
-        ColumnMeta("event_id", 20, -1, isKey = false),
-        ColumnMeta("value", 701, -1, isKey = false),
-      ))
-      val ev = t(s, dir, "events").filter(col("event_id") < 2000)
-        .select("event_id", "user_id", "event_type", "value").orderBy("event_id").collect()
+      import graft.connectors.cdc.PgOutput.Encode
       val ts0 = 1700000000000000L
       val frames: Seq[(Long, Array[Byte])] =
-        Seq((0L, Encode.relation(rel))) ++ ev.toSeq.zipWithIndex.flatMap { case (r, i) =>
-          val lsn = r.getLong(0)
-          val base = 10L * lsn
-          val payload =
-            if (r.getString(2) == "error")
-              Encode.delete(1, Seq(Some(r.getLong(1).toString), None, None))
-            else
-              Encode.insert(1, Seq(Some(r.getLong(1).toString), Some(lsn.toString), Some(r.getDouble(3).toString)))
-          Seq(
-            (base, Encode.begin(base + 2, ts0, i)),
-            (lsn, payload),
-            (base + 2, Encode.commit(base + 2, base + 3, ts0)),
-          )
-        }
-      val consumed = ChangeBatch.consume(frames.iterator, targetBatchSize = Int.MaxValue)
-      val changes = consumed.batch.byRelation("accounts")
-      val typed = ChangeBatch.toTypedDf(ChangeBatch.changeRows(s, rel, changes), rel)
-      MergeEngine.mergePlan(None, typed, ChangeBatch.mergeHints(rel))
-        .select("user_id", "event_id", "value")
-        .orderBy("user_id")
+        Seq((0L, Encode.relation(accountsRel))) ++
+          cdcEvents(s, dir, 2000).toSeq.zipWithIndex.flatMap { case (r, i) =>
+            val lsn = r.getLong(0)
+            val base = 10L * lsn
+            Seq(
+              (base, Encode.begin(base + 2, ts0, i)),
+              (lsn, cdcDml(r)),
+              (base + 2, Encode.commit(base + 2, base + 3, ts0)),
+            )
+          }
+      mergedAccounts(s, frames)
     }),
 
     // CDC poll loop end-to-end: events arrive at a canned "slot" in 5
@@ -2444,15 +2534,9 @@ object SparkEntry {
     // table is the same surviving set as a single-shot load — the oracle
     // recomputes it
     "q_cdc_poll" -> ((s, dir) => {
-      import graft.connectors.cdc.{PgOutput, Replication}
-      import PgOutput._
-      val rel = RelationMeta(1, "public", "accounts", 'd', Seq(
-        ColumnMeta("user_id", 20, -1, isKey = true),
-        ColumnMeta("event_id", 20, -1, isKey = false),
-        ColumnMeta("value", 701, -1, isKey = false),
-      ))
-      val ev = t(s, dir, "events").filter(col("event_id") < 2500)
-        .select("event_id", "user_id", "event_type", "value").orderBy("event_id").collect()
+      import graft.connectors.cdc.Replication
+      import graft.connectors.cdc.PgOutput.Encode
+      val ev = cdcEvents(s, dir, 2500)
       val ts0 = 1700000000000000L
       // one txn per row at monotone frame lsns (10e .. 10e+2), waved by
       // event_id range so the slot drains over multiple poll rounds
@@ -2460,19 +2544,14 @@ object SparkEntry {
         .groupBy(_._1.getLong(0) / 500).toSeq.sortBy(_._1).map { case (_, rows) =>
           rows.flatMap { case (r, i) =>
             val e = r.getLong(0)
-            val payload =
-              if (r.getString(2) == "error")
-                Encode.delete(1, Seq(Some(r.getLong(1).toString), None, None))
-              else
-                Encode.insert(1, Seq(Some(r.getLong(1).toString), Some(e.toString), Some(r.getDouble(3).toString)))
             Seq(
               (10 * e, Encode.begin(10 * e + 2, ts0, i)),
-              (10 * e + 1, payload),
+              (10 * e + 1, cdcDml(r)),
               (10 * e + 2, Encode.commit(10 * e + 2, 10 * e + 3, ts0)),
             )
           }
         }
-      val meta = Seq(Encode.relation(rel))
+      val meta = Seq(Encode.relation(accountsRel))
       val source = new Replication.FrameSource {
         private var wave = 0
         private var flushed = 0L
@@ -2496,28 +2575,13 @@ object SparkEntry {
     // in-progress txns (two interleaved segments each, one txn in 7
     // ABORTED) → decode → merge. The oracle recomputes the surviving set.
     "q_cdc_stream" -> ((s, dir) => {
-      import graft.connectors.cdc.{ChangeBatch, PgOutput}
-      import PgOutput._
-      val rel = RelationMeta(1, "public", "accounts", 'd', Seq(
-        ColumnMeta("user_id", 20, -1, isKey = true),
-        ColumnMeta("event_id", 20, -1, isKey = false),
-        ColumnMeta("value", 701, -1, isKey = false),
-      ))
-      val ev = t(s, dir, "events").filter(col("event_id") < 2000)
-        .select("event_id", "user_id", "event_type", "value").orderBy("event_id").collect()
+      import graft.connectors.cdc.PgOutput.Encode
       val ts0 = 1700000000000000L
-      def dml(r: org.apache.spark.sql.Row, xid: Int): (Long, Array[Byte]) = {
-        val lsn = r.getLong(0)
-        val payload =
-          if (r.getString(2) == "error")
-            Encode.delete(1, Seq(Some(r.getLong(1).toString), None, None))
-          else
-            Encode.insert(1, Seq(Some(r.getLong(1).toString), Some(lsn.toString), Some(r.getDouble(3).toString)))
-        (lsn, Encode.streamed(xid, payload))
-      }
-      val groups = ev.toSeq.groupBy(_.getLong(0) / 50).toSeq.sortBy(_._1)
+      def dml(r: org.apache.spark.sql.Row, xid: Int): (Long, Array[Byte]) =
+        (r.getLong(0), Encode.streamed(xid, cdcDml(r)))
+      val groups = cdcEvents(s, dir, 2000).toSeq.groupBy(_.getLong(0) / 50).toSeq.sortBy(_._1)
       val frames: Seq[(Long, Array[Byte])] =
-        Seq((0L, Encode.relation(rel))) ++ groups.flatMap { case (g, rows) =>
+        Seq((0L, Encode.relation(accountsRel))) ++ groups.flatMap { case (g, rows) =>
           val xid = (g + 1).toInt
           val base = 100000L + g * 1000L
           val (evens, odds) = rows.partition(_.getLong(0) % 2 == 0)
@@ -2530,12 +2594,7 @@ object SparkEntry {
             else Seq((base + 4, Encode.streamCommit(xid, base + 4, base + 5, ts0)))
           seg1 ++ seg2 ++ fin
         }
-      val consumed = ChangeBatch.consume(frames.iterator, targetBatchSize = Int.MaxValue)
-      val changes = consumed.batch.byRelation("accounts")
-      val typed = ChangeBatch.toTypedDf(ChangeBatch.changeRows(s, rel, changes), rel)
-      MergeEngine.mergePlan(None, typed, ChangeBatch.mergeHints(rel))
-        .select("user_id", "event_id", "value")
-        .orderBy("user_id")
+      mergedAccounts(s, frames)
     }),
 
     // queue micro-batch reader: events routed to partitions by user_id%4,
@@ -2593,9 +2652,7 @@ object SparkEntry {
         .option("chunkSize", "64")
         .load()
         .filter(col("doc_id") >= 40 && col("doc_id") < 400)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
+        .transform(langTotals)
     }),
 
     // §2.1 rows 8-35 capstone: a Fleet connector config (github) drives
@@ -2604,42 +2661,8 @@ object SparkEntry {
     // the LANDED parquet tables — root joined to the exploded labels child
     // on _dlt_id — must aggregate to what DuckDB computes from the source
     "q_fleet_pipeline" -> ((s, dir) => {
-      import graft.connectors.rest.{RestEngine, StaticPagesTransport}
-      import graft.connectors.sources.Fleet
-      import graft.pipeline.{Pipeline, ResourceDef, SourceDef}
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 250)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      def issue(r: org.apache.spark.sql.Row) = {
-        val k = (r.getLong(2) % 3).toInt + 1
-        val labels = (0 until k).map(i => s"""{"name":"l$i"}""").mkString(",")
-        s"""{"id":${r.getLong(0)},"updated_at":"2024-01-01T00:00:00Z","lang":"${r.getString(1)}","labels":[$labels]}"""
-      }
-      // transport keys carry alphabetically-sorted params
-      def pageKey(n: Option[Int]) = "repos/octo/repo/issues?direction=asc" +
-        n.fold("")(p => s"&page=$p") + "&per_page=100&sort=updated&state=all"
-      val chunks = docs.toSeq.grouped(100).toSeq
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        pageKey(if (i == 0) None else Some(i + 1)) -> s"[${chunk.map(issue).mkString(",")}]"
-      }.toMap + (pageKey(Some(chunks.size + 1)) -> "[]")
-      val src = Fleet.github("octo", "repo", None)
-      val issuesRes = src.resources.find(_.name == "issues").get
-      val dest = java.nio.file.Files.createTempDirectory("graft_fleet").toString
-      val stateDir = java.nio.file.Files.createTempDirectory("graft_fstate").toString
-      val pipe = new Pipeline(s, "verify_gh", dest, stateDir)
-      val resource = ResourceDef(
-        name = "issues",
-        hints = issuesRes.hints,
-        build = ctx => RestEngine.readResource(ctx.spark, src, issuesRes,
-          StaticPagesTransport(pages), Some(ctx.state)),
-      )
-      pipe.run(SourceDef(src.name, Seq(resource)))
-      val root = s.read.parquet(s"$dest/issues")
-      val labels = s.read.parquet(s"$dest/issues__labels")
-      root.select(col("lang"), col("_dlt_id"))
-        .join(labels.select(col("_dlt_parent_id")), col("_dlt_id") === col("_dlt_parent_id"))
-        .groupBy("lang")
-        .agg(countDistinct(col("_dlt_id")).as("n_issues"), count(lit(1)).as("n_labels"))
-        .orderBy("lang")
+      val src = graft.connectors.sources.Fleet.github("octo", "repo", None)
+      landedIssueLabels(s, src, StaticPagesTransport(pageNumberPages(issueChunks(s, dir))), "gh")
     }),
 
     // config-as-data capstone (the reference's RESTAPIConfig dialect,
@@ -2648,54 +2671,9 @@ object SparkEntry {
     // RestConfig.fromJson, and must land tables hash-identical to the
     // hand-built config's oracle — a user ships a config document, not code
     "q_fleet_config" -> ((s, dir) => {
-      import graft.connectors.rest.{RestConfig, RestEngine, StaticPagesTransport}
-      import graft.pipeline.{Pipeline, ResourceDef, SourceDef}
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 250)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      def issue(r: org.apache.spark.sql.Row) = {
-        val k = (r.getLong(2) % 3).toInt + 1
-        val labels = (0 until k).map(i => s"""{"name":"l$i"}""").mkString(",")
-        s"""{"id":${r.getLong(0)},"updated_at":"2024-01-01T00:00:00Z","lang":"${r.getString(1)}","labels":[$labels]}"""
-      }
-      def pageKey(n: Option[Int]) = "repos/octo/repo/issues?direction=asc" +
-        n.fold("")(p => s"&page=$p") + "&per_page=100&sort=updated&state=all"
-      val chunks = docs.toSeq.grouped(100).toSeq
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        pageKey(if (i == 0) None else Some(i + 1)) -> s"[${chunk.map(issue).mkString(",")}]"
-      }.toMap + (pageKey(Some(chunks.size + 1)) -> "[]")
-      val src = RestConfig.fromJson("""
-        {"name": "github",
-         "client": {"base_url": "https://api.github.com",
-                    "headers": {"Accept": "application/vnd.github+json"}},
-         "resources": [
-           {"name": "issues",
-            "endpoint": {"path": "repos/octo/repo/issues",
-                         "params": {"state": "all", "sort": "updated", "direction": "asc",
-                                    "since": "{incremental.start_value}"},
-                         "paginator": {"type": "page_number", "size_param": "per_page",
-                                       "page_size": 100},
-                         "incremental": {"cursor_path": "updated_at"}},
-            "primary_key": "id",
-            "write_disposition": "merge"}
-         ]}""")
-      val issuesRes = src.resources.find(_.name == "issues").get
-      val dest = java.nio.file.Files.createTempDirectory("graft_fcfg").toString
-      val stateDir = java.nio.file.Files.createTempDirectory("graft_fcstate").toString
-      val pipe = new Pipeline(s, "verify_ghcfg", dest, stateDir)
-      val resource = ResourceDef(
-        name = "issues",
-        hints = issuesRes.hints,
-        build = ctx => RestEngine.readResource(ctx.spark, src, issuesRes,
-          StaticPagesTransport(pages), Some(ctx.state)),
-      )
-      pipe.run(SourceDef(src.name, Seq(resource)))
-      val root = s.read.parquet(s"$dest/issues")
-      val labels = s.read.parquet(s"$dest/issues__labels")
-      root.select(col("lang"), col("_dlt_id"))
-        .join(labels.select(col("_dlt_parent_id")), col("_dlt_id") === col("_dlt_parent_id"))
-        .groupBy("lang")
-        .agg(countDistinct(col("_dlt_id")).as("n_issues"), count(lit(1)).as("n_labels"))
-        .orderBy("lang")
+      val paginator = """{"type": "page_number", "size_param": "per_page", "page_size": 100}"""
+      landedIssueLabels(s, githubIssuesConfig(Some(paginator)),
+        StaticPagesTransport(pageNumberPages(issueChunks(s, dir))), "ghcfg")
     }),
 
     // RFC 5988 header_link pagination end-to-end (GitHub's ACTUAL protocol:
@@ -2707,59 +2685,8 @@ object SparkEntry {
     // WHAT lands (reference: dlt rest_api's header_link paginator, the
     // cursor sibling at sources/pipedrive/rest_v2/__init__.py:158-162)
     "q_fleet_header_link" -> ((s, dir) => {
-      import graft.connectors.rest.{RestConfig, RestEngine, StaticPagesTransport}
-      import graft.pipeline.{Pipeline, ResourceDef, SourceDef}
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 250)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      def issue(r: org.apache.spark.sql.Row) = {
-        val k = (r.getLong(2) % 3).toInt + 1
-        val labels = (0 until k).map(i => s"""{"name":"l$i"}""").mkString(",")
-        s"""{"id":${r.getLong(0)},"updated_at":"2024-01-01T00:00:00Z","lang":"${r.getString(1)}","labels":[$labels]}"""
-      }
-      val chunks = docs.toSeq.grouped(100).toSeq
-      val firstKey = "repos/octo/repo/issues?direction=asc&sort=updated&state=all"
-      def pageKey(i: Int) = if (i == 0) firstKey else s"repos/octo/repo/issues?page=${i + 1}"
-      def linkTo(i: Int) =
-        s"""<https://api.github.com/repos/octo/repo/issues?page=${i + 1}>; rel="next", """ +
-          s"""<https://api.github.com/repos/octo/repo/issues?page=${chunks.size}>; rel="last""""
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        pageKey(i) -> s"[${chunk.map(issue).mkString(",")}]"
-      }.toMap
-      // every page but the last carries a Link rel=next header; the last
-      // page's MISSING link — not an empty page — terminates the loop
-      val headers = chunks.indices.dropRight(1).map(i => pageKey(i) -> Map("link" -> linkTo(i + 1))).toMap
-      val src = RestConfig.fromJson("""
-        {"name": "github",
-         "client": {"base_url": "https://api.github.com",
-                    "headers": {"Accept": "application/vnd.github+json"}},
-         "resources": [
-           {"name": "issues",
-            "endpoint": {"path": "repos/octo/repo/issues",
-                         "params": {"state": "all", "sort": "updated", "direction": "asc",
-                                    "since": "{incremental.start_value}"},
-                         "paginator": "header_link",
-                         "incremental": {"cursor_path": "updated_at"}},
-            "primary_key": "id",
-            "write_disposition": "merge"}
-         ]}""")
-      val issuesRes = src.resources.find(_.name == "issues").get
-      val dest = java.nio.file.Files.createTempDirectory("graft_flink").toString
-      val stateDir = java.nio.file.Files.createTempDirectory("graft_flstate").toString
-      val pipe = new Pipeline(s, "verify_ghlink", dest, stateDir)
-      val resource = ResourceDef(
-        name = "issues",
-        hints = issuesRes.hints,
-        build = ctx => RestEngine.readResource(ctx.spark, src, issuesRes,
-          StaticPagesTransport(pages, headers), Some(ctx.state)),
-      )
-      pipe.run(SourceDef(src.name, Seq(resource)))
-      val root = s.read.parquet(s"$dest/issues")
-      val labels = s.read.parquet(s"$dest/issues__labels")
-      root.select(col("lang"), col("_dlt_id"))
-        .join(labels.select(col("_dlt_parent_id")), col("_dlt_id") === col("_dlt_parent_id"))
-        .groupBy("lang")
-        .agg(countDistinct(col("_dlt_id")).as("n_issues"), count(lit(1)).as("n_labels"))
-        .orderBy("lang")
+      landedIssueLabels(s, githubIssuesConfig(Some("\"header_link\"")),
+        headerLinkTransport(issueChunks(s, dir)), "ghlink")
     }),
 
     // training-corpus PII scrubbing: deterministic emails/phones/IPs are
@@ -2771,59 +2698,11 @@ object SparkEntry {
     // oracle. A user porting a paginator-less dlt config gets detection,
     // not silent single-page truncation
     "q_fleet_auto" -> ((s, dir) => {
-      import graft.connectors.rest.{RestConfig, RestEngine, StaticPagesTransport}
-      import graft.pipeline.{Pipeline, ResourceDef, SourceDef}
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 250)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      def issue(r: org.apache.spark.sql.Row) = {
-        val k = (r.getLong(2) % 3).toInt + 1
-        val labels = (0 until k).map(i => s"""{"name":"l$i"}""").mkString(",")
-        s"""{"id":${r.getLong(0)},"updated_at":"2024-01-01T00:00:00Z","lang":"${r.getString(1)}","labels":[$labels]}"""
-      }
-      val chunks = docs.toSeq.grouped(100).toSeq
-      val firstKey = "repos/octo/repo/issues?direction=asc&sort=updated&state=all"
-      def pageKey(i: Int) = if (i == 0) firstKey else s"repos/octo/repo/issues?page=${i + 1}"
-      def linkTo(i: Int) =
-        s"""<https://api.github.com/repos/octo/repo/issues?page=${i + 1}>; rel="next", """ +
-          s"""<https://api.github.com/repos/octo/repo/issues?page=${chunks.size}>; rel="last""""
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        pageKey(i) -> s"[${chunk.map(issue).mkString(",")}]"
-      }.toMap
-      val headers = chunks.indices.dropRight(1).map(i => pageKey(i) -> Map("link" -> linkTo(i + 1))).toMap
       // NOTE: no "paginator" key at ANY level — this is the contract
-      val src = RestConfig.fromJson("""
-        {"name": "github",
-         "client": {"base_url": "https://api.github.com",
-                    "headers": {"Accept": "application/vnd.github+json"}},
-         "resources": [
-           {"name": "issues",
-            "endpoint": {"path": "repos/octo/repo/issues",
-                         "params": {"state": "all", "sort": "updated", "direction": "asc",
-                                    "since": "{incremental.start_value}"},
-                         "incremental": {"cursor_path": "updated_at"}},
-            "primary_key": "id",
-            "write_disposition": "merge"}
-         ]}""")
-      val issuesRes = src.resources.find(_.name == "issues").get
-      require(issuesRes.endpoint.paginator == RestEngine.Paginator.Auto,
-        "a paginator-less config must carry Auto into the engine")
-      val dest = java.nio.file.Files.createTempDirectory("graft_fauto").toString
-      val stateDir = java.nio.file.Files.createTempDirectory("graft_fastate").toString
-      val pipe = new Pipeline(s, "verify_ghauto", dest, stateDir)
-      val resource = ResourceDef(
-        name = "issues",
-        hints = issuesRes.hints,
-        build = ctx => RestEngine.readResource(ctx.spark, src, issuesRes,
-          StaticPagesTransport(pages, headers), Some(ctx.state)),
-      )
-      pipe.run(SourceDef(src.name, Seq(resource)))
-      val root = s.read.parquet(s"$dest/issues")
-      val labels = s.read.parquet(s"$dest/issues__labels")
-      root.select(col("lang"), col("_dlt_id"))
-        .join(labels.select(col("_dlt_parent_id")), col("_dlt_id") === col("_dlt_parent_id"))
-        .groupBy("lang")
-        .agg(countDistinct(col("_dlt_id")).as("n_issues"), count(lit(1)).as("n_labels"))
-        .orderBy("lang")
+      val src = githubIssuesConfig(None)
+      require(src.resources.find(_.name == "issues").get.endpoint.paginator ==
+        RestEngine.Paginator.Auto, "a paginator-less config must carry Auto into the engine")
+      landedIssueLabels(s, src, headerLinkTransport(issueChunks(s, dir)), "ghauto")
     }),
 
     // injected into each document and the codegen'd regexp passes must
@@ -2904,7 +2783,6 @@ object SparkEntry {
     // starting_after), terminating on an empty page; customers land via
     // the Fleet config and aggregate per market segment
     "q_stripe_cursor" -> ((s, dir) => {
-      import graft.connectors.rest.{RestEngine, StaticPagesTransport}
       import graft.connectors.sources.Fleet
       val cust = t(s, dir, "customer")
         .select("c_custkey", "c_nationkey", "c_acctbal", "c_mktsegment")
@@ -3389,7 +3267,7 @@ object SparkEntry {
     // (n_chars % 3 + 1 of them) and the oracle regenerates the fan-out
     // with generate_series
     "q_graphql_flatten" -> ((s, dir) => {
-      import graft.connectors.rest.{GraphQlReader, HttpResponse, HttpTransport}
+      import graft.connectors.rest.{GraphQlReader, HttpResponse}
       val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
         .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
       def node(r: org.apache.spark.sql.Row) = {
@@ -3541,50 +3419,31 @@ object SparkEntry {
     // declarative REST engine: documents served as offset-paginated JSON
     // pages through the page loop + schema inference, then aggregated
     "q_rest_pipeline" -> ((s, dir) => {
-      import graft.connectors.rest.{RestEngine, StaticPagesTransport}
       import RestEngine._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
       val pageSize = 25
-      def item(r: org.apache.spark.sql.Row) =
-        s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)}}"""
-      val chunks = docs.toSeq.grouped(pageSize).toSeq
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        s"docs?limit=$pageSize&offset=${i * pageSize}" -> s"""{"data":[${chunk.map(item).mkString(",")}]}"""
-      }.toMap + (s"docs?limit=$pageSize&offset=${chunks.size * pageSize}" -> """{"data":[]}""")
       val ep = EndpointConfig("docs", dataSelector = "data",
         paginator = Paginator.Offset(pageSize = pageSize))
-      val items = fetchPages(ClientConfig("https://fixture.test"), ep, StaticPagesTransport(pages))
-      jsonToDf(s, items)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
+      val items = fetchPages(ClientConfig("https://fixture.test"), ep,
+        StaticPagesTransport(offsetPages(docItems(s, dir, 100), pageSize)))
+      langTotals(jsonToDf(s, items))
     }),
 
     // partition-parallel REST root paging (RestPagesV2): the response
     // carries meta.total, so the DSv2 scan plans ONE INPUT PARTITION PER
     // PAGE and the pages fetch executor-side — no driver page chain
     "q_rest_parallel" -> ((s, dir) => {
-      import graft.connectors.rest.{RestEngine, StaticPagesTransport}
       import RestEngine._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 200)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
       val pageSize = 40
-      def item(r: org.apache.spark.sql.Row) =
-        s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)}}"""
-      val total = docs.length
-      val pages = docs.toSeq.grouped(pageSize).toSeq.zipWithIndex.map { case (chunk, i) =>
+      val items = docItems(s, dir, 200)
+      val pages = items.grouped(pageSize).toSeq.zipWithIndex.map { case (chunk, i) =>
         s"docs?limit=$pageSize&offset=${i * pageSize}" ->
-          s"""{"data":[${chunk.map(item).mkString(",")}],"meta":{"total":$total}}"""
+          s"""{"data":[${chunk.mkString(",")}],"meta":{"total":${items.size}}}"""
       }.toMap
       val ep = EndpointConfig("docs", dataSelector = "data",
         paginator = Paginator.Offset(pageSize = pageSize, totalPath = Some("meta.total")))
       val src = RestSource("fixture", ClientConfig("https://fixture.test"),
         Seq(RestResource("docs", ep, TableHints("docs", Disposition.Append))))
-      readResourceParallel(s, src, src.resources.head, () => StaticPagesTransport(pages))
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
+      langTotals(readResourceParallel(s, src, src.resources.head, () => StaticPagesTransport(pages)))
     }),
 
     // POST-shaped REST endpoint (dlt rest_api's `method`/`json` dialect
@@ -3597,21 +3456,15 @@ object SparkEntry {
     // must hash-match q_rest_pipeline's oracle — same rows through a
     // different protocol
     "q_rest_post" -> ((s, dir) => {
-      import graft.connectors.rest.{RestConfig, RestEngine, StaticPagesTransport}
       import RestEngine._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      val pageSize = 25
-      def item(r: org.apache.spark.sql.Row) =
-        s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)}}"""
       val template = """{"kind":"doc","limit":25}"""
       def bodyFor(cursor: Option[String]) =
         cursor.fold(template)(c => template.dropRight(1) + s""","cursor":"$c"}""")
-      val chunks = docs.toSeq.grouped(pageSize).toSeq
+      val chunks = docItems(s, dir, 100).grouped(25).toSeq
       val pages = chunks.zipWithIndex.map { case (chunk, i) =>
         val next = if (i + 1 < chunks.size) s""""c${i + 2}"""" else "null"
         s"POST docs/search?v=1#${bodyFor(if (i == 0) None else Some(s"c${i + 1}"))}" ->
-          s"""{"data":[${chunk.map(item).mkString(",")}],"meta":{"next":$next}}"""
+          s"""{"data":[${chunk.mkString(",")}],"meta":{"next":$next}}"""
       }.toMap
       val src = RestConfig.fromJson(
         """{"name": "fixture", "client": {"base_url": "https://fixture.test"},
@@ -3622,10 +3475,7 @@ object SparkEntry {
                            "cursor_param": "cursor"}}}]}""")
       val items = fetchPages(src.client, src.resources.head.endpoint,
         StaticPagesTransport(pages))
-      jsonToDf(s, items)
-        .groupBy("lang")
-        .agg(count(lit(1)).as("n"), sum(col("n_chars")).as("sum_chars"))
-        .orderBy("lang")
+      langTotals(jsonToDf(s, items))
     }),
 
     // processing_steps (dlt rest_api's per-resource map/filter hooks,
@@ -3637,17 +3487,7 @@ object SparkEntry {
     // filter drops items from full pages, yet every server page is
     // still fetched
     "q_rest_steps" -> ((s, dir) => {
-      import graft.connectors.rest.{RestConfig, RestEngine, StaticPagesTransport}
       import RestEngine._
-      val docs = t(s, dir, "documents").filter(col("doc_id") < 100)
-        .select("doc_id", "lang", "n_chars").orderBy("doc_id").collect()
-      val pageSize = 25
-      def item(r: org.apache.spark.sql.Row) =
-        s"""{"doc_id":${r.getLong(0)},"lang":"${r.getString(1)}","n_chars":${r.getLong(2)},"secret":"s${r.getLong(0)}"}"""
-      val chunks = docs.toSeq.grouped(pageSize).toSeq
-      val pages = chunks.zipWithIndex.map { case (chunk, i) =>
-        s"docs?limit=$pageSize&offset=${i * pageSize}" -> s"""{"data":[${chunk.map(item).mkString(",")}]}"""
-      }.toMap + (s"docs?limit=$pageSize&offset=${chunks.size * pageSize}" -> """{"data":[]}""")
       val src = RestConfig.fromJson(
         """{"name": "fixture", "client": {"base_url": "https://fixture.test"},
            "resources": [{"name": "docs",
@@ -3657,7 +3497,7 @@ object SparkEntry {
                {"filter": {"field": "n_chars", "gt": 150}},
                {"map": {"drop_fields": ["secret"]}}]}]}""")
       val items = fetchPages(src.client, src.resources.head.endpoint,
-        StaticPagesTransport(pages))
+        StaticPagesTransport(offsetPages(docItems(s, dir, 100, secret = true), 25)))
       val df = jsonToDf(s, items)
       require(!df.columns.contains("secret"), "drop_fields must strip the planted column")
       df.select("doc_id", "lang", "n_chars").orderBy("doc_id")
@@ -3753,16 +3593,7 @@ object SparkEntry {
       withFewShufflePartitions(s, 8) {
         val ev = streamEvents(s, dir).filter(col("event_id") < 4000)
           .select(col("ts"), col("event_id"))
-        val g = expr("event_id div 5").cast("string")
-        val v = col("event_id") % 5
-        val urls = ev.select(col("ts"),
-          when(v === 0, concat(lit("http://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2")))
-            .when(v === 1, concat(lit("HTTPS://WWW.SITE"), g, lit(".EXAMPLE.COM/p/"), g, lit("?a=1&b=2")))
-            .when(v === 2, concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("/?b=2&a=1")))
-            .when(v === 3, concat(lit("http://site"), g, lit(".example.com/p/"), g,
-              lit("?a=1&b=2&utm_source=feed&fbclid=X"), g))
-            .otherwise(concat(lit("https://site"), g, lit(".example.com/p/"), g, lit("?a=1&b=2#sec"), v))
-            .as("url"))
+        val urls = ev.select(col("ts"), plantedUrl("event_id"))
         val canon = urls.select(col("ts"), Url.canonicalize(col("url")).as("url_canon"))
         val dd = EventStreams.streamingDedup(canon, Seq("url_canon"),
           watermark = s"${spanDays + 2} days")
@@ -3943,12 +3774,7 @@ object SparkEntry {
       import graft.streaming.StreamingDedupSink
       val root = java.nio.file.Files.createTempDirectory("graft_sdedup").toString
       withFewShufflePartitions(s, 8) {
-        val docs = s.readStream
-          .schema(StructType(Seq(
-            StructField("doc_id", LongType), StructField("text", StringType),
-            StructField("lang", StringType), StructField("source", StringType),
-            StructField("n_chars", LongType))))
-          .parquet(s"$dir/[d]ocuments.parquet")
+        val docs = streamDocuments(s, dir)
           .filter(col("doc_id") % 9 === 0)
         val q = StreamingDedupSink.start(docs, s"$root/corpus", s"$root/index",
           "doc_id", "text", s"$root/ckpt", threshold = 0.9)
@@ -3970,12 +3796,7 @@ object SparkEntry {
       val lm = LanguageModel.trainBigramLm(
         t(s, dir, "documents").filter(col("doc_id") % 3 === 0), "text")
       withFewShufflePartitions(s, 8) {
-        val docs = s.readStream
-          .schema(StructType(Seq(
-            StructField("doc_id", LongType), StructField("text", StringType),
-            StructField("lang", StringType), StructField("source", StringType),
-            StructField("n_chars", LongType))))
-          .parquet(s"$dir/[d]ocuments.parquet")
+        val docs = streamDocuments(s, dir)
         val q = StreamingQualityGate.start(docs, lm, "doc_id", "text",
           s"$root/out", s"$root/ckpt", bitsNum = 109L, bitsDen = 20L)
         q.processAllAvailable(); q.stop()
@@ -4001,12 +3822,7 @@ object SparkEntry {
         seed.select(col("doc_id"), col("text"),
           when(col("lang") === "en", 1L).otherwise(0L).as("y")), "text", "y")
       withFewShufflePartitions(s, 8) {
-        val docs = s.readStream
-          .schema(StructType(Seq(
-            StructField("doc_id", LongType), StructField("text", StringType),
-            StructField("lang", StringType), StructField("source", StringType),
-            StructField("n_chars", LongType))))
-          .parquet(s"$dir/[d]ocuments.parquet")
+        val docs = streamDocuments(s, dir)
         val q = StreamingQualityGate.start(docs, lm, "doc_id", "text",
           s"$root/out", s"$root/ckpt", bitsNum = 109L, bitsDen = 20L,
           nb = Some(nb), nbMarginBits = -2L)
@@ -4085,6 +3901,32 @@ object SparkEntry {
     */
   private def sqlVec(a: Array[Double]): String = a.mkString("[", ",", "]")
 
+  /** A centroid set as the rows of a DuckDB `VALUES (cell, cv)` list. */
+  private def centRows(cents: Seq[(Int, Array[Double])]): String =
+    cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
+
+  /** The hashed-BoW embedder replayed in SQL, as a CTE list (no WITH)
+    * ending in `vecs(doc_id, vec)`: md5 low-60-bit token hash, (h/2) mod
+    * 32 dimension, h mod 2 sign, per-dimension signed counts densified to
+    * a dim-32 list over the docs of `src`. Integer-valued components keep
+    * every downstream comparison exact. `hs` names the hash CTE and `cnt`
+    * the count column; the hybrid oracles spell it `cc` and join `comp`
+    * unaliased.
+    */
+  private def embedVecCtes(src: String = "documents", hs: String = "hs",
+      cnt: String = "c"): String = {
+    val (comp, compAs) = if (cnt == "c") ("c", "comp c") else ("comp", "comp")
+    s"""toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM $src),
+       |$hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
+       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
+       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS $cnt
+       |  FROM $hs GROUP BY 1, 2),
+       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM $src) CROSS JOIN range(0, 32) t(i)),
+       |vecs AS (SELECT d.doc_id, list(coalesce($comp.$cnt, 0.0) ORDER BY d.i) AS vec
+       |  FROM dims d LEFT JOIN $compAs ON $comp.doc_id = d.doc_id AND $comp.idx = d.i
+       |  GROUP BY d.doc_id)""".stripMargin
+  }
+
   /** SQL replica of q_embed_ann: the hashed-BoW embedder re-derived from
     * scratch — md5 low-60-bit token hash, (h/2) mod dim dimension, h mod 2
     * sign, per-dimension signed counts densified to a dim-32 list — then
@@ -4093,15 +3935,7 @@ object SparkEntry {
     * bit-for-bit, not approximate.
     */
   private def embedAnnSql: String =
-    """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-      |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-      |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-      |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-      |  FROM hs GROUP BY 1, 2),
-      |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-      |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-      |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-      |  GROUP BY d.doc_id),
+    s"""WITH ${embedVecCtes()},
       |q AS (SELECT doc_id AS q_id, vec FROM vecs WHERE doc_id % 100 = 0),
       |c AS (SELECT doc_id AS n_id, vec FROM vecs WHERE doc_id % 100 <> 0),
       |scored AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
@@ -4121,23 +3955,7 @@ object SparkEntry {
     * `Dedup.bandedVerify`'s min-id-hub star fallback in the whole-blob
     * bucket dimension exactly as [[audioPairCtesWith]] does for audio.
     */
-  private def imagePairCtesWith(cap: Option[Int]): String = {
-    val candCtes = cap match {
-      case None =>
-        """cand AS (SELECT DISTINCT a.e AS id_a, c.e AS id_b FROM bands a
-          |  JOIN bands c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e)""".stripMargin
-      case Some(c) =>
-        s"""bsz AS (SELECT band, bkey, count(*) AS n FROM bands GROUP BY 1, 2),
-           |sane AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n <= $c),
-           |scand AS (SELECT a.e AS id_a, c.e AS id_b FROM sane a
-           |  JOIN sane c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e),
-           |big AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n > $c),
-           |hubs AS (SELECT band, bkey, min(e) AS hub FROM big GROUP BY 1, 2),
-           |starc AS (SELECT hub AS id_a, e AS id_b FROM big JOIN hubs USING (band, bkey)
-           |  WHERE e <> hub),
-           |cand AS (SELECT DISTINCT id_a, id_b FROM
-           |  (SELECT * FROM scand UNION ALL SELECT * FROM starc))""".stripMargin
-    }
+  private def imagePairCtesWith(cap: Option[Int]): String =
     s"""src AS (SELECT event_id AS e FROM events WHERE event_id % 100000000 < 400),
       |dims AS (SELECT e, 8 + (e // 5) % 9 AS w, 8 + (e // 5) % 7 AS h FROM src),
       |grid AS (SELECT e, gi.i AS gi, gj.i AS gj, (gi.i * w) // 8 AS x, (gj.i * h) // 8 AS y
@@ -4148,19 +3966,11 @@ object SparkEntry {
       |  FROM gray JOIN tot ON gray.e = tot.e),
       |bands AS (SELECT e, bp // 16 AS band, CAST(SUM(bit * (1 << (bp % 16))) AS BIGINT) AS bkey
       |  FROM bits GROUP BY 1, 2),
-      |$candCtes,
+      |${bandCandCtes(cap)},
       |ham AS (SELECT id_a, id_b, CAST(SUM(bit_count(xor(ba.bkey, bb.bkey))) AS BIGINT) AS hamming
       |  FROM cand JOIN bands ba ON ba.e = id_a JOIN bands bb ON bb.e = id_b AND bb.band = ba.band
       |  GROUP BY 1, 2)""".stripMargin
-  }
 
-  /** Shared CTE chain for the audio-dedup oracles: the bin-aligned tone
-    * synthesis makes band energy ordering equal amplitude ordering, so
-    * the oracle recomputes the 28 pairwise rank bits, the four 7-bit
-    * band keys, banded candidate buckets, and exact Hamming — the full
-    * `Audio.spectralHashBands` + `Dedup.audioNearDups` path — from the
-    * amplitude formula alone (gain and duration cancel by construction).
-    */
   /** SQL replica of q_video_dedup (and its capped twin): rebuild the GIF
     * fixture's frames, stride-2 sampling, the 8×8 grid, aHash bits, the
     * four 16-bit band keys, ALIGNED (band, key, frame) candidate
@@ -4208,6 +4018,18 @@ object SparkEntry {
        |  WHERE hamming <= 3 GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
   }
 
+  /** Hamming-verified pairs over a media pair CTE chain. */
+  private def mediaPairSql(pairCtes: String): String =
+    s"""WITH $pairCtes
+       |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " ")
+
+  /** Clusters over a media pair CTE chain's Hamming-verified pairs. */
+  private def mediaClustersSql(pairCtes: String): String =
+    s"""WITH RECURSIVE $pairCtes,
+       |verified AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
+       |${closureCtes(e = "e2")}
+       |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " ")
+
   private def videoPairSql(cap: Option[Int]): String =
     s"""WITH ${videoPairCtes(cap)}
        |SELECT id_a, id_b, n_frames FROM vpairs ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " ")
@@ -4217,14 +4039,39 @@ object SparkEntry {
     */
   private def videoClustersSql(cap: Option[Int]): String =
     s"""WITH RECURSIVE ${videoPairCtes(cap)},
-       |edges AS (SELECT id_a AS u, id_b AS v FROM vpairs UNION SELECT id_b, id_a FROM vpairs),
-       |reach(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e2.v, r.lbl FROM reach r JOIN edges e2 ON e2.u = r.id)
+       |${closureCtes("vpairs", e = "e2")}
        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " ")
 
+  /** Shared CTE chain for the audio-dedup oracles: the bin-aligned tone
+    * synthesis makes band energy ordering equal amplitude ordering, so
+    * the oracle recomputes the 28 pairwise rank bits, the four 7-bit
+    * band keys, banded candidate buckets, and exact Hamming — the full
+    * `Audio.spectralHashBands` + `Dedup.audioNearDups` path — from the
+    * amplitude formula alone (gain and duration cancel by construction).
+    */
   private def audioPairCtes: String = audioPairCtesWith(None)
+
+  /** Banded candidate pairs `cand(id_a, id_b)` over `bands(e, band,
+    * bkey)`; with `cap` set, buckets over it replay
+    * `Dedup.bandedVerify`'s star fallback (pairs only between the
+    * bucket's min-id hub and its members).
+    */
+  private def bandCandCtes(cap: Option[Int]): String = cap match {
+    case None =>
+      """cand AS (SELECT DISTINCT a.e AS id_a, c.e AS id_b FROM bands a
+        |  JOIN bands c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e)""".stripMargin
+    case Some(c) =>
+      s"""bsz AS (SELECT band, bkey, count(*) AS n FROM bands GROUP BY 1, 2),
+         |sane AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n <= $c),
+         |scand AS (SELECT a.e AS id_a, c.e AS id_b FROM sane a
+         |  JOIN sane c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e),
+         |big AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n > $c),
+         |hubs AS (SELECT band, bkey, min(e) AS hub FROM big GROUP BY 1, 2),
+         |starc AS (SELECT hub AS id_a, e AS id_b FROM big JOIN hubs USING (band, bkey)
+         |  WHERE e <> hub),
+         |cand AS (SELECT DISTINCT id_a, id_b FROM
+         |  (SELECT * FROM scand UNION ALL SELECT * FROM starc))""".stripMargin
+  }
 
   /** As [[audioPairCtes]] with an optional bucket cap: when `cap` is
     * set, (band, key) buckets over it replay `Dedup.bandedVerify`'s
@@ -4232,23 +4079,7 @@ object SparkEntry {
     * members — exactly as the Spark side degrades, so the capped branch
     * gates bit-for-bit where it fires.
     */
-  private def audioPairCtesWith(cap: Option[Int]): String = {
-    val candCtes = cap match {
-      case None =>
-        """cand AS (SELECT DISTINCT a.e AS id_a, c.e AS id_b FROM bands a
-          |  JOIN bands c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e)""".stripMargin
-      case Some(c) =>
-        s"""bsz AS (SELECT band, bkey, count(*) AS n FROM bands GROUP BY 1, 2),
-           |sane AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n <= $c),
-           |scand AS (SELECT a.e AS id_a, c.e AS id_b FROM sane a
-           |  JOIN sane c ON a.band = c.band AND a.bkey = c.bkey AND a.e < c.e),
-           |big AS (SELECT bands.* FROM bands JOIN bsz USING (band, bkey) WHERE n > $c),
-           |hubs AS (SELECT band, bkey, min(e) AS hub FROM big GROUP BY 1, 2),
-           |starc AS (SELECT hub AS id_a, e AS id_b FROM big JOIN hubs USING (band, bkey)
-           |  WHERE e <> hub),
-           |cand AS (SELECT DISTINCT id_a, id_b FROM
-           |  (SELECT * FROM scand UNION ALL SELECT * FROM starc))""".stripMargin
-    }
+  private def audioPairCtesWith(cap: Option[Int]): String =
     s"""src AS (SELECT event_id AS e FROM events WHERE event_id % 100000000 >= 700 AND event_id % 100000000 < 840),
        |amps AS (SELECT e, b.i AS b, 300 + (((e // 5) * 7 + b.i * 13) % 32) * 60 AS a
        |  FROM src CROSS JOIN range(0, 8) b(i)),
@@ -4258,11 +4089,34 @@ object SparkEntry {
        |  FROM amps x JOIN amps y ON x.e = y.e AND x.b < y.b),
        |bands AS (SELECT e, bp // 7 AS band, CAST(SUM(bit * (1 << (bp % 7))) AS BIGINT) AS bkey
        |  FROM prs GROUP BY 1, 2),
-       |$candCtes,
+       |${bandCandCtes(cap)},
        |ham AS (SELECT id_a, id_b, CAST(SUM(bit_count(xor(ba.bkey, bb.bkey))) AS BIGINT) AS hamming
        |  FROM cand JOIN bands ba ON ba.e = id_a JOIN bands bb ON bb.e = id_b AND bb.band = ba.band
        |  GROUP BY 1, 2)""".stripMargin
-  }
+
+  /** The embeddings ANN oracles' sides: q(q_id, v) where `qWhere`,
+    * c(n_id, v) where `cWhere`.
+    */
+  private def embeddingSidesCtes(qWhere: String, cWhere: String): String =
+    s"""q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE $qWhere),
+       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE $cWhere)""".stripMargin
+
+  /** IVF probe mechanics over upstream q(q_id, v) and c(n_id, v):
+    * assignment = argmax dot against the `cents` literals (ties to the
+    * larger cell, as Spark's greatest(struct(sim, cell))), probe = the
+    * top-2 cells per query by the same ordering, cosine rank within the
+    * probed cells as CTE `scored(q_id, n_id, rank)`.
+    */
+  private def ivfProbeCtes(cents: Seq[(Int, Array[Double])], scored: String = "scored"): String =
+    s"""cents(cell, cv) AS (VALUES ${centRows(cents)}),
+       |assigned AS (SELECT n_id, v,
+       |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
+       |probed AS (SELECT q_id, v, p.cell
+       |  FROM q, LATERAL (SELECT cell FROM cents ORDER BY list_dot_product(q.v, cv) DESC, cell DESC LIMIT 2) p),
+       |$scored AS (SELECT q_id, n_id,
+       |  row_number() OVER (PARTITION BY q_id
+       |    ORDER BY list_cosine_similarity(probed.v, assigned.v) DESC, n_id) AS rank
+       |  FROM probed JOIN assigned USING (cell))""".stripMargin
 
   /** SQL replica of q_embed_ivf: the embedAnnSql vector derivation (hashed
     * BoW, dim 32) feeding the annIvfSql probe mechanics (fixed-centroid
@@ -4271,33 +4125,13 @@ object SparkEntry {
     * integer-count vectors keep every comparison exact, so the composed
     * seam gates bit-for-bit like its two parents.
     */
-  private def embedIvfSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
+  private def embedIvfSql: String =
+    s"""WITH ${embedVecCtes()},
        |q AS (SELECT doc_id AS q_id, vec AS v FROM vecs WHERE doc_id % 100 = 0),
        |c AS (SELECT doc_id AS n_id, vec AS v FROM vecs WHERE doc_id % 100 <> 0),
-       |cents(cell, cv) AS (VALUES $centRows),
-       |assigned AS (SELECT n_id, v,
-       |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
-       |probed AS (SELECT q_id, v, p.cell
-       |  FROM q, LATERAL (SELECT cell FROM cents ORDER BY list_dot_product(q.v, cv) DESC, cell DESC LIMIT 2) p),
-       |scored AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id
-       |    ORDER BY list_cosine_similarity(probed.v, assigned.v) DESC, n_id) AS rank
-       |  FROM probed JOIN assigned USING (cell))
+       |${ivfProbeCtes(signCentroids)}
        |SELECT q_id, rank, n_id FROM scored WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
       .replaceAll("\n", " ")
-  }
 
   /** SQL replica of q_hybrid_rank_scale: the embedIvfSql dense tower
     * (fixed ±0.125 centroids, nProbe=2 lateral probe) fused with the
@@ -4305,22 +4139,11 @@ object SparkEntry {
     * scoring of nominees) by integer Borda points — every stage of both
     * towers replays bit-exactly in SQL.
     */
-  private def hybridRankScaleSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS cc
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(comp.cc, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp ON comp.doc_id = d.doc_id AND comp.idx = d.i
-       |  GROUP BY d.doc_id),
+  private def hybridRankScaleSql: String =
+    s"""WITH ${embedVecCtes(cnt = "cc")},
        |qv AS (SELECT doc_id AS q_id, vec AS v FROM vecs WHERE doc_id % 100 = 0),
        |cvv AS (SELECT doc_id AS n_id, vec AS v FROM vecs WHERE doc_id % 100 <> 0),
-       |cents(cell, cv) AS (VALUES $centRows),
+       |cents(cell, cv) AS (VALUES ${centRows(signCentroids)}),
        |assigned AS (SELECT n_id, v,
        |  (SELECT cell FROM cents ORDER BY list_dot_product(cvv.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM cvv),
        |probed AS (SELECT q_id, v, p.cell
@@ -4331,11 +4154,7 @@ object SparkEntry {
        |  FROM probed JOIN assigned USING (cell)),
        |ann AS (SELECT q_id, n_id, rank FROM annr WHERE rank <= 5),
        |cd AS (SELECT doc_id, text FROM documents WHERE doc_id % 100 <> 0),
-       |nn AS (SELECT count(*) AS n FROM cd),
-       |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-       |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM cd)) GROUP BY 1),
-       |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-       |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+       |${lexIdfCtes("cd")},
        |post AS (SELECT term, doc_id, count(*) AS tf FROM
        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM cd) GROUP BY 1, 2),
        |champ AS (SELECT term, doc_id FROM (SELECT term, doc_id,
@@ -4359,7 +4178,6 @@ object SparkEntry {
        |  row_number() OVER (PARTITION BY q_id ORDER BY points DESC, n_id) AS rank FROM fused)
        |SELECT q_id, CAST(rank AS BIGINT) AS rank, n_id, points
        |FROM fr WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " ")
-  }
 
   /** Shared CTE chain for the BPE oracles: the FIXED merge table (rendered
     * from the Scala tokenizer — single source of truth), the distinct
@@ -4492,42 +4310,13 @@ object SparkEntry {
        |  WHERE n_email + n_card + n_ssn + n_ip <= 3),
        |nbseed AS (SELECT doc_id, text, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
        |  FROM documents WHERE doc_id % 3 = 0),
-       |nbsw AS (SELECT y, unnest(string_split(text, ' ')) AS w FROM nbseed),
-       |nbcnt AS (SELECT w, sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS c0,
-       |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS c1 FROM nbsw GROUP BY w),
-       |nbtot AS (SELECT sum(c0) AS n0, sum(c1) AS n1, count(*) AS v FROM nbcnt),
-       |nbpri AS (SELECT sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS d0,
-       |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS d1 FROM nbseed),
-       |nbq AS (SELECT w,
-       |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS q0,
-       |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS q1
-       |  FROM (SELECT w,
-       |    ((SELECT n0 + v FROM nbtot) + c0) // (c0 + 1) AS m0,
-       |    ((SELECT n1 + v FROM nbtot) + c1) // (c1 + 1) AS m1 FROM nbcnt)),
-       |nbdefs AS (SELECT
-       |  CASE WHEN n0 + v <= 1 THEN 0 ELSE length(bin(n0 + v - 1)) END AS qd0,
-       |  CASE WHEN n1 + v <= 1 THEN 0 ELSE length(bin(n1 + v - 1)) END AS qd1 FROM nbtot),
-       |nbpbits AS (SELECT
-       |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS p0,
-       |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS p1
-       |  FROM (SELECT (d0 + d1 + 2 + d0) // (d0 + 1) AS m0,
-       |    (d0 + d1 + 2 + d1) // (d1 + 1) AS m1 FROM nbpri)),
-       |nbdt AS (SELECT doc_id, unnest(string_split(t, ' ')) AS w FROM s2),
-       |nbsc AS (SELECT d.doc_id,
-       |  coalesce(nbq.q0, (SELECT qd0 FROM nbdefs)) AS q0,
-       |  coalesce(nbq.q1, (SELECT qd1 FROM nbdefs)) AS q1
-       |  FROM nbdt d LEFT JOIN nbq USING (w)),
-       |nbagg AS (SELECT doc_id, CAST(sum(q0) AS BIGINT) AS s0, CAST(sum(q1) AS BIGINT) AS sc1 FROM nbsc GROUP BY 1),
+       |${nbScoreCtes("t")},
        |s3 AS MATERIALIZED (SELECT s2.doc_id, s2.t AS text, s2.n_email, s2.n_card, s2.n_ssn, s2.n_ip
        |  FROM s2 LEFT JOIN nbagg USING (doc_id)
        |  WHERE coalesce(nbagg.s0, 0) + (SELECT p0 FROM nbpbits)
        |    - (coalesce(nbagg.sc1, 0) + (SELECT p1 FROM nbpbits)) >= -2),
        |$nearDup,
-       |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-       |reach(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.id),
+       |${closureCtes()},
        |comp AS (SELECT id, min(lbl) AS cluster FROM reach GROUP BY id)
        |SELECT s3.doc_id, s3.text, s3.n_email, s3.n_card, s3.n_ssn, s3.n_ip,
        |  coalesce(c.cluster, s3.doc_id) AS root,
@@ -4676,70 +4465,14 @@ object SparkEntry {
     * must equal it regardless of batch boundaries.
     */
   private def streamNbSql: String =
-    """WITH gf AS (SELECT doc_id,
-      |  len(string_split(text, ' ')) AS nw,
-      |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
-      |  len(regexp_extract_all(text, '#')) AS nh,
-      |  len(regexp_extract_all(text, '\.\.\.')) AS ne,
-      |  string_split(text, chr(10)) AS ls,
-      |  string_split(text, ' ') AS w
-      |  FROM documents),
-      |gg AS (SELECT doc_id,
-      |  CASE WHEN nw >= 50 AND nw <= 100000 THEN 1 ELSE 0 END
-      |  * CASE WHEN ml >= 3.0 AND ml <= 10.0 THEN 1 ELSE 0 END
-      |  * CASE WHEN nh / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-      |  * CASE WHEN ne / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(ls, l -> substr(l, 1, 1) IN ('-', '*'))) / CAST(len(ls) AS DOUBLE) <= 0.9 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(ls, l -> ends_with(l, '...'))) / CAST(len(ls) AS DOUBLE) <= 0.3 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]'))) / CAST(nw AS DOUBLE) >= 0.8 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(w, t -> t IN ('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'))) >= 2 THEN 1 ELSE 0 END AS pass
-      |  FROM gf),
-      |s1 AS (SELECT d.doc_id, d.text FROM documents d JOIN gg USING (doc_id) WHERE gg.pass = 1),
-      |plref AS (SELECT text FROM documents WHERE doc_id % 3 = 0),
-      |plrw AS (SELECT unnest(string_split(text, ' ')) AS w FROM plref),
-      |pluni AS (SELECT w, count(*) AS c1 FROM plrw GROUP BY w),
-      |plvoc AS (SELECT count(*) AS v FROM pluni),
-      |plrl AS (SELECT string_split(text, ' ') AS l FROM plref),
-      |plrb AS (SELECT l[i] AS w1, l[i+1] AS w2 FROM (SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM plrl)),
-      |plbig AS (SELECT w1, w2, count(*) AS c12 FROM plrb GROUP BY 1, 2),
-      |pldl AS (SELECT doc_id, string_split(text, ' ') AS l FROM s1),
-      |pldb AS (SELECT doc_id, l[i] AS w1, l[i+1] AS w2 FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM pldl)),
-      |plsc AS (SELECT d.doc_id, coalesce(b.c12, 0) + 1 AS a, coalesce(u.c1, 0) + (SELECT v FROM plvoc) AS bb
-      |  FROM pldb d LEFT JOIN plbig b USING (w1, w2) LEFT JOIN pluni u ON d.w1 = u.w),
-      |plqq AS (SELECT doc_id, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS q
-      |  FROM (SELECT doc_id, (bb + a - 1) // a AS m FROM plsc)),
-      |plagg AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS bits, CAST(count(*) AS BIGINT) AS nb FROM plqq GROUP BY 1),
+    s"""WITH ${gopherGateCtes},
+      |${perplexityCtes("documents")},
       |s2 AS (SELECT s1.doc_id, s1.text, coalesce(plagg.bits, 0) AS bits, coalesce(plagg.nb, 0) AS n_bigrams
       |  FROM s1 LEFT JOIN plagg USING (doc_id)
       |  WHERE coalesce(plagg.bits, 0) * 20 <= 109 * coalesce(plagg.nb, 0) OR coalesce(plagg.nb, 0) = 0),
       |nbseed AS (SELECT d.doc_id, d.text, CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END AS y
       |  FROM documents d WHERE d.doc_id % 3 = 0),
-      |nbsw AS (SELECT y, unnest(string_split(text, ' ')) AS w FROM nbseed),
-      |nbcnt AS (SELECT w, sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS c0,
-      |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS c1 FROM nbsw GROUP BY w),
-      |nbtot AS (SELECT sum(c0) AS n0, sum(c1) AS n1, count(*) AS v FROM nbcnt),
-      |nbpri AS (SELECT sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS d0,
-      |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS d1 FROM nbseed),
-      |nbq AS (SELECT w,
-      |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS q0,
-      |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS q1
-      |  FROM (SELECT w,
-      |    ((SELECT n0 + v FROM nbtot) + c0) // (c0 + 1) AS m0,
-      |    ((SELECT n1 + v FROM nbtot) + c1) // (c1 + 1) AS m1 FROM nbcnt)),
-      |nbdefs AS (SELECT
-      |  CASE WHEN n0 + v <= 1 THEN 0 ELSE length(bin(n0 + v - 1)) END AS qd0,
-      |  CASE WHEN n1 + v <= 1 THEN 0 ELSE length(bin(n1 + v - 1)) END AS qd1 FROM nbtot),
-      |nbpbits AS (SELECT
-      |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS p0,
-      |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS p1
-      |  FROM (SELECT (d0 + d1 + 2 + d0) // (d0 + 1) AS m0,
-      |    (d0 + d1 + 2 + d1) // (d1 + 1) AS m1 FROM nbpri)),
-      |nbdt AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM s2),
-      |nbsc AS (SELECT d.doc_id,
-      |  coalesce(nbq.q0, (SELECT qd0 FROM nbdefs)) AS q0,
-      |  coalesce(nbq.q1, (SELECT qd1 FROM nbdefs)) AS q1
-      |  FROM nbdt d LEFT JOIN nbq USING (w)),
-      |nbagg AS (SELECT doc_id, CAST(sum(q0) AS BIGINT) AS s0, CAST(sum(q1) AS BIGINT) AS sc1 FROM nbsc GROUP BY 1)
+      |${nbScoreCtes("text")}
       |SELECT s2.doc_id, s2.bits, s2.n_bigrams,
       |  coalesce(nbagg.s0, 0) + (SELECT p0 FROM nbpbits) AS bits0,
       |  coalesce(nbagg.sc1, 0) + (SELECT p1 FROM nbpbits) AS bits1
@@ -4747,6 +4480,89 @@ object SparkEntry {
       |WHERE coalesce(nbagg.s0, 0) + (SELECT p0 FROM nbpbits)
       |  - (coalesce(nbagg.sc1, 0) + (SELECT p1 FROM nbpbits)) >= -2
       |ORDER BY s2.doc_id""".stripMargin.replaceAll("\n", " ")
+
+  /** The Gopher rule inputs per document of `src` as CTE `name`: word
+    * count, mean word length, '#' and '...' counts, lines and words.
+    */
+  private def gopherFeaturesCte(name: String, src: String): String =
+    s"""$name AS (SELECT doc_id,
+       |  len(string_split(text, ' ')) AS nw,
+       |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
+       |  len(regexp_extract_all(text, '#')) AS nh,
+       |  len(regexp_extract_all(text, '\\.\\.\\.')) AS ne,
+       |  string_split(text, chr(10)) AS ls,
+       |  string_split(text, ' ') AS w
+       |  FROM $src)""".stripMargin
+
+  /** The q_gopher_filter gate over `documents` as CTEs `gf`, `gg` (the
+    * product of the eight 0/1 rules) and the survivors `s1(doc_id, text)`.
+    */
+  private def gopherGateCtes: String =
+    s"""${gopherFeaturesCte("gf", "documents")},
+       |gg AS (SELECT doc_id,
+       |  CASE WHEN nw >= 50 AND nw <= 100000 THEN 1 ELSE 0 END
+       |  * CASE WHEN ml >= 3.0 AND ml <= 10.0 THEN 1 ELSE 0 END
+       |  * CASE WHEN nh / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
+       |  * CASE WHEN ne / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
+       |  * CASE WHEN len(list_filter(ls, l -> substr(l, 1, 1) IN ('-', '*'))) / CAST(len(ls) AS DOUBLE) <= 0.9 THEN 1 ELSE 0 END
+       |  * CASE WHEN len(list_filter(ls, l -> ends_with(l, '...'))) / CAST(len(ls) AS DOUBLE) <= 0.3 THEN 1 ELSE 0 END
+       |  * CASE WHEN len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]'))) / CAST(nw AS DOUBLE) >= 0.8 THEN 1 ELSE 0 END
+       |  * CASE WHEN len(list_filter(w, t -> t IN ('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'))) >= 2 THEN 1 ELSE 0 END AS pass
+       |  FROM gf),
+       |s1 AS (SELECT d.doc_id, d.text FROM documents d JOIN gg USING (doc_id) WHERE gg.pass = 1)""".stripMargin
+
+  /** The q_perplexity_lm bigram LM as `pl`-prefixed CTEs: trained on the
+    * doc_id % 3 = 0 slice of `refSrc`, scoring the docs of `s1`, ending
+    * in `plagg(doc_id, bits, nb)`.
+    */
+  private def perplexityCtes(refSrc: String): String =
+    s"""plref AS (SELECT text FROM $refSrc WHERE doc_id % 3 = 0),
+       |plrw AS (SELECT unnest(string_split(text, ' ')) AS w FROM plref),
+       |pluni AS (SELECT w, count(*) AS c1 FROM plrw GROUP BY w),
+       |plvoc AS (SELECT count(*) AS v FROM pluni),
+       |plrl AS (SELECT string_split(text, ' ') AS l FROM plref),
+       |plrb AS (SELECT l[i] AS w1, l[i+1] AS w2 FROM (SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM plrl)),
+       |plbig AS (SELECT w1, w2, count(*) AS c12 FROM plrb GROUP BY 1, 2),
+       |pldl AS (SELECT doc_id, string_split(text, ' ') AS l FROM s1),
+       |pldb AS (SELECT doc_id, l[i] AS w1, l[i+1] AS w2 FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM pldl)),
+       |plsc AS (SELECT d.doc_id, coalesce(b.c12, 0) + 1 AS a, coalesce(u.c1, 0) + (SELECT v FROM plvoc) AS bb
+       |  FROM pldb d LEFT JOIN plbig b USING (w1, w2) LEFT JOIN pluni u ON d.w1 = u.w),
+       |plqq AS (SELECT doc_id, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS q
+       |  FROM (SELECT doc_id, (bb + a - 1) // a AS m FROM plsc)),
+       |plagg AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS bits, CAST(count(*) AS BIGINT) AS nb FROM plqq GROUP BY 1)""".stripMargin
+
+  /** The q_nb_quality Naive Bayes as `nb`-prefixed CTEs: trained on an
+    * upstream `nbseed(doc_id, text, y)`, scoring column `textCol` of an
+    * upstream `s2`, ending in `nbagg(doc_id, s0, sc1)` with the prior
+    * bits in `nbpbits(p0, p1)`.
+    */
+  private def nbScoreCtes(textCol: String): String =
+    s"""nbsw AS (SELECT y, unnest(string_split(text, ' ')) AS w FROM nbseed),
+       |nbcnt AS (SELECT w, sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS c0,
+       |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS c1 FROM nbsw GROUP BY w),
+       |nbtot AS (SELECT sum(c0) AS n0, sum(c1) AS n1, count(*) AS v FROM nbcnt),
+       |nbpri AS (SELECT sum(CASE WHEN y = 0 THEN 1 ELSE 0 END) AS d0,
+       |  sum(CASE WHEN y = 1 THEN 1 ELSE 0 END) AS d1 FROM nbseed),
+       |nbq AS (SELECT w,
+       |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS q0,
+       |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS q1
+       |  FROM (SELECT w,
+       |    ((SELECT n0 + v FROM nbtot) + c0) // (c0 + 1) AS m0,
+       |    ((SELECT n1 + v FROM nbtot) + c1) // (c1 + 1) AS m1 FROM nbcnt)),
+       |nbdefs AS (SELECT
+       |  CASE WHEN n0 + v <= 1 THEN 0 ELSE length(bin(n0 + v - 1)) END AS qd0,
+       |  CASE WHEN n1 + v <= 1 THEN 0 ELSE length(bin(n1 + v - 1)) END AS qd1 FROM nbtot),
+       |nbpbits AS (SELECT
+       |  CASE WHEN m0 <= 1 THEN 0 ELSE length(bin(m0 - 1)) END AS p0,
+       |  CASE WHEN m1 <= 1 THEN 0 ELSE length(bin(m1 - 1)) END AS p1
+       |  FROM (SELECT (d0 + d1 + 2 + d0) // (d0 + 1) AS m0,
+       |    (d0 + d1 + 2 + d1) // (d1 + 1) AS m1 FROM nbpri)),
+       |nbdt AS (SELECT doc_id, unnest(string_split($textCol, ' ')) AS w FROM s2),
+       |nbsc AS (SELECT d.doc_id,
+       |  coalesce(nbq.q0, (SELECT qd0 FROM nbdefs)) AS q0,
+       |  coalesce(nbq.q1, (SELECT qd1 FROM nbdefs)) AS q1
+       |  FROM nbdt d LEFT JOIN nbq USING (w)),
+       |nbagg AS (SELECT doc_id, CAST(sum(q0) AS BIGINT) AS s0, CAST(sum(q1) AS BIGINT) AS sc1 FROM nbsc GROUP BY 1)""".stripMargin
 
   /** SQL replica of q_nb_quality: re-derive the quantized Naive Bayes
     * from scratch — seed per-word per-class counts, class token totals
@@ -4805,39 +4621,8 @@ object SparkEntry {
     * survivor set instead of `documents`.
     */
   private def curationV2Sql: String =
-    """WITH gf AS (SELECT doc_id,
-      |  len(string_split(text, ' ')) AS nw,
-      |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
-      |  len(regexp_extract_all(text, '#')) AS nh,
-      |  len(regexp_extract_all(text, '\.\.\.')) AS ne,
-      |  string_split(text, chr(10)) AS ls,
-      |  string_split(text, ' ') AS w
-      |  FROM documents),
-      |gg AS (SELECT doc_id,
-      |  CASE WHEN nw >= 50 AND nw <= 100000 THEN 1 ELSE 0 END
-      |  * CASE WHEN ml >= 3.0 AND ml <= 10.0 THEN 1 ELSE 0 END
-      |  * CASE WHEN nh / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-      |  * CASE WHEN ne / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(ls, l -> substr(l, 1, 1) IN ('-', '*'))) / CAST(len(ls) AS DOUBLE) <= 0.9 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(ls, l -> ends_with(l, '...'))) / CAST(len(ls) AS DOUBLE) <= 0.3 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]'))) / CAST(nw AS DOUBLE) >= 0.8 THEN 1 ELSE 0 END
-      |  * CASE WHEN len(list_filter(w, t -> t IN ('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'))) >= 2 THEN 1 ELSE 0 END AS pass
-      |  FROM gf),
-      |s1 AS (SELECT d.doc_id, d.text FROM documents d JOIN gg USING (doc_id) WHERE gg.pass = 1),
-      |plref AS (SELECT text FROM s1 WHERE doc_id % 3 = 0),
-      |plrw AS (SELECT unnest(string_split(text, ' ')) AS w FROM plref),
-      |pluni AS (SELECT w, count(*) AS c1 FROM plrw GROUP BY w),
-      |plvoc AS (SELECT count(*) AS v FROM pluni),
-      |plrl AS (SELECT string_split(text, ' ') AS l FROM plref),
-      |plrb AS (SELECT l[i] AS w1, l[i+1] AS w2 FROM (SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM plrl)),
-      |plbig AS (SELECT w1, w2, count(*) AS c12 FROM plrb GROUP BY 1, 2),
-      |pldl AS (SELECT doc_id, string_split(text, ' ') AS l FROM s1),
-      |pldb AS (SELECT doc_id, l[i] AS w1, l[i+1] AS w2 FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM pldl)),
-      |plsc AS (SELECT d.doc_id, coalesce(b.c12, 0) + 1 AS a, coalesce(u.c1, 0) + (SELECT v FROM plvoc) AS bb
-      |  FROM pldb d LEFT JOIN plbig b USING (w1, w2) LEFT JOIN pluni u ON d.w1 = u.w),
-      |plqq AS (SELECT doc_id, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS q
-      |  FROM (SELECT doc_id, (bb + a - 1) // a AS m FROM plsc)),
-      |plagg AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS bits, CAST(count(*) AS BIGINT) AS nb FROM plqq GROUP BY 1),
+    s"""WITH ${gopherGateCtes},
+      |${perplexityCtes("s1")},
       |s2 AS (SELECT s1.doc_id, s1.text FROM s1 LEFT JOIN plagg USING (doc_id)
       |  WHERE coalesce(plagg.bits, 0) * 20 <= 109 * coalesce(plagg.nb, 0) OR coalesce(plagg.nb, 0) = 0),
       |srd AS (SELECT doc_id, string_split(text, ' ') AS ws FROM s2),
@@ -4885,26 +4670,15 @@ object SparkEntry {
     * sees strictly earlier batches). Same exact-arithmetic guarantees as
     * embedIvfSql, so the growing-index stream gates bit-for-bit.
     */
-  private def streamIndexDeltaSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
+  private def streamIndexDeltaSql: String =
+    s"""WITH ${embedVecCtes()},
        |q AS (SELECT doc_id AS q_id, vec AS v,
        |  CASE WHEN doc_id % 200 = 0 THEN 1 ELSE 2 END AS wave
        |  FROM vecs WHERE doc_id % 100 = 0),
        |c AS (SELECT doc_id AS n_id, vec AS v,
        |  CASE WHEN doc_id % 100 <> 0 THEN 0 ELSE 1 END AS cwave
        |  FROM vecs WHERE doc_id % 100 <> 0 OR doc_id % 200 = 0),
-       |cents(cell, cv) AS (VALUES $centRows),
+       |cents(cell, cv) AS (VALUES ${centRows(signCentroids)}),
        |assigned AS (SELECT n_id, v, cwave,
        |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
        |probed AS (SELECT q_id, v, wave, p.cell
@@ -4915,7 +4689,6 @@ object SparkEntry {
        |  FROM probed JOIN assigned USING (cell) WHERE assigned.cwave < probed.wave)
        |SELECT q_id, rank, n_id FROM scored WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
       .replaceAll("\n", " ")
-  }
 
   /** SQL replica of q_embed_lsh: the embedAnnSql vector derivation feeding
     * the annLshSql sign-signature bucketing (dim-32 planes). Integer dot
@@ -4926,15 +4699,7 @@ object SparkEntry {
     val sig = planes.zipWithIndex.map { case (p, i) =>
       s"(CASE WHEN list_dot_product(vec, ${sqlVec(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
+    s"""WITH ${embedVecCtes()},
        |qs AS (SELECT doc_id AS q_id, vec, $sig AS sig FROM vecs WHERE doc_id % 100 = 0),
        |cs AS (SELECT doc_id AS n_id, vec, $sig AS sig FROM vecs WHERE doc_id % 100 <> 0),
        |scored AS (SELECT q_id, n_id,
@@ -4957,20 +4722,9 @@ object SparkEntry {
     * replayed as dot² >= 9/16·|a|²·|b|² — every operand an exact
     * integer — so keep/drop matches bit-for-bit, capped branch included.
     */
-  private def semanticDedupSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
-       |cents(cell, cv) AS (VALUES $centRows),
+  private def semanticDedupSql: String =
+    s"""WITH ${embedVecCtes()},
+       |cents(cell, cv) AS (VALUES ${centRows(signCentroids)}),
        |assigned AS (SELECT doc_id, vec,
        |  CAST((SELECT cell FROM cents ORDER BY list_dot_product(v.vec, cv) DESC, cell DESC LIMIT 1) AS BIGINT) AS cell FROM vecs v),
        |szs AS (SELECT cell, count(*) AS cn FROM assigned GROUP BY cell),
@@ -5001,7 +4755,6 @@ object SparkEntry {
        |  CAST(CASE WHEN d.doc_id IS NULL THEN 1 ELSE 0 END AS BIGINT) AS kept
        |FROM assigned s LEFT JOIN dropped d ON s.doc_id = d.doc_id
        |ORDER BY s.doc_id""".stripMargin.replaceAll("\n", " ")
-  }
 
   /** SQL replica of q_curation_pipeline: all seven stages — gopher gate,
     * corpus line dedup, capped LSH near-dup (via `cappedNearDupCtes`
@@ -5013,20 +4766,10 @@ object SparkEntry {
     * md5-family, so the whole DAG replays bit-for-bit.
     */
   private def curationPipelineSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
     val nearDup = cappedNearDupCtes(1, 0.95, from = Some("s2"))
     s"""WITH ev AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 = 0),
        |pool AS MATERIALIZED (SELECT doc_id, lang, source, text, n_chars FROM documents WHERE doc_id % 97 <> 0),
-       |gf AS (SELECT doc_id,
-       |  len(string_split(text, ' ')) AS nw,
-       |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
-       |  len(regexp_extract_all(text, '#')) AS nh,
-       |  len(regexp_extract_all(text, '\\.\\.\\.')) AS ne,
-       |  string_split(text, chr(10)) AS ls,
-       |  string_split(text, ' ') AS w
-       |  FROM pool),
+       |${gopherFeaturesCte("gf", "pool")},
        |gp AS (SELECT doc_id FROM gf WHERE
        |  nw >= 50 AND nw <= 100000
        |  AND ml >= 3.0 AND ml <= 10.0
@@ -5048,16 +4791,8 @@ object SparkEntry {
        |$nearDup,
        |nd AS (SELECT DISTINCT id_b AS doc_id FROM verified),
        |s3 AS MATERIALIZED (SELECT * FROM s2 WHERE doc_id NOT IN (SELECT doc_id FROM nd)),
-       |toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM s3),
-       |hsem AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hsem GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM s3) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
-       |cents(cell, cv) AS (VALUES $centRows),
+       |${embedVecCtes(src = "s3", hs = "hsem")},
+       |cents(cell, cv) AS (VALUES ${centRows(signCentroids)}),
        |assigned AS (SELECT doc_id, vec,
        |  CAST((SELECT cell FROM cents ORDER BY list_dot_product(v.vec, cv) DESC, cell DESC LIMIT 1) AS BIGINT) AS cell FROM vecs v),
        |szs AS (SELECT cell, count(*) AS cn FROM assigned GROUP BY cell),
@@ -5124,30 +4859,11 @@ object SparkEntry {
     * top-5 rerank window. Score ties break by candidate id, matching the
     * BoundedTopK ordering contract.
     */
-  private def rerankSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
+  private def rerankSql: String =
+    s"""WITH ${embedVecCtes()},
        |q AS (SELECT doc_id AS q_id, vec AS v FROM vecs WHERE doc_id % 100 = 0),
        |c AS (SELECT doc_id AS n_id, vec AS v FROM vecs WHERE doc_id % 100 <> 0),
-       |cents(cell, cv) AS (VALUES $centRows),
-       |assigned AS (SELECT n_id, v,
-       |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
-       |probed AS (SELECT q_id, v, p.cell
-       |  FROM q, LATERAL (SELECT cell FROM cents ORDER BY list_dot_product(q.v, cv) DESC, cell DESC LIMIT 2) p),
-       |scored AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id
-       |    ORDER BY list_cosine_similarity(probed.v, assigned.v) DESC, n_id) AS rank
-       |  FROM probed JOIN assigned USING (cell)),
+       |${ivfProbeCtes(signCentroids)},
        |cand AS (SELECT q_id, n_id FROM scored WHERE rank <= 20),
        |tok AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tw FROM documents),
        |jac AS (SELECT cand.q_id, cand.n_id,
@@ -5161,26 +4877,14 @@ object SparkEntry {
        |  FROM jac)
        |SELECT q_id, CAST(rk AS BIGINT) AS rank, n_id, score
        |FROM rr WHERE rk <= 5 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " ")
-  }
 
   /** SQL replica of q_cluster_sample: same vectors + centroid assignment,
     * then a per-cell row_number over (n_chars desc, doc_id) capped at 3 —
     * the window replay of the BoundedTopK ordering contract.
     */
-  private def clusterSampleSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 32, k = 8)
-      .map { case (cid, v) => cid -> v.map(x => if (x > 0) 0.125 else -0.125) }
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-       |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-       |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-       |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS c
-       |  FROM hs GROUP BY 1, 2),
-       |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-       |vecs AS (SELECT d.doc_id, list(coalesce(c.c, 0.0) ORDER BY d.i) AS vec
-       |  FROM dims d LEFT JOIN comp c ON c.doc_id = d.doc_id AND c.idx = d.i
-       |  GROUP BY d.doc_id),
-       |cents(cell, cv) AS (VALUES $centRows),
+  private def clusterSampleSql: String =
+    s"""WITH ${embedVecCtes()},
+       |cents(cell, cv) AS (VALUES ${centRows(signCentroids)}),
        |assigned AS (SELECT doc_id,
        |  (SELECT cell FROM cents ORDER BY list_dot_product(v.vec, cv) DESC, cell DESC LIMIT 1) AS cell FROM vecs v),
        |scored AS (SELECT a.doc_id, CAST(a.cell AS BIGINT) AS cell,
@@ -5189,7 +4893,6 @@ object SparkEntry {
        |  FROM assigned a JOIN documents d USING (doc_id))
        |SELECT cell, CAST(rk AS BIGINT) AS rank, doc_id, score
        |FROM scored WHERE rk <= 3 ORDER BY cell, rank""".stripMargin.replaceAll("\n", " ")
-  }
 
   /** Full-fidelity SQL replica of q_ann_lsh: the same ±1 hyperplane
     * literals produce the same sign-pattern signature; bucketing and
@@ -5200,8 +4903,7 @@ object SparkEntry {
     val sig = planes.zipWithIndex.map { case (p, i) =>
       s"(CASE WHEN list_dot_product(v, ${sqlVec(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
-    s"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 5),
+    s"""WITH ${embeddingSidesCtes("vec_id < 5", "vec_id >= 5")},
        |qs AS (SELECT q_id, v, $sig AS sig FROM q),
        |cs AS (SELECT n_id, v, $sig AS sig FROM c),
        |scored AS (SELECT q_id, n_id,
@@ -5221,8 +4923,7 @@ object SparkEntry {
       s"(CASE WHEN list_dot_product(v, ${sqlVec(p)}) >= 0 THEN ${1L << i} ELSE 0 END)"
     }.mkString(" + ")
     val probes = ("sig" +: (0 until 4).map(b => s"xor(sig, ${1L << b})")).mkString("[", ", ", "]")
-    s"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id < 5),
-       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 5),
+    s"""WITH ${embeddingSidesCtes("vec_id < 5", "vec_id >= 5")},
        |qs AS (SELECT q_id, v, $sig AS sig FROM q),
        |qp AS (SELECT q_id, v, UNNEST($probes) AS sig FROM qs),
        |cs AS (SELECT n_id, v, $sig AS sig FROM c),
@@ -5239,43 +4940,20 @@ object SparkEntry {
     * Spark's greatest(struct(sim, cell))), probe = top-nProbe cells per
     * query by the same ordering, rank within probed cells by cosine.
     */
-  private def annIvfSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 64, k = 8)
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 13),
-       |cents(cell, cv) AS (VALUES $centRows),
-       |assigned AS (SELECT n_id, v,
-       |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
-       |probed AS (SELECT q_id, v, p.cell
-       |  FROM q, LATERAL (SELECT cell FROM cents ORDER BY list_dot_product(q.v, cv) DESC, cell DESC LIMIT 2) p),
-       |scored AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id
-       |    ORDER BY list_cosine_similarity(probed.v, assigned.v) DESC, n_id) AS rank
-       |  FROM probed JOIN assigned USING (cell))
+  private def annIvfSql: String =
+    s"""WITH ${embeddingSidesCtes("vec_id >= 8 AND vec_id < 13", "vec_id >= 13")},
+       |${ivfProbeCtes(annCentroids)}
        |SELECT q_id, rank, n_id FROM scored WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
       .replaceAll("\n", " ")
-  }
 
   /** SQL replica of q_ann_recall: the annIvfSql probe ranking and the
     * brute-force ranking recomputed side by side, recall = |ivf ∩ brute|
     * / |brute| per query (the double division is the same IEEE operation
     * in both engines, so even the fractions hash-match).
     */
-  private def annRecallSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 64, k = 8)
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
-    s"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 13),
-       |cents(cell, cv) AS (VALUES $centRows),
-       |assigned AS (SELECT n_id, v,
-       |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell FROM c),
-       |probed AS (SELECT q_id, v, p.cell
-       |  FROM q, LATERAL (SELECT cell FROM cents ORDER BY list_dot_product(q.v, cv) DESC, cell DESC LIMIT 2) p),
-       |iscored AS (SELECT q_id, n_id,
-       |  row_number() OVER (PARTITION BY q_id
-       |    ORDER BY list_cosine_similarity(probed.v, assigned.v) DESC, n_id) AS rank
-       |  FROM probed JOIN assigned USING (cell)),
+  private def annRecallSql: String =
+    s"""WITH ${embeddingSidesCtes("vec_id >= 8 AND vec_id < 13", "vec_id >= 13")},
+       |${ivfProbeCtes(annCentroids, "iscored")},
        |ivf AS (SELECT q_id, n_id FROM iscored WHERE rank <= 5),
        |bscored AS (SELECT q_id, n_id,
        |  row_number() OVER (PARTITION BY q_id
@@ -5287,7 +4965,6 @@ object SparkEntry {
        |SELECT tot.q_id AS q_id, CAST(coalesce(h, 0) AS DOUBLE) / t AS recall
        |FROM tot LEFT JOIN hits ON hits.q_id = tot.q_id ORDER BY tot.q_id""".stripMargin
       .replaceAll("\n", " ")
-  }
 
   /** Full-fidelity SQL replica of q_ann_ivfpq: fixed-centroid cell
     * assignment + probe (as annIvfSql), per-subspace PQ codes by argmax
@@ -5298,9 +4975,7 @@ object SparkEntry {
     * order), shortlist by (approx DESC, n_id), exact-cosine rerank.
     */
   private def annIvfPqSql: String = {
-    val cents = graft.ops.Similarity.fixedCentroids(dim = 64, k = 8)
     val cbs = graft.ops.Similarity.pqCodebooks(dim = 64, m = 8, kSub = 16)
-    val centRows = cents.map { case (cid, v) => s"($cid, ${sqlVec(v)})" }.mkString(", ")
     val cbRows = cbs.map { case (sub, cid, v) => s"($sub, $cid, ${sqlVec(v)})" }.mkString(", ")
     val codeCols = (0 until 8).map { j =>
       s"(SELECT cid FROM cb WHERE sub = $j ORDER BY list_dot_product(list_slice(c.v, ${j * 8 + 1}, ${(j + 1) * 8}), cv) DESC, cid DESC LIMIT 1)"
@@ -5308,9 +4983,8 @@ object SparkEntry {
     val adc = (0 until 8).map { j =>
       s"(SELECT list_dot_product(list_slice(qv, ${j * 8 + 1}, ${(j + 1) * 8}), cv) FROM cb WHERE sub = $j AND cid = code[${j + 1}])"
     }.mkString(" + ")
-    s"""WITH q AS (SELECT vec_id AS q_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 8 AND vec_id < 13),
-       |c AS (SELECT vec_id AS n_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings WHERE vec_id >= 13),
-       |cents(cell, cv) AS (VALUES $centRows),
+    s"""WITH ${embeddingSidesCtes("vec_id >= 8 AND vec_id < 13", "vec_id >= 13")},
+       |cents(cell, cv) AS (VALUES ${centRows(annCentroids)}),
        |cb(sub, cid, cv) AS (VALUES $cbRows),
        |assigned AS (SELECT n_id,
        |  (SELECT cell FROM cents ORDER BY list_dot_product(c.v, cv) DESC, cell DESC LIMIT 1) AS cell,
@@ -5479,17 +5153,43 @@ object SparkEntry {
       |  FROM d a JOIN d b ON a.doc_id < b.doc_id)
       |WHERE jac >= 0.9 ORDER BY 1, 2""".stripMargin.replaceAll("\n", " ")
 
+  /** Transitive closure over the undirected pair set `pairs(id_a, id_b)`
+    * as recursive CTEs `edges` and `reach(id, lbl)` (the statement needs
+    * WITH RECURSIVE); a component's label is its min reachable id,
+    * matching Dedup.clusterPairs. `e` aliases the edge table in the
+    * recursive step.
+    */
+  private def closureCtes(pairs: String = "verified", e: String = "e"): String =
+    s"""edges AS (SELECT id_a AS u, id_b AS v FROM $pairs UNION SELECT id_b, id_a FROM $pairs),
+       |reach(id, lbl) AS (
+       |  SELECT u, u FROM edges
+       |  UNION
+       |  SELECT $e.v, r.lbl FROM reach r JOIN edges $e ON $e.u = r.id)""".stripMargin
+
+  /** Whole-bit quantized idf over the docs of `src` — the `Lexical`
+    * quantization idf_bits = bit length of ((n + 1 + df) // (df + 1)) - 1
+    * — as CTEs `nn`, `dfq` and `idf(term, idf_bits)`; `terms` splits a
+    * document's text into its terms.
+    */
+  private def lexIdfCtes(src: String, terms: String = "string_split(text, ' ')"): String =
+    s"""nn AS (SELECT count(*) AS n FROM $src),
+       |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
+       |  (SELECT doc_id, unnest($terms) AS term FROM $src)) GROUP BY 1),
+       |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
+       |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq))""".stripMargin
+
+  /** The PDF oracles' terms: the nonempty words (an empty string splits
+    * to [''], which the parsed-PDF side never sees).
+    */
+  private val pdfTerms = "list_filter(string_split(text, ' '), w -> len(w) > 0)"
+
   /** Connected components over the SQL-recomputed verified pair set via
     * recursive-CTE transitive closure; cluster label = min reachable id
     * (matches Dedup.clusterPairs' canonical-survivor labels).
     */
   private def dedupClustersSql: String =
     s"""WITH RECURSIVE ${cappedNearDupCtes(11, 0.9)},
-       |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-       |reach(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.id)
+       |${closureCtes()}
        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin
       .replaceAll("\n", " ")
 
@@ -5500,11 +5200,7 @@ object SparkEntry {
     */
   private def leakageSplitSql: String =
     s"""WITH RECURSIVE ${cappedNearDupCtes(11, 0.9)},
-       |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-       |reach(id, lbl) AS (
-       |  SELECT u, u FROM edges
-       |  UNION
-       |  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.id),
+       |${closureCtes()},
        |comp AS (SELECT id, min(lbl) AS cluster FROM reach GROUP BY id)
        |SELECT d.doc_id, coalesce(c.cluster, d.doc_id) AS root,
        |  CAST(('0x' || substr(md5('split:' || CAST(coalesce(c.cluster, d.doc_id) AS VARCHAR)), 1, 15)) AS BIGINT) % 5 AS split
@@ -5546,6 +5242,72 @@ object SparkEntry {
        | ORDER BY doc_id""".stripMargin.replaceAll("\n", " ")
   }
 
+  /** Last-write-wins upsert of the events split at event_id 5000, keyed
+    * on (user_id, event_type): q_merge_upsert and q_merge_bucketed land
+    * the same table through different writers.
+    */
+  private def lastWriteWinsSql: String =
+    """WITH base AS (
+      | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
+      |                FROM events WHERE event_id < 5000) WHERE rn = 1),
+      |upd AS (
+      | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
+      |                FROM events WHERE event_id >= 5000) WHERE rn = 1),
+      |merged AS (
+      | SELECT b.user_id, b.event_type, b.event_id, b.ts, b.value FROM base b ANTI JOIN upd u USING (user_id, event_type)
+      | UNION ALL SELECT user_id, event_type, event_id, ts, value FROM upd)
+      |SELECT user_id, event_type, event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, value
+      |FROM merged ORDER BY user_id, event_type""".stripMargin.replaceAll("\n", " ")
+
+  /** The q_fleet_* issues fixture aggregated per language: every
+    * protocol variant must land the same root + labels tables.
+    */
+  private def fleetIssuesSql: String =
+    """SELECT lang, count(*) AS n_issues, CAST(sum(n_chars % 3 + 1) AS BIGINT) AS n_labels
+      |FROM documents WHERE doc_id < 250 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " ")
+
+  /** The REST documents fixture aggregated per language: the GET and
+    * POST + cursor-in-body protocols must land the same rows.
+    */
+  private def restDocsSql: String =
+    """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
+      |FROM documents WHERE doc_id < 100 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " ")
+
+  /** Exact-substring span removal over the planted-twin corpus: the
+    * batch operator and the streamed landing must rewrite the same text.
+    */
+  private def substringDedupSql: String =
+    s"""WITH d0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
+      |  UNION ALL
+      |  SELECT doc_id + 1000000 AS doc_id,
+      |    array_to_string(list_slice(string_split(text, ' '), 1, 20), ' ') AS text
+      |  FROM documents WHERE doc_id % 30 = 0),
+      |d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM d0),
+      |g AS (SELECT doc_id, i AS pos, array_to_string(list_slice(ws, i + 1, i + 8), ' ') AS gram
+      |  FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i FROM d WHERE len(ws) >= 8)),
+      |f AS (SELECT gram, min(doc_id * 1000000 + pos) AS fk FROM g GROUP BY 1),
+      |cutw AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (gram)
+      |  WHERE g.doc_id * 1000000 + g.pos <> f.fk),
+      |$spanRemovalTail""".stripMargin.replaceAll("\n", " ")
+
+  /** The span-removal rewrite shared by the substring oracles: words of
+    * `d(doc_id, ws)` covered by a cut 8-gram `cutw(doc_id, pos)` drop, the
+    * rest rejoin per document.
+    */
+  private def spanRemovalTail: String =
+    s"""cutp AS (SELECT DISTINCT doc_id, wpos FROM
+       |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS wpos FROM cutw)),
+       |wrd AS (SELECT doc_id, i - 1 AS wpos, ws[i] AS tok
+       |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM d)),
+       |kept AS (SELECT wrd.doc_id, wrd.wpos, wrd.tok FROM wrd
+       |  ANTI JOIN cutp c ON (wrd.doc_id = c.doc_id AND wrd.wpos = c.wpos)),
+       |reb AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY wpos) AS text,
+       |  count(*) AS n_kept FROM kept GROUP BY 1)
+       |SELECT d.doc_id, coalesce(reb.text, '') AS text,
+       |  CAST(len(d.ws) AS BIGINT) AS n_words,
+       |  CAST(coalesce(reb.n_kept, 0) AS BIGINT) AS n_kept
+       |FROM d LEFT JOIN reb USING (doc_id) ORDER BY d.doc_id""".stripMargin
+
   def oracleSql: Map[String, String] = Map(
     "q_pushdown_scan_agg" ->
       """SELECT l_returnflag, l_linestatus,
@@ -5586,31 +5348,9 @@ object SparkEntry {
         | count(*) AS n
         |FROM events GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
 
-    "q_merge_upsert" ->
-      """WITH base AS (
-        | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |                FROM events WHERE event_id < 5000) WHERE rn = 1),
-        |upd AS (
-        | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |                FROM events WHERE event_id >= 5000) WHERE rn = 1),
-        |merged AS (
-        | SELECT b.user_id, b.event_type, b.event_id, b.ts, b.value FROM base b ANTI JOIN upd u USING (user_id, event_type)
-        | UNION ALL SELECT user_id, event_type, event_id, ts, value FROM upd)
-        |SELECT user_id, event_type, event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, value
-        |FROM merged ORDER BY user_id, event_type""".stripMargin.replaceAll("\n", " "),
+    "q_merge_upsert" -> lastWriteWinsSql,
 
-    "q_merge_bucketed" ->
-      """WITH base AS (
-        | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |                FROM events WHERE event_id < 5000) WHERE rn = 1),
-        |upd AS (
-        | SELECT * FROM (SELECT *, row_number() OVER (PARTITION BY user_id, event_type ORDER BY ts DESC, event_id DESC) AS rn
-        |                FROM events WHERE event_id >= 5000) WHERE rn = 1),
-        |merged AS (
-        | SELECT b.user_id, b.event_type, b.event_id, b.ts, b.value FROM base b ANTI JOIN upd u USING (user_id, event_type)
-        | UNION ALL SELECT user_id, event_type, event_id, ts, value FROM upd)
-        |SELECT user_id, event_type, event_id, CAST(epoch_us(ts) AS BIGINT) AS ts_us, value
-        |FROM merged ORDER BY user_id, event_type""".stripMargin.replaceAll("\n", " "),
+    "q_merge_bucketed" -> lastWriteWinsSql,
 
     "q_merge_key_replace" ->
       """WITH daily AS (
@@ -5882,39 +5622,8 @@ object SparkEntry {
         |  CASE WHEN d.doc_id % 97 = 0 THEN 0 ELSE CAST(coalesce(length(t.text), 0) AS BIGINT) END AS n_chars
         |FROM documents d LEFT JOIN txt t USING (doc_id) ORDER BY doc_id""".stripMargin.replaceAll("\n", " "),
     "q_stream_quality" ->
-      """WITH gf AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) AS nw,
-        |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
-        |  len(regexp_extract_all(text, '#')) AS nh,
-        |  len(regexp_extract_all(text, '\.\.\.')) AS ne,
-        |  string_split(text, chr(10)) AS ls,
-        |  string_split(text, ' ') AS w
-        |  FROM documents),
-        |gg AS (SELECT doc_id,
-        |  CASE WHEN nw >= 50 AND nw <= 100000 THEN 1 ELSE 0 END
-        |  * CASE WHEN ml >= 3.0 AND ml <= 10.0 THEN 1 ELSE 0 END
-        |  * CASE WHEN nh / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-        |  * CASE WHEN ne / CAST(nw AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END
-        |  * CASE WHEN len(list_filter(ls, l -> substr(l, 1, 1) IN ('-', '*'))) / CAST(len(ls) AS DOUBLE) <= 0.9 THEN 1 ELSE 0 END
-        |  * CASE WHEN len(list_filter(ls, l -> ends_with(l, '...'))) / CAST(len(ls) AS DOUBLE) <= 0.3 THEN 1 ELSE 0 END
-        |  * CASE WHEN len(list_filter(w, t -> regexp_matches(t, '[A-Za-z]'))) / CAST(nw AS DOUBLE) >= 0.8 THEN 1 ELSE 0 END
-        |  * CASE WHEN len(list_filter(w, t -> t IN ('the', 'be', 'to', 'of', 'and', 'that', 'have', 'with'))) >= 2 THEN 1 ELSE 0 END AS pass
-        |  FROM gf),
-        |s1 AS (SELECT d.doc_id, d.text FROM documents d JOIN gg USING (doc_id) WHERE gg.pass = 1),
-        |plref AS (SELECT text FROM documents WHERE doc_id % 3 = 0),
-        |plrw AS (SELECT unnest(string_split(text, ' ')) AS w FROM plref),
-        |pluni AS (SELECT w, count(*) AS c1 FROM plrw GROUP BY w),
-        |plvoc AS (SELECT count(*) AS v FROM pluni),
-        |plrl AS (SELECT string_split(text, ' ') AS l FROM plref),
-        |plrb AS (SELECT l[i] AS w1, l[i+1] AS w2 FROM (SELECT l, unnest(generate_series(1, len(l) - 1)) AS i FROM plrl)),
-        |plbig AS (SELECT w1, w2, count(*) AS c12 FROM plrb GROUP BY 1, 2),
-        |pldl AS (SELECT doc_id, string_split(text, ' ') AS l FROM s1),
-        |pldb AS (SELECT doc_id, l[i] AS w1, l[i+1] AS w2 FROM (SELECT doc_id, l, unnest(generate_series(1, len(l) - 1)) AS i FROM pldl)),
-        |plsc AS (SELECT d.doc_id, coalesce(b.c12, 0) + 1 AS a, coalesce(u.c1, 0) + (SELECT v FROM plvoc) AS bb
-        |  FROM pldb d LEFT JOIN plbig b USING (w1, w2) LEFT JOIN pluni u ON d.w1 = u.w),
-        |plqq AS (SELECT doc_id, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS q
-        |  FROM (SELECT doc_id, (bb + a - 1) // a AS m FROM plsc)),
-        |plagg AS (SELECT doc_id, CAST(sum(q) AS BIGINT) AS bits, CAST(count(*) AS BIGINT) AS nb FROM plqq GROUP BY 1)
+      s"""WITH ${gopherGateCtes},
+        |${perplexityCtes("documents")}
         |SELECT s1.doc_id, coalesce(plagg.bits, 0) AS bits, coalesce(plagg.nb, 0) AS n_bigrams
         |FROM s1 LEFT JOIN plagg USING (doc_id)
         |WHERE coalesce(plagg.bits, 0) * 20 <= 109 * coalesce(plagg.nb, 0) OR coalesce(plagg.nb, 0) = 0
@@ -5993,13 +5702,9 @@ object SparkEntry {
         |FROM regs LEFT JOIN mx ON mx.r = regs.register
         |ORDER BY register""".stripMargin.replaceAll("\n", " "),
     "q_pdf_pipeline" ->
-      """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
+      s"""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
         |  AND len(list_filter(string_split(text, ' '), w -> len(w) > 0)) > 0),
-        |nn AS (SELECT count(*) AS n FROM c),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> len(w) > 0)) AS term FROM c)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+        |${lexIdfCtes("c", pdfTerms)},
         |post AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> len(w) > 0)) AS term FROM c) GROUP BY 1, 2),
         |q AS (SELECT doc_id AS q_id,
@@ -6015,13 +5720,9 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " "),
     "q_pdf_pipeline_champion" ->
-      """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
+      s"""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0
         |  AND len(list_filter(string_split(text, ' '), w -> len(w) > 0)) > 0),
-        |nn AS (SELECT count(*) AS n FROM c),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> len(w) > 0)) AS term FROM c)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+        |${lexIdfCtes("c", pdfTerms)},
         |post AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(list_filter(string_split(text, ' '), w -> len(w) > 0)) AS term FROM c) GROUP BY 1, 2),
         |champ AS (SELECT term, doc_id FROM (SELECT term, doc_id,
@@ -6043,12 +5744,8 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " "),
     "q_lexical_topk" ->
-      """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
-        |nn AS (SELECT count(*) AS n FROM c),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM c)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+      s"""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
+        |${lexIdfCtes("c")},
         |post AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM c) GROUP BY 1, 2),
         |q AS (SELECT doc_id AS q_id,
@@ -6063,12 +5760,8 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " "),
     "q_lexical_champion" ->
-      """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
-        |nn AS (SELECT count(*) AS n FROM c),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM c)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+      s"""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
+        |${lexIdfCtes("c")},
         |post0 AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM c) GROUP BY 1, 2),
         |champ AS (SELECT term, doc_id FROM (SELECT term, doc_id,
@@ -6089,15 +5782,11 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " "),
     "q_lexical_index" ->
-      """WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
+      s"""WITH c AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
         |bx AS (SELECT doc_id + 2000000 AS doc_id, 'zzfresh ' || text AS text
         |  FROM documents WHERE doc_id % 500 = 7),
         |u AS (SELECT * FROM c UNION ALL SELECT * FROM bx),
-        |nn AS (SELECT count(*) AS n FROM u),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM u)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+        |${lexIdfCtes("u")},
         |postb AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM c) GROUP BY 1, 2),
         |postx AS (SELECT term, doc_id, count(*) AS tf FROM
@@ -6123,26 +5812,14 @@ object SparkEntry {
         |SELECT q_id, CAST(rank AS BIGINT) AS rank, doc_id, CAST(score AS BIGINT) AS score
         |FROM rk WHERE rank <= 10 ORDER BY q_id, rank""".stripMargin.replaceAll("\n", " "),
     "q_hybrid_rank" ->
-      """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS w FROM documents),
-        |hs AS (SELECT doc_id, CAST(('0x' || substr(md5(w), 1, 15)) AS BIGINT) AS h FROM toks),
-        |comp AS (SELECT doc_id, CAST((h // 2) % 32 AS INT) AS idx,
-        |  CAST(SUM(CASE WHEN h % 2 = 0 THEN 1 ELSE -1 END) AS DOUBLE) AS cc
-        |  FROM hs GROUP BY 1, 2),
-        |dims AS (SELECT doc_id, i FROM (SELECT DISTINCT doc_id FROM documents) CROSS JOIN range(0, 32) t(i)),
-        |vecs AS (SELECT d.doc_id, list(coalesce(comp.cc, 0.0) ORDER BY d.i) AS vec
-        |  FROM dims d LEFT JOIN comp ON comp.doc_id = d.doc_id AND comp.idx = d.i
-        |  GROUP BY d.doc_id),
+      s"""WITH ${embedVecCtes(cnt = "cc")},
         |qv AS (SELECT doc_id AS q_id, vec FROM vecs WHERE doc_id % 100 = 0),
         |cv AS (SELECT doc_id AS n_id, vec FROM vecs WHERE doc_id % 100 <> 0),
         |annr AS (SELECT q_id, n_id, row_number() OVER (PARTITION BY q_id
         |  ORDER BY list_cosine_similarity(qv.vec, cv.vec) DESC, n_id) AS rank FROM qv, cv),
         |ann AS (SELECT q_id, n_id, rank FROM annr WHERE rank <= 5),
         |cd AS (SELECT doc_id, text FROM documents WHERE doc_id % 100 <> 0),
-        |nn AS (SELECT count(*) AS n FROM cd),
-        |dfq AS (SELECT term, count(*) AS df FROM (SELECT DISTINCT doc_id, term FROM
-        |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM cd)) GROUP BY 1),
-        |idf AS (SELECT term, CASE WHEN m <= 1 THEN 0 ELSE length(bin(m - 1)) END AS idf_bits
-        |  FROM (SELECT term, ((SELECT n FROM nn) + 1 + df) // (df + 1) AS m FROM dfq)),
+        |${lexIdfCtes("cd")},
         |post AS (SELECT term, doc_id, count(*) AS tf FROM
         |  (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM cd) GROUP BY 1, 2),
         |qt AS (SELECT q_id, term, count(*) AS qtf FROM
@@ -6220,7 +5897,7 @@ object SparkEntry {
         |SELECT id_a, id_b, max(span) AS max_span FROM runs
         |GROUP BY 1, 2 HAVING max(span) >= 10 ORDER BY 1, 2""".stripMargin.replaceAll("\n", " "),
     "q_decontaminate_spans" ->
-      """WITH tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
+      s"""WITH tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 97 <> 0),
         |ev AS (SELECT text FROM documents WHERE doc_id % 97 = 0),
         |evd AS (SELECT string_split(text, ' ') AS ws FROM ev),
         |evg AS (SELECT DISTINCT array_to_string(list_slice(ws, i + 1, i + 8), ' ') AS gram
@@ -6229,66 +5906,9 @@ object SparkEntry {
         |g AS (SELECT doc_id, i AS pos, array_to_string(list_slice(ws, i + 1, i + 8), ' ') AS gram
         |  FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i FROM d WHERE len(ws) >= 8)),
         |cutw AS (SELECT g.doc_id, g.pos FROM g SEMI JOIN evg USING (gram)),
-        |cutp AS (SELECT DISTINCT doc_id, wpos FROM
-        |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS wpos FROM cutw)),
-        |wrd AS (SELECT doc_id, i - 1 AS wpos, ws[i] AS tok
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM d)),
-        |kept AS (SELECT wrd.doc_id, wrd.wpos, wrd.tok FROM wrd
-        |  ANTI JOIN cutp c ON (wrd.doc_id = c.doc_id AND wrd.wpos = c.wpos)),
-        |reb AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY wpos) AS text,
-        |  count(*) AS n_kept FROM kept GROUP BY 1)
-        |SELECT d.doc_id, coalesce(reb.text, '') AS text,
-        |  CAST(len(d.ws) AS BIGINT) AS n_words,
-        |  CAST(coalesce(reb.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM d LEFT JOIN reb USING (doc_id) ORDER BY d.doc_id""".stripMargin.replaceAll("\n", " "),
-    "q_stream_span_dedup" ->
-      """WITH d0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id,
-        |    array_to_string(list_slice(string_split(text, ' '), 1, 20), ' ') AS text
-        |  FROM documents WHERE doc_id % 30 = 0),
-        |d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM d0),
-        |g AS (SELECT doc_id, i AS pos, array_to_string(list_slice(ws, i + 1, i + 8), ' ') AS gram
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i FROM d WHERE len(ws) >= 8)),
-        |f AS (SELECT gram, min(doc_id * 1000000 + pos) AS fk FROM g GROUP BY 1),
-        |cutw AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (gram)
-        |  WHERE g.doc_id * 1000000 + g.pos <> f.fk),
-        |cutp AS (SELECT DISTINCT doc_id, wpos FROM
-        |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS wpos FROM cutw)),
-        |wrd AS (SELECT doc_id, i - 1 AS wpos, ws[i] AS tok
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM d)),
-        |kept AS (SELECT wrd.doc_id, wrd.wpos, wrd.tok FROM wrd
-        |  ANTI JOIN cutp c ON (wrd.doc_id = c.doc_id AND wrd.wpos = c.wpos)),
-        |reb AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY wpos) AS text,
-        |  count(*) AS n_kept FROM kept GROUP BY 1)
-        |SELECT d.doc_id, coalesce(reb.text, '') AS text,
-        |  CAST(len(d.ws) AS BIGINT) AS n_words,
-        |  CAST(coalesce(reb.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM d LEFT JOIN reb USING (doc_id) ORDER BY d.doc_id""".stripMargin.replaceAll("\n", " "),
-    "q_substring_dedup" ->
-      """WITH d0 AS (SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0
-        |  UNION ALL
-        |  SELECT doc_id + 1000000 AS doc_id,
-        |    array_to_string(list_slice(string_split(text, ' '), 1, 20), ' ') AS text
-        |  FROM documents WHERE doc_id % 30 = 0),
-        |d AS (SELECT doc_id, string_split(text, ' ') AS ws FROM d0),
-        |g AS (SELECT doc_id, i AS pos, array_to_string(list_slice(ws, i + 1, i + 8), ' ') AS gram
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(0, len(ws) - 8)) AS i FROM d WHERE len(ws) >= 8)),
-        |f AS (SELECT gram, min(doc_id * 1000000 + pos) AS fk FROM g GROUP BY 1),
-        |cutw AS (SELECT g.doc_id, g.pos FROM g JOIN f USING (gram)
-        |  WHERE g.doc_id * 1000000 + g.pos <> f.fk),
-        |cutp AS (SELECT DISTINCT doc_id, wpos FROM
-        |  (SELECT doc_id, unnest(generate_series(pos, pos + 7)) AS wpos FROM cutw)),
-        |wrd AS (SELECT doc_id, i - 1 AS wpos, ws[i] AS tok
-        |  FROM (SELECT doc_id, ws, unnest(generate_series(1, len(ws))) AS i FROM d)),
-        |kept AS (SELECT wrd.doc_id, wrd.wpos, wrd.tok FROM wrd
-        |  ANTI JOIN cutp c ON (wrd.doc_id = c.doc_id AND wrd.wpos = c.wpos)),
-        |reb AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY wpos) AS text,
-        |  count(*) AS n_kept FROM kept GROUP BY 1)
-        |SELECT d.doc_id, coalesce(reb.text, '') AS text,
-        |  CAST(len(d.ws) AS BIGINT) AS n_words,
-        |  CAST(coalesce(reb.n_kept, 0) AS BIGINT) AS n_kept
-        |FROM d LEFT JOIN reb USING (doc_id) ORDER BY d.doc_id""".stripMargin.replaceAll("\n", " "),
+        |$spanRemovalTail""".stripMargin.replaceAll("\n", " "),
+    "q_stream_span_dedup" -> substringDedupSql,
+    "q_substring_dedup" -> substringDedupSql,
 
     "q_dedup_minhash" -> minhashBandSql,
 
@@ -6382,14 +6002,7 @@ object SparkEntry {
         |FROM documents ORDER BY doc_id""".stripMargin.replaceAll("\n", " "),
 
     "q_gopher_filter" ->
-      """WITH f AS (SELECT doc_id,
-        |  len(string_split(text, ' ')) AS nw,
-        |  (length(text) - (len(string_split(text, ' ')) - 1)) / CAST(len(string_split(text, ' ')) AS DOUBLE) AS ml,
-        |  len(regexp_extract_all(text, '#')) AS nh,
-        |  len(regexp_extract_all(text, '\.\.\.')) AS ne,
-        |  string_split(text, chr(10)) AS ls,
-        |  string_split(text, ' ') AS w
-        |  FROM documents),
+      s"""WITH ${gopherFeaturesCte("f", "documents")},
         |g AS (SELECT doc_id,
         |  CASE WHEN nw >= 50 AND nw <= 100000 THEN 1 ELSE 0 END AS c1,
         |  CASE WHEN ml >= 3.0 AND ml <= 10.0 THEN 1 ELSE 0 END AS c2,
@@ -6642,14 +6255,10 @@ object SparkEntry {
         | max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS max_k
         |FROM events WHERE event_id < 3000 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
 
-    "q_rest_pipeline" ->
-      """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents WHERE doc_id < 100 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_rest_pipeline" -> restDocsSql,
     // same rows as q_rest_pipeline through the POST + cursor-in-body
     // protocol — the oracle is deliberately identical
-    "q_rest_post" ->
-      """SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS sum_chars
-        |FROM documents WHERE doc_id < 100 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_rest_post" -> restDocsSql,
     // the config-level filter replayed in SQL; the dropped `secret`
     // column never existed in the oracle's source, so its survival on
     // the Spark side would break the schema hash
@@ -6683,21 +6292,13 @@ object SparkEntry {
         |SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice, _seq
         |FROM final ORDER BY o_orderkey""".stripMargin.replaceAll("\n", " "),
 
-    "q_fleet_pipeline" ->
-      """SELECT lang, count(*) AS n_issues, CAST(sum(n_chars % 3 + 1) AS BIGINT) AS n_labels
-        |FROM documents WHERE doc_id < 250 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_fleet_pipeline" -> fleetIssuesSql,
 
-    "q_fleet_config" ->
-      """SELECT lang, count(*) AS n_issues, CAST(sum(n_chars % 3 + 1) AS BIGINT) AS n_labels
-        |FROM documents WHERE doc_id < 250 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_fleet_config" -> fleetIssuesSql,
 
-    "q_fleet_header_link" ->
-      """SELECT lang, count(*) AS n_issues, CAST(sum(n_chars % 3 + 1) AS BIGINT) AS n_labels
-        |FROM documents WHERE doc_id < 250 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_fleet_header_link" -> fleetIssuesSql,
 
-    "q_fleet_auto" ->
-      """SELECT lang, count(*) AS n_issues, CAST(sum(n_chars % 3 + 1) AS BIGINT) AS n_labels
-        |FROM documents WHERE doc_id < 250 GROUP BY 1 ORDER BY 1""".stripMargin.replaceAll("\n", " "),
+    "q_fleet_auto" -> fleetIssuesSql,
 
     "q_redact" ->
       """WITH t AS (SELECT doc_id,
@@ -6805,19 +6406,9 @@ object SparkEntry {
         |  CAST(3 * sum((e + 5*f + 7*x + 11*y) % 256) AS BIGINT) AS pix_sum
         |FROM frxy GROUP BY e, u, f ORDER BY media_id, frame_idx""".stripMargin.replaceAll("\n", " "),
 
-    "q_image_dedup" ->
-      s"""WITH $imagePairCtes
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " "),
+    "q_image_dedup" -> mediaPairSql(imagePairCtes),
 
-    "q_image_clusters" ->
-      s"""WITH RECURSIVE $imagePairCtes,
-        |verified AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-        |reach(id, lbl) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT e2.v, r.lbl FROM reach r JOIN edges e2 ON e2.u = r.id)
-        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " "),
+    "q_image_clusters" -> mediaClustersSql(imagePairCtes),
 
     "q_video_dedup" -> videoPairSql(None),
 
@@ -6827,46 +6418,18 @@ object SparkEntry {
 
     "q_video_clusters_capped" -> videoClustersSql(Some(4)),
 
-    "q_audio_dedup" ->
-      s"""WITH $audioPairCtes
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " "),
+    "q_audio_dedup" -> mediaPairSql(audioPairCtes),
 
-    "q_audio_dedup_capped" ->
-      s"""WITH ${audioPairCtesWith(Some(4))}
-        |SELECT id_a, id_b, hamming FROM ham WHERE hamming <= 3 ORDER BY id_a, id_b""".stripMargin.replaceAll("\n", " "),
+    "q_audio_dedup_capped" -> mediaPairSql(audioPairCtesWith(Some(4))),
 
-    "q_audio_clusters" ->
-      s"""WITH RECURSIVE $audioPairCtes,
-        |verified AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-        |reach(id, lbl) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT e2.v, r.lbl FROM reach r JOIN edges e2 ON e2.u = r.id)
-        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " "),
+    "q_audio_clusters" -> mediaClustersSql(audioPairCtes),
 
     // the composed capped recipe: transitive closure over the CAPPED star
     // pair set (audioPairCtesWith(4)) — hub-mediated closure, gated
     // end-to-end exactly as the engine composes it at corpus scale
-    "q_audio_clusters_capped" ->
-      s"""WITH RECURSIVE ${audioPairCtesWith(Some(4))},
-        |verified AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-        |reach(id, lbl) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT e2.v, r.lbl FROM reach r JOIN edges e2 ON e2.u = r.id)
-        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " "),
+    "q_audio_clusters_capped" -> mediaClustersSql(audioPairCtesWith(Some(4))),
 
-    "q_image_clusters_capped" ->
-      s"""WITH RECURSIVE ${imagePairCtesWith(Some(4))},
-        |verified AS (SELECT id_a, id_b FROM ham WHERE hamming <= 3),
-        |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-        |reach(id, lbl) AS (
-        |  SELECT u, u FROM edges
-        |  UNION
-        |  SELECT e2.v, r.lbl FROM reach r JOIN edges e2 ON e2.u = r.id)
-        |SELECT id, min(lbl) AS cluster FROM reach GROUP BY id ORDER BY id""".stripMargin.replaceAll("\n", " "),
+    "q_image_clusters_capped" -> mediaClustersSql(imagePairCtesWith(Some(4))),
 
     "q_sheets_serial" ->
       """SELECT CAST(date_trunc('month', o_orderdate) AS DATE) AS month, count(*) AS n,
@@ -6922,11 +6485,7 @@ object SparkEntry {
     // verified-pair component survives; everyone unpaired survives)
     "q_stream_dedup_corpus" ->
       s"""WITH RECURSIVE ${cappedNearDupCtes(9, 0.9)},
-         |edges AS (SELECT id_a AS u, id_b AS v FROM verified UNION SELECT id_b, id_a FROM verified),
-         |reach(id, lbl) AS (
-         |  SELECT u, u FROM edges
-         |  UNION
-         |  SELECT e.v, r.lbl FROM reach r JOIN edges e ON e.u = r.id),
+         |${closureCtes()},
          |clus AS (SELECT id, min(lbl) AS cluster FROM reach GROUP BY id)
          |SELECT doc_id FROM documents WHERE doc_id % 9 = 0
          |  AND doc_id NOT IN (SELECT id FROM clus WHERE id != cluster)

@@ -196,8 +196,8 @@ object TableMaintenance {
     * proportionally to the small-file backlog without moving rows
     * between key ranges; this pass fixes DATA LAYOUT with a full
     * rewrite — run it when multi-dimensional scan pruning is worth a
-    * table pass (BenchZOrder: 71x row-group pruning on a 0.37%
-    * 2-D box). Commits through the same staged swap-on-success as the
+    * table pass (BASELINE.md, "Z-order layout benefit": 71x row-group
+    * pruning on a 0.37% 2-D box). Commits through the same staged swap-on-success as the
     * merge writer, under the same single-writer lease. Returns
     * (rows, filesAfter).
     */

@@ -331,7 +331,8 @@ object Dedup {
       threshold)
 
   /** The candidate stage of `nearDupPairsFast`, exposed for stage-level
-    * profiling (BenchMinhash) — identical plan, no verification.
+    * profiling (BASELINE.md, "Candidate-generation size gate") —
+    * identical plan, no verification.
     */
   private[graft] def fastCandidatePairs(
       df: DataFrame,

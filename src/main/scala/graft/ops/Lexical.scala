@@ -272,25 +272,36 @@ object Lexical {
       graft.core.Generations.gc(spark, path, gen)
     }
 
-    /** Run independent write actions concurrently (Pipeline's pool
-      * pattern); failures propagate after all complete or fail.
+    /** Run independent write actions concurrently. Every action is
+      * awaited before the first failure is rethrown (later ones ride
+      * along as suppressed), so no idf/meta/postings write outlives the
+      * index TableLock its caller holds.
       */
-    private def concurrently(fs: (() => Unit)*): Unit = {
+    private[ops] def concurrently(fs: (() => Unit)*): Unit = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
       try {
         val futures = fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
           override def call(): Unit = f()
         }))
-        futures.foreach(_.get()) // propagate failures
-      } catch {
-        case e: java.util.concurrent.ExecutionException => throw e.getCause
+        val failures = futures.flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+        failures.headOption.foreach { first =>
+          failures.tail.foreach(first.addSuppressed)
+          throw first
+        }
       } finally pool.shutdown()
     }
 
     private def deleteDir(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir)
       val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try { fs.delete(p, true); () } catch { case _: java.io.IOException => () }
+      try { fs.delete(p, true); () }
+      catch {
+        case e: java.io.IOException =>
+          System.err.println(s"[lexical] could not delete $dir: $e")
+      }
     }
 
     /** Append a document batch under its own `__ab = appendId`

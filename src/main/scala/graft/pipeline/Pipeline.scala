@@ -75,12 +75,6 @@ final class Pipeline(
     pipelineName: String,
     destRoot: String,
     stateDir: String,
-    /** >1 loads independent resources of the same dependency level
-      * concurrently (Spark schedules the jobs in parallel; tables are
-      * independent paths so writes don't conflict). Transformer ordering
-      * still holds: a level only starts after its parents' level finished.
-      */
-    parallelism: Int = 1,
     /** All-or-nothing multi-table commit: every table's new content lands
       * in a fresh generation dir first and ONE manifest write flips every
       * pointer together ([[graft.core.TableManifest]]) — a crash between
@@ -126,13 +120,11 @@ final class Pipeline(
     val state = StateStore(stateDir, s"$pipelineName.${source.name}")
     state.put("last_load_id", loadId)
     val ordered = topoOrder(source.resources)
-    val built = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-    val results = scala.collection.mutable.ArrayBuffer.empty[LoadResult]
+    val built = scala.collection.mutable.Map.empty[String, DataFrame]
     val pendingCursor = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
 
     def process(res: ResourceDef): Seq[LoadResult] = {
-      val ctx = new PipelineContext(spark, state,
-        scala.jdk.CollectionConverters.MapHasAsScala(built).asScala.toMap)
+      val ctx = new PipelineContext(spark, state, built.toMap)
       var df = res.build(ctx)
       res.incremental.foreach { case (inc, _) =>
         df = inc.apply(df, state, cursorKey(source, res))
@@ -149,46 +141,21 @@ final class Pipeline(
         // (the gap-free/re-runnable property orchestrator windows exist for).
         res.incremental.foreach { case (inc, _) =>
           if (!inc.externalWindowActive) {
-            inc.nextCursor(df).foreach { v =>
-              pendingCursor.synchronized { pendingCursor += (cursorKey(source, res) -> v) }
-            }
+            inc.nextCursor(df).foreach(v => pendingCursor += (cursorKey(source, res) -> v))
           }
         }
         writeRouted(df, res)
       }
     }
 
-    if (parallelism <= 1) {
-      ordered.foreach(res => results ++= process(res))
-    } else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-      try {
-        dependencyLevels(ordered).foreach { level =>
-          val futures = level.map(res => pool.submit(new java.util.concurrent.Callable[Seq[LoadResult]] {
-            override def call(): Seq[LoadResult] = process(res)
-          }))
-          futures.foreach(f => results ++= f.get()) // propagate failures, barrier per level
-        }
-      } finally pool.shutdown()
-    }
+    val results = ordered.flatMap(process)
 
     // manifest mode: flip every table's pointer in ONE commit, BEFORE the
     // cursor commit (crash between = idempotent re-run over new tables)
     currentPublish.foreach(_.commit())
     pendingCursor.foreach { case (k, v) => state.put(k, v) }
     state.commit()
-    results.toSeq
-  }
-
-  /** Group the topo order into levels: level n contains resources whose
-    * parents all sit in levels < n.
-    */
-  private def dependencyLevels(ordered: Seq[ResourceDef]): Seq[Seq[ResourceDef]] = {
-    val level = scala.collection.mutable.Map.empty[String, Int]
-    ordered.foreach { r =>
-      level(r.name) = r.parentName.map(p => level(p) + 1).getOrElse(0)
-    }
-    ordered.groupBy(r => level(r.name)).toSeq.sortBy(_._1).map(_._2)
+    results
   }
 
   private def cursorKey(source: SourceDef, res: ResourceDef): String =

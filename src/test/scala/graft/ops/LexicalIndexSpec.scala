@@ -146,4 +146,15 @@ class LexicalIndexSpec extends SparkTestBase {
     assert(sorted(Lexical.Index.search(spark, incPath, q, "q_id", "q_text", 10)) ==
       sorted(Lexical.Index.search(spark, fullPath, q, "q_id", "q_text", 10)))
   }
+
+  test("concurrently returns only after every sibling finished, then rethrows the failure") {
+    val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val boom = intercept[IllegalStateException] {
+      Lexical.Index.concurrently(
+        () => throw new IllegalStateException("boom"),
+        () => { Thread.sleep(500); slowDone.set(true) })
+    }
+    assert(boom.getMessage == "boom")
+    assert(slowDone.get(), "a sibling write was still running when the failure surfaced")
+  }
 }

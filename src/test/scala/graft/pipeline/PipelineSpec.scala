@@ -209,10 +209,10 @@ class PipelineSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$dest/orders__items").count() == 3)
   }
 
-  test("parallel levels load independent resources concurrently, parents first") {
-    val dest = tmpDir("pipe-par")
-    val pipe = new Pipeline(spark, "p", dest, tmpDir("pipe-par-state"), parallelism = 4)
-    val order = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+  test("resources load parents first, whatever their declaration order") {
+    val dest = tmpDir("pipe-order")
+    val pipe = new Pipeline(spark, "p", dest, tmpDir("pipe-order-state"))
+    val order = new java.util.ArrayList[String]()
     def res(name: String, parent: Option[String] = None) = ResourceDef(
       name, TableHints(name, Disposition.Replace),
       ctx => { order.add(name); Seq((name, 1L)).toDF("src", "v") },
@@ -220,7 +220,7 @@ class PipelineSpec extends SparkTestBase {
     val results = pipe.run(SourceDef("s", Seq(
       res("child", Some("b")), res("a"), res("b"), res("c"))))
     assert(results.map(_.table).toSet == Set("a", "b", "c", "child"))
-    // the child must build after its parent despite parallel level 0
+    // the child is declared first but must build after its parent
     assert(order.indexOf("child") > order.indexOf("b"))
     (Seq("a", "b", "c", "child")).foreach { t =>
       assert(spark.read.parquet(s"$dest/$t").count() == 1)

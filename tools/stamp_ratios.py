@@ -42,13 +42,17 @@ def load_bench(path):
     # Since r20 Bench prints, AFTER the full line, per-query millisecond
     # chunk lines (each a whole <=1.5 KB JSON object), so a truncated
     # stdout tail still carries whole parseable chunks. Merge them first.
+    # Captured through sbt, every line carries an `[info] ` prefix
+    # (`[info] {"bench_chunk"...`), so find the chunk object anywhere in
+    # the line and parse from there.
     chunk_ms, n_chunks_seen, n_chunks_of = {}, 0, None
+    decoder = json.JSONDecoder()
     for line in tail.split("\n"):
-        line = line.strip()
-        if not line.startswith('{"bench_chunk"'):
+        at = line.find('{"bench_chunk"')
+        if at < 0:
             continue
         try:
-            c = json.loads(line)
+            c, _ = decoder.raw_decode(line, at)
         except ValueError:
             continue
         chunk_ms.update(c.get("queries_ms", {}))
@@ -73,17 +77,22 @@ def load_bench(path):
         # same-run proof: either the artifact's surviving first-line
         # fragment appears byte-for-byte in the sibling line, or every
         # recovered chunk entry matches the sibling's value at ms precision
+        # (within half a ms: Bench rounds with Scala's math.round, which
+        # differs from Python's round on exact .5 ties)
         frag_ok = bool(frag) and frag in full
         chunk_ok = bool(chunk_ms) and all(
-            k in qs and round(qs[k] * 1000) == v for k, v in chunk_ms.items())
+            k in qs and abs(qs[k] * 1000 - v) <= 0.5 for k, v in chunk_ms.items())
         if frag_ok or chunk_ok:
             return qs, j.get("errors", {}), f"recovered full map from {sib}"
     if chunk_ms:
         # no sibling matched, but whole chunk lines survived in the tail —
-        # use the partial ms map directly (better than nothing)
+        # use the partial ms map directly (better than nothing). Chunks
+        # carry no error map, so a failed query is indistinguishable from
+        # a fast one here: say so.
         part = {k: v / 1000.0 for k, v in chunk_ms.items()}
         return part, {}, (f"partial map from {n_chunks_seen}/{n_chunks_of} "
-                          "surviving tail chunks (no same-run sibling found)")
+                          "surviving tail chunks (no same-run sibling found; "
+                          "errors unknown)")
     raise SystemExit(f"{path}: tail fragment does not match any sibling BENCH_LOCAL*.json — "
                      "the siblings are from different runs; re-run Bench")
 
