@@ -83,6 +83,10 @@ object Bench {
     chunks.zipWithIndex.foreach { case (c, i) =>
       println(s"""{"bench_chunk":${i + 1},"of":${chunks.size},"unit":"ms","queries_ms":${c.mkString("{", ",", "}")}}""")
     }
+    //     and one compact totals line LAST (under 200 bytes), so even a
+    //     tail too short for any chunk says how many queries ran, how
+    //     many failed, and the run's total and geomean seconds
+    println(totalsLine(results.map(_._2), errors.size))
     // (2) the whole line written to a file the driver (and the
     //     stamp_ratios recovery path) can ingest; ALSO to a per-core
     //     sibling so the driver's follow-up low-core run doesn't clobber
@@ -93,5 +97,15 @@ object Bench {
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"BENCH_LOCAL_c$cpus.json"), json + "\n")
     spark.stop()
+  }
+
+  /** `{"bench_totals":{...}}` over the per-query seconds, `failed` of
+    * which raised; geomean is 0 when no query ran.
+    */
+  def totalsLine(secs: Seq[Double], failed: Int): String = {
+    val geomean = if (secs.isEmpty) 0.0 else math.exp(secs.map(math.log).sum / secs.size)
+    def num(fmt: String, d: Double) = fmt.formatLocal(java.util.Locale.ROOT, d)
+    s"""{"bench_totals":{"queries":${secs.size},"ok":${secs.size - failed},"failed":$failed,""" +
+      s""""total_s":${num("%.3f", secs.sum)},"geomean_s":${num("%.4f", geomean)}}}"""
   }
 }

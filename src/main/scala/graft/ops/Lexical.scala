@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Lexical (keyword) retrieval and rank fusion — the sparse half of a
   * hybrid retrieval stack next to [[Similarity]]'s dense ANN: tf-idf
@@ -138,8 +140,9 @@ object Lexical {
   /** Persisted inverted index — lexical retrieval as a TABLE rather than
     * a per-query recompute, the same discipline as the persisted IVF/PQ
     * and LSH indexes: build once (postings with champion ranks, bucketed
-    * by a term hash so a probe prunes partitions; the vocabulary-sized
-    * idf/df table alongside), probe many, append incrementally.
+    * by a term hash so a probe reads only its query's buckets; the
+    * vocabulary-sized idf/df table alongside), probe many, append
+    * incrementally.
     *
     * Layout under `path` — sub-tables live in per-GENERATION dirs
     * (`postings@g<N>`, see [[graft.core.Generations]]) committed by an
@@ -147,15 +150,23 @@ object Lexical {
     * append-batch id `__ab` (-1 = build/optimize output, >= 0 = one
     * append batch), the same batch-keyed discipline as the streaming
     * sinks:
-    *   postings@gN/  (term, id, tf, crank) partitioned by (__ab, __tb),
-    *                 __tb = md5-bucket of term; crank = champion rank
-    *                 within the term at build/optimize time (pending
-    *                 append rows use crank = 0)
+    *   postings@gN/  (term, id, tf, crank) partitioned by (__ab, __tb);
+    *                 build/optimize rows have __tb = md5-bucket of term
+    *                 (0..63) and crank = champion rank within the term
+    *                 (NULL below the champion cut); an append batch
+    *                 lands UNBUCKETED under __tb = -1 with crank = 0
+    *                 ("pending"). `_schema.json` records the data schema
+    *                 (so `id` keeps the type the build was given)
     *   idf@gN/       (term, df) partitioned by __ab — per-batch document
     *                 frequency DELTAS; probes sum across batches
     *                 (vocabulary-sized work)
     *   meta@gN/      (n_docs) partitioned by __ab — per-batch doc
     *                 counts; probes sum
+    *
+    * A probe lists the `__ab` dirs on the driver and scans only the
+    * `__tb` leaf dirs of its query terms' buckets plus every pending
+    * `__tb = -1` dir, with the recorded schema — it never discovers the
+    * whole postings tree.
     *
     * `optimize` writes the WHOLE next generation and then flips the
     * marker — one atomic create — so an UNLEASED reader (`search` takes
@@ -173,9 +184,14 @@ object Lexical {
     * append is retried or `optimize` runs — never duplicated, never
     * over-counted. Appended postings are all candidates until the next
     * optimize (bounded while batches are small relative to the indexed
-    * corpus, exactly the incremental-LSH trade). `optimize` recomputes
-    * champion ranks over the union and compacts every sub-table back to
-    * a single `__ab = -1` partition, after which the index is IDENTICAL
+    * corpus, exactly the incremental-LSH trade), and every probe reads
+    * every pending dir. A same-id retry replaces its partitions under
+    * an unleased probe (delete, then rename): the probe re-lists a leaf
+    * dir that is gone when its read resolves and skips files that are
+    * gone when it scans, so it sees that batch whole, partly or not at
+    * all until the retry lands — never an error. `optimize` recomputes champion ranks and term
+    * buckets over the union and compacts every sub-table back to a
+    * single `__ab = -1` partition, after which the index is IDENTICAL
     * to a fresh build over the union corpus (spec-pinned).
     *
     * Single-writer discipline: `build`/`append`/`optimize` all run under
@@ -187,6 +203,13 @@ object Lexical {
     */
   object Index {
     private val TermBuckets = 64
+
+    /** `__tb` of an append batch's postings: unbucketed until optimize. */
+    private val Pending = -1L
+
+    private val SchemaFile = "_schema.json"
+    private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT")
+    private val MetaSchema = StructType.fromDDL("n_docs BIGINT")
 
     /** Lease wait: a busy holder (an optimize mid-swap) releases in
       * bounded time, so queue briefly instead of failing the batch job;
@@ -200,7 +223,7 @@ object Lexical {
         owner = s"lexical-index-$verb:${java.util.UUID.randomUUID()}",
         waitMs = LockWaitMs)(f)
 
-    private def termBucket(c: Column): Column =
+    private[ops] def termBucket(c: Column): Column =
       pmod(conv(substring(md5(c), 1, 15), 16, 10).cast("long"), lit(TermBuckets.toLong))
 
     private def postingsOf(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -219,6 +242,67 @@ object Lexical {
         .select(col("term"), col("id"), col("crank").cast("long").as("crank"))
       postings.join(champ, Seq("term", "id"), "left")
         .select(col("term"), col("id"), col("tf"), col("crank"))
+    }
+
+    /** Record the postings data schema in `dir` (a `_` name, which
+      * scans skip), so probes read by explicit path without inferring it.
+      */
+    private def recordSchema(spark: SparkSession, dir: String, schema: StructType): Unit = {
+      val p = new Path(dir, SchemaFile)
+      val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+      try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      finally out.close()
+    }
+
+    private def postingsSchema(spark: SparkSession, dir: String): StructType = {
+      val p = new Path(dir, SchemaFile)
+      val in = try p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      catch {
+        case e: java.io.FileNotFoundException =>
+          throw new IllegalStateException(
+            s"$p is missing: this index has no recorded postings schema; rebuild it with Index.build", e)
+      }
+      try DataType.fromJson(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+        .asInstanceOf[StructType]
+      finally in.close()
+    }
+
+    /** `dirs` read with a known schema, skipping files that a same-id
+      * append retry removed after the listing; no dirs, no rows.
+      */
+    private def read(spark: SparkSession, schema: StructType, dirs: Seq[String],
+        basePath: Option[String] = None): DataFrame =
+      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else spark.read.schema(schema).options(basePath.map("basePath" -> _).toMap)
+        .option("ignoreMissingFiles", "true").parquet(dirs: _*)
+
+    /** The postings a probe of term `buckets` needs: those buckets' build
+      * dirs plus every pending dir, found by listing the `__ab` dirs and
+      * their `__tb` dirs on the driver.
+      */
+    private def postingsFor(spark: SparkSession, dir: String, buckets: Set[Long]): DataFrame = {
+      val root = new Path(dir)
+      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def children(p: Path, key: String): Seq[(Path, Long)] =
+        fs.listStatus(p).toSeq.collect {
+          case st if st.isDirectory && st.getPath.getName.startsWith(s"$key=") =>
+            (st.getPath, st.getPath.getName.stripPrefix(s"$key=").toLong)
+        }
+      val schema = postingsSchema(spark, dir)
+      // a listed leaf gone when the read resolves it (a same-id append
+      // retry between its delete and rename) is listed again, not an error
+      def attempt(left: Int): DataFrame = {
+        val leaves = for {
+          (ab, _) <- children(root, "__ab")
+          (tb, b) <- children(ab, "__tb") if b == Pending || buckets(b)
+        } yield tb.toString
+        try read(spark, schema, leaves, Some(dir))
+        catch {
+          case e: AnalysisException if left > 1 && e.getCondition == "PATH_NOT_FOUND" =>
+            attempt(left - 1)
+        }
+      }
+      attempt(3)
     }
 
     /** Sub-table dir of the current committed generation (spec access). */
@@ -255,10 +339,13 @@ object Lexical {
       // sequentially — the idf/meta jobs back-fill executors the postings
       // write's tail leaves idle)
       concurrently(
-        () => withCrank(staged, championSize)
-          .withColumn("__ab", lit(-1L))
-          .withColumn("__tb", termBucket(col("term")))
-          .write.mode("overwrite").partitionBy("__ab", "__tb").parquet(d("postings")),
+        () => {
+          val ranked = withCrank(staged, championSize)
+          ranked.withColumn("__ab", lit(-1L))
+            .withColumn("__tb", termBucket(col("term")))
+            .write.mode("overwrite").partitionBy("__ab", "__tb").parquet(d("postings"))
+          recordSchema(spark, d("postings"), ranked.schema)
+        },
         // df(term) = the staged postings' per-term row count — postings
         // are (term, id)-distinct by construction, so this is exactly the
         // old dfOf(docs) without the second corpus tokenize
@@ -305,8 +392,10 @@ object Lexical {
     }
 
     /** Append a document batch under its own `__ab = appendId`
-      * partitions: postings land with crank = 0 (always candidates until
-      * the next optimize), df and n_docs land as per-batch deltas.
+      * partitions: postings land unbucketed (`__tb = -1`, so a small
+      * batch writes a few files, not one per term bucket) with crank = 0
+      * (always candidates until the next optimize), df and n_docs land as
+      * per-batch deltas.
       * Idempotent per appendId — a retry after a crash overwrites the
       * same partitions and heals any half-landed state; idf/meta lag the
       * postings only inside the crash window (see the layout contract).
@@ -314,9 +403,9 @@ object Lexical {
       * `appendId` is the caller's batch identity and carries the
       * semantics: SAME id = retry of the same batch (overwrites itself),
       * DISTINCT batches MUST use distinct ids — reusing an id for a
-      * different batch replaces the earlier batch's deltas (and only the
-      * term buckets the new batch touches), silently corrupting df and
-      * n_docs. No default, precisely so callers must choose.
+      * different batch replaces the earlier batch's deltas, silently
+      * corrupting df and n_docs. No default, precisely so callers must
+      * choose.
       */
     def append(batch: DataFrame, idCol: String, textCol: String, path: String,
         appendId: Long): Unit = locked(batch.sparkSession, path, "append") {
@@ -326,23 +415,26 @@ object Lexical {
       // existing files are never rewritten) — the generation only flips
       // on build/optimize
       def d(sub: String) = graft.core.Generations.resolve(spark, path, sub)
-      val pb = postingsOf(batch, idCol, textCol)
+      val postings = d("postings")
+      postingsOf(batch, idCol, textCol)
         .withColumn("crank", lit(0L)) // pending: candidate until optimize
         .withColumn("__ab", lit(appendId))
-        .withColumn("__tb", termBucket(col("term")))
-      pb.write.mode("overwrite")
+        .withColumn("__tb", lit(Pending))
+        .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__ab", "__tb").parquet(d("postings"))
+        .partitionBy("__ab", "__tb").parquet(postings)
       // ONE batch tokenize: df(term) derives from the just-written
-      // postings partition (a same-id retry overwrote it, so the
+      // postings leaf dir (a same-id retry overwrote it, so the
       // read-back is exactly this batch's postings and the crash
       // contract above is unchanged — postings first, then idf/meta;
-      // idf and meta are mutually independent, so they overlap).
-      // Explicit schema: an empty-corpus build + empty batch leave a
-      // file-less dir that schema inference would refuse to read.
+      // idf and meta are mutually independent, so they overlap). An
+      // empty batch writes no leaf dir at all.
+      val leaf = new Path(s"$postings/__ab=$appendId/__tb=$Pending")
+      val landed =
+        if (leaf.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(leaf)) Seq(leaf.toString)
+        else Nil
       concurrently(
-        () => batch.sparkSession.read.schema(pb.schema).parquet(d("postings"))
-          .filter(col("__ab") === appendId)
+        () => read(spark, StructType.fromDDL("term STRING"), landed, Some(postings))
           .groupBy("term").agg(count(lit(1)).as("df")).withColumn("__ab", lit(appendId))
           .write.mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
@@ -370,15 +462,17 @@ object Lexical {
       def nxt(sub: String) = graft.core.Generations.dir(path, sub, gen + 1)
       // reading gen N while writing gen N+1: no self-overwrite, so no
       // pre-read checkpoint needed anywhere
-      withCrank(
-        spark.read.parquet(cur("postings")).select("term", "id", "tf"), championSize)
-        .withColumn("__ab", lit(-1L))
+      val ranked = withCrank(
+        spark.read.schema(postingsSchema(spark, cur("postings"))).parquet(cur("postings"))
+          .select("term", "id", "tf"), championSize)
+      ranked.withColumn("__ab", lit(-1L))
         .withColumn("__tb", termBucket(col("term")))
         .write.mode("overwrite").partitionBy("__ab", "__tb").parquet(nxt("postings"))
-      spark.read.parquet(cur("idf"))
+      recordSchema(spark, nxt("postings"), ranked.schema)
+      spark.read.schema(IdfSchema).parquet(cur("idf"))
         .groupBy("term").agg(sum("df").as("df")).withColumn("__ab", lit(-1L))
         .write.mode("overwrite").partitionBy("__ab").parquet(nxt("idf"))
-      val n = spark.read.parquet(cur("meta")).agg(sum("n_docs")).head.getLong(0)
+      val n = spark.read.schema(MetaSchema).parquet(cur("meta")).agg(sum("n_docs")).head.getLong(0)
       spark.createDataFrame(Seq(Tuple1(n))).toDF("n_docs")
         .withColumn("__ab", lit(-1L))
         .write.mode("overwrite").partitionBy("__ab").parquet(nxt("meta"))
@@ -410,21 +504,23 @@ object Lexical {
       // through a one-generation grace
       val gen = graft.core.Generations.currentOrFail(spark, path)
       def d(sub: String) = graft.core.Generations.dir(path, sub, gen)
-      val postings = spark.read.parquet(d("postings"))
-      // per-batch deltas sum to the union-corpus df and n_docs —
-      // vocabulary-sized (idf) and batch-count-sized (meta) work
-      val n = spark.read.parquet(d("meta")).agg(sum("n_docs")).head.getLong(0)
-      val idf = spark.read.parquet(d("idf"))
-        .groupBy("term").agg(sum("df").as("df"))
-        .withColumn("__m", expr(s"(${n + 1}L + df) div (df + 1L)"))
-        .select(col("term"),
-          when(col("__m") <= 1L, lit(0L))
-            .otherwise(length(bin(col("__m") - 1)).cast("long")).as("idf_bits"))
       val qt = queries
         .select(col(qidCol), explode(split(col(qtextCol), " ")).as("term"))
         .groupBy(col(qidCol), col("term")).agg(count(lit(1)).as("__qtf"))
         .localCheckpoint(true)
-      val qtGated = gated(qt, qt.count(), broadcastRowCap)
+      // ONE job for the broadcast gate's row count AND the query's term
+      // buckets (at most TermBuckets ints, however many queries), which
+      // pick the postings leaf dirs to read
+      val stats = qt.agg(count(lit(1)), collect_set(termBucket(col("term")))).head
+      val qtGated = gated(qt, stats.getLong(0), broadcastRowCap)
+      val postings = postingsFor(spark, d("postings"), stats.getSeq[Long](1).toSet)
+      // per-batch deltas sum to the union-corpus df and n_docs —
+      // vocabulary-sized (idf) and batch-count-sized (meta) work; meta
+      // holds one row per batch, so it is summed on the driver (one job,
+      // no shuffle)
+      val n = read(spark, MetaSchema, Seq(d("meta"))).collect().map(_.getLong(0)).sum
+      val idf = idfBitsFromDf(
+        read(spark, IdfSchema, Seq(d("idf"))).groupBy("term").agg(sum("df").as("df")), n)
       // candidates: champion rows (crank >= 1) plus pending appended rows
       // (crank = 0); non-champion build rows (NULL) only contribute to
       // the exact scoring join below

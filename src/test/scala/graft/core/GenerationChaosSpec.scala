@@ -59,6 +59,32 @@ class GenerationChaosSpec extends SparkTestBase {
     }
   }
 
+  test("Lexical.Index.search under concurrent same-id append retries: zero missing-path errors") {
+    // a retry of batch 5 replaces its postings/idf/meta partitions by
+    // delete-then-rename while the unleased reader lists and scans them
+    val path = s"${tmpDir("gen_chaos_lex_retry")}/idx"
+    val docs = (1L to 150L).map(i => (i, s"alpha tok${i % 7} beta")).toDF("id", "text")
+    Lexical.Index.build(docs, "id", "text", path, championSize = 4)
+    val batch = Seq((9000L, "freshterm alpha")).toDF("id", "text")
+    Lexical.Index.append(batch, "id", "text", path, appendId = 5L)
+    val queries = Seq((1L, "freshterm")).toDF("qid", "qtext")
+
+    def probe(): Seq[Long] =
+      Lexical.Index.search(spark, path, queries, "qid", "qtext", k = 5)
+        .select("id").as[Long].collect().toSeq
+
+    assert(probe() == Seq(9000L))
+    val (seen, n) = race(probe) {
+      (1 to 6).foreach(_ => Lexical.Index.append(batch, "id", "text", path, appendId = 5L))
+    }
+    assert(n >= 2, "expected at least one probe to overlap the retries")
+    // mid-retry the batch may be briefly invisible, never anything else
+    seen.zipWithIndex.foreach { case (got, i) =>
+      assert(got == Seq(9000L) || got.isEmpty, s"probe $i returned $got")
+    }
+    assert(seen.last == Seq(9000L), "the landed retry must be visible")
+  }
+
   test("growing IVF index probes under concurrent optimizeIndex: vectors and centroids pair within one generation") {
     val path = s"${tmpDir("gen_chaos_ivf")}/idx"
     val corpus = Embedding.embedDocuments(

@@ -22,6 +22,22 @@ class LexicalIndexSpec extends SparkTestBase {
   private def sorted(df: org.apache.spark.sql.DataFrame): Seq[String] =
     df.collect().map(_.toString).sorted.toSeq
 
+  private def bucketsOf(terms: String*): Set[Long] =
+    terms.toDF("term").select(Lexical.Index.termBucket(col("term"))).as[Long].collect().toSet
+
+  /** `__tb` of every postings file a frame scans. */
+  private def postingsBuckets(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+    df.inputFiles.toSeq.filter(_.contains("/postings@g")).map { f =>
+      val tb = f.substring(f.indexOf("/__tb=") + 6)
+      tb.substring(0, tb.indexOf('/')).toLong
+    }
+
+  private def parquetFiles(dir: String): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.walk(java.nio.file.Paths.get(dir)).iterator().asScala
+      .filter(_.toString.endsWith(".parquet")).toSeq
+  }
+
   test("build + search == direct champion-list retrieval") {
     val path = s"${tmpDir("graft_lexidx")}/idx"
     Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
@@ -54,11 +70,14 @@ class LexicalIndexSpec extends SparkTestBase {
     Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
     val batch = Seq((9000L, "freshterm common1")).toDF("doc_id", "text")
     Lexical.Index.append(batch, "doc_id", "text", path, appendId = 5L)
+    val batchDir = s"${Lexical.Index.subDir(spark, path, "postings")}/__ab=5"
+    assert(spark.read.parquet(batchDir).count() == 2L) // freshterm, common1
     val postings1 = spark.read.parquet(Lexical.Index.subDir(spark, path, "postings")).count()
     val df1 = spark.read.parquet(Lexical.Index.subDir(spark, path, "idf")).agg(sum("df")).as[Long].head()
     val n1 = spark.read.parquet(Lexical.Index.subDir(spark, path, "meta")).agg(sum("n_docs")).as[Long].head()
     // crash-before-checkpoint => the same batch is delivered again
     Lexical.Index.append(batch, "doc_id", "text", path, appendId = 5L)
+    assert(spark.read.parquet(batchDir).count() == 2L)
     assert(spark.read.parquet(Lexical.Index.subDir(spark, path, "postings")).count() == postings1)
     assert(spark.read.parquet(Lexical.Index.subDir(spark, path, "idf")).agg(sum("df")).as[Long].head() == df1)
     assert(spark.read.parquet(Lexical.Index.subDir(spark, path, "meta")).agg(sum("n_docs")).as[Long].head() == n1)
@@ -145,6 +164,93 @@ class LexicalIndexSpec extends SparkTestBase {
     val q = Seq((1L, "marker100 common1 common2")).toDF("q_id", "q_text")
     assert(sorted(Lexical.Index.search(spark, incPath, q, "q_id", "q_text", 10)) ==
       sorted(Lexical.Index.search(spark, fullPath, q, "q_id", "q_text", 10)))
+  }
+
+  test("search reads only the query's term buckets, plus the pending dir after an append") {
+    val path = s"${tmpDir("graft_lexidx_prune")}/idx"
+    Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
+    val q = Seq((1L, "marker7 common1")).toDF("q_id", "q_text")
+    val want = bucketsOf("marker7", "common1")
+    // no appends: only build dirs of the query's buckets
+    val before = Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 10)
+    assert(postingsBuckets(before).nonEmpty)
+    assert(postingsBuckets(before).toSet.subsetOf(want), before.inputFiles.mkString("\n"))
+    assert(sorted(before.withColumnRenamed("id", "doc_id")) == sorted(
+      Lexical.topKDocs(corpus, "doc_id", "text", q, "q_id", "q_text", 10, championSize = 16)))
+    // a small append lands unbucketed: at most one file per shuffle
+    // partition, not one per term bucket
+    val batch = (9000L until 9050L).map(i => (i, s"fresh$i marker7 common1 w${i % 40}"))
+      .toDF("doc_id", "text")
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 0L)
+    val batchDir = s"${Lexical.Index.subDir(spark, path, "postings")}/__ab=0"
+    val files = parquetFiles(batchDir)
+    assert(files.nonEmpty && files.forall(_.toString.contains("/__tb=-1/")), files.mkString("\n"))
+    assert(files.size <= spark.conf.get("spark.sql.shuffle.partitions").toInt, files.mkString("\n"))
+    val after = Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 10)
+    assert(postingsBuckets(after).toSet.subsetOf(want + -1L), after.inputFiles.mkString("\n"))
+    assert(postingsBuckets(after).contains(-1L))
+  }
+
+  test("a query whose buckets have no build dir returns no rows, then finds a pending doc") {
+    val path = s"${tmpDir("graft_lexidx_nobucket")}/idx"
+    val tiny = Seq((1L, "alpha alpha"), (2L, "alpha")).toDF("doc_id", "text")
+    Lexical.Index.build(tiny, "doc_id", "text", path, championSize = 4)
+    val built = bucketsOf("alpha")
+    val term = Iterator.from(0).map(i => s"zz$i").find(t => !built.contains(bucketsOf(t).head)).get
+    val q = Seq((1L, term)).toDF("q_id", "q_text")
+    assert(Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 5).count() == 0L)
+    Lexical.Index.append(Seq((3L, s"$term alpha")).toDF("doc_id", "text"), "doc_id", "text", path,
+      appendId = 0L)
+    assert(Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 5)
+      .select("id").as[Long].collect().toSeq == Seq(3L))
+  }
+
+  test("an empty query frame returns no rows, with and without appends") {
+    val path = s"${tmpDir("graft_lexidx_noq")}/idx"
+    Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
+    val none = queries.limit(0)
+    assert(Lexical.Index.search(spark, path, none, "q_id", "q_text", k = 5).count() == 0L)
+    Lexical.Index.append(Seq((9000L, "freshterm")).toDF("doc_id", "text"), "doc_id", "text", path,
+      appendId = 0L)
+    assert(Lexical.Index.search(spark, path, none, "q_id", "q_text", k = 5).count() == 0L)
+  }
+
+  test("String doc ids round-trip through build, append, search and optimize") {
+    val dir = tmpDir("graft_lexidx_str")
+    val strCorpus = corpus.select(concat(lit("d"), col("doc_id")).as("doc_id"), col("text"))
+    val batch = Seq(("fresh-1", "freshterm common1"), ("fresh-2", "freshterm freshterm"))
+      .toDF("doc_id", "text")
+    val path = s"$dir/idx"
+    Lexical.Index.build(strCorpus, "doc_id", "text", path, championSize = 16)
+    val built = Lexical.Index.search(spark, path, queries, "q_id", "q_text", k = 10)
+    assert(built.schema("id").dataType == org.apache.spark.sql.types.StringType)
+    assert(sorted(built.withColumnRenamed("id", "doc_id")) == sorted(
+      Lexical.topKDocs(strCorpus, "doc_id", "text", queries, "q_id", "q_text", 10, championSize = 16)))
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 0L)
+    val fresh = Seq((1L, "freshterm")).toDF("q_id", "q_text")
+    assert(Lexical.Index.search(spark, path, fresh, "q_id", "q_text", k = 5)
+      .orderBy("rank").select("id").as[String].collect().toSeq == Seq("fresh-2", "fresh-1"))
+    Lexical.Index.optimize(spark, path, championSize = 16)
+    val union = strCorpus.unionByName(batch)
+    val q = queries.unionByName(fresh)
+    assert(sorted(Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 10)
+      .withColumnRenamed("id", "doc_id")) == sorted(
+      Lexical.topKDocs(union, "doc_id", "text", q, "q_id", "q_text", 10, championSize = 16)))
+  }
+
+  test("an index without its recorded postings schema fails search and optimize by name") {
+    val path = s"${tmpDir("graft_lexidx_noschema")}/idx"
+    Lexical.Index.build(Seq((1L, "alpha beta")).toDF("doc_id", "text"), "doc_id", "text", path,
+      championSize = 4)
+    val schemaFile = new java.io.File(s"${Lexical.Index.subDir(spark, path, "postings")}/_schema.json")
+    assert(schemaFile.delete())
+    val q = Seq((1L, "alpha")).toDF("q_id", "q_text")
+    val onSearch = intercept[IllegalStateException](
+      Lexical.Index.search(spark, path, q, "q_id", "q_text", k = 5))
+    assert(onSearch.getMessage.contains("_schema.json"), onSearch.getMessage)
+    val onOptimize = intercept[IllegalStateException](
+      Lexical.Index.optimize(spark, path, championSize = 4))
+    assert(onOptimize.getMessage.contains("_schema.json"), onOptimize.getMessage)
   }
 
   test("concurrently returns only after every sibling finished, then rethrows the failure") {

@@ -27,6 +27,27 @@ import statistics
 import sys
 
 
+def find_totals(tail):
+    """The `{"bench_totals": ...}` object Bench prints last (None if cut)."""
+    decoder = json.JSONDecoder()
+    for line in reversed(tail.split("\n")):
+        at = line.find('{"bench_totals"')
+        if at >= 0:
+            try:
+                return decoder.raw_decode(line, at)[0]["bench_totals"]
+            except (ValueError, KeyError):
+                return None
+    return None
+
+
+def totals_note(t):
+    """`; totals line: ...` for a surviving totals object, else ''."""
+    if t is None:
+        return ""
+    return (f"; totals line: {t['queries']} queries, {t['failed']} failed, "
+            f"{t['total_s']} s total, geomean {t['geomean_s']} s")
+
+
 def load_bench(path):
     """(queries, errors, note) from a Bench line file OR driver artifact."""
     with open(path) as f:
@@ -39,6 +60,9 @@ def load_bench(path):
     if parsed.get("queries"):
         return parsed["queries"], parsed.get("errors", {}), None
     tail = d["tail"]
+    # Bench's last line is a compact totals object: how many queries ran
+    # and how many failed, a check on whatever map is recovered below
+    totals = find_totals(tail)
     # Since r20 Bench prints, AFTER the full line, per-query millisecond
     # chunk lines (each a whole <=1.5 KB JSON object), so a truncated
     # stdout tail still carries whole parseable chunks. Merge them first.
@@ -82,19 +106,26 @@ def load_bench(path):
         frag_ok = bool(frag) and frag in full
         chunk_ok = bool(chunk_ms) and all(
             k in qs and abs(qs[k] * 1000 - v) <= 0.5 for k, v in chunk_ms.items())
-        if frag_ok or chunk_ok:
-            return qs, j.get("errors", {}), f"recovered full map from {sib}"
+        # a sibling whose query/error counts disagree with the totals line
+        # is from another run, whatever its values
+        totals_ok = totals is None or (
+            totals["queries"] == len(qs) and totals["failed"] == len(j.get("errors", {})))
+        if (frag_ok or chunk_ok) and totals_ok:
+            return qs, j.get("errors", {}), f"recovered full map from {sib}" + totals_note(totals)
     if chunk_ms:
         # no sibling matched, but whole chunk lines survived in the tail —
         # use the partial ms map directly (better than nothing). Chunks
         # carry no error map, so a failed query is indistinguishable from
-        # a fast one here: say so.
+        # a fast one here unless the totals line survived: say so.
         part = {k: v / 1000.0 for k, v in chunk_ms.items()}
-        return part, {}, (f"partial map from {n_chunks_seen}/{n_chunks_of} "
-                          "surviving tail chunks (no same-run sibling found; "
-                          "errors unknown)")
+        known = ("no query failed" if totals and totals["failed"] == 0
+                 else f"{totals['failed']} failed, which unknown" if totals
+                 else "errors unknown")
+        note = (f"partial map from {n_chunks_seen}/{n_chunks_of} surviving tail chunks "
+                f"(no same-run sibling found; {known})")
+        return part, {}, note + totals_note(totals)
     raise SystemExit(f"{path}: tail fragment does not match any sibling BENCH_LOCAL*.json — "
-                     "the siblings are from different runs; re-run Bench")
+                     "the siblings are from different runs; re-run Bench" + totals_note(totals))
 
 # BASELINE.md stamps (sf0.1, local[32], warmed). Source: the round-1 table
 # and the round-4 re-stamp table, plus later re-stamps where BASELINE.md

@@ -21,12 +21,19 @@ _spec.loader.exec_module(stamp_ratios)
 QUERIES = {"q_a": 1.2344, "q_b": 0.0125, "q_c": 7.5}
 
 
-def captured_tail():
+TOTALS = ('{"bench_totals":{"queries":3,"ok":3,"failed":0,'
+          '"total_s":8.747,"geomean_s":0.4893}}')
+
+
+def captured_tail(totals=None):
+    """Bench stdout as captured: `totals` is the last Bench line, or None for
+    artifacts from before the totals line existed."""
     full = json.dumps({"metric": "total", "value": sum(QUERIES.values()), "unit": "sec",
                        "queries": QUERIES, "sf": "/data/sf0.1"})
     chunks = ['{"bench_chunk":%d,"of":3,"unit":"ms","queries_ms":{%s}}' % (i + 1, c)
               for i, c in enumerate(['"q_a":1234', '"q_b":13', '"q_c":7500'])]
-    lines = ["[info] " + line for line in [full] + chunks] + ["[success] Total time: 12 s"]
+    bench = [full] + chunks + ([totals] if totals else [])
+    lines = ["[info] " + line for line in bench] + ["[success] Total time: 12 s"]
     out = "\n".join(lines) + "\n"
     # only a suffix survives: cut inside chunk 1
     return out[out.index('"q_a":1234}}'):], full
@@ -55,6 +62,43 @@ class ChunkRecoveryTest(unittest.TestCase):
             qs, _, note = stamp_ratios.load_bench(self.write_artifact(d, tail))
         self.assertEqual(qs, {"q_b": 0.013, "q_c": 7.5})
         self.assertIn("errors unknown", note)
+
+    def test_totals_line_settles_errors_of_a_partial_map(self):
+        tail, _ = captured_tail(TOTALS)
+        with tempfile.TemporaryDirectory() as d:
+            qs, errors, note = stamp_ratios.load_bench(self.write_artifact(d, tail))
+        self.assertEqual(qs, {"q_b": 0.013, "q_c": 7.5})
+        self.assertEqual(errors, {})
+        self.assertIn("no query failed", note)
+        self.assertNotIn("errors unknown", note)
+        self.assertIn("3 queries, 0 failed, 8.747 s total, geomean 0.4893 s", note)
+
+    def test_totals_line_counting_failures_is_reported(self):
+        tail, _ = captured_tail(TOTALS.replace('"ok":3,"failed":0', '"ok":2,"failed":1'))
+        with tempfile.TemporaryDirectory() as d:
+            _, _, note = stamp_ratios.load_bench(self.write_artifact(d, tail))
+        self.assertIn("1 failed, which unknown", note)
+
+    def test_totals_line_rejects_a_sibling_with_other_counts(self):
+        tail, _ = captured_tail(TOTALS)
+        other = json.dumps({"metric": "total", "value": 9.0, "unit": "sec",
+                            "queries": dict(QUERIES, q_d=0.2), "sf": "/data/sf0.1"})
+        with tempfile.TemporaryDirectory() as d:
+            with open(os.path.join(d, "BENCH_LOCAL_c32.json"), "w") as f:
+                f.write(other + "\n")
+            qs, _, note = stamp_ratios.load_bench(self.write_artifact(d, tail))
+        self.assertNotIn("q_d", qs)
+        self.assertIn("partial map", note)
+
+    def test_totals_line_is_read_with_a_full_recovery(self):
+        tail, full = captured_tail(TOTALS)
+        with tempfile.TemporaryDirectory() as d:
+            with open(os.path.join(d, "BENCH_LOCAL_c32.json"), "w") as f:
+                f.write(full + "\n")
+            qs, _, note = stamp_ratios.load_bench(self.write_artifact(d, tail))
+        self.assertEqual(qs, QUERIES)
+        self.assertIn("recovered full map from", note)
+        self.assertIn("totals line: 3 queries, 0 failed", note)
 
 
 if __name__ == "__main__":
