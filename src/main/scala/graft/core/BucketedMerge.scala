@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** Bucketed merge writer — the 100 TB path for `merge` dispositions.
   *
-  * `TableWriter.stagedOverwrite` rewrites the WHOLE table per merge; fine
+  * `TableWriter`'s whole-table swap rewrites the WHOLE table per merge; fine
   * for small dimension tables, fatal at scale (a 1 TB table with a 100 MB
   * CDC batch would rewrite 1 TB per batch). Here the destination is laid
   * out as `_bucket=<i>/` partitions keyed by a stable hash of the pk, and
@@ -15,8 +15,8 @@ import org.apache.spark.sql.functions._
   *   2. reads ONLY those partitions of the base table (partition pruning
   *      on `_bucket` — untouched buckets are never scanned);
   *   3. merges per bucket (dedup_sort, upsert anti-join, hard delete — the
-  *      same MergeEngine plan) and overwrites only those partition dirs
-  *      (dynamic partition overwrite).
+  *      same MergeEngine plan) and swaps only those partition dirs
+  *      ([[StagedSwap]], one bucket at a time).
   *
   * Rewrite cost per batch is O(touched buckets × bucket size), not
   * O(table). With uniformly-hashed pks and B buckets, a batch touching K
@@ -58,6 +58,9 @@ object BucketedMerge {
       bucketKeys: Seq[String] = Nil): Unit = {
     val keys = bucketKeysOf(hints, bucketKeys)
     require(hints.keyColumns.nonEmpty, "bucketed merge requires a key")
+    // before the base read: a bucket a crashed swap left aside is part of
+    // the base this batch merges into
+    StagedSwap.repair(spark, path)
     val exists = TableWriter.readIfExists(spark, path).isDefined
     if (!exists) { replace(spark, updates, path, hints, numBuckets, bucketKeys); return }
 
@@ -73,55 +76,15 @@ object BucketedMerge {
     val merged = MergeEngine.mergePlan(Some(base.drop(BucketCol)), bucketed.drop(BucketCol), hints)
       .withColumn(BucketCol, bucketExpr(keys, numBuckets))
 
-    // stage the merged buckets, then swap each touched bucket dir. A
+    // stage the merged buckets, then swap each touched bucket dir; a
     // bucket emptied by hard deletes has no staged dir and is removed —
-    // dynamic partition overwrite alone would silently leave it behind.
-    val stagePath = path + "__stage"
+    // dynamic partition overwrite alone would silently leave it behind
     merged
       .repartition(col(BucketCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol)
-      .parquet(stagePath)
-
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // per-bucket swap mirrors stagedOverwrite's guarantee: the old copy is
-    // RENAMED aside (outside the table dir, so partition discovery never
-    // sees it) before the staged dir moves in, and deleted only after —
-    // a crash mid-swap leaves either the old or the new bucket recoverable,
-    // never neither.
-    val oldRoot = new org.apache.hadoop.fs.Path(path + "__old")
-    repairFromCrash(fs, path, oldRoot)
-    fs.mkdirs(oldRoot)
-    touched.foreach { b =>
-      val dest = new org.apache.hadoop.fs.Path(s"$path/$BucketCol=$b")
-      val staged = new org.apache.hadoop.fs.Path(s"$stagePath/$BucketCol=$b")
-      val old = new org.apache.hadoop.fs.Path(s"${path}__old/$BucketCol=$b")
-      if (fs.exists(dest)) fs.rename(dest, old)
-      if (fs.exists(staged)) fs.rename(staged, dest)
-      if (fs.exists(old)) fs.delete(old, true)
-    }
-    fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-    fs.delete(oldRoot, true)
-  }
-
-  /** Recover from a crash mid-swap. A crash between `rename(dest, old)` and
-    * `rename(staged, dest)` leaves a bucket's ONLY copy under `__old`;
-    * deleting the sibling wholesale would lose every base row of that
-    * bucket not present in the interrupted batch. So: any `__old` bucket
-    * whose destination is absent is renamed BACK into the table first
-    * (the interrupted merge never committed, so the pre-merge state is the
-    * correct one to resurrect); buckets whose destination exists were
-    * already swapped and their old copy is safe to drop.
-    */
-  private def repairFromCrash(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      oldRoot: org.apache.hadoop.fs.Path): Unit = {
-    if (!fs.exists(oldRoot)) return
-    fs.listStatus(oldRoot).foreach { st =>
-      val dest = new org.apache.hadoop.fs.Path(path, st.getPath.getName)
-      if (!fs.exists(dest)) fs.rename(st.getPath, dest)
-    }
-    fs.delete(oldRoot, true)
+      .parquet(StagedSwap.stageOf(path))
+    StagedSwap.swap(spark, path, touched.toSeq.map(b => s"$BucketCol=$b"))
   }
 
   def read(spark: SparkSession, path: String): DataFrame =

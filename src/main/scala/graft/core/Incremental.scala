@@ -36,9 +36,8 @@ final case class Incremental(
     allowExternalSchedulers: Boolean = false,
     /** Per-run scheduler window, bound to THIS cursor instance. Takes
       * precedence over the JVM-global injection: two pipelines running
-      * concurrently in one JVM (Pipeline schedules resources on a thread
-      * pool) each thread their own interval here and never see each
-      * other's. Only consulted when `allowExternalSchedulers` — set it
+      * concurrently in one JVM (each on its own thread) each carry their
+      * own interval here and never see each other's. Only consulted when `allowExternalSchedulers` — set it
       * via [[withSchedulerWindow]].
       */
     schedulerWindow: Option[(Option[String], Option[String])] = None,

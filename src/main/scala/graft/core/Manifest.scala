@@ -39,7 +39,7 @@ final class TableManifest(spark: SparkSession, root: String) {
   private val rootUri = new org.apache.hadoop.fs.Path(root).toUri
   require(rootUri.getScheme == null || rootUri.getScheme == "file",
     s"manifestCommit supports local filesystem roots only (got '$root'): the atomic " +
-      "manifest flip is a local rename — use the per-table staged-swap path for remote roots")
+      "manifest flip is a local rename — use TableWriter (per-table staged swap) for remote roots")
   private val localRoot =
     if (rootUri.getScheme == null) root else java.nio.file.Paths.get(rootUri).toString
 
@@ -96,9 +96,9 @@ final class TableManifest(spark: SparkSession, root: String) {
 
   /** One all-or-nothing publish cycle over any number of tables. Callers
     * [[Publish.land]] each table's updates (any disposition) as the run
-    * progresses (thread-safe — Pipeline's level-parallel mode lands from
-    * several threads), then [[Publish.commit]] once — the single point
-    * where ANY of it becomes visible.
+    * progresses (thread-safe: land and commit serialize on the publish),
+    * then [[Publish.commit]] once — the single point where ANY of it
+    * becomes visible.
     *
     * CONCURRENCY (per-table, not per-root): the first land into a table
     * takes that TABLE's lease (`<root>/<table>__lock.e<N>`), held through
@@ -123,12 +123,10 @@ final class TableManifest(spark: SparkSession, root: String) {
     // generations of pre-counts manifests)
     private val countCache = scala.collection.mutable.Map.empty[String, Long]
     private var committed = false
-    // table -> its held lease (first land through commit/abort)
-    private val leases = scala.collection.mutable.LinkedHashMap.empty[String, TableLock.Lease]
-    // renew every held lease well inside staleness — a publish is often
-    // data-dependent-long (a big merge rewrite) and must not be exposed
-    // to stale takeover mid-landing
-    @volatile private var renewer: Thread = null
+    // table -> its lease, first land through commit/abort, kept live: a
+    // publish is often data-dependent-long (a big merge rewrite) and must
+    // not be exposed to stale takeover mid-landing
+    private val leases = new TableLock.Heartbeat(s"manifest-publish:$owner", TableLock.DefaultStaleMs)
 
     /** First touch of a table in this publish: take the table lease, then
       * refresh the committed view from disk (under OUR lease this table's
@@ -138,21 +136,8 @@ final class TableManifest(spark: SparkSession, root: String) {
       * can never delete a CONCURRENT publisher's uncommitted landings —
       * those sit under tables whose leases the other writer holds).
       */
-    private def leaseTable(name: String): Unit = if (!leases.contains(name)) {
-      val l = TableLock.acquire(spark, s"$localRoot/$name", s"manifest-publish:$owner")
-      leases.synchronized { leases(name) = l }
-      if (renewer == null) {
-        renewer = new Thread(() => {
-          try while (true) {
-            Thread.sleep(5L * 60 * 1000 / 3)
-            leases.synchronized(leases.values.toSeq).foreach { l =>
-              try l.renew() catch { case _: java.io.IOException => () } // keep beating
-            }
-          } catch { case _: InterruptedException => () }
-        }, s"graft-manifest-lease-renewer:$owner")
-        renewer.setDaemon(true)
-        renewer.start()
-      }
+    private def leaseTable(name: String): Unit = if (!leases.holds(name)) {
+      leases.hold(name, TableLock.acquire(spark, s"$localRoot/$name", s"manifest-publish:$owner"))
       stateLock.synchronized(state.rollback())
       sweepTable(name)
     }
@@ -168,19 +153,11 @@ final class TableManifest(spark: SparkSession, root: String) {
       }
     }
 
-    private def releaseAll(): Unit = {
-      if (renewer != null) { renewer.interrupt(); renewer = null }
-      leases.synchronized {
-        leases.values.foreach(_.release())
-        leases.clear()
-      }
-    }
-
     /** Release every table lease WITHOUT committing — the failed run's
       * landed dirs become orphans the next lease holder sweeps. No-op
       * after commit (which releases on its own).
       */
-    def abort(): Unit = synchronized { if (!committed) releaseAll() }
+    def abort(): Unit = synchronized { if (!committed) leases.releaseAll() }
 
     private def currentDirs(name: String): Seq[String] =
       pending.getOrElse(name, gens(name))
@@ -207,11 +184,14 @@ final class TableManifest(spark: SparkSession, root: String) {
       pendingCounts.getOrElse(name,
         committedCounts(name).getOrElse(gens(name).map(genCount(name, _))))
 
-    /** Land one table's updates under its disposition; nothing becomes
-      * reader-visible until [[commit]]. Returns the table's row count as
-      * of this landing (committed + pending content), derived from
-      * parquet footer metadata — O(1) Spark jobs per land regardless of
-      * how many generations the table has accumulated.
+    /** Land one table's updates under its disposition
+      * ([[MergeEngine.landing]]): a delta lands as a new generation that
+      * JOINS the table's list (O(batch)), a rewrite as a generation that
+      * replaces it. Nothing becomes reader-visible until [[commit]].
+      * Returns the table's row count as of this landing (committed +
+      * pending content), derived from parquet footer metadata — O(1)
+      * Spark jobs per land regardless of how many generations the table
+      * has accumulated.
       */
     def land(updates: DataFrame, hints: TableHints): Long = synchronized {
       require(!committed, "publish already committed")
@@ -219,44 +199,27 @@ final class TableManifest(spark: SparkSession, root: String) {
         "bucketed merge commits per-bucket in place and cannot ride a manifest publish — " +
           "use bucketCount = None for manifest-committed tables")
       val name = Naming.normalize(hints.tableName)
+      // NO wall-clock default here: a manifest-committed scd2 table
+      // must be byte-identical when re-run from the same inputs
+      require(hints.disposition != Disposition.Scd2 || hints.scd2LoadTs.isDefined,
+        s"manifest-committed scd2 table '$name' requires hints.scd2LoadTs — a " +
+          "wall-clock default would make identical runs land different valid_from stamps")
       leaseTable(name)
       val gen = nextGen(name)
       val genPath = s"$root/$name/$gen"
       // overwrite: a crashed publish's orphan with the same number was
       // swept at cycle start, but a racing retry inside one JVM could
       // still leave one — committed generations are never re-targeted
-      def landFull(df: DataFrame): Unit = {
-        df.write.mode("overwrite").parquet(genPath)
-        pending(name) = Seq(gen)
-        pendingCounts(name) = Seq(genCount(name, gen))
-      }
-      hints.disposition match {
-        case Disposition.Append =>
-          readCurrent(name) match {
-            case None => landFull(updates)
-            case Some(existing) =>
-              val target = MergeEngine.mergedSchema(existing.schema, updates.schema)
-              val widened = existing.schema.fields.exists(f => target(f.name).dataType != f.dataType)
-              if (widened) landFull(MergeEngine.unionEvolved(existing, updates))
-              else {
-                // O(batch): the delta lands alone and JOINS the list
-                val baseCounts = currentCounts(name)
-                MergeEngine.alignTo(updates, target).write.mode("overwrite").parquet(genPath)
-                pending(name) = currentDirs(name) :+ gen
-                pendingCounts(name) = baseCounts :+ genCount(name, gen)
-              }
-          }
-        case Disposition.Replace =>
-          landFull(updates)
-        case Disposition.Merge =>
-          landFull(MergeEngine.mergePlan(readCurrent(name), updates, hints))
-        case Disposition.Scd2 =>
-          // NO wall-clock default here: a manifest-committed scd2 table
-          // must be byte-identical when re-run from the same inputs
-          val loadTs = hints.scd2LoadTs.getOrElse(throw new IllegalArgumentException(
-            s"manifest-committed scd2 table '$name' requires hints.scd2LoadTs — a " +
-              "wall-clock default would make identical runs land different valid_from stamps"))
-          landFull(MergeEngine.scd2Apply(readCurrent(name), updates, hints.keyColumns, loadTs))
+      MergeEngine.landing(readCurrent(name), updates, hints) match {
+        case Landing.Delta(rows) =>
+          val baseCounts = currentCounts(name)
+          rows.write.mode("overwrite").parquet(genPath)
+          pending(name) = currentDirs(name) :+ gen
+          pendingCounts(name) = baseCounts :+ genCount(name, gen)
+        case Landing.Rewrite(table) =>
+          table.write.mode("overwrite").parquet(genPath)
+          pending(name) = Seq(gen)
+          pendingCounts(name) = Seq(genCount(name, gen))
       }
       pendingCounts(name).sum
     }
@@ -291,7 +254,7 @@ final class TableManifest(spark: SparkSession, root: String) {
         }
       }
       committed = true
-      releaseAll()
+      leases.releaseAll()
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.core
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -73,6 +74,34 @@ object MergeEngine {
         unionEvolved(survivors, liveUpdates)
     }
   }
+
+  /** The disposition planner both writers share ([[TableWriter]] and
+    * [[TableManifest.Publish.land]]): what `updates` does to a table
+    * under `hints`. No I/O, and `existing` is read only by the
+    * dispositions that need it (replace reads nothing). An append lands
+    * as a delta unless it WIDENS an existing column's type (int→double,
+    * …): parquet footer merging cannot reconcile that, so the table is
+    * migrated once to the widened schema — dlt's ALTER COLUMN analog.
+    * Added-columns-only evolution stays a delta (mergeSchema reads),
+    * O(batch).
+    */
+  def landing(existing: => Option[DataFrame], updates: DataFrame, hints: TableHints): Landing =
+    hints.disposition match {
+      case Disposition.Append =>
+        existing match {
+          case None => Landing.Delta(updates)
+          case Some(base) =>
+            val target = mergedSchema(base.schema, updates.schema)
+            if (base.schema.fields.exists(f => target(f.name).dataType != f.dataType))
+              Landing.Rewrite(unionEvolved(base, updates))
+            else Landing.Delta(alignTo(updates, target))
+        }
+      case Disposition.Replace => Landing.Rewrite(updates)
+      case Disposition.Merge   => Landing.Rewrite(mergePlan(existing, updates, hints))
+      case Disposition.Scd2 =>
+        val loadTs = hints.scd2LoadTs.getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
+        Landing.Rewrite(scd2Apply(existing, updates, hints.keyColumns, loadTs))
+    }
 
   /** Schema evolution by column union + type widening: new columns appear
     * nullable-backfilled; int→long→decimal→double→string widening mirrors
@@ -183,9 +212,20 @@ object MergeEngine {
 
 }
 
-/** Disposition engine over parquet tables with staged, swap-on-success
-  * commits (SURVEY §7.4.1: overwrite-with-staging; crash leaves either the
-  * old or the new table, never a half-written one).
+/** A planned landing ([[MergeEngine.landing]]). */
+sealed trait Landing
+object Landing {
+  /** Rows that land beside the table's existing rows, aligned to its schema. */
+  final case class Delta(rows: DataFrame) extends Landing
+  /** The table's whole new content. */
+  final case class Rewrite(table: DataFrame) extends Landing
+}
+
+/** Disposition engine over plain parquet table dirs. A delta is appended
+  * in place; a rewrite commits through [[StagedSwap]], so a crash leaves
+  * the old table or the new one, and the next write puts back a table a
+  * crash left aside before it reads. Bucketed merge tables rewrite only
+  * their touched buckets ([[BucketedMerge]]).
   */
 object TableWriter {
 
@@ -207,46 +247,20 @@ object TableWriter {
   }
 
   private def writeLocked(spark: SparkSession, updates: DataFrame, path: String, hints: TableHints): Unit = {
-    hints.disposition match {
-      case Disposition.Append =>
-        readIfExists(spark, path) match {
-          case Some(existing) =>
-            val target = MergeEngine.mergedSchema(existing.schema, updates.schema)
-            val widened = existing.schema.fields.exists(f => target(f.name).dataType != f.dataType)
-            if (widened)
-              // a batch WIDENED an existing column's type (int→double, …):
-              // parquet footer merging cannot reconcile that, so migrate
-              // the table once to the widened schema — dlt's ALTER COLUMN
-              // analog. Added-columns-only evolution takes the cheap path
-              // below (mergeSchema reads) and stays O(batch).
-              stagedOverwrite(spark, MergeEngine.unionEvolved(existing, updates), path)
-            else
-              MergeEngine.alignTo(updates, target).write.mode(SaveMode.Append).parquet(path)
-          case None =>
-            updates.write.mode(SaveMode.Append).parquet(path)
+    StagedSwap.repair(spark, path)
+    hints.bucketCount match {
+      case Some(n) if hints.disposition == Disposition.Merge && hints.keyColumns.nonEmpty =>
+        BucketedMerge.merge(spark, updates, path, hints, n)
+      case _ =>
+        MergeEngine.landing(readIfExists(spark, path), updates, hints) match {
+          case Landing.Delta(rows)    => rows.write.mode(SaveMode.Append).parquet(path)
+          case Landing.Rewrite(table) => StagedSwap.overwrite(spark, table.write, path)
         }
-      case Disposition.Replace =>
-        stagedOverwrite(spark, updates, path)
-      case Disposition.Merge =>
-        hints.bucketCount match {
-          case Some(n) if hints.keyColumns.nonEmpty =>
-            BucketedMerge.merge(spark, updates, path, hints, n)
-          case _ =>
-            val existing = readIfExists(spark, path)
-            val merged = MergeEngine.mergePlan(existing, updates, hints)
-            stagedOverwrite(spark, merged, path)
-        }
-      case Disposition.Scd2 =>
-        val existing = readIfExists(spark, path)
-        val loadTs = hints.scd2LoadTs
-          .getOrElse(new java.sql.Timestamp(System.currentTimeMillis()))
-        val merged = MergeEngine.scd2Apply(existing, updates, hints.keyColumns, loadTs)
-        stagedOverwrite(spark, merged, path)
     }
   }
 
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(path)
+    val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // mergeSchema: appended batches may carry evolved schemas (new nullable
     // columns); the default single-footer schema would silently DROP them.
@@ -254,29 +268,76 @@ object TableWriter {
     // on tables that actually evolved.
     if (fs.exists(p)) Some(spark.read.option("mergeSchema", "true").parquet(path)) else None
   }
+}
 
-  /** Write to `<path>__stage`, then swap directories. The swap is two
-    * renames — not atomic across both, but the stage dir always holds a
-    * complete copy, so recovery is possible from either side.
-    */
-  def stagedOverwrite(spark: SparkSession, df: DataFrame, path: String): Unit =
-    stagedOverwriteWith(spark, df.write, path)
+/** The one commit protocol for rewriting a parquet table dir in place
+  * (SURVEY §7.4.1, overwrite-with-staging). The new content is written
+  * whole to `<path>__stage`; then each swapped unit — the whole dir, or
+  * one partition dir of it — is renamed aside under `<path>__old`, its
+  * staged copy renamed in, and the aside copy deleted. The two renames
+  * are not atomic together: a crash between them leaves the unit's only
+  * copy aside, and [[repair]] renames it back. Every writer that reads a
+  * table before swapping it runs [[repair]] first, under the table's
+  * [[TableLock]] lease, so a retried crash converges: the retry sees the
+  * pre-crash table and applies its batch on top of it.
+  */
+private[core] object StagedSwap {
 
-  /** Staged swap for a caller-configured writer (e.g. carrying parquet
-    * bloom-filter options) — same rename protocol as [[stagedOverwrite]].
+  def stageOf(path: String): String = path + "__stage"
+  private def asideOf(path: String): String = path + "__old"
+
+  private def fsOf(spark: SparkSession, path: String): FileSystem =
+    new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+
+  private def rename(fs: FileSystem, from: Path, to: Path): Unit =
+    if (!fs.rename(from, to)) throw new java.io.IOException(s"staged swap: rename $from -> $to failed")
+
+  /** Write `writer`'s output to the stage dir, then swap the whole dir. */
+  def overwrite(spark: SparkSession, writer: DataFrameWriter[Row], path: String): Unit = {
+    writer.mode(SaveMode.Overwrite).parquet(stageOf(path))
+    swap(spark, path, Seq(""))
+  }
+
+  /** Swap each staged unit (a subdir name of the stage dir, "" = the whole
+    * dir) into `path`. A unit with no staged copy is removed: a bucket that
+    * hard deletes emptied is written by no task.
     */
-  def stagedOverwriteWith(spark: SparkSession,
-      writer: org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row],
-      path: String): Unit = {
-    val stage = new org.apache.hadoop.fs.Path(path + "__stage")
-    val dest = new org.apache.hadoop.fs.Path(path)
-    val old = new org.apache.hadoop.fs.Path(path + "__old")
-    val fs = dest.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(stage)) fs.delete(stage, true)
-    writer.mode(SaveMode.Overwrite).parquet(stage.toString)
-    if (fs.exists(old)) fs.delete(old, true)
-    if (fs.exists(dest)) fs.rename(dest, old)
-    fs.rename(stage, dest)
-    if (fs.exists(old)) fs.delete(old, true)
+  def swap(spark: SparkSession, path: String, units: Seq[String]): Unit = {
+    val fs = fsOf(spark, path)
+    def at(root: String, unit: String) = if (unit.isEmpty) new Path(root) else new Path(root, unit)
+    units.foreach { u =>
+      val (dest, staged, aside) = (at(path, u), at(stageOf(path), u), at(asideOf(path), u))
+      if (fs.exists(dest)) {
+        fs.mkdirs(aside.getParent)
+        rename(fs, dest, aside)
+      }
+      if (fs.exists(staged)) rename(fs, staged, dest)
+      fs.delete(aside, true)
+    }
+    fs.delete(new Path(stageOf(path)), true)
+    fs.delete(new Path(asideOf(path)), true)
+  }
+
+  /** Rename every aside copy whose destination is missing back into place,
+    * then drop the aside dir. The whole dir aside with no `path` is a
+    * whole-dir swap that crashed between its renames. Otherwise the aside
+    * dir holds per-partition copies, and one whose partition dir is missing
+    * is that partition's only copy — unless `path` holds data files at its
+    * top level: then the aside dir is a whole table a swap already
+    * superseded (say a replace of a bucketed table) and is dropped.
+    */
+  def repair(spark: SparkSession, path: String): Unit = {
+    val fs = fsOf(spark, path)
+    val (dest, aside) = (new Path(path), new Path(asideOf(path)))
+    if (!fs.exists(aside)) return
+    if (!fs.exists(dest)) rename(fs, aside, dest)
+    else {
+      if (!fs.listStatus(dest).exists(s => s.isFile && s.getPath.getName.endsWith(".parquet")))
+        fs.listStatus(aside).filter(_.isDirectory).foreach { st =>
+          val d = new Path(dest, st.getPath.getName)
+          if (!fs.exists(d)) rename(fs, st.getPath, d)
+        }
+      fs.delete(aside, true)
+    }
   }
 }

@@ -41,22 +41,24 @@ import java.nio.charset.StandardCharsets
   * (O_EXCL), which the kernel arbitrates.
   *
   * Staleness: a crashed writer never releases; a max-epoch lease whose
-  * mtime is older than `staleMs` is taken over. `withLock` runs an
-  * auto-renew heartbeat (staleMs / 3) for the duration of the protected
-  * block, so a legitimately slow compaction or data-dependent recovery
-  * heal is never exposed to third-party takeover mid-write. Same-owner
+  * mtime is older than `staleMs` is taken over. `withLock` and manifest
+  * publishes keep their leases live with a [[Heartbeat]] (staleMs / 3),
+  * so a legitimately slow compaction or data-dependent recovery heal is
+  * never exposed to third-party takeover mid-write. Same-owner
   * reacquire: a holder identity that survives process death (e.g. a
   * streaming query's checkpoint dir) retakes its own lease immediately —
   * the platform guarantees one active instance per such identity, so the
   * previous holder is necessarily dead.
   *
   * The lease files live NEXT TO the table dir (`<path>__lock.e<N>`), not
-  * inside it: `stagedOverwrite` renames the whole directory, and a lock
-  * inside would be swapped away with it.
+  * inside it: the staged swap ([[StagedSwap]]) renames the whole
+  * directory, and a lock inside would be swapped away with it.
   */
 object TableLock {
 
   private val log = org.slf4j.LoggerFactory.getLogger(TableLock.getClass)
+
+  private[core] val DefaultStaleMs: Long = 15L * 60 * 1000
 
   final class LockHeldException(msg: String) extends RuntimeException(msg)
 
@@ -90,6 +92,51 @@ object TableLock {
             false
         }
       }
+    }
+  }
+
+  /** Keeps a holder's leases live: one daemon thread renews every held
+    * lease each staleMs / 3 (staleMs being the one the leases were
+    * acquired with) until [[releaseAll]], so a holder may run arbitrarily
+    * longer than staleMs without exposure to third-party stale takeover —
+    * its duration is often data-dependent (a big merge rewrite, recovery
+    * heals, compaction) and not something callers can size. A failed
+    * renew is logged and the beat goes on: a transient FS error must not
+    * stop renewal.
+    */
+  private[core] final class Heartbeat(owner: String, staleMs: Long) {
+    private val held = scala.collection.mutable.LinkedHashMap.empty[String, Lease]
+    private var beat: Thread = null
+
+    private def beating(): Unit =
+      try while (true) {
+        Thread.sleep(math.max(1L, staleMs / 3))
+        synchronized(held.values.toList).foreach { l =>
+          try l.renew()
+          catch {
+            case e: java.io.IOException =>
+              log.warn(s"lease heartbeat renew failed for ${l.path}; retrying", e)
+          }
+        }
+      } catch { case _: InterruptedException => () }
+
+    def holds(key: String): Boolean = synchronized(held.contains(key))
+
+    /** Keep `lease` live until [[releaseAll]]; the first one starts the beat. */
+    def hold(key: String, lease: Lease): Unit = synchronized {
+      held(key) = lease
+      if (beat == null) {
+        beat = new Thread(() => beating(), s"graft-lease-heartbeat:$owner")
+        beat.setDaemon(true)
+        beat.start()
+      }
+    }
+
+    /** Stop the beat, then release every held lease. */
+    def releaseAll(): Unit = {
+      val t = synchronized { val t = beat; beat = null; t }
+      if (t != null) { t.interrupt(); t.join(10000) }
+      synchronized { held.values.foreach(_.release()); held.clear() }
     }
   }
 
@@ -165,7 +212,7 @@ object TableLock {
       spark: SparkSession,
       tablePath: String,
       owner: String,
-      staleMs: Long = 15L * 60 * 1000,
+      staleMs: Long = DefaultStaleMs,
   ): Lease = {
     val parent = new Path(tablePath).getParent
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -292,15 +339,11 @@ object TableLock {
     }
   }
 
-  /** Run `f` under the table lease with an auto-renew heartbeat; always
-    * released (loudly, on failure) even when `f` throws. The heartbeat
-    * touches the lease every staleMs / 3, so the protected block may run
-    * arbitrarily longer than staleMs without exposure to third-party
-    * stale takeover — the block's duration is often data-dependent
-    * (recovery heals, compaction) and not something callers can size.
+  /** Run `f` under the table lease, kept live by a [[Heartbeat]]; always
+    * released (loudly, on failure) even when `f` throws.
     */
   def withLock[T](spark: SparkSession, tablePath: String, owner: String,
-      staleMs: Long = 15L * 60 * 1000, waitMs: Long = 0L)(f: => T): T = {
+      staleMs: Long = DefaultStaleMs, waitMs: Long = 0L)(f: => T): T = {
     // bounded wait: a holder that is merely BUSY (not crashed) releases
     // well before staleMs — polling acquire lets a streaming micro-batch
     // queue behind an in-flight OPTIMIZE instead of failing the stream
@@ -321,29 +364,9 @@ object TableLock {
       }
       got
     }
-    val lease = acquireWaiting()
-    val interval = math.max(1L, staleMs / 3)
-    val heartbeat = new Thread(() => {
-      var live = true
-      while (live) {
-        try {
-          Thread.sleep(interval)
-          lease.renew()
-        } catch {
-          case _: InterruptedException => live = false
-          case e: java.io.IOException =>
-            // keep beating: a transient FS error must not stop renewal
-            log.warn(s"lease heartbeat renew failed for ${lease.path}; retrying", e)
-        }
-      }
-    }, s"graft-lease-heartbeat:$owner")
-    heartbeat.setDaemon(true)
-    heartbeat.start()
+    val heartbeat = new Heartbeat(owner, staleMs)
+    heartbeat.hold(tablePath, acquireWaiting())
     try f
-    finally {
-      heartbeat.interrupt()
-      heartbeat.join(10000)
-      lease.release()
-    }
+    finally heartbeat.releaseAll()
   }
 }

@@ -41,6 +41,18 @@ object TableMaintenance {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
+  /** Run `f` under the table's lease — the lease TableWriter takes, so a
+    * maintenance pass can't start while a write (staged swap included)
+    * holds the table, and vice versa — after putting back whatever a
+    * crashed staged swap left aside. The owner is unique per invocation
+    * (see TableWriter.write), so concurrent passes exclude each other.
+    */
+  private def locked[T](spark: SparkSession, path: String, kind: String)(f: => T): T =
+    TableLock.withLock(spark, path, owner = s"$kind:${java.util.UUID.randomUUID()}") {
+      StagedSwap.repair(spark, path)
+      f
+    }
+
   private def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] =
     fs.listStatus(dir).toSeq
       .filter(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
@@ -67,14 +79,7 @@ object TableMaintenance {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    // same lease as TableWriter: a compaction can't start while a write
-    // (staged swap included) holds the table, and vice versa. Owner is
-    // unique per invocation (see TableWriter.write) so concurrent
-    // compactions also exclude each other.
-    TableLock.withLock(spark, path,
-      owner = s"compaction:${java.util.UUID.randomUUID()}") {
-      compactLocked(spark, path, targetBytes, minFileBytes)
-    }
+    locked(spark, path, "compaction")(compactLocked(spark, path, targetBytes, minFileBytes))
 
   private def compactLocked(spark: SparkSession, path: String,
       targetBytes: Long, minFileBytes: Long): (Int, Int) = {
@@ -154,8 +159,7 @@ object TableMaintenance {
   def compactPartitioned(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    TableLock.withLock(spark, path,
-      owner = s"compaction:${java.util.UUID.randomUUID()}") {
+    locked(spark, path, "compaction") {
       val (fs, dir) = fsOf(spark, path)
       val results = leafDirs(fs, dir)
         .map(l => compactLocked(spark, l.toString, targetBytes, minFileBytes))
@@ -197,15 +201,15 @@ object TableMaintenance {
     * between key ranges; this pass fixes DATA LAYOUT with a full
     * rewrite — run it when multi-dimensional scan pruning is worth a
     * table pass (BASELINE.md, "Z-order layout benefit": 71x row-group
-    * pruning on a 0.37% 2-D box). Commits through the same staged swap-on-success as the
-    * merge writer, under the same single-writer lease. Returns
+    * pruning on a 0.37% 2-D box). Commits through the same staged swap
+    * ([[StagedSwap]]) as the merge writer, under the same single-writer
+    * lease. Returns
     * (rows, filesAfter).
     */
   def optimizeZOrder(spark: SparkSession, path: String, cols: Seq[String],
       bits: Int = 16, numFiles: Int = 0,
       bloomCols: Seq[String] = Nil, bloomNdv: Long = 1000000L): (Long, Int) =
-    TableLock.withLock(spark, path,
-      owner = s"zorder:${java.util.UUID.randomUUID()}") {
+    locked(spark, path, "zorder") {
       val df = spark.read.parquet(path)
       val z = ZOrder.withZValue(df, cols, bits)
       val parted =
@@ -221,7 +225,7 @@ object TableMaintenance {
         w.option(s"parquet.bloom.filter.enabled#$c", "true")
           .option(s"parquet.bloom.filter.expected.ndv#$c", bloomNdv.toString)
       }
-      TableWriter.stagedOverwriteWith(spark, writer, path)
+      StagedSwap.overwrite(spark, writer, path)
       val (fs, dir) = fsOf(spark, path)
       (spark.read.parquet(path).count(), dataFiles(fs, dir).size)
     }

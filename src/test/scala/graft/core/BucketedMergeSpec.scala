@@ -93,14 +93,16 @@ class BucketedMergeSpec extends SparkTestBase {
     assert(out.where($"id" === 5L).head().getString(2) == "upd")
   }
 
-  test("crash between rename-aside and swap-in: next merge resurrects the __old bucket") {
-    val root = tmpDir("bucketed-crash")
+  /** Plants the crash window between a bucket's rename-aside and its
+    * swap-in (the bucket's only copy is under `__old`), then merges one new
+    * key: into another bucket, or into the crashed one.
+    */
+  private def crashThenMerge(label: String, intoCrashedBucket: Boolean): Unit = {
+    val root = tmpDir(label)
     val path = s"$root/t"
     val base = (1L to 400L).map(i => (i, 1L, s"s$i")).toDF("id", "v", "s")
     BucketedMerge.replace(spark, base, path, hints, numBuckets = 8)
 
-    // simulate the worst crash window: dest was renamed to __old but the
-    // staged dir never moved in — the __old copy is the bucket's ONLY copy
     val victim = Files.list(Paths.get(path)).toArray.map(_.toString)
       .filter(_.contains("_bucket=")).sorted.head
     val victimBucket = victim.split("_bucket=")(1).toInt
@@ -110,13 +112,24 @@ class BucketedMergeSpec extends SparkTestBase {
     val lostIds = spark.read.parquet(oldDir.toString).select("id").as[Long].collect().toSet
     assert(lostIds.nonEmpty)
 
-    // next merge (touching some other key) must first repair, not delete
-    BucketedMerge.merge(spark, Seq((10000L, 1L, "new")).toDF("id", "v", "s"), path, hints, 8)
+    val newId = (10000L to 11000L).toDF("id")
+      .select($"id", BucketedMerge.bucketExpr(Seq("id"), 8).as("b"))
+      .where(if (intoCrashedBucket) $"b" === victimBucket else $"b" =!= victimBucket)
+      .as[(Long, Int)].head()._1
+    BucketedMerge.merge(spark, Seq((newId, 1L, "new")).toDF("id", "v", "s"), path, hints, 8)
     val out = BucketedMerge.read(spark, path)
     assert(out.count() == 401)
     assert(lostIds.subsetOf(out.select("id").as[Long].collect().toSet),
       "rows whose only copy was under __old must survive the next merge")
     assert(!Files.exists(Paths.get(path + "__old")))
+  }
+
+  test("crash between rename-aside and swap-in: next merge resurrects the __old bucket") {
+    crashThenMerge("bucketed-crash", intoCrashedBucket = false)
+  }
+
+  test("crash between rename-aside and swap-in, next batch touching the crashed bucket: no row lost") {
+    crashThenMerge("bucketed-crash-touched", intoCrashedBucket = true)
   }
 
   test("schema-evolving merge: untouched buckets keep old files, read unifies with null backfill") {

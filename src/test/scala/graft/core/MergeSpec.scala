@@ -3,6 +3,7 @@ package graft.core
 import graft.SparkTestBase
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import java.nio.file.{Files, Paths}
 
 class MergeSpec extends SparkTestBase {
   import spark.implicits._
@@ -160,5 +161,33 @@ class MergeSpec extends SparkTestBase {
     assert(out.filter($"id" === 1L).count() == 1, "unchanged payload: load-id change alone must not version")
     assert(out.filter($"id" === 2L).count() == 2, "changed payload versions")
     assert(out.filter($"id" === 2L && $"_valid_to".isNull).head().getString(1) == "B")
+  }
+
+  test("crash between a merge swap's two renames: the next merge keeps every old row") {
+    val root = tmpDir("merge-crash")
+    TableWriter.write(spark, (1L to 100L).map(i => (i, 1L, s"s$i")).toDF("id", "v", "s"), root, hints)
+    // the window between rename-aside and swap-in: the table's only copy is aside
+    Files.move(Paths.get(s"$root/t"), Paths.get(s"$root/t__old"))
+
+    TableWriter.write(spark, Seq((1000L, 1L, "new")).toDF("id", "v", "s"), root, hints)
+    val out = spark.read.parquet(s"$root/t")
+    assert(out.count() == 101)
+    assert(out.where($"id" === 7L).head().getString(2) == "s7")
+    assert(!Files.exists(Paths.get(s"$root/t__old")))
+  }
+
+  test("a swap that crashed after its swap-in: the next write drops the superseded copy") {
+    val root = tmpDir("merge-crash-late")
+    TableWriter.write(spark, Seq((1L, 2L, "new")).toDF("id", "v", "s"), root,
+      hints.copy(disposition = Disposition.Replace))
+    // the superseded table left aside was bucketed: its partition dirs are
+    // not the unpartitioned table's missing pieces
+    BucketedMerge.replace(spark, (1L to 50L).map(i => (i, 1L, s"old$i")).toDF("id", "v", "s"),
+      s"$root/t__old", hints, numBuckets = 4)
+
+    TableWriter.write(spark, Seq((2L, 1L, "b")).toDF("id", "v", "s"), root,
+      hints.copy(disposition = Disposition.Append))
+    assert(spark.read.parquet(s"$root/t").count() == 2)
+    assert(!Files.exists(Paths.get(s"$root/t__old")))
   }
 }

@@ -101,5 +101,36 @@ class ChunkRecoveryTest(unittest.TestCase):
         self.assertIn("totals line: 3 queries, 0 failed", note)
 
 
+
+class StampFileTest(unittest.TestCase):
+    def test_committed_stamp_file_is_a_bench_map_with_provenance(self):
+        with open(stamp_ratios.STAMPS_PATH) as f:
+            d = json.load(f)
+        for key in ("command", "host", "tree"):
+            self.assertTrue(d.get(key), key)
+        stamps = stamp_ratios.load_stamps()
+        self.assertGreaterEqual(len(stamps), 160)
+        self.assertTrue(all(isinstance(v, float) and v > 0 for v in stamps.values()))
+
+    def test_report_reads_stamps_from_the_file_and_skips_failed_queries(self):
+        import contextlib
+        import io
+        with tempfile.TemporaryDirectory() as d:
+            stamps = os.path.join(d, "stamps.json")
+            with open(stamps, "w") as f:
+                json.dump({"queries": {"q_a": 1.0, "q_b": 0.5, "q_x": 2.0},
+                           "errors": {"q_x": "boom"}}, f)
+            bench = os.path.join(d, "BENCH_LOCAL.json")
+            with open(bench, "w") as f:
+                json.dump({"queries": {"q_a": 2.5, "q_b": 0.4, "q_x": 1.0}}, f)
+            out = io.StringIO()
+            with contextlib.redirect_stdout(out):
+                stamp_ratios.main([bench], stamps_path=stamps)
+        report = out.getvalue()
+        self.assertIn("stamped+runnable: 2;", report)
+        self.assertIn("over 2x: 1 ['q_a']", report)
+        self.assertNotIn("q_x", report)
+
+
 if __name__ == "__main__":
     unittest.main()
