@@ -625,9 +625,9 @@ object SparkEntry {
       val dest = java.nio.file.Files.createTempDirectory("graft_bm").toString
       val base = MergeEngine.dedupeBatch(
         ev.filter(col("event_id") < 5000), hints.primaryKey, hints.dedupSort)
-      BucketedMerge.replace(s, base, s"$dest/t", hints, 16)
-      BucketedMerge.merge(s, ev.filter(col("event_id") >= 5000), s"$dest/t", hints, 16)
-      BucketedMerge.read(s, s"$dest/t")
+      TableWriter.write(s, base, dest, hints)
+      TableWriter.write(s, ev.filter(col("event_id") >= 5000), dest, hints)
+      BucketedMerge.read(s, s"$dest/events_bucketed")
         .select(
           col("user_id"), col("event_type"), col("event_id"),
           tsMicros(col("ts")).as("ts_us"), col("value"),

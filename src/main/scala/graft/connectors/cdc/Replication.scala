@@ -1,7 +1,7 @@
 package graft.connectors.cdc
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.StateStore
+import graft.core.{ParquetFooters, StateStore, TableWriter}
 
 /** Live-slot wiring for pgoutput CDC: slot/publication management, the
   * peek-based polling loop, and the consume→merge→commit→advance round.
@@ -287,7 +287,11 @@ object Replication {
     * Ordering is the crash-safety contract: frames are only peeked, the
     * cursor commits before the slot advances, so a crash at any point
     * re-runs from consistent state (at-least-once into an idempotent
-    * lsn-deduped merge = exactly-once tables).
+    * lsn-deduped merge = exactly-once tables). Each table is rewritten
+    * through [[TableWriter.rewrite]]: under the table's lease (a held
+    * lease fails the round before the cursor moves) and after the staged
+    * swap's repair, so a round that crashed between the swap's renames
+    * re-applies its batch on top of the restored table.
     *
     * Returns None when the slot has nothing past the cursor.
     */
@@ -308,44 +312,21 @@ object Replication {
     val res = ChangeBatch.consume(source.frames(start, upto), targetBatchSize = Int.MaxValue)
     val commitLsn = res.lastCommitLsn.getOrElse(return None)
 
-    // a truncate with no later changes in the batch still clears the table
+    // a truncate with no later changes in the batch still drops the table
     res.truncatedRelations.filterNot(res.batch.byRelation.contains).foreach { table =>
-      val p = new org.apache.hadoop.fs.Path(s"$destRoot/$table")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(p, true)
+      TableWriter.rewrite(spark, s"$destRoot/$table")(_ => None)
     }
 
     val counts = res.batch.byRelation.map { case (table, changes) =>
       val rel = changes.head.relation
       val typed = ChangeBatch.toTypedDf(
         ChangeBatch.changeRows(spark, rel, changes), rel)
+      val truncated = res.truncatedRelations.contains(table)
       val dest = s"$destRoot/$table"
-      val basePath = new org.apache.hadoop.fs.Path(dest)
-      val oldPath = new org.apache.hadoop.fs.Path(dest + "__old")
-      val fs = basePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      // crash repair: a previous round may have died between moving the
-      // live table aside and moving its replacement in — the aside copy
-      // is then the only surviving one; restore it before merging
-      if (!fs.exists(basePath) && fs.exists(oldPath))
-        require(fs.rename(oldPath, basePath), s"could not restore $oldPath")
-      val base =
-        if (fs.exists(basePath) && !res.truncatedRelations.contains(table))
-          Some(spark.read.parquet(dest))
-        else None
-      val merged = ChangeBatch.applyChanges(base, typed, rel)
-      // stage-and-swap, crash-safe ordering: write tmp, move the live
-      // table ASIDE (never delete it before its replacement is in place),
-      // move tmp in, then drop the backup. A crash between the renames
-      // leaves either the old table or both copies on disk — never
-      // neither — and each rename's result is checked, not ignored.
-      val tmp = new org.apache.hadoop.fs.Path(dest + "__new")
-      merged.write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(oldPath, true) // stale backup (base exists — repair above)
-      if (fs.exists(basePath))
-        require(fs.rename(basePath, oldPath), s"could not move $basePath aside")
-      require(fs.rename(tmp, basePath), s"could not move $tmp into place")
-      fs.delete(oldPath, true)
-      table -> spark.read.parquet(dest).count()
+      TableWriter.rewrite(spark, dest) { base =>
+        Some(ChangeBatch.applyChanges(if (truncated) None else base, typed, rel))
+      }
+      table -> ParquetFooters.rowCount(spark, dest)
     }
 
     state.put(stateKey, commitLsn)

@@ -1,9 +1,13 @@
 package graft.core
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Bucketed merge writer — the 100 TB path for `merge` dispositions.
+/** Bucketed merge writer — the 100 TB path for `merge` dispositions,
+  * reached only through [[TableWriter.write]] (a `merge` with a key and a
+  * `bucketCount` hint), which holds the table lease and has run
+  * [[StagedSwap.repair]] before either write method starts.
   *
   * `TableWriter`'s whole-table swap rewrites the WHOLE table per merge; fine
   * for small dimension tables, fatal at scale (a 1 TB table with a 100 MB
@@ -31,38 +35,28 @@ object BucketedMerge {
   def bucketExpr(keys: Seq[String], numBuckets: Int) =
     pmod(xxhash64(keys.map(c => col(c).cast("string")): _*), lit(numBuckets)).cast("int")
 
-  /** Bucket key choice matters more than bucket count: hash the columns
-    * update batches CLUSTER by (the entity id a CDC stream keys on), not
-    * the full pk — a batch of N distinct full-pk rows touches ~min(N, B)
-    * buckets, while the same batch clustered on K entities bucketed by
-    * entity id touches ≤ K. Must be a subset of (or functionally
-    * determined by) the merge key so a key's rows never migrate buckets.
-    */
-  private def bucketKeysOf(hints: TableHints, bucketKeys: Seq[String]): Seq[String] =
-    if (bucketKeys.nonEmpty) bucketKeys else hints.keyColumns
-
   /** Initialize or fully replace a bucketed table. */
-  def replace(spark: SparkSession, df: DataFrame, path: String, hints: TableHints, numBuckets: Int,
-      bucketKeys: Seq[String] = Nil): Unit = {
-    val keys = bucketKeysOf(hints, bucketKeys)
-    require(keys.nonEmpty, "bucketed layout requires a key")
-    df.withColumn(BucketCol, bucketExpr(keys, numBuckets))
+  private[core] def replace(spark: SparkSession, df: DataFrame, path: String, hints: TableHints,
+      numBuckets: Int): Unit = {
+    require(hints.keyColumns.nonEmpty, "bucketed layout requires a key")
+    df.withColumn(BucketCol, bucketExpr(hints.keyColumns, numBuckets))
       .repartition(col(BucketCol))
       .write.mode(SaveMode.Overwrite)
       .partitionBy(BucketCol)
       .parquet(path)
   }
 
-  /** Merge an update batch, rewriting only the touched buckets. */
-  def merge(spark: SparkSession, updates: DataFrame, path: String, hints: TableHints, numBuckets: Int,
-      bucketKeys: Seq[String] = Nil): Unit = {
-    val keys = bucketKeysOf(hints, bucketKeys)
-    require(hints.keyColumns.nonEmpty, "bucketed merge requires a key")
-    // before the base read: a bucket a crashed swap left aside is part of
-    // the base this batch merges into
-    StagedSwap.repair(spark, path)
-    val exists = TableWriter.readIfExists(spark, path).isDefined
-    if (!exists) { replace(spark, updates, path, hints, numBuckets, bucketKeys); return }
+  /** Merge an update batch, rewriting only the touched buckets. Runs inside
+    * [[TableWriter]]'s leased section, whose repair has already put back a
+    * bucket a crashed swap left aside, so the base read below sees it.
+    */
+  private[core] def merge(spark: SparkSession, updates: DataFrame, path: String, hints: TableHints,
+      numBuckets: Int): Unit = {
+    val keys = hints.keyColumns
+    require(keys.nonEmpty, "bucketed merge requires a key")
+    val p = new Path(path)
+    if (!p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
+      return replace(spark, updates, path, hints, numBuckets)
 
     val bucketed = updates.withColumn(BucketCol, bucketExpr(keys, numBuckets))
     // distinct buckets in this batch: tiny driver-side list (≤ numBuckets)

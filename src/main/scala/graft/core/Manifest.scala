@@ -76,15 +76,6 @@ final class TableManifest(spark: SparkSession, root: String) {
     else None
   }
 
-  /** Row count of one generation dir from parquet FOOTER metadata —
-    * driver-side metadata reads, ZERO Spark jobs. This is what keeps
-    * [[Publish.land]] O(1) jobs on an append-heavy table: the old
-    * per-generation `spark.read.parquet(...).count()` cost G jobs per
-    * land, O(G²) per run across appends.
-    */
-  private def footerRowCount(dir: String): Long =
-    ParquetFooters.rowCount(spark, dir)
-
   /** The committed table, resolved THROUGH the manifest. mergeSchema:
     * append deltas may carry evolved (added-column) schemas.
     */
@@ -175,7 +166,7 @@ final class TableManifest(spark: SparkSession, root: String) {
     }
 
     private def genCount(name: String, gen: String): Long =
-      countCache.getOrElseUpdate(s"$name/$gen", footerRowCount(s"$root/$name/$gen"))
+      countCache.getOrElseUpdate(s"$name/$gen", ParquetFooters.rowCount(spark, s"$root/$name/$gen"))
 
     /** Per-generation counts of the table's CURRENT content (pending if
       * landed this publish, else committed counts, else one footer sweep).
@@ -280,11 +271,12 @@ object TableManifest {
 
 /** Row counts from parquet FOOTER metadata — driver-side metadata reads,
   * ZERO Spark jobs. Shared by the manifest land path (its O(1)-jobs
-  * guarantee) and the pipeline's non-manifest LoadResult counting, which
-  * previously paid a full-table scan job per table per run just to
-  * report a row count. File count per table dir is bounded by the
-  * write's own partitioning, so the listing stays a cheap driver read
-  * at scale — the same defense as [[TableManifest.Publish.land]].
+  * guarantee: a per-generation scan cost G jobs per land, O(G²) per run
+  * across appends), the pipeline's non-manifest LoadResult counting and
+  * the CDC poll round's per-table counts, which each paid a full-table
+  * scan job per table just to report a row count. File count per table
+  * dir is bounded by the write's own partitioning, so the listing stays
+  * a cheap driver read at scale.
   */
 private[graft] object ParquetFooters {
   def rowCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {

@@ -221,43 +221,65 @@ object Landing {
   final case class Rewrite(table: DataFrame) extends Landing
 }
 
-/** Disposition engine over plain parquet table dirs. A delta is appended
-  * in place; a rewrite commits through [[StagedSwap]], so a crash leaves
-  * the old table or the new one, and the next write puts back a table a
-  * crash left aside before it reads. Bucketed merge tables rewrite only
-  * their touched buckets ([[BucketedMerge]]).
+/** The only way graft rewrites a parquet table dir. Every call runs in
+  * one [[leased]] section: the table's [[TableLock]] lease under a
+  * per-invocation owner, then [[StagedSwap.repair]], then the body. A
+  * delta is appended in place; a rewrite commits through [[StagedSwap]],
+  * so a crash leaves the old table or the new one, and the next leased
+  * section puts back a table a crash left aside before it reads. Bucketed
+  * merge tables rewrite only their touched buckets ([[BucketedMerge]]).
+  *
+  * Callers: [[write]] — `Pipeline`'s per-table loads, `StreamingMergeSink`
+  * and the contract queries; [[rewrite]] — CDC replication
+  * (`Replication.pollOnce`); [[leased]] — every [[TableMaintenance]] pass.
   */
 object TableWriter {
 
   def write(spark: SparkSession, updates: DataFrame, tableRoot: String, hints: TableHints): Unit = {
     val name = Naming.normalize(hints.tableName)
     val path = s"$tableRoot/$name"
-    // cross-writer exclusion: a second pipeline (or a concurrent
-    // compaction) on the same table fails fast instead of interleaving
-    // with the staged swap — see TableLock. The owner is unique PER
-    // INVOCATION: same-owner reacquire must never let two batch writers
-    // with the same table name steal each other's live lease (a crashed
-    // batch writer's lease is reclaimed by the stale-age path instead —
-    // only stable singleton identities like a streaming checkpoint use
-    // the reacquire).
-    TableLock.withLock(spark, path,
-      owner = s"writer:$name:${java.util.UUID.randomUUID()}") {
-      writeLocked(spark, updates, path, hints)
+    leased(spark, path, s"writer:$name") {
+      hints.bucketCount match {
+        case Some(n) if hints.disposition == Disposition.Merge && hints.keyColumns.nonEmpty =>
+          BucketedMerge.merge(spark, updates, path, hints, n)
+        case _ =>
+          MergeEngine.landing(readIfExists(spark, path), updates, hints) match {
+            case Landing.Delta(rows)    => rows.write.mode(SaveMode.Append).parquet(path)
+            case Landing.Rewrite(table) => StagedSwap.overwrite(spark, table.write, path)
+          }
+      }
     }
   }
 
-  private def writeLocked(spark: SparkSession, updates: DataFrame, path: String, hints: TableHints): Unit = {
-    StagedSwap.repair(spark, path)
-    hints.bucketCount match {
-      case Some(n) if hints.disposition == Disposition.Merge && hints.keyColumns.nonEmpty =>
-        BucketedMerge.merge(spark, updates, path, hints, n)
-      case _ =>
-        MergeEngine.landing(readIfExists(spark, path), updates, hints) match {
-          case Landing.Delta(rows)    => rows.write.mode(SaveMode.Append).parquet(path)
-          case Landing.Rewrite(table) => StagedSwap.overwrite(spark, table.write, path)
-        }
+  /** Rewrite the table at `path` to `plan` of its current content (None =
+    * no table yet); a plan of None drops the table. The plan reads the
+    * current content under the lease, so it may depend on it (CDC TOAST
+    * resolution reads the base's unchanged columns); the content is
+    * by-name, so a plan that ignores it reads nothing.
+    */
+  def rewrite(spark: SparkSession, path: String)(plan: (=> Option[DataFrame]) => Option[DataFrame]): Unit =
+    leased(spark, path, "rewrite") {
+      plan(readIfExists(spark, path)) match {
+        case Some(table) => StagedSwap.overwrite(spark, table.write, path)
+        case None =>
+          val p = new Path(path)
+          p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
+      }
     }
-  }
+
+  /** Run `body` as the table's single writer: take the table lease, then
+    * put back whatever a crashed staged swap left aside. The owner is
+    * unique PER INVOCATION: same-owner reacquire must never let two batch
+    * writers (or maintenance passes) on the same table steal each other's
+    * live lease — a crashed one's lease is reclaimed by the stale-age path
+    * instead; only stable singleton identities like a streaming checkpoint
+    * use the reacquire.
+    */
+  private[core] def leased[T](spark: SparkSession, path: String, kind: String)(body: => T): T =
+    TableLock.withLock(spark, path, owner = s"$kind:${java.util.UUID.randomUUID()}") {
+      StagedSwap.repair(spark, path)
+      body
+    }
 
   def readIfExists(spark: SparkSession, path: String): Option[DataFrame] = {
     val p = new Path(path)

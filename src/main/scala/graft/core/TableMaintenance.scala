@@ -30,9 +30,10 @@ import java.nio.charset.StandardCharsets
   * nothing happened — drop the marker. A reader between steps 2 and 3
   * could see replaced rows twice; the single-writer-per-table model makes
   * maintenance part of the writer's duty cycle, and that model is
-  * ENFORCED by `TableLock`: compaction and TableWriter dispositions share
-  * the same lease, so two pipelines cannot interleave a staged swap with
-  * a compaction rewrite.
+  * ENFORCED by `TableLock`: every pass runs in [[TableWriter.leased]], the
+  * section TableWriter's own writes run in (the table lease, then
+  * [[StagedSwap.repair]]), so two pipelines cannot interleave a staged
+  * swap with a compaction rewrite.
   */
 object TableMaintenance {
 
@@ -40,18 +41,6 @@ object TableMaintenance {
     val p = new Path(path)
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
-
-  /** Run `f` under the table's lease — the lease TableWriter takes, so a
-    * maintenance pass can't start while a write (staged swap included)
-    * holds the table, and vice versa — after putting back whatever a
-    * crashed staged swap left aside. The owner is unique per invocation
-    * (see TableWriter.write), so concurrent passes exclude each other.
-    */
-  private def locked[T](spark: SparkSession, path: String, kind: String)(f: => T): T =
-    TableLock.withLock(spark, path, owner = s"$kind:${java.util.UUID.randomUUID()}") {
-      StagedSwap.repair(spark, path)
-      f
-    }
 
   private def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] =
     fs.listStatus(dir).toSeq
@@ -79,7 +68,7 @@ object TableMaintenance {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    locked(spark, path, "compaction")(compactLocked(spark, path, targetBytes, minFileBytes))
+    TableWriter.leased(spark, path, "compaction")(compactLocked(spark, path, targetBytes, minFileBytes))
 
   private def compactLocked(spark: SparkSession, path: String,
       targetBytes: Long, minFileBytes: Long): (Int, Int) = {
@@ -159,7 +148,7 @@ object TableMaintenance {
   def compactPartitioned(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    locked(spark, path, "compaction") {
+    TableWriter.leased(spark, path, "compaction") {
       val (fs, dir) = fsOf(spark, path)
       val results = leafDirs(fs, dir)
         .map(l => compactLocked(spark, l.toString, targetBytes, minFileBytes))
@@ -209,7 +198,7 @@ object TableMaintenance {
   def optimizeZOrder(spark: SparkSession, path: String, cols: Seq[String],
       bits: Int = 16, numFiles: Int = 0,
       bloomCols: Seq[String] = Nil, bloomNdv: Long = 1000000L): (Long, Int) =
-    locked(spark, path, "zorder") {
+    TableWriter.leased(spark, path, "zorder") {
       val df = spark.read.parquet(path)
       val z = ZOrder.withZValue(df, cols, bits)
       val parted =

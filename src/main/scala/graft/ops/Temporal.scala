@@ -26,10 +26,10 @@ object Temporal {
     val tsMs = (c: Column) => unix_millis(c.cast(org.apache.spark.sql.types.TimestampType))
     val w = Window.partitionBy(col(keyCol)).orderBy(col(tsCol))
     val gap = tsMs(col(tsCol)) - tsMs(lag(col(tsCol), 1).over(w))
-    df.withColumn("__new_session", when(gap.isNull || gap > gapMs, 1L).otherwise(0L))
+    df.withColumn("__opens_session", when(gap.isNull || gap > gapMs, 1L).otherwise(0L))
       .withColumn("session_id",
-        sum(col("__new_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
-      .drop("__new_session")
+        sum(col("__opens_session")).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)) - 1)
+      .drop("__opens_session")
   }
 
   /** As-of join: for each left row, the single latest right row with

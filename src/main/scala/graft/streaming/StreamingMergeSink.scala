@@ -8,9 +8,11 @@ import graft.core.{TableHints, TableWriter}
   * micro-batch via foreachBatch — the continuous form of the reference's
   * bounded pull-then-merge loop (each micro-batch is exactly one
   * reference-style batch: dedup_sort within the batch, upsert against the
-  * table, hard deletes honored). With a bucketCount hint each micro-batch
-  * rewrites only its touched buckets, which is what makes a long-running
-  * stream against a 100 TB table sustainable.
+  * table, hard deletes honored). Each micro-batch is one
+  * [[graft.core.TableWriter.write]], so it holds the table lease and runs
+  * the staged swap's crash repair before it reads. With a bucketCount hint
+  * each micro-batch rewrites only its touched buckets, which is what makes
+  * a long-running stream against a 100 TB table sustainable.
   */
 object StreamingMergeSink {
 

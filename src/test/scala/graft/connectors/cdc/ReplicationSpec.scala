@@ -1,7 +1,8 @@
 package graft.connectors.cdc
 
 import graft.SparkTestBase
-import graft.core.StateStore
+import graft.core.{StateStore, TableLock}
+import java.nio.file.{Files, Paths}
 import Replication._
 import PgOutput._
 
@@ -103,6 +104,45 @@ class ReplicationSpec extends SparkTestBase {
     source2.advance(103)
     assert(pollOnce(spark, source2, state, dest).isDefined)
     assert(!new java.io.File(s"$dest/accounts").exists())
+  }
+
+  test("a table leased by another owner fails the poll; cursor and slot stay put") {
+    val source = new CannedFrameSource(Seq(Encode.relation(rel)), txn(100, ins(101, 1, "a")))
+    val state = stateIn("repl-lease")
+    val dest = tmpDir("repl-lease-dest")
+    val other = TableLock.acquire(spark, s"$dest/accounts", "another-writer")
+    try {
+      intercept[TableLock.LockHeldException](pollOnce(spark, source, state, dest))
+      assert(state.getLong("cdc.last_commit_lsn").isEmpty)
+      assert(source.advanceCalls == 0)
+      assert(!Files.exists(Paths.get(s"$dest/accounts")))
+    } finally other.release()
+
+    // released: the same round lands
+    val r = pollOnce(spark, source, state, dest).get
+    assert(r.tables == Map("accounts" -> 1L) && r.lastCommitLsn == 103L)
+    assert(source.advanceCalls == 1)
+  }
+
+  test("a poll that crashed between its swap's renames: the next poll keeps every row") {
+    val waves = txn(100, ins(101, 1, "a"), ins(102, 2, "b"))
+    val source = new CannedFrameSource(Seq(Encode.relation(rel)), waves)
+    val state = stateIn("repl-swap-crash")
+    val dest = tmpDir("repl-swap-crash-dest")
+    assert(pollOnce(spark, source, state, dest).get.lastCommitLsn == 104L)
+
+    // the next round moved the live table aside and died before moving its
+    // replacement in: the only copy is accounts__old, the cursor is unmoved
+    Files.move(Paths.get(s"$dest/accounts"), Paths.get(s"$dest/accounts__old"))
+    val source2 = new CannedFrameSource(Seq(Encode.relation(rel)),
+      waves ++ txn(200, ins(201, 3, "c")))
+    source2.advance(104L)
+    val r = pollOnce(spark, source2, state, dest).get
+    assert(r.tables == Map("accounts" -> 3L) && r.lastCommitLsn == 203L)
+    val rows = spark.read.parquet(s"$dest/accounts")
+      .select("id", "name").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    assert(rows == Map(1L -> "a", 2L -> "b", 3L -> "c"))
+    assert(!Files.exists(Paths.get(s"$dest/accounts__old")))
   }
 
   test("admin DDL is idempotent: duplicate and missing objects are swallowed") {
