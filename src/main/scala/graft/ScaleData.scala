@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * the source dir carries (ns-long or µs-NTZ — `EventTime.readTable`
   * normalizes at read time); embedding vectors
   * repeat unchanged (ANN ties across copies break deterministically by
-  * id on both engines).
+  * id on both engines). Orders tile with shifted o_orderkey, for the
+  * manifest-publish contract's scan.
   */
 object ScaleData {
 
@@ -117,6 +118,7 @@ object ScaleData {
     tile("documents", "doc_id", withText = true)
     tile("embeddings", "vec_id", withText = false)
     tile("events", "event_id", withText = false)
+    tile("orders", "o_orderkey", withText = false)
     spark.stop()
   }
 }

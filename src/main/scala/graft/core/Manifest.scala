@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** All-or-nothing multi-table commit — closes the one crash window the
   * per-table staged swap leaves open: a run loading N tables swaps each
@@ -19,6 +20,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * commit leaves only orphan dirs no reader ever resolves; after it,
   * every table is new. Readers go through [[TableManifest.read]] — the
   * manifest, not a directory glob, is the table.
+  *
+  * Per table the manifest holds three things, flipped together by that
+  * one write: the committed generation list, each generation's row
+  * count and the table's schema (every field nullable, as a parquet read
+  * returns it). Reads and lands resolve a table from them alone — no
+  * footer merge, no count job.
   *
   * Generation lists let append stay O(batch): an append lands a DELTA
   * dir and the new list is `old :+ delta`; merge/replace/scd2 land a
@@ -66,24 +73,38 @@ final class TableManifest(spark: SparkSession, root: String) {
   /** Committed generation dirs of one table (empty = table unknown). */
   def gens(name: String): Seq[String] = stateLock.synchronized(state.getList(Prefix + name))
 
-  /** Committed per-generation row counts, aligned with [[gens]]; None =
-    * unknown (a pre-counts manifest) — callers fall back to footer reads.
+  /** One table's committed state, all from ONE manifest snapshot so a
+    * reader never pairs one commit's list with another's schema. A
+    * manifest written before counts or schemas were recorded derives
+    * what it lacks from the committed dirs — footer counts, a
+    * mergeSchema read — and the table's next land records both.
     */
-  private def committedCounts(name: String): Option[Seq[Long]] = {
-    val c = stateLock.synchronized(state.getList(CountsPrefix + name))
-    if (c.nonEmpty && c.size == gens(name).size && c.forall(s => s.nonEmpty && s.forall(_.isDigit)))
-      Some(c.map(_.toLong))
-    else None
+  private def snapshot(name: String): Option[TableState] = {
+    val (gs, cs, schema) = stateLock.synchronized(
+      (state.getList(Prefix + name), state.getList(CountsPrefix + name), state.getString(SchemaPrefix + name)))
+    if (gs.isEmpty) None
+    else {
+      val dirs = gs.map(g => s"$root/$name/$g")
+      val counts =
+        if (cs.size == gs.size && cs.forall(c => c.nonEmpty && c.forall(_.isDigit))) cs.map(_.toLong)
+        else dirs.map(ParquetFooters.rowCount(spark, _))
+      Some(TableState(gs, counts, schema.map(DataType.fromJson(_).asInstanceOf[StructType])
+        .getOrElse(spark.read.option("mergeSchema", "true").parquet(dirs: _*).schema)))
+    }
   }
 
-  /** The committed table, resolved THROUGH the manifest. mergeSchema:
-    * append deltas may carry evolved (added-column) schemas.
+  /** A table state's rows: its generation dirs read with its recorded
+    * schema. No schema discovery, so no Spark job before the caller's
+    * action; an older generation lacking a column an append added reads
+    * it as null.
     */
-  def read(name: String): Option[DataFrame] = {
-    val gs = gens(name)
-    if (gs.isEmpty) None
-    else Some(spark.read.option("mergeSchema", "true").parquet(gs.map(g => s"$root/$name/$g"): _*))
-  }
+  private def load(name: String, t: TableState): DataFrame =
+    spark.read.schema(t.schema).parquet(t.gens.map(g => s"$root/$name/$g"): _*)
+
+  /** The committed table, resolved THROUGH the manifest: its committed
+    * generations read with the schema recorded at their commit.
+    */
+  def read(name: String): Option[DataFrame] = snapshot(name).map(load(name, _))
 
   /** One all-or-nothing publish cycle over any number of tables. Callers
     * [[Publish.land]] each table's updates (any disposition) as the run
@@ -106,13 +127,8 @@ final class TableManifest(spark: SparkSession, root: String) {
     * so one writer errors instead of waiting.
     */
   final class Publish private[TableManifest] (owner: String) {
-    // table -> the generation list to commit (replaces the committed one)
-    private val pending = scala.collection.mutable.LinkedHashMap.empty[String, Seq[String]]
-    // table -> per-generation row counts aligned with pending(table)
-    private val pendingCounts = scala.collection.mutable.LinkedHashMap.empty[String, Seq[Long]]
-    // "<table>/<gen>" -> rows, memoized footer reads (for committed
-    // generations of pre-counts manifests)
-    private val countCache = scala.collection.mutable.Map.empty[String, Long]
+    // table -> the state to commit (replaces the committed one)
+    private val pending = scala.collection.mutable.LinkedHashMap.empty[String, TableState]
     private var committed = false
     // table -> its lease, first land through commit/abort, kept live: a
     // publish is often data-dependent-long (a big merge rewrite) and must
@@ -137,7 +153,7 @@ final class TableManifest(spark: SparkSession, root: String) {
       val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(dir)) return
-      val keep = (gens(table) ++ pending.getOrElse(table, Nil)).toSet
+      val keep = (gens(table) ++ pending.get(table).fold(Seq.empty[String])(_.gens)).toSet
       fs.listStatus(dir).filter(_.isDirectory).foreach { g =>
         val gen = g.getPath.getName
         if (gen.matches("^g[0-9]+$") && !keep.contains(gen)) fs.delete(g.getPath, true)
@@ -150,39 +166,25 @@ final class TableManifest(spark: SparkSession, root: String) {
       */
     def abort(): Unit = synchronized { if (!committed) leases.releaseAll() }
 
-    private def currentDirs(name: String): Seq[String] =
-      pending.getOrElse(name, gens(name))
-
-    private def readCurrent(name: String): Option[DataFrame] = {
-      val dirs = currentDirs(name)
-      if (dirs.isEmpty) None
-      else Some(spark.read.option("mergeSchema", "true").parquet(dirs.map(g => s"$root/$name/$g"): _*))
-    }
+    /** The table's CURRENT state: landed in this publish, else committed. */
+    private def current(name: String): Option[TableState] =
+      pending.get(name).orElse(snapshot(name))
 
     private def nextGen(name: String): String = {
-      val nums = (gens(name) ++ pending.getOrElse(name, Nil))
+      val nums = (gens(name) ++ pending.get(name).fold(Seq.empty[String])(_.gens))
         .map(g => g.stripPrefix("g").toLong)
       s"g${if (nums.isEmpty) 1L else nums.max + 1L}"
     }
-
-    private def genCount(name: String, gen: String): Long =
-      countCache.getOrElseUpdate(s"$name/$gen", ParquetFooters.rowCount(spark, s"$root/$name/$gen"))
-
-    /** Per-generation counts of the table's CURRENT content (pending if
-      * landed this publish, else committed counts, else one footer sweep).
-      */
-    private def currentCounts(name: String): Seq[Long] =
-      pendingCounts.getOrElse(name,
-        committedCounts(name).getOrElse(gens(name).map(genCount(name, _))))
 
     /** Land one table's updates under its disposition
       * ([[MergeEngine.landing]]): a delta lands as a new generation that
       * JOINS the table's list (O(batch)), a rewrite as a generation that
       * replaces it. Nothing becomes reader-visible until [[commit]].
       * Returns the table's row count as of this landing (committed +
-      * pending content), derived from parquet footer metadata — O(1)
-      * Spark jobs per land regardless of how many generations the table
-      * has accumulated.
+      * pending content). The current content is read with its recorded
+      * schema and the new generation's count comes from parquet footer
+      * metadata, so an append runs one Spark job (its write) however
+      * many generations the table has accumulated.
       */
     def land(updates: DataFrame, hints: TableHints): Long = synchronized {
       require(!committed, "publish already committed")
@@ -201,25 +203,28 @@ final class TableManifest(spark: SparkSession, root: String) {
       // overwrite: a crashed publish's orphan with the same number was
       // swept at cycle start, but a racing retry inside one JVM could
       // still leave one — committed generations are never re-targeted
-      MergeEngine.landing(readCurrent(name), updates, hints) match {
+      val base = current(name)
+      // a delta's rows are aligned to the append's merged target, so its
+      // schema is the whole table's; a rewrite's is the new table's
+      val landed = MergeEngine.landing(base.map(load(name, _)), updates, hints) match {
         case Landing.Delta(rows) =>
-          val baseCounts = currentCounts(name)
           rows.write.mode("overwrite").parquet(genPath)
-          pending(name) = currentDirs(name) :+ gen
-          pendingCounts(name) = baseCounts :+ genCount(name, gen)
+          TableState(base.fold(Seq.empty[String])(_.gens) :+ gen,
+            base.fold(Seq.empty[Long])(_.counts) :+ ParquetFooters.rowCount(spark, genPath),
+            nullable(rows.schema))
         case Landing.Rewrite(table) =>
           table.write.mode("overwrite").parquet(genPath)
-          pending(name) = Seq(gen)
-          pendingCounts(name) = Seq(genCount(name, gen))
+          TableState(Seq(gen), Seq(ParquetFooters.rowCount(spark, genPath)), nullable(table.schema))
       }
-      pendingCounts(name).sum
+      pending(name) = landed
+      landed.counts.sum
     }
 
     /** Flip every landed table's committed pointer in ONE atomic manifest
       * write. Before this call, readers see the previous state of EVERY
       * table; after it, the new state of every table. Per-generation row
-      * counts commit alongside the lists, so future publishes never
-      * re-derive them.
+      * counts and the table schema commit alongside the lists, so later
+      * reads and publishes never re-derive them.
       *
       * The flip runs inside the root's `_manifest` critical section:
       * re-read the on-disk manifest (a concurrent DISJOINT publish may
@@ -237,9 +242,10 @@ final class TableManifest(spark: SparkSession, root: String) {
         s"manifest-commit:$owner", waitMs = 60000L) {
         stateLock.synchronized {
           state.rollback()
-          pending.foreach { case (name, list) => state.putList(Prefix + name, list) }
-          pendingCounts.foreach { case (name, cs) =>
-            state.putList(CountsPrefix + name, cs.map(_.toString))
+          pending.foreach { case (name, t) =>
+            state.putList(Prefix + name, t.gens)
+            state.putList(CountsPrefix + name, t.counts.map(_.toString))
+            state.put(SchemaPrefix + name, t.schema.json)
           }
           state.commit()
         }
@@ -267,6 +273,25 @@ final class TableManifest(spark: SparkSession, root: String) {
 object TableManifest {
   private val Prefix = "tables."
   private val CountsPrefix = "rowcounts."
+  private val SchemaPrefix = "schemas."
+
+  /** One table as the manifest records it: generation dirs, their row
+    * counts (aligned) and the schema every generation is read with.
+    */
+  private final case class TableState(gens: Seq[String], counts: Seq[Long], schema: StructType)
+
+  /** `s` with every field, element and value nullable — the schema a
+    * parquet read returns for data written as `s`.
+    */
+  private def nullable(s: StructType): StructType = {
+    def of(dt: DataType): DataType = dt match {
+      case st: StructType => nullable(st)
+      case a: ArrayType   => ArrayType(of(a.elementType), containsNull = true)
+      case m: MapType     => MapType(of(m.keyType), of(m.valueType), valueContainsNull = true)
+      case other          => other
+    }
+    StructType(s.fields.map(f => f.copy(dataType = of(f.dataType), nullable = true)))
+  }
 }
 
 /** Row counts from parquet FOOTER metadata — driver-side metadata reads,

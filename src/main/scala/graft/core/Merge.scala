@@ -82,8 +82,10 @@ object MergeEngine {
     * as a delta unless it WIDENS an existing column's type (int→double,
     * …): parquet footer merging cannot reconcile that, so the table is
     * migrated once to the widened schema — dlt's ALTER COLUMN analog.
-    * Added-columns-only evolution stays a delta (mergeSchema reads),
-    * O(batch).
+    * Added-columns-only evolution stays a delta, O(batch): the delta is
+    * aligned to the merged schema, and older rows read the added columns
+    * as null (a manifest table reads with the schema its land recorded,
+    * a plain table dir with mergeSchema).
     */
   def landing(existing: => Option[DataFrame], updates: DataFrame, hints: TableHints): Landing =
     hints.disposition match {

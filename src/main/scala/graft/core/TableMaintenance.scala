@@ -192,8 +192,8 @@ object TableMaintenance {
     * table pass (BASELINE.md, "Z-order layout benefit": 71x row-group
     * pruning on a 0.37% 2-D box). Commits through the same staged swap
     * ([[StagedSwap]]) as the merge writer, under the same single-writer
-    * lease. Returns
-    * (rows, filesAfter).
+    * lease. Returns (rows, filesAfter); rows come from the rewritten
+    * files' parquet footers, not a scan.
     */
   def optimizeZOrder(spark: SparkSession, path: String, cols: Seq[String],
       bits: Int = 16, numFiles: Int = 0,
@@ -216,6 +216,6 @@ object TableMaintenance {
       }
       StagedSwap.overwrite(spark, writer, path)
       val (fs, dir) = fsOf(spark, path)
-      (spark.read.parquet(path).count(), dataFiles(fs, dir).size)
+      (ParquetFooters.rowCount(spark, path), dataFiles(fs, dir).size)
     }
 }

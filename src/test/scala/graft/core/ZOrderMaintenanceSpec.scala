@@ -21,6 +21,7 @@ class ZOrderMaintenanceSpec extends SparkTestBase {
     val (rows, files) = TableMaintenance.optimizeZOrder(spark, path, Seq("a", "b"),
       bits = 12, numFiles = 16)
     assert(rows == 20000L && files == 16)
+    assert(rows == spark.read.parquet(path).count(), "the footer row count is the table's count")
     val after = spark.read.parquet(path).collect().map(_.toString).sorted.toSeq
     assert(after == before) // content untouched, z column not leaked
     assert(!spark.read.parquet(path).columns.contains("z_value"))
@@ -44,8 +45,9 @@ class ZOrderMaintenanceSpec extends SparkTestBase {
       (col("id") % 100).as("a"), (col("id") % 97).as("b"),
       (xxhash64(col("id")).bitwiseAND(Long.MaxValue) % 100000000L).as("k"))
     df.repartition(8).write.parquet(path)
-    TableMaintenance.optimizeZOrder(spark, path, Seq("a", "b"),
+    val (rows, _) = TableMaintenance.optimizeZOrder(spark, path, Seq("a", "b"),
       bits = 8, numFiles = 8, bloomCols = Seq("k"), bloomNdv = 100000L)
+    assert(rows == 100000L && rows == spark.read.parquet(path).count())
     val probe = spark.read.parquet(path).filter(col("k") === 31337L)
     probe.collect()
     val scanned = probe.queryExecution.executedPlan.collectLeaves()

@@ -7,10 +7,9 @@
 # size, where the sf0.01 driver gate leaves them cold. Record the result as a
 # round row in BASELINE.md.
 #
-# q_manifest_commit is NOT in the gate family: ScaleData tiles only the
-# documents/embeddings/events tables and the contract reads orders; its
-# scale path is MergeEngine/stagedFanOut, already gated via the merge and
-# routing families at sf0.01.
+# q_manifest_commit is NOT in this gate family: its o_orderkey filter keeps
+# the loaded slice at the sf0.1 size, so one scale step covers it — the sf10
+# gate (tools/scale_gate_sf10.sh) runs it over the tiled orders table.
 #
 # q_dedup_minhash_fast is deliberately NOT in the gate family: at sf1 its
 # degenerate-bucket cap engages and the operator emits a bounded subset of the

@@ -20,8 +20,11 @@
 # whole-table merges, staged swaps, appends with type widening), which read
 # the tiled events table. The lineitem-based write-path contracts (e.g.
 # q_full_load) stay out: ScaleData does not tile lineitem.
-# q_manifest_commit stays out (orders is not a tiled table — same note as
-# scale_gate.sh). q_dedup_minhash_fast stays out (cap-engaged subset semantics, measured by
+# q_manifest_commit (the manifest publish: routed merge lands, a planted
+# crash before the commit, reads with the recorded schemas) reads the tiled
+# orders table; its o_orderkey filter keeps the loaded slice at the sf0.1
+# size, so at sf10 it gates the manifest path over a 100x scan.
+# q_dedup_minhash_fast stays out (cap-engaged subset semantics, measured by
 # the precision/coverage study instead — same note as scale_gate.sh).
 #
 # Usage: tools/scale_gate_sf10.sh   (env: SF10=/tmp/sf10 OUT=/tmp/verify_sf10 CPUS=32)
@@ -31,9 +34,9 @@ cd "$(dirname "$0")/.."
 SF10="${SF10:-/tmp/sf10}"
 OUT="${OUT:-/tmp/verify_sf10}"
 CPUS="${CPUS:-32}"
-FAMILY=${FAMILY:-q_merge_bucketed,q_pipeline_incremental,q_stream_merge,q_type_roundtrip,q_lexical_index,q_dedup_exact,q_dedup_minhash,q_dedup_pipeline,q_dedup_clusters,q_dedup_incremental,q_substring_dedup,q_line_dedup,q_url_dedup,q_url_frontier,q_url_frontier_polite,q_url_frontier_gap,q_url_frontier_robots,q_url_frontier_robots_wild,q_semantic_dedup,q_cluster_sample,q_ann_cosine,q_ann_lsh,q_ann_ivf,q_ann_ivfpq,q_embed_ann,q_stream_dedup_corpus,q_stream_url_dedup,q_warc_pipeline,q_stream_warc,q_token_budget,q_tokens_bpe}
+FAMILY=${FAMILY:-q_manifest_commit,q_merge_bucketed,q_pipeline_incremental,q_stream_merge,q_type_roundtrip,q_lexical_index,q_dedup_exact,q_dedup_minhash,q_dedup_pipeline,q_dedup_clusters,q_dedup_incremental,q_substring_dedup,q_line_dedup,q_url_dedup,q_url_frontier,q_url_frontier_polite,q_url_frontier_gap,q_url_frontier_robots,q_url_frontier_robots_wild,q_semantic_dedup,q_cluster_sample,q_ann_cosine,q_ann_lsh,q_ann_ivf,q_ann_ivfpq,q_embed_ann,q_stream_dedup_corpus,q_stream_url_dedup,q_warc_pipeline,q_stream_warc,q_token_budget,q_tokens_bpe}
 
-if [ ! -d "$SF10/documents.parquet" ]; then
+if [ ! -d "$SF10/documents.parquet" ] || [ ! -d "$SF10/orders.parquet" ]; then
   echo "[scale_gate_sf10] tiling sf0.1 x100 -> $SF10"
   SPARK_GRAFT_CPUS="$CPUS" sbt -batch "runMain graft.ScaleData /root/testdata/sf0.1 $SF10 100" 2>&1 | grep '\[scale\]'
 fi
