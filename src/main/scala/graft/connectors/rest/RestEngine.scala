@@ -546,33 +546,44 @@ object RestEngine {
       transport: HttpTransport,
       state: Option[StateStore] = None,
   ): DataFrame = {
-    val stateKey = s"${source.name}.${resource.name}.cursor"
-    val lastValue = resource.endpoint.incremental.flatMap(b =>
-      state.flatMap(_.getString(stateKey)).orElse(b.initialValue)
-        .map(v => Incremental.rewindDays(v, b.lagDays)))
-    val incParams: Map[String, String] = resource.endpoint.incremental.toSeq.flatMap { b =>
-      lastValue.map(b.startParam -> _).toSeq ++
-        (for (ep <- b.endParam; ev <- b.endValue) yield ep -> ev).toSeq
-    }.toMap
+    val inc = new IncrementalRead(source, resource, state)
 
     // newest-first feeds stop the page loop once a page dips at/under the
     // committed cursor (start_out_of_range)
     val pageStop: Seq[com.fasterxml.jackson.databind.JsonNode] => Boolean =
       resource.endpoint.incremental match {
-        case Some(b) if b.newestFirst && lastValue.isDefined =>
+        case Some(b) if b.newestFirst && inc.lastValue.isDefined =>
           items => {
             val vals = items.flatMap(n => Json.selectString(n, b.cursorPath))
             // typed comparison: "9" vs "100" must compare numerically, or
             // the loop stops early and silently skips rows
-            vals.exists(v => Incremental.cursorLeq(v, lastValue.get))
+            vals.exists(v => Incremental.cursorLeq(v, inc.lastValue.get))
           }
         case _ => _ => false
       }
 
-    val items = fetchPages(source.client, resource.endpoint, transport, incParams, pageStop = pageStop)
-    val df = jsonToDf(spark, items)
+    val items = fetchPages(source.client, resource.endpoint, transport, inc.params, pageStop = pageStop)
+    inc.refilter(jsonToDf(spark, items))
+  }
 
-    resource.endpoint.incremental match {
+  /** A root resource's incremental binding, shared by [[readResource]]
+    * and [[readResourceParallel]]: the committed cursor (rewound by the
+    * lag window) sent as the start param, and the engine-side re-filter
+    * of what came back (APIs are start-inclusive; the filter enforces
+    * the strict bound).
+    */
+  private final class IncrementalRead(source: RestSource, resource: RestResource,
+      state: Option[StateStore]) {
+    private val stateKey = s"${source.name}.${resource.name}.cursor"
+    val lastValue: Option[String] = resource.endpoint.incremental.flatMap(b =>
+      state.flatMap(_.getString(stateKey)).orElse(b.initialValue)
+        .map(v => Incremental.rewindDays(v, b.lagDays)))
+    val params: Map[String, String] = resource.endpoint.incremental.toSeq.flatMap { b =>
+      lastValue.map(b.startParam -> _).toSeq ++
+        (for (ep <- b.endParam; ev <- b.endValue) yield ep -> ev).toSeq
+    }.toMap
+
+    def refilter(df: DataFrame): DataFrame = resource.endpoint.incremental match {
       // attribution-window runs keep everything the API returned: the whole
       // trailing window is re-emitted INCLUSIVE of its boundary day and the
       // merge pk dedups the overlap (the reference does not client-filter
@@ -612,17 +623,9 @@ object RestEngine {
       resource.endpoint.parent.isEmpty && resource.endpoint.method == "GET"
     if (!splittable) return readResource(spark, source, resource, transportFactory(), state)
 
-    val stateKey = s"${source.name}.${resource.name}.cursor"
-    val lastValue = resource.endpoint.incremental.flatMap(b =>
-      state.flatMap(_.getString(stateKey)).orElse(b.initialValue)
-        .map(v => Incremental.rewindDays(v, b.lagDays)))
-    val incParams: Map[String, String] = resource.endpoint.incremental.toSeq.flatMap { b =>
-      lastValue.map(b.startParam -> _).toSeq ++
-        (for (ep <- b.endParam; ev <- b.endValue) yield ep -> ev).toSeq
-    }.toMap
-
+    val inc = new IncrementalRead(source, resource, state)
     val items = RestPagesV2.read(spark,
-      RestPagesV2.PlannedPages(source.client, resource.endpoint, incParams, transportFactory))
+      RestPagesV2.PlannedPages(source.client, resource.endpoint, inc.params, transportFactory))
     import spark.implicits._
     // Materialize the pages ONCE (eager local checkpoint) before JSON schema
     // inference: spark.read.json runs an eager inference job over its input,
@@ -633,15 +636,7 @@ object RestEngine {
     // the fetched items executor-side, so inference and all downstream
     // actions read the same single fetch.
     val fetched = items.select("item").as[String].localCheckpoint(true)
-    val df = spark.read.json(fetched)
-
-    resource.endpoint.incremental match {
-      case Some(b) if b.lagDays > 0 => df
-      case Some(b) if df.columns.contains(leafField(b.cursorPath)) =>
-        val inc = Incremental(Seq(leafField(b.cursorPath)), b.initialValue, b.endValue)
-        inc.filterWith(df, state.flatMap(_.getString(stateKey)))
-      case _ => df
-    }
+    inc.refilter(spark.read.json(fetched))
   }
 
   /** Executor-side parent-child fan-out: one transport per partition, one

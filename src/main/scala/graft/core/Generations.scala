@@ -40,6 +40,7 @@ import org.apache.spark.sql.SparkSession
 object Generations {
 
   private val MarkerPrefix = "_gen.e"
+  private val log = org.slf4j.LoggerFactory.getLogger(Generations.getClass)
 
   private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -91,8 +92,8 @@ object Generations {
   }
 
   /** Delete generation dirs and markers <= gen - 2 (one-generation grace
-    * for in-flight readers). Best-effort: a failed delete is retried by
-    * the next cycle's GC.
+    * for in-flight readers). Best-effort: a failed delete is logged at
+    * WARN and retried by the next cycle's GC.
     */
   def gc(spark: SparkSession, root: String, gen: Long): Unit = {
     val (fs, p) = fsOf(spark, root)
@@ -106,8 +107,8 @@ object Generations {
           n.substring(n.lastIndexOf("@g") + 2).toLongOption
         else None
       if (g.exists(_ <= gen - 2))
-        try { fs.delete(st.getPath, true); () }
-        catch { case _: java.io.IOException => () }
+        try { if (!fs.delete(st.getPath, true)) log.warn(s"gc could not delete ${st.getPath}; the next gc retries") }
+        catch { case e: java.io.IOException => log.warn(s"gc could not delete ${st.getPath}; the next gc retries", e) }
     }
   }
 }

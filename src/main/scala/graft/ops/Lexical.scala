@@ -1,7 +1,7 @@
 package graft.ops
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -146,27 +146,30 @@ object Lexical {
     *
     * Layout under `path` — sub-tables live in per-GENERATION dirs
     * (`postings@g<N>`, see [[graft.core.Generations]]) committed by an
-    * atomic `_gen.e<N>` marker, and every sub-table is partitioned by an
-    * append-batch id `__ab` (-1 = build/optimize output, >= 0 = one
-    * append batch), the same batch-keyed discipline as the streaming
-    * sinks:
-    *   postings@gN/  (term, id, tf, crank) partitioned by (__ab, __tb);
-    *                 build/optimize rows have __tb = md5-bucket of term
-    *                 (0..63) and crank = champion rank within the term
-    *                 (NULL below the champion cut); an append batch
-    *                 lands UNBUCKETED under __tb = -1 with crank = 0
+    * atomic `_gen.e<N>` marker. Each sub-table is split into LEAF dirs by
+    * an append-batch id `__ab` (-1 = build/optimize output, >= 0 = one
+    * append batch), and every leaf is written by a plain overwrite of its
+    * own path:
+    *   postings@gN/  (term, id, tf, crank): the build leaf `__ab=-1` holds
+    *                 one `__tb` dir per md5-bucket of term (0..63), crank =
+    *                 champion rank within the term (NULL below the
+    *                 champion cut); batch <id>'s leaf is
+    *                 `__ab=<id>/__tb=-1`, unbucketed, crank = 0
     *                 ("pending"). `_schema.json` records the data schema
-    *                 (so `id` keeps the type the build was given)
-    *   idf@gN/       (term, df) partitioned by __ab — per-batch document
-    *                 frequency DELTAS; probes sum across batches
-    *                 (vocabulary-sized work)
-    *   meta@gN/      (n_docs) partitioned by __ab — per-batch doc
-    *                 counts; probes sum
+    *                 (so `id` keeps the type the build was given), and the
+    *                 empty file `_appended/<id>` announces batch <id> (an
+    *                 index without `_appended/` predates announcements and
+    *                 is refused: rebuild it)
+    *   idf@gN/       (term, df) per leaf — per-batch document frequency
+    *                 DELTAS; reads sum them (vocabulary-sized work)
+    *   meta@gN/      (n_docs) per leaf — per-batch doc counts; reads sum
     *
-    * A probe lists the `__ab` dirs on the driver and scans only the
-    * `__tb` leaf dirs of its query terms' buckets plus every pending
-    * `__tb = -1` dir, with the recorded schema — it never discovers the
-    * whole postings tree.
+    * Live leaves: `search`, `optimize` and `append` all resolve the same
+    * set — the build leaves plus the three leaves of every batch announced
+    * in `postings@gN/_appended/` — and read them by explicit path with
+    * fixed or recorded schemas. Nothing lists the `__ab` dirs, so a leaf
+    * no announcement names is never read. A probe reads only the `__tb`
+    * dirs of its query terms' buckets plus every announced pending leaf.
     *
     * `optimize` writes the WHOLE next generation and then flips the
     * marker — one atomic create — so an UNLEASED reader (`search` takes
@@ -175,31 +178,30 @@ object Lexical {
     * from different snapshots; GC keeps a one-generation grace for
     * readers that resolved just before the flip.
     *
-    * Append contract: a batch lands all three deltas under its OWN
-    * `__ab = appendId` partitions with dynamic partition overwrite, so
-    * a crashed-and-retried append (same appendId) overwrites itself
-    * instead of duplicating posting/df rows. Postings commit first: a
-    * crash before the idf/meta deltas leaves df and n_docs lagging the
-    * appended docs (idf_bits slightly stale at probe time) until the
-    * append is retried or `optimize` runs — never duplicated, never
-    * over-counted. Appended postings are all candidates until the next
-    * optimize (bounded while batches are small relative to the indexed
-    * corpus, exactly the incremental-LSH trade), and every probe reads
-    * every pending dir. A same-id retry replaces its partitions under
-    * an unleased probe (delete, then rename): the probe re-lists a leaf
-    * dir that is gone when its read resolves and skips files that are
-    * gone when it scans, so it sees that batch whole, partly or not at
-    * all until the retry lands — never an error. `optimize` recomputes champion ranks and term
-    * buckets over the union and compacts every sub-table back to a
-    * single `__ab = -1` partition, after which the index is IDENTICAL
-    * to a fresh build over the union corpus (spec-pinned).
+    * Append contract — all or nothing: a batch writes its three leaves
+    * (empty ones for an empty batch, so the announcement's name is all a
+    * reader needs), then announces itself with one atomic create of
+    * `_appended/<id>` (a `_` name, which scans skip; GC sweeps it with its
+    * generation). Announced leaves are never rewritten. A crash before the
+    * announcement leaves the batch invisible to `search` and to `optimize`
+    * (which compacts only live leaves); the retry overwrites the orphan
+    * leaves and lands the batch once. A retry of an announced batch writes
+    * nothing, and a different batch under an announced id fails by name.
+    * Ids are checked within the current generation only: `optimize`
+    * compacts the announced batches into the build leaves, so a batch
+    * replayed after an optimize lands a second time. Appended postings
+    * are all candidates until the next optimize (bounded while batches
+    * are small relative to the indexed corpus, exactly the
+    * incremental-LSH trade), and every probe reads every pending leaf.
+    * `optimize` recomputes champion ranks and term buckets over the live
+    * leaves and compacts every sub-table back to a single `__ab = -1`
+    * leaf, after which the index is IDENTICAL to a fresh build over the
+    * union corpus (spec-pinned).
     *
     * Single-writer discipline: `build`/`append`/`optimize` all run under
     * the same [[graft.core.TableLock]] lease keyed on the index ROOT, so
-    * an `optimize` staged swap can never race a live `append` (the swap
-    * replaces whole directories — an unlocked interleave would silently
-    * drop the in-flight append partition, the exact failure class the
-    * lease was built for on data tables).
+    * an `optimize` can never race a live `append` into the generation it
+    * is compacting.
     */
   object Index {
     private val TermBuckets = 64
@@ -208,10 +210,11 @@ object Lexical {
     private val Pending = -1L
 
     private val SchemaFile = "_schema.json"
+    private val Announced = "_appended"
     private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT")
     private val MetaSchema = StructType.fromDDL("n_docs BIGINT")
 
-    /** Lease wait: a busy holder (an optimize mid-swap) releases in
+    /** Lease wait: a busy holder (an optimize mid-write) releases in
       * bounded time, so queue briefly instead of failing the batch job;
       * a crashed holder is taken over at the lease's staleMs regardless.
       */
@@ -267,42 +270,52 @@ object Lexical {
       finally in.close()
     }
 
-    /** `dirs` read with a known schema, skipping files that a same-id
-      * append retry removed after the listing; no dirs, no rows.
+    /** `leaves` read by explicit path with a known schema, in groups no
+      * larger than Spark's parallel-discovery threshold so that no read
+      * lists its files in a job; no leaves, no rows.
       */
-    private def read(spark: SparkSession, schema: StructType, dirs: Seq[String],
-        basePath: Option[String] = None): DataFrame =
-      if (dirs.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-      else spark.read.schema(schema).options(basePath.map("basePath" -> _).toMap)
-        .option("ignoreMissingFiles", "true").parquet(dirs: _*)
+    private def read(spark: SparkSession, schema: StructType, leaves: Seq[String]): DataFrame =
+      if (leaves.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else leaves.grouped(spark.sessionState.conf.parallelPartitionDiscoveryThreshold)
+        .map(g => spark.read.schema(schema).parquet(g: _*)).reduce(_ union _)
 
-    /** The postings a probe of term `buckets` needs: those buckets' build
-      * dirs plus every pending dir, found by listing the `__ab` dirs and
-      * their `__tb` dirs on the driver.
+    /** The committed generation of the index at `path` and its announced
+      * append batches, resolved once: the one resolver of live leaves.
       */
-    private def postingsFor(spark: SparkSession, dir: String, buckets: Set[Long]): DataFrame = {
-      val root = new Path(dir)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def children(p: Path, key: String): Seq[(Path, Long)] =
-        fs.listStatus(p).toSeq.collect {
-          case st if st.isDirectory && st.getPath.getName.startsWith(s"$key=") =>
-            (st.getPath, st.getPath.getName.stripPrefix(s"$key=").toLong)
-        }
-      val schema = postingsSchema(spark, dir)
-      // a listed leaf gone when the read resolves it (a same-id append
-      // retry between its delete and rename) is listed again, not an error
-      def attempt(left: Int): DataFrame = {
-        val leaves = for {
-          (ab, _) <- children(root, "__ab")
-          (tb, b) <- children(ab, "__tb") if b == Pending || buckets(b)
-        } yield tb.toString
-        try read(spark, schema, leaves, Some(dir))
+    private final class Live(spark: SparkSession, path: String) {
+      val gen: Long = graft.core.Generations.currentOrFail(spark, path)
+      def dir(sub: String): String = graft.core.Generations.dir(path, sub, gen)
+      private val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      private val announced = new Path(dir("postings"), Announced)
+
+      /** Announced batch ids (a checksum sibling's name does not parse). */
+      val batches: Seq[Long] =
+        try fs.listStatus(announced).toSeq.flatMap(_.getPath.getName.toLongOption).sorted
         catch {
-          case e: AnalysisException if left > 1 && e.getCondition == "PATH_NOT_FOUND" =>
-            attempt(left - 1)
+          case e: java.io.FileNotFoundException =>
+            throw new IllegalStateException(
+              s"$announced is missing: this index predates append announcements; rebuild it with Index.build", e)
         }
-      }
-      attempt(3)
+
+      /** Leaf of batch `ab` (-1 = build) in `sub`. */
+      def leaf(sub: String, ab: Long): String =
+        if (sub == "postings" && ab >= 0) s"${dir(sub)}/__ab=$ab/__tb=$Pending"
+        else s"${dir(sub)}/__ab=$ab"
+
+      /** `sub`'s live leaves: the build leaf and every announced batch's. */
+      def leaves(sub: String): Seq[String] = (-1L +: batches).map(leaf(sub, _))
+
+      /** Live postings leaves: the build leaf's `__tb` dirs whose bucket
+        * passes `bucket`, then every announced pending leaf.
+        */
+      def postings(bucket: Long => Boolean): Seq[String] =
+        fs.listStatus(new Path(leaf("postings", -1L))).toSeq.collect {
+          case st if st.isDirectory && st.getPath.getName.startsWith("__tb=") &&
+              bucket(st.getPath.getName.stripPrefix("__tb=").toLong) => st.getPath.toString
+        } ++ batches.map(leaf("postings", _))
+
+      /** Make batch `ab`'s (fully written) leaves live: one atomic create. */
+      def announce(ab: Long): Unit = fs.create(new Path(announced, ab.toString), false).close()
     }
 
     /** Sub-table dir of the current committed generation (spec access). */
@@ -310,11 +323,37 @@ object Lexical {
         path: String, sub: String): String =
       graft.core.Generations.resolve(spark, path, sub)
 
+    /** Write generation `gen`'s build leaves — `ranked` postings bucketed
+      * by term, the `df` table and the `docs` count — concurrently, then
+      * commit the generation and sweep old ones. The three writes are
+      * independent and all land BEFORE the atomic commit, so they overlap
+      * (Spark actions run one after another only when one thread submits
+      * them — the idf/meta jobs back-fill executors the postings write's
+      * tail leaves idle).
+      */
+    private def commitGeneration(spark: SparkSession, path: String, gen: Long,
+        ranked: => DataFrame, df: => DataFrame, docs: => Long): Unit = {
+      def d(sub: String) = graft.core.Generations.dir(path, sub, gen)
+      concurrently(
+        () => {
+          val r = ranked
+          r.withColumn("__tb", termBucket(col("term")))
+            .write.mode("overwrite").partitionBy("__tb").parquet(s"${d("postings")}/__ab=-1")
+          recordSchema(spark, d("postings"), r.schema)
+          val announced = new Path(d("postings"), Announced) // empty until an append lands
+          announced.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(announced)
+        },
+        () => df.write.mode("overwrite").parquet(s"${d("idf")}/__ab=-1"),
+        () => spark.createDataFrame(Seq(Tuple1(docs))).toDF("n_docs")
+          .write.mode("overwrite").parquet(s"${d("meta")}/__ab=-1"))
+      graft.core.Generations.commit(spark, path, gen)
+      graft.core.Generations.gc(spark, path, gen)
+    }
+
     def build(docs: DataFrame, idCol: String, textCol: String, path: String,
         championSize: Int): Unit = locked(docs.sparkSession, path, "build") {
       val spark = docs.sparkSession
       val gen = graft.core.Generations.next(spark, path)
-      def d(sub: String) = graft.core.Generations.dir(path, sub, gen)
       // ONE corpus tokenize+shuffle total: raw postings are staged to
       // parquet inside the uncommitted generation, and every later
       // reference — withCrank's champion reduction AND its join-back,
@@ -324,39 +363,23 @@ object Lexical {
       // InMemoryRelation boundary was A/B'd 2x slower here in r19, and
       // staged parquet adds no executor-memory pin and no lineage
       // truncation. The stage dir lives under the generation namespace
-      // (invisible until commit; a crashed build's leftover is
-      // overwritten by the retry and swept by GC) and is deleted before
-      // the commit marker.
-      val stage = d("stage")
+      // (no reader resolves it; a crashed build's leftover is overwritten
+      // by the retry and swept by GC) and is deleted once the generation
+      // is committed.
+      val stage = graft.core.Generations.dir(path, "stage", gen)
       val raw = postingsOf(docs, idCol, textCol)
       raw.write.mode("overwrite").parquet(stage)
       // explicit schema: an empty corpus writes a file-less dir, which
       // schema inference would refuse to read
       val staged = spark.read.schema(raw.schema).parquet(stage)
-      // the three sub-table writes are independent of each other and all
-      // land BEFORE the atomic generation commit, so they overlap (guide
-      // §2.6: actions are only sequential because the driver calls them
-      // sequentially — the idf/meta jobs back-fill executors the postings
-      // write's tail leaves idle)
-      concurrently(
-        () => {
-          val ranked = withCrank(staged, championSize)
-          ranked.withColumn("__ab", lit(-1L))
-            .withColumn("__tb", termBucket(col("term")))
-            .write.mode("overwrite").partitionBy("__ab", "__tb").parquet(d("postings"))
-          recordSchema(spark, d("postings"), ranked.schema)
-        },
+      commitGeneration(spark, path, gen,
+        withCrank(staged, championSize),
         // df(term) = the staged postings' per-term row count — postings
-        // are (term, id)-distinct by construction, so this is exactly the
-        // old dfOf(docs) without the second corpus tokenize
-        () => staged.groupBy("term").agg(count(lit(1)).as("df")).withColumn("__ab", lit(-1L))
-          .write.mode("overwrite").partitionBy("__ab").parquet(d("idf")),
-        () => spark.createDataFrame(Seq(Tuple1(docs.count()))).toDF("n_docs")
-          .withColumn("__ab", lit(-1L))
-          .write.mode("overwrite").partitionBy("__ab").parquet(d("meta")))
+        // are (term, id)-distinct by construction, so this needs no
+        // second corpus tokenize
+        staged.groupBy("term").agg(count(lit(1)).as("df")),
+        docs.count())
       deleteDir(spark, stage)
-      graft.core.Generations.commit(spark, path, gen)
-      graft.core.Generations.gc(spark, path, gen)
     }
 
     /** Run independent write actions concurrently. Every action is
@@ -391,93 +414,71 @@ object Lexical {
       }
     }
 
-    /** Append a document batch under its own `__ab = appendId`
-      * partitions: postings land unbucketed (`__tb = -1`, so a small
-      * batch writes a few files, not one per term bucket) with crank = 0
-      * (always candidates until the next optimize), df and n_docs land as
-      * per-batch deltas.
-      * Idempotent per appendId — a retry after a crash overwrites the
-      * same partitions and heals any half-landed state; idf/meta lag the
-      * postings only inside the crash window (see the layout contract).
+    /** Append a document batch as batch `appendId` of the current
+      * generation: its postings leaf lands unbucketed (`__tb = -1`, so a
+      * small batch writes a few files, not one per term bucket) with
+      * crank = 0 (always candidates until the next optimize), its df and
+      * n_docs as per-batch deltas; then one atomic create announces it.
+      * All or nothing (see the layout contract): a crash before the
+      * announcement leaves nothing live, and the retry lands the batch.
       *
       * `appendId` is the caller's batch identity and carries the
-      * semantics: SAME id = retry of the same batch (overwrites itself),
-      * DISTINCT batches MUST use distinct ids — reusing an id for a
-      * different batch replaces the earlier batch's deltas, silently
-      * corrupting df and n_docs. No default, precisely so callers must
-      * choose.
+      * semantics: SAME id = retry of the same batch (a no-op once it is
+      * announced), DISTINCT batches MUST use distinct ids — a batch whose
+      * doc count differs from the announced batch of its id throws an
+      * IllegalStateException naming the id. No default, precisely so
+      * callers must choose.
       */
     def append(batch: DataFrame, idCol: String, textCol: String, path: String,
         appendId: Long): Unit = locked(batch.sparkSession, path, "append") {
       require(appendId >= 0L, s"appendId must be >= 0 (-1 is the build partition): $appendId")
       val spark = batch.sparkSession
-      // appends land INSIDE the current generation (new __ab partitions;
-      // existing files are never rewritten) — the generation only flips
-      // on build/optimize
-      def d(sub: String) = graft.core.Generations.resolve(spark, path, sub)
-      val postings = d("postings")
-      postingsOf(batch, idCol, textCol)
-        .withColumn("crank", lit(0L)) // pending: candidate until optimize
-        .withColumn("__ab", lit(appendId))
-        .withColumn("__tb", lit(Pending))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("__ab", "__tb").parquet(postings)
-      // ONE batch tokenize: df(term) derives from the just-written
-      // postings leaf dir (a same-id retry overwrote it, so the
-      // read-back is exactly this batch's postings and the crash
-      // contract above is unchanged — postings first, then idf/meta;
-      // idf and meta are mutually independent, so they overlap). An
-      // empty batch writes no leaf dir at all.
-      val leaf = new Path(s"$postings/__ab=$appendId/__tb=$Pending")
-      val landed =
-        if (leaf.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(leaf)) Seq(leaf.toString)
-        else Nil
-      concurrently(
-        () => read(spark, StructType.fromDDL("term STRING"), landed, Some(postings))
-          .groupBy("term").agg(count(lit(1)).as("df")).withColumn("__ab", lit(appendId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__ab").parquet(d("idf")),
-        () => spark.createDataFrame(Seq(Tuple1(batch.count()))).toDF("n_docs")
-          .withColumn("__ab", lit(appendId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("__ab").parquet(d("meta")))
+      // appends land INSIDE the current generation — the generation only
+      // flips on build/optimize
+      val live = new Live(spark, path)
+      if (live.batches.contains(appendId)) {
+        val landed = read(spark, MetaSchema, Seq(live.leaf("meta", appendId))).head.getLong(0)
+        val docs = batch.count()
+        if (docs != landed) throw new IllegalStateException(
+          s"appendId $appendId already landed a batch of $landed docs, not this one of $docs: " +
+            "distinct batches need distinct appendIds")
+      } else {
+        val postings = live.leaf("postings", appendId)
+        postingsOf(batch, idCol, textCol)
+          .withColumn("crank", lit(0L)) // pending: candidate until optimize
+          .write.mode("overwrite").parquet(postings)
+        // ONE batch tokenize: df(term) derives from the just-written
+        // postings leaf; idf and meta are mutually independent, so they
+        // overlap
+        concurrently(
+          () => read(spark, StructType.fromDDL("term STRING"), Seq(postings))
+            .groupBy("term").agg(count(lit(1)).as("df"))
+            .write.mode("overwrite").parquet(live.leaf("idf", appendId)),
+          () => spark.createDataFrame(Seq(Tuple1(batch.count()))).toDF("n_docs")
+            .write.mode("overwrite").parquet(live.leaf("meta", appendId)))
+        live.announce(appendId)
+      }
     }
 
-    /** Recompute champion ranks over the full postings and compact every
-      * sub-table to a single `__ab = -1` partition — after this the
-      * index is identical to a fresh build over the union corpus.
-      * Writes the whole NEXT generation, then commits it with one atomic
-      * marker create: no staged swap, no window where a concurrent
-      * reader can see a half-replaced directory or mismatched
-      * postings/idf/meta (reads of the old generation stay valid through
-      * the one-generation GC grace).
+    /** Recompute champion ranks over the live postings and compact every
+      * sub-table to a single `__ab = -1` leaf — after this the index is
+      * identical to a fresh build over the union corpus. Writes the whole
+      * NEXT generation, then commits it with one atomic marker create: no
+      * window where a concurrent reader can see a half-replaced directory
+      * or mismatched postings/idf/meta (reads of the old generation stay
+      * valid through the one-generation GC grace). Leaves of an
+      * unannounced batch are not live, so they are not compacted.
       */
     def optimize(spark: org.apache.spark.sql.SparkSession, path: String,
         championSize: Int): Unit = locked(spark, path, "optimize") {
-      val gen = graft.core.Generations.currentOrFail(spark, path)
-      def cur(sub: String) = graft.core.Generations.dir(path, sub, gen)
-      def nxt(sub: String) = graft.core.Generations.dir(path, sub, gen + 1)
       // reading gen N while writing gen N+1: no self-overwrite, so no
       // pre-read checkpoint needed anywhere
-      val ranked = withCrank(
-        spark.read.schema(postingsSchema(spark, cur("postings"))).parquet(cur("postings"))
-          .select("term", "id", "tf"), championSize)
-      ranked.withColumn("__ab", lit(-1L))
-        .withColumn("__tb", termBucket(col("term")))
-        .write.mode("overwrite").partitionBy("__ab", "__tb").parquet(nxt("postings"))
-      recordSchema(spark, nxt("postings"), ranked.schema)
-      spark.read.schema(IdfSchema).parquet(cur("idf"))
-        .groupBy("term").agg(sum("df").as("df")).withColumn("__ab", lit(-1L))
-        .write.mode("overwrite").partitionBy("__ab").parquet(nxt("idf"))
-      val n = spark.read.schema(MetaSchema).parquet(cur("meta")).agg(sum("n_docs")).head.getLong(0)
-      spark.createDataFrame(Seq(Tuple1(n))).toDF("n_docs")
-        .withColumn("__ab", lit(-1L))
-        .write.mode("overwrite").partitionBy("__ab").parquet(nxt("meta"))
-      graft.core.Generations.commit(spark, path, gen + 1)
-      graft.core.Generations.gc(spark, path, gen + 1)
+      val live = new Live(spark, path)
+      val schema = postingsSchema(spark, live.dir("postings"))
+      commitGeneration(spark, path, live.gen + 1,
+        withCrank(read(spark, schema, live.postings(_ => true)).select("term", "id", "tf"), championSize),
+        read(spark, IdfSchema, live.leaves("idf")).groupBy("term").agg(sum("df").as("df")),
+        read(spark, MetaSchema, live.leaves("meta")).agg(sum("n_docs")).head.getLong(0))
     }
 
     /** Probe: champion rows (crank >= 1) and PENDING appended rows
@@ -487,23 +488,17 @@ object Lexical {
       * but against the persisted table.
       *
       * READ LIFETIME: the returned DataFrame is lazy and pinned to the
-      * generation resolved at CALL time; `Generations.gc` keeps only a
+      * live leaves resolved at CALL time; `Generations.gc` keeps only a
       * one-generation grace behind the current pointer, so collect the
-      * result promptly — a frame cached across TWO optimize cycles scans
-      * GC'd directories (FileNotFoundException mid-scan). Callers that
-      * must hold results across optimizes should `localCheckpoint(true)`
-      * the (k-bounded, small) frame immediately.
+      * result promptly — a frame collected after TWO optimize cycles
+      * scans GC'd files and fails (a missing-file error on collect),
+      * never returning a partial answer. Callers that must hold results
+      * across optimizes should `localCheckpoint(true)` the (k-bounded,
+      * small) frame immediately.
       */
     def search(spark: org.apache.spark.sql.SparkSession, path: String,
         queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
         broadcastRowCap: Long = 4000000L): DataFrame = {
-      // resolve the generation ONCE: postings, idf and meta all come
-      // from the same committed snapshot, and an optimize flipping the
-      // pointer mid-search cannot pull the directories out from under
-      // this (unleased) read — GC keeps the resolved generation alive
-      // through a one-generation grace
-      val gen = graft.core.Generations.currentOrFail(spark, path)
-      def d(sub: String) = graft.core.Generations.dir(path, sub, gen)
       val qt = queries
         .select(col(qidCol), explode(split(col(qtextCol), " ")).as("term"))
         .groupBy(col(qidCol), col("term")).agg(count(lit(1)).as("__qtf"))
@@ -513,14 +508,22 @@ object Lexical {
       // pick the postings leaf dirs to read
       val stats = qt.agg(count(lit(1)), collect_set(termBucket(col("term")))).head
       val qtGated = gated(qt, stats.getLong(0), broadcastRowCap)
-      val postings = postingsFor(spark, d("postings"), stats.getSeq[Long](1).toSet)
+      // resolve the live leaves ONCE, after the query-side jobs (the
+      // shorter the span from here to the caller's collect, the wider the
+      // GC grace): postings, idf and meta all come from the same
+      // committed generation and the same announced batches, whose leaves
+      // no writer rewrites — an optimize flipping the pointer mid-search
+      // leaves them in place through GC's one-generation grace
+      val live = new Live(spark, path)
+      val postings = read(spark, postingsSchema(spark, live.dir("postings")),
+        live.postings(stats.getSeq[Long](1).toSet))
       // per-batch deltas sum to the union-corpus df and n_docs —
       // vocabulary-sized (idf) and batch-count-sized (meta) work; meta
       // holds one row per batch, so it is summed on the driver (one job,
       // no shuffle)
-      val n = read(spark, MetaSchema, Seq(d("meta"))).collect().map(_.getLong(0)).sum
+      val n = read(spark, MetaSchema, live.leaves("meta")).collect().map(_.getLong(0)).sum
       val idf = idfBitsFromDf(
-        read(spark, IdfSchema, Seq(d("idf"))).groupBy("term").agg(sum("df").as("df")), n)
+        read(spark, IdfSchema, live.leaves("idf")).groupBy("term").agg(sum("df").as("df")), n)
       // candidates: champion rows (crank >= 1) plus pending appended rows
       // (crank = 0); non-champion build rows (NULL) only contribute to
       // the exact scoring join below

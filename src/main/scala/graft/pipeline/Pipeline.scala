@@ -85,6 +85,10 @@ final class Pipeline(
       * property-tested idempotent-merge path — never the reverse (cursors
       * advanced past data that never landed = silent loss). Readers must
       * resolve tables through the manifest, not `destRoot/<table>`.
+      * `destRoot` must be a local filesystem path: the manifest flip is a
+      * local atomic rename, so [[graft.core.TableManifest]] refuses an
+      * hdfs:// or s3a:// root (remote roots use the default per-table
+      * staged swap).
       */
     manifestCommit: Boolean = false,
 ) {

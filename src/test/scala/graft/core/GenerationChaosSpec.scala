@@ -60,8 +60,8 @@ class GenerationChaosSpec extends SparkTestBase {
   }
 
   test("Lexical.Index.search under concurrent same-id append retries: zero missing-path errors") {
-    // a retry of batch 5 replaces its postings/idf/meta partitions by
-    // delete-then-rename while the unleased reader lists and scans them
+    // a retry of announced batch 5 must leave its leaves untouched while
+    // the unleased reader resolves and scans them
     val path = s"${tmpDir("gen_chaos_lex_retry")}/idx"
     val docs = (1L to 150L).map(i => (i, s"alpha tok${i % 7} beta")).toDF("id", "text")
     Lexical.Index.build(docs, "id", "text", path, championSize = 4)
@@ -78,11 +78,29 @@ class GenerationChaosSpec extends SparkTestBase {
       (1 to 6).foreach(_ => Lexical.Index.append(batch, "id", "text", path, appendId = 5L))
     }
     assert(n >= 2, "expected at least one probe to overlap the retries")
-    // mid-retry the batch may be briefly invisible, never anything else
+    // the batch stays whole and visible through every retry
     seen.zipWithIndex.foreach { case (got, i) =>
-      assert(got == Seq(9000L) || got.isEmpty, s"probe $i returned $got")
+      assert(got == Seq(9000L), s"probe $i returned $got")
     }
-    assert(seen.last == Seq(9000L), "the landed retry must be visible")
+  }
+
+  test("Generations.gc logs a failed delete at WARN and keeps sweeping") {
+    spark.sparkContext.hadoopConfiguration.set("fs.faildelete.impl", classOf[FailingDeleteFileSystem].getName)
+    val dir = tmpDir("gen_gc_warn")
+    val root = s"faildelete://$dir"
+    (0L to 2L).foreach { g =>
+      new java.io.File(Generations.dir(dir, "sub", g)).mkdirs()
+      Generations.commit(spark, root, g)
+    }
+    withWarnings { warnings =>
+      Generations.gc(spark, root, 2L) // every delete throws; gc must not
+      Seq("_gen.e0", "sub@g0").foreach { name =>
+        assert(warnings().exists(w => w.contains("gc could not delete") && w.contains(s"$dir/$name")),
+          s"the failed delete of $name must be logged; saw ${warnings().mkString(" | ")}")
+      }
+    }
+    assert(new java.io.File(Generations.dir(dir, "sub", 0L)).exists())
+    assert(Generations.current(spark, root).contains(2L))
   }
 
   test("growing IVF index probes under concurrent optimizeIndex: vectors and centroids pair within one generation") {
@@ -116,4 +134,13 @@ class GenerationChaosSpec extends SparkTestBase {
       assert(paired, s"probe $i paired vectors with another generation's centroids")
     }
   }
+}
+
+/** A local filesystem whose every delete throws: the failure path of
+  * `Generations.gc`. Registered under the `faildelete` scheme by the spec.
+  */
+class FailingDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("faildelete:///")
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    throw new java.io.IOException(s"planted delete failure: $p")
 }

@@ -84,36 +84,23 @@ class TableLockSpec extends SparkTestBase {
   }
 
   test("heartbeat: a failed renew is logged and the beat goes on for the other leases") {
-    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
-    import org.apache.logging.log4j.core.appender.AbstractAppender
-    import org.apache.logging.log4j.core.config.Property
-    val warnings = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val capture = new AbstractAppender("heartbeat-spec", null, null, true, Property.EMPTY_ARRAY) {
-      override def append(e: LogEvent): Unit = warnings.add(e.getMessage.getFormattedMessage)
-    }
-    capture.start()
-    val ctx = org.apache.logging.log4j.LogManager.getContext(false).asInstanceOf[LoggerContext]
-    ctx.getConfiguration.getRootLogger.addAppender(capture, org.apache.logging.log4j.Level.WARN, null)
-    ctx.updateLoggers()
     val root = tmpDir("lock_heartbeat_fail")
     val broken = TableLock.acquire(spark, s"$root/a", "hb-a")
     val live = TableLock.acquire(spark, s"$root/b", "hb-b")
     broken.fs.delete(broken.path, false) // every renew of it now throws
     val staleMs = 300L
     val heartbeat = new TableLock.Heartbeat("spec", staleMs)
-    try {
-      heartbeat.hold("a", broken)
-      heartbeat.hold("b", live)
-      val t0 = System.currentTimeMillis()
-      Thread.sleep(4 * staleMs)
-      assert(live.fs.getFileStatus(live.path).getModificationTime >= t0,
-        "the live lease must keep being renewed after its sibling's renew failed")
-      assert(warnings.toArray.exists(_.toString.contains(s"renew failed for ${broken.path}")),
-        s"a failed renew must be logged; saw ${warnings.toArray.mkString(" | ")}")
-    } finally {
-      heartbeat.releaseAll()
-      ctx.getConfiguration.getRootLogger.removeAppender("heartbeat-spec")
-      ctx.updateLoggers()
+    withWarnings { warnings =>
+      try {
+        heartbeat.hold("a", broken)
+        heartbeat.hold("b", live)
+        val t0 = System.currentTimeMillis()
+        Thread.sleep(4 * staleMs)
+        assert(live.fs.getFileStatus(live.path).getModificationTime >= t0,
+          "the live lease must keep being renewed after its sibling's renew failed")
+        assert(warnings().exists(_.contains(s"renew failed for ${broken.path}")),
+          s"a failed renew must be logged; saw ${warnings().mkString(" | ")}")
+      } finally heartbeat.releaseAll()
     }
     TableLock.acquire(spark, s"$root/b", "taker").release()
   }

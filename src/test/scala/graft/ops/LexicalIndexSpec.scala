@@ -65,7 +65,7 @@ class LexicalIndexSpec extends SparkTestBase {
     assert(df1 == base1 + 1)
   }
 
-  test("a retried append (same appendId) overwrites itself — no duplicate postings or df") {
+  test("a retried append (same appendId) is a no-op — no duplicate postings or df") {
     val path = s"${tmpDir("graft_lexidx_retry")}/idx"
     Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
     val batch = Seq((9000L, "freshterm common1")).toDF("doc_id", "text")
@@ -84,6 +84,73 @@ class LexicalIndexSpec extends SparkTestBase {
     val hits = Lexical.Index.search(spark,
       path, Seq((1L, "freshterm")).toDF("q_id", "q_text"), "q_id", "q_text", 5)
     assert(hits.select("id").as[Long].collect().toSeq == Seq(9000L))
+  }
+
+  test("an append that crashed before its announcement is invisible to search and optimize; its retry lands once") {
+    val path = s"${tmpDir("graft_lexidx_crash")}/idx"
+    Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
+    val batch = Seq((9000L, "freshterm common1")).toDF("doc_id", "text")
+    val fresh = Seq((1L, "freshterm")).toDF("q_id", "q_text")
+    def hits(): Seq[Long] = Lexical.Index.search(spark, path, fresh, "q_id", "q_text", 5)
+      .select("id").as[Long].collect().toSeq
+    def sub(name: String) = spark.read.parquet(Lexical.Index.subDir(spark, path, name))
+    def freshDf(): Long = sub("idf").filter(col("term") === "freshterm").agg(coalesce(sum("df"), lit(0L)))
+      .as[Long].head()
+    def nDocs(): Long = sub("meta").agg(sum("n_docs")).as[Long].head()
+    // the crash: every leaf of batch 7 written, the announcement never made
+    def crashedAppend(): Unit = {
+      Lexical.Index.append(batch, "doc_id", "text", path, appendId = 7L)
+      val announcement = new org.apache.hadoop.fs.Path(
+        s"${Lexical.Index.subDir(spark, path, "postings")}/_appended/7")
+      announcement.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(announcement, false)
+    }
+    crashedAppend()
+    assert(hits().isEmpty, "a batch with no announcement must be invisible to search")
+    Lexical.Index.optimize(spark, path, championSize = 16)
+    assert(sub("postings").filter(col("id") === 9000L).count() == 0L, "optimize compacted an orphan leaf")
+    assert(freshDf() == 0L)
+    assert(nDocs() == 500L)
+    // crash again in the new generation, then retry: the orphan leaves are
+    // overwritten and the batch lands exactly once
+    crashedAppend()
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 7L)
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 7L)
+    assert(hits() == Seq(9000L))
+    assert(sub("postings").filter(col("id") === 9000L).count() == 2L) // freshterm, common1
+    assert(freshDf() == 1L)
+    assert(nDocs() == 501L)
+  }
+
+  test("a search frame resolved before two optimize cycles fails on collect instead of answering partially") {
+    val path = s"${tmpDir("graft_lexidx_gc")}/idx"
+    Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
+    val frame = Lexical.Index.search(spark, path, queries, "q_id", "q_text", k = 10)
+    (1 to 2).foreach(_ => Lexical.Index.optimize(spark, path, championSize = 16))
+    val e = intercept[org.apache.spark.SparkException](frame.collect())
+    assert(e.getMessage.contains("FILE_NOT_EXIST"), e.getMessage)
+  }
+
+  test("a same-id append of a different batch fails by name and writes nothing") {
+    val path = s"${tmpDir("graft_lexidx_misuse")}/idx"
+    Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
+    val nDocs = () => spark.read.parquet(Lexical.Index.subDir(spark, path, "meta")).agg(sum("n_docs"))
+      .as[Long].head()
+    // an empty batch lands (empty leaves) and counts zero docs
+    Lexical.Index.append(Seq.empty[(Long, String)].toDF("doc_id", "text"), "doc_id", "text", path,
+      appendId = 6L)
+    assert(nDocs() == 500L)
+    val one = Seq((9000L, "freshterm")).toDF("doc_id", "text")
+    val onEmpty = intercept[IllegalStateException](
+      Lexical.Index.append(one, "doc_id", "text", path, appendId = 6L))
+    assert(onEmpty.getMessage.contains("appendId 6"), onEmpty.getMessage)
+    Lexical.Index.append(one, "doc_id", "text", path, appendId = 7L)
+    val two = Seq((9001L, "freshterm"), (9002L, "freshterm")).toDF("doc_id", "text")
+    val onOne = intercept[IllegalStateException](
+      Lexical.Index.append(two, "doc_id", "text", path, appendId = 7L))
+    assert(onOne.getMessage.contains("appendId 7"), onOne.getMessage)
+    assert(nDocs() == 501L)
+    assert(Lexical.Index.search(spark, path, Seq((1L, "freshterm")).toDF("q_id", "q_text"),
+      "q_id", "q_text", 5).select("id").as[Long].collect().toSeq == Seq(9000L))
   }
 
   test("append queues behind a held index lease and loses nothing (optimize interleave)") {
@@ -251,6 +318,22 @@ class LexicalIndexSpec extends SparkTestBase {
     val onOptimize = intercept[IllegalStateException](
       Lexical.Index.optimize(spark, path, championSize = 4))
     assert(onOptimize.getMessage.contains("_schema.json"), onOptimize.getMessage)
+  }
+
+  test("an index without its announcement dir fails search, append and optimize by name") {
+    val path = s"${tmpDir("graft_lexidx_noannounce")}/idx"
+    Lexical.Index.build(Seq((1L, "alpha beta")).toDF("doc_id", "text"), "doc_id", "text", path,
+      championSize = 4)
+    val announced = new org.apache.hadoop.fs.Path(s"${Lexical.Index.subDir(spark, path, "postings")}/_appended")
+    assert(announced.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(announced, true))
+    val calls: Seq[() => Unit] = Seq(
+      () => Lexical.Index.search(spark, path, Seq((1L, "alpha")).toDF("q_id", "q_text"), "q_id", "q_text", k = 5),
+      () => Lexical.Index.append(Seq((2L, "alpha")).toDF("doc_id", "text"), "doc_id", "text", path, appendId = 0L),
+      () => Lexical.Index.optimize(spark, path, championSize = 4))
+    calls.foreach { call =>
+      val e = intercept[IllegalStateException](call())
+      assert(e.getMessage.contains("_appended"), e.getMessage)
+    }
   }
 
   test("concurrently returns only after every sibling finished, then rethrows the failure") {
