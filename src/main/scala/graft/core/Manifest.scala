@@ -108,9 +108,15 @@ final class TableManifest(spark: SparkSession, root: String) {
 
   /** One all-or-nothing publish cycle over any number of tables. Callers
     * [[Publish.land]] each table's updates (any disposition) as the run
-    * progresses (thread-safe: land and commit serialize on the publish),
-    * then [[Publish.commit]] once — the single point where ANY of it
-    * becomes visible.
+    * progresses, then [[Publish.commit]] once — the single point where ANY
+    * of it becomes visible.
+    *
+    * THREADS: lands into different tables run concurrently; lands into
+    * one table run one at a time, each holding that table's monitor from
+    * its lease through its recorded pending state. The publish's own
+    * monitor guards only the pending states and the committed flag, so a
+    * land that finds the publish committed (at its lease or when it
+    * records) fails, and [[commit]] flips whatever landed before it.
     *
     * CONCURRENCY (per-table, not per-root): the first land into a table
     * takes that TABLE's lease (`<root>/<table>__lock.e<N>`), held through
@@ -127,13 +133,29 @@ final class TableManifest(spark: SparkSession, root: String) {
     * so one writer errors instead of waiting.
     */
   final class Publish private[TableManifest] (owner: String) {
-    // table -> the state to commit (replaces the committed one)
-    private val pending = scala.collection.mutable.LinkedHashMap.empty[String, TableState]
+    // guarded by this publish's monitor: table -> the state to commit
+    // (replaces the committed one), the order the manifest lists new
+    // tables in, and whether the commit ran
+    private val pending = scala.collection.mutable.HashMap.empty[String, TableState]
+    private val order = scala.collection.mutable.LinkedHashSet.empty[String]
     private var committed = false
+    // table -> the monitor its lands hold, one land into a table at a time
+    private val tableMonitors = scala.collection.mutable.HashMap.empty[String, Object]
     // table -> its lease, first land through commit/abort, kept live: a
     // publish is often data-dependent-long (a big merge rewrite) and must
     // not be exposed to stale takeover mid-landing
     private val leases = new TableLock.Heartbeat(s"manifest-publish:$owner", TableLock.DefaultStaleMs)
+
+    private def pendingOf(name: String): Option[TableState] = synchronized(pending.get(name))
+
+    private def monitor(name: String): Object = synchronized(tableMonitors.getOrElseUpdate(name, new Object))
+
+    /** Fix the order in which [[commit]] lists `tables` in the manifest
+      * (tables landed without a reservation follow in land order). A
+      * caller landing several tables concurrently reserves them first, so
+      * the manifest file does not depend on which land finished first.
+      */
+    def reserve(tables: Seq[String]): Unit = synchronized(tables.foreach(order += Naming.normalize(_)))
 
     /** First touch of a table in this publish: take the table lease, then
       * refresh the committed view from disk (under OUR lease this table's
@@ -141,10 +163,16 @@ final class TableManifest(spark: SparkSession, root: String) {
       * sweep the table's crash orphans before their numbers can be
       * re-minted (the frontier's entry-sweep rule, now per table so it
       * can never delete a CONCURRENT publisher's uncommitted landings —
-      * those sit under tables whose leases the other writer holds).
+      * those sit under tables whose leases the other writer holds). A
+      * lease taken after the commit released its leases is given back.
       */
     private def leaseTable(name: String): Unit = if (!leases.holds(name)) {
-      leases.hold(name, TableLock.acquire(spark, s"$localRoot/$name", s"manifest-publish:$owner"))
+      val lease = TableLock.acquire(spark, s"$localRoot/$name", s"manifest-publish:$owner")
+      synchronized {
+        if (committed) lease.release()
+        require(!committed, "publish already committed")
+        leases.hold(name, lease)
+      }
       stateLock.synchronized(state.rollback())
       sweepTable(name)
     }
@@ -153,7 +181,7 @@ final class TableManifest(spark: SparkSession, root: String) {
       val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
       val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(dir)) return
-      val keep = (gens(table) ++ pending.get(table).fold(Seq.empty[String])(_.gens)).toSet
+      val keep = (gens(table) ++ pendingOf(table).fold(Seq.empty[String])(_.gens)).toSet
       fs.listStatus(dir).filter(_.isDirectory).foreach { g =>
         val gen = g.getPath.getName
         if (gen.matches("^g[0-9]+$") && !keep.contains(gen)) fs.delete(g.getPath, true)
@@ -168,10 +196,10 @@ final class TableManifest(spark: SparkSession, root: String) {
 
     /** The table's CURRENT state: landed in this publish, else committed. */
     private def current(name: String): Option[TableState] =
-      pending.get(name).orElse(snapshot(name))
+      pendingOf(name).orElse(snapshot(name))
 
     private def nextGen(name: String): String = {
-      val nums = (gens(name) ++ pending.get(name).fold(Seq.empty[String])(_.gens))
+      val nums = (gens(name) ++ pendingOf(name).fold(Seq.empty[String])(_.gens))
         .map(g => g.stripPrefix("g").toLong)
       s"g${if (nums.isEmpty) 1L else nums.max + 1L}"
     }
@@ -185,9 +213,14 @@ final class TableManifest(spark: SparkSession, root: String) {
       * schema and the new generation's count comes from parquet footer
       * metadata, so an append runs one Spark job (its write) however
       * many generations the table has accumulated.
+      *
+      * Thread-safe: lands into different tables overlap; a land into a
+      * table waits for an earlier land into the same table, holding the
+      * table's monitor from its lease to its recorded pending state. A
+      * land that finds the publish committed fails.
       */
-    def land(updates: DataFrame, hints: TableHints): Long = synchronized {
-      require(!committed, "publish already committed")
+    def land(updates: DataFrame, hints: TableHints): Long = {
+      synchronized(require(!committed, "publish already committed"))
       require(hints.bucketCount.isEmpty,
         "bucketed merge commits per-bucket in place and cannot ride a manifest publish — " +
           "use bucketCount = None for manifest-committed tables")
@@ -197,27 +230,33 @@ final class TableManifest(spark: SparkSession, root: String) {
       require(hints.disposition != Disposition.Scd2 || hints.scd2LoadTs.isDefined,
         s"manifest-committed scd2 table '$name' requires hints.scd2LoadTs — a " +
           "wall-clock default would make identical runs land different valid_from stamps")
-      leaseTable(name)
-      val gen = nextGen(name)
-      val genPath = s"$root/$name/$gen"
-      // overwrite: a crashed publish's orphan with the same number was
-      // swept at cycle start, but a racing retry inside one JVM could
-      // still leave one — committed generations are never re-targeted
-      val base = current(name)
-      // a delta's rows are aligned to the append's merged target, so its
-      // schema is the whole table's; a rewrite's is the new table's
-      val landed = MergeEngine.landing(base.map(load(name, _)), updates, hints) match {
-        case Landing.Delta(rows) =>
-          rows.write.mode("overwrite").parquet(genPath)
-          TableState(base.fold(Seq.empty[String])(_.gens) :+ gen,
-            base.fold(Seq.empty[Long])(_.counts) :+ ParquetFooters.rowCount(spark, genPath),
-            nullable(rows.schema))
-        case Landing.Rewrite(table) =>
-          table.write.mode("overwrite").parquet(genPath)
-          TableState(Seq(gen), Seq(ParquetFooters.rowCount(spark, genPath)), nullable(table.schema))
+      monitor(name).synchronized {
+        leaseTable(name)
+        val gen = nextGen(name)
+        val genPath = s"$root/$name/$gen"
+        // overwrite: a crashed publish's orphan with the same number was
+        // swept at cycle start, but a racing retry inside one JVM could
+        // still leave one — committed generations are never re-targeted
+        val base = current(name)
+        // a delta's rows are aligned to the append's merged target, so its
+        // schema is the whole table's; a rewrite's is the new table's
+        val landed = MergeEngine.landing(base.map(load(name, _)), updates, hints) match {
+          case Landing.Delta(rows) =>
+            rows.write.mode("overwrite").parquet(genPath)
+            TableState(base.fold(Seq.empty[String])(_.gens) :+ gen,
+              base.fold(Seq.empty[Long])(_.counts) :+ ParquetFooters.rowCount(spark, genPath),
+              nullable(rows.schema))
+          case Landing.Rewrite(table) =>
+            table.write.mode("overwrite").parquet(genPath)
+            TableState(Seq(gen), Seq(ParquetFooters.rowCount(spark, genPath)), nullable(table.schema))
+        }
+        synchronized {
+          require(!committed, "publish already committed")
+          pending(name) = landed
+          order += name
+        }
+        landed.counts.sum
       }
-      pending(name) = landed
-      landed.counts.sum
     }
 
     /** Flip every landed table's committed pointer in ONE atomic manifest
@@ -242,11 +281,11 @@ final class TableManifest(spark: SparkSession, root: String) {
         s"manifest-commit:$owner", waitMs = 60000L) {
         stateLock.synchronized {
           state.rollback()
-          pending.foreach { case (name, t) =>
+          order.foreach(name => pending.get(name).foreach { t =>
             state.putList(Prefix + name, t.gens)
             state.putList(CountsPrefix + name, t.counts.map(_.toString))
             state.put(SchemaPrefix + name, t.schema.json)
-          }
+          })
           state.commit()
         }
       }

@@ -187,9 +187,12 @@ object Lexical {
     * (which compacts only live leaves); the retry overwrites the orphan
     * leaves and lands the batch once. A retry of an announced batch writes
     * nothing, and a different batch under an announced id fails by name.
-    * Ids are checked within the current generation only: `optimize`
-    * compacts the announced batches into the build leaves, so a batch
-    * replayed after an optimize lands a second time. Appended postings
+    * `optimize` compacts the announced batches into the build leaves and
+    * carries their ids, with their doc counts, forward into the new
+    * generation's `postings@gN/_compacted` (one `<id> <n_docs>` line per
+    * batch ever compacted; never a leaf), and `append` treats a compacted
+    * id like an announced one: a replay after an optimize writes nothing,
+    * a different batch under it fails by name. Appended postings
     * are all candidates until the next optimize (bounded while batches
     * are small relative to the indexed corpus, exactly the
     * incremental-LSH trade), and every probe reads every pending leaf.
@@ -211,6 +214,7 @@ object Lexical {
 
     private val SchemaFile = "_schema.json"
     private val Announced = "_appended"
+    private val Compacted = "_compacted"
     private val IdfSchema = StructType.fromDDL("term STRING, df BIGINT")
     private val MetaSchema = StructType.fromDDL("n_docs BIGINT")
 
@@ -247,13 +251,14 @@ object Lexical {
         .select(col("term"), col("id"), col("tf"), col("crank"))
     }
 
-    /** Record the postings data schema in `dir` (a `_` name, which
-      * scans skip), so probes read by explicit path without inferring it.
+    /** Write `text` to the file `name` in `dir` (a `_` name, which scans
+      * skip): the recorded postings schema, so probes read by explicit
+      * path without inferring it, and the compacted batch ids.
       */
-    private def recordSchema(spark: SparkSession, dir: String, schema: StructType): Unit = {
-      val p = new Path(dir, SchemaFile)
+    private def writeFile(spark: SparkSession, dir: String, name: String, text: String): Unit = {
+      val p = new Path(dir, name)
       val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
-      try out.write(schema.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
       finally out.close()
     }
 
@@ -314,6 +319,19 @@ object Lexical {
               bucket(st.getPath.getName.stripPrefix("__tb=").toLong) => st.getPath.toString
         } ++ batches.map(leaf("postings", _))
 
+      /** Batches an earlier `optimize` compacted into the build leaves,
+        * with their doc counts (no `_compacted` file: none).
+        */
+      lazy val compacted: Map[Long, Long] = {
+        val in = try Some(fs.open(new Path(dir("postings"), Compacted)))
+        catch { case _: java.io.FileNotFoundException => None }
+        in.fold(Map.empty[Long, Long]) { in =>
+          try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8).linesIterator
+            .map(_.split(' ')).map { case Array(id, n) => id.toLong -> n.toLong }.toMap
+          finally in.close()
+        }
+      }
+
       /** Make batch `ab`'s (fully written) leaves live: one atomic create. */
       def announce(ab: Long): Unit = fs.create(new Path(announced, ab.toString), false).close()
     }
@@ -324,28 +342,33 @@ object Lexical {
       graft.core.Generations.resolve(spark, path, sub)
 
     /** Write generation `gen`'s build leaves — `ranked` postings bucketed
-      * by term, the `df` table and the `docs` count — concurrently, then
-      * commit the generation and sweep old ones. The three writes are
+      * by term, the `df` table and the `docs` count, with the `compacted`
+      * batch ids — concurrently, then commit the generation and sweep old
+      * ones. The three writes are
       * independent and all land BEFORE the atomic commit, so they overlap
       * (Spark actions run one after another only when one thread submits
       * them — the idf/meta jobs back-fill executors the postings write's
       * tail leaves idle).
       */
     private def commitGeneration(spark: SparkSession, path: String, gen: Long,
-        ranked: => DataFrame, df: => DataFrame, docs: => Long): Unit = {
+        ranked: => DataFrame, df: => DataFrame, docs: => Long, compacted: => Map[Long, Long]): Unit = {
       def d(sub: String) = graft.core.Generations.dir(path, sub, gen)
-      concurrently(
+      graft.core.Concurrently(spark)(
         () => {
           val r = ranked
           r.withColumn("__tb", termBucket(col("term")))
             .write.mode("overwrite").partitionBy("__tb").parquet(s"${d("postings")}/__ab=-1")
-          recordSchema(spark, d("postings"), r.schema)
+          writeFile(spark, d("postings"), SchemaFile, r.schema.json)
           val announced = new Path(d("postings"), Announced) // empty until an append lands
           announced.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(announced)
         },
         () => df.write.mode("overwrite").parquet(s"${d("idf")}/__ab=-1"),
-        () => spark.createDataFrame(Seq(Tuple1(docs))).toDF("n_docs")
-          .write.mode("overwrite").parquet(s"${d("meta")}/__ab=-1"))
+        () => {
+          spark.createDataFrame(Seq(Tuple1(docs))).toDF("n_docs")
+            .write.mode("overwrite").parquet(s"${d("meta")}/__ab=-1")
+          if (compacted.nonEmpty) writeFile(spark, d("postings"), Compacted,
+            compacted.toSeq.sorted.map { case (id, n) => s"$id $n\n" }.mkString)
+        })
       graft.core.Generations.commit(spark, path, gen)
       graft.core.Generations.gc(spark, path, gen)
     }
@@ -378,30 +401,9 @@ object Lexical {
         // are (term, id)-distinct by construction, so this needs no
         // second corpus tokenize
         staged.groupBy("term").agg(count(lit(1)).as("df")),
-        docs.count())
+        docs.count(),
+        Map.empty)
       deleteDir(spark, stage)
-    }
-
-    /** Run independent write actions concurrently. Every action is
-      * awaited before the first failure is rethrown (later ones ride
-      * along as suppressed), so no idf/meta/postings write outlives the
-      * index TableLock its caller holds.
-      */
-    private[ops] def concurrently(fs: (() => Unit)*): Unit = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(fs.size)
-      try {
-        val futures = fs.map(f => pool.submit(new java.util.concurrent.Callable[Unit] {
-          override def call(): Unit = f()
-        }))
-        val failures = futures.flatMap { f =>
-          try { f.get(); None }
-          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
-        }
-        failures.headOption.foreach { first =>
-          failures.tail.foreach(first.addSuppressed)
-          throw first
-        }
-      } finally pool.shutdown()
     }
 
     private def deleteDir(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
@@ -424,8 +426,9 @@ object Lexical {
       *
       * `appendId` is the caller's batch identity and carries the
       * semantics: SAME id = retry of the same batch (a no-op once it is
-      * announced), DISTINCT batches MUST use distinct ids — a batch whose
-      * doc count differs from the announced batch of its id throws an
+      * announced, and after an `optimize` compacted it), DISTINCT batches
+      * MUST use distinct ids — a batch whose doc count differs from the
+      * landed batch of its id throws an
       * IllegalStateException naming the id. No default, precisely so
       * callers must choose.
       */
@@ -436,27 +439,31 @@ object Lexical {
       // appends land INSIDE the current generation — the generation only
       // flips on build/optimize
       val live = new Live(spark, path)
-      if (live.batches.contains(appendId)) {
-        val landed = read(spark, MetaSchema, Seq(live.leaf("meta", appendId))).head.getLong(0)
-        val docs = batch.count()
-        if (docs != landed) throw new IllegalStateException(
-          s"appendId $appendId already landed a batch of $landed docs, not this one of $docs: " +
-            "distinct batches need distinct appendIds")
-      } else {
-        val postings = live.leaf("postings", appendId)
-        postingsOf(batch, idCol, textCol)
-          .withColumn("crank", lit(0L)) // pending: candidate until optimize
-          .write.mode("overwrite").parquet(postings)
-        // ONE batch tokenize: df(term) derives from the just-written
-        // postings leaf; idf and meta are mutually independent, so they
-        // overlap
-        concurrently(
-          () => read(spark, StructType.fromDDL("term STRING"), Seq(postings))
-            .groupBy("term").agg(count(lit(1)).as("df"))
-            .write.mode("overwrite").parquet(live.leaf("idf", appendId)),
-          () => spark.createDataFrame(Seq(Tuple1(batch.count()))).toDF("n_docs")
-            .write.mode("overwrite").parquet(live.leaf("meta", appendId)))
-        live.announce(appendId)
+      val landed =
+        if (live.batches.contains(appendId))
+          Some(read(spark, MetaSchema, Seq(live.leaf("meta", appendId))).head.getLong(0))
+        else live.compacted.get(appendId)
+      landed match {
+        case Some(n) =>
+          val docs = batch.count()
+          if (docs != n) throw new IllegalStateException(
+            s"appendId $appendId already landed a batch of $n docs, not this one of $docs: " +
+              "distinct batches need distinct appendIds")
+        case None =>
+          val postings = live.leaf("postings", appendId)
+          postingsOf(batch, idCol, textCol)
+            .withColumn("crank", lit(0L)) // pending: candidate until optimize
+            .write.mode("overwrite").parquet(postings)
+          // ONE batch tokenize: df(term) derives from the just-written
+          // postings leaf; idf and meta are mutually independent, so they
+          // overlap
+          graft.core.Concurrently(spark)(
+            () => read(spark, StructType.fromDDL("term STRING"), Seq(postings))
+              .groupBy("term").agg(count(lit(1)).as("df"))
+              .write.mode("overwrite").parquet(live.leaf("idf", appendId)),
+            () => spark.createDataFrame(Seq(Tuple1(batch.count()))).toDF("n_docs")
+              .write.mode("overwrite").parquet(live.leaf("meta", appendId)))
+          live.announce(appendId)
       }
     }
 
@@ -467,7 +474,9 @@ object Lexical {
       * window where a concurrent reader can see a half-replaced directory
       * or mismatched postings/idf/meta (reads of the old generation stay
       * valid through the one-generation GC grace). Leaves of an
-      * unannounced batch are not live, so they are not compacted.
+      * unannounced batch are not live, so they are not compacted. The
+      * compacted batches' ids and doc counts join those of earlier
+      * optimizes in the new generation's `_compacted` file.
       */
     def optimize(spark: org.apache.spark.sql.SparkSession, path: String,
         championSize: Int): Unit = locked(spark, path, "optimize") {
@@ -475,10 +484,15 @@ object Lexical {
       // pre-read checkpoint needed anywhere
       val live = new Live(spark, path)
       val schema = postingsSchema(spark, live.dir("postings"))
+      // n_docs per live meta leaf, by batch id (-1 = build): one job
+      lazy val docs = read(spark, MetaSchema, live.leaves("meta"))
+        .select(regexp_extract(input_file_name(), "/__ab=(-?[0-9]+)/", 1).cast("long"), col("n_docs"))
+        .collect().groupMapReduce(_.getLong(0))(_.getLong(1))(_ + _)
       commitGeneration(spark, path, live.gen + 1,
         withCrank(read(spark, schema, live.postings(_ => true)).select("term", "id", "tf"), championSize),
         read(spark, IdfSchema, live.leaves("idf")).groupBy("term").agg(sum("df").as("df")),
-        read(spark, MetaSchema, live.leaves("meta")).agg(sum("n_docs")).head.getLong(0))
+        docs.values.sum,
+        live.compacted ++ (docs - -1L))
     }
 
     /** Probe: champion rows (crank >= 1) and PENDING appended rows

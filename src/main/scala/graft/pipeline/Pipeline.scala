@@ -62,6 +62,11 @@ object Pipeline {
     * by the pipeline before normalization.
     */
   val HintVariantCol = "_graft_hint_variant"
+
+  /** One table's share of an extract: its final normalized name, its
+    * rows (a lazy plan — planning runs no job) and its hints.
+    */
+  private final case class Planned(table: String, rows: DataFrame, hints: TableHints)
 }
 
 /** The pipeline driver: extract → normalize → write → state commit
@@ -92,6 +97,7 @@ final class Pipeline(
       */
     manifestCommit: Boolean = false,
 ) {
+  import Pipeline.Planned
 
   /** The destination manifest (only meaningful with `manifestCommit`). */
   lazy val manifest: TableManifest = new TableManifest(spark, destRoot)
@@ -129,26 +135,25 @@ final class Pipeline(
 
     def process(res: ResourceDef): Seq[LoadResult] = {
       val ctx = new PipelineContext(spark, state, built.toMap)
-      var df = res.build(ctx)
-      res.incremental.foreach { case (inc, _) =>
-        df = inc.apply(df, state, cursorKey(source, res))
+      val extracted = res.build(ctx)
+      val df = res.incremental.fold(extracted) { case (inc, _) =>
+        inc.apply(extracted, state, cursorKey(source, res))
       }
       built.put(res.name, df)
       if (!res.selected) Nil
       else {
-        // incremental high-water mark, computed on the filtered batch but
-        // committed only after all writes succeed. NOT committed while an
-        // external scheduler window is active: a backfill run over an old
-        // interval must leave the committed cursor where it was — advancing
-        // it to the interval's max would regress the high-water mark and
-        // re-ingest everything after the interval on the next normal run
-        // (the gap-free/re-runnable property orchestrator windows exist for).
-        res.incremental.foreach { case (inc, _) =>
-          if (!inc.externalWindowActive) {
-            inc.nextCursor(df).foreach(v => pendingCursor += (cursorKey(source, res) -> v))
-          }
+        // incremental high-water mark, computed on the filtered batch
+        // beside the writes but committed only after all of them
+        // succeed. NOT committed while an external scheduler window is
+        // active: a backfill run over an old interval must leave the
+        // committed cursor where it was — advancing it to the interval's
+        // max would regress the high-water mark and re-ingest everything
+        // after the interval on the next normal run (the
+        // gap-free/re-runnable property orchestrator windows exist for).
+        val cursor = res.incremental.collect { case (inc, _) if !inc.externalWindowActive =>
+          () => inc.nextCursor(df).foreach(v => pendingCursor += (cursorKey(source, res) -> v))
         }
-        writeRouted(df, res)
+        writeRouted(df, res, cursor.toSeq)
       }
     }
 
@@ -195,9 +200,10 @@ final class Pipeline(
     * source scan + one bounded stage, and the per-table reads are
     * partition-pruned to their own directory. Rows with a null routing
     * value are dropped (they name no table). No routing column = single
-    * table, no stage.
+    * table, no stage. Every table lands through [[landAll]], beside the
+    * `alongside` tasks.
     */
-  private def writeRouted(df: DataFrame, res: ResourceDef): Seq[LoadResult] = {
+  private def writeRouted(df: DataFrame, res: ResourceDef, alongside: Seq[() => Unit]): Seq[LoadResult] = {
     res.routingColumn match {
       case None if df.columns.contains(Pipeline.HintVariantCol) =>
         // item-level variant marks (create_table_variant): NULL-marked
@@ -208,14 +214,14 @@ final class Pipeline(
         val vc = Pipeline.HintVariantCol
         val keyed = df.withColumn(vc,
           coalesce(col(vc).cast("string"), lit(BaseVariantSentinel)))
-        stagedFanOut(keyed, vc, res, dropNulls = false) { v =>
+        stagedFanOut(keyed, vc, res, dropNulls = false, alongside) { v =>
           if (v == BaseVariantSentinel) res.hints
           else variantHints(res, v, Naming.normalize(v)).copy(tableName = Naming.normalize(v))
         }
       case None =>
-        writeNormalized(df, res.hints)
+        landAll(normalized(df, res.hints), alongside)
       case Some(rc) =>
-        stagedFanOut(df, rc, res, dropNulls = true) { v =>
+        stagedFanOut(df, rc, res, dropNulls = true, alongside) { v =>
           val routeName = if (v == EmptyRouteSentinel) "" else v
           val name = Naming.normalize(s"${res.hints.tableName}_$routeName")
           variantHints(res, routeName, name).copy(tableName = name)
@@ -235,10 +241,13 @@ final class Pipeline(
     * The previous shape — one filtered scan per routed value — made a
     * Slack/Kafka-style fan-out to hundreds of tables hundreds of source
     * scans; this is one source scan + one bounded stage, and the
-    * per-table reads are partition-pruned to their own directory.
+    * per-table reads are partition-pruned to their own directory. The
+    * values' tables are planned in sorted value order and land
+    * concurrently ([[landAll]]); the stage is deleted once every land
+    * has finished.
     */
   private def stagedFanOut(df: DataFrame, keyCol: String, res: ResourceDef,
-      dropNulls: Boolean)(hintsFor: String => TableHints): Seq[LoadResult] = {
+      dropNulls: Boolean, alongside: Seq[() => Unit])(hintsFor: String => TableHints): Seq[LoadResult] = {
     val stage = s"$destRoot/__stage/${Naming.normalize(res.hints.tableName)}_" +
       currentLoadId.getOrElse("run")
     val hconf = spark.sparkContext.hadoopConfiguration
@@ -267,10 +276,9 @@ final class Pipeline(
         df.schema.fields.filterNot(_.name == keyCol) :+
           org.apache.spark.sql.types.StructField(keyCol, org.apache.spark.sql.types.StringType))
       val staged = spark.read.schema(stagedSchema).parquet(stage)
-      values.sorted.flatMap { v =>
-        val sub = staged.filter(col(keyCol) === v).drop(keyCol)
-        writeNormalized(sub, hintsFor(v))
-      }
+      landAll(values.sorted.flatMap { v =>
+        normalized(staged.filter(col(keyCol) === v).drop(keyCol), hintsFor(v))
+      }, alongside)
     } finally fs.delete(stagePath, true)
   }
 
@@ -280,34 +288,52 @@ final class Pipeline(
 
   private var currentLoadId: Option[String] = None
 
-  /** Normalize (parent + child tables), then apply the disposition to each
-    * produced table. Child tables always merge on `_dlt_id` when the root
-    * merges (re-runs replace children deterministically since ids are
+  /** Normalize (parent + child tables) and plan each produced table.
+    * Child tables always merge on `_dlt_id` when the root merges
+    * (re-runs replace children deterministically since ids are
     * content-derived). Every row carries `_dlt_load_id` for run lineage
     * (the dlt framework column).
     */
-  private def writeNormalized(df0: DataFrame, hints: TableHints): Seq[LoadResult] = {
+  private def normalized(df0: DataFrame, hints: TableHints): Seq[Planned] = {
     val df = currentLoadId match {
       case Some(id) if !df0.columns.contains("_dlt_load_id") =>
         df0.withColumn("_dlt_load_id", lit(id))
       case _ => df0
     }
-    val tables = Normalize.normalize(df, hints)
-    tables.toSeq.map { case (name, tdf) =>
+    Normalize.normalize(df, hints).toSeq.map { case (name, tdf) =>
       val childHints =
         if (name == Naming.normalize(hints.tableName)) hints.copy(tableName = name)
         else hints.copy(tableName = name, primaryKey = Seq(Normalize.DltId), dedupSort = None, hardDeleteCol = None)
-      currentPublish match {
-        case Some(pub) =>
-          // manifest mode: LAND only — nothing is reader-visible until the
-          // run's single pointer flip in run()
-          LoadResult(name, pub.land(tdf, childHints))
-        case None =>
-          TableWriter.write(spark, tdf, destRoot, childHints)
-          // footer metadata, not a scan: the old full-table count() here
-          // was one extra whole-table job per table per run
-          LoadResult(name, graft.core.ParquetFooters.rowCount(spark, s"$destRoot/$name"))
-      }
+      Planned(name, tdf, childHints)
     }
+  }
+
+  /** Land an extract's planned tables, and run `alongside` (the cursor
+    * aggregate), as overlapping Spark actions ([[graft.core.Concurrently]]).
+    * Plans naming one table land one after another in plan order — two
+    * concurrent writers of a table would fail each other's lease — while
+    * different tables land concurrently; the results come back in plan
+    * order, and in manifest mode the tables are reserved in that order
+    * first, so the manifest lists them as a serial run would. Every task
+    * has finished before a failure is rethrown.
+    */
+  private def landAll(plan: Seq[Planned], alongside: Seq[() => Unit]): Seq[LoadResult] = {
+    val groups = plan.zipWithIndex.groupBy(_._1.table).values.toSeq.sortBy(_.head._2)
+    currentPublish.foreach(_.reserve(groups.map(_.head._1.table)))
+    val landed = Concurrently(spark)(alongside.map(f => () => { f(); Seq.empty[(Int, LoadResult)] }) ++
+      groups.map(g => () => g.map { case (p, i) => i -> land(p) }): _*)
+    landed.flatten.sortBy(_._1).map(_._2)
+  }
+
+  private def land(p: Planned): LoadResult = currentPublish match {
+    case Some(pub) =>
+      // manifest mode: LAND only — nothing is reader-visible until the
+      // run's single pointer flip in run()
+      LoadResult(p.table, pub.land(p.rows, p.hints))
+    case None =>
+      TableWriter.write(spark, p.rows, destRoot, p.hints)
+      // footer metadata, not a scan: the old full-table count() here
+      // was one extra whole-table job per table per run
+      LoadResult(p.table, graft.core.ParquetFooters.rowCount(spark, s"$destRoot/${p.table}"))
   }
 }

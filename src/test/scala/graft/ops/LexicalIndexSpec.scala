@@ -153,6 +153,31 @@ class LexicalIndexSpec extends SparkTestBase {
       "q_id", "q_text", 5).select("id").as[Long].collect().toSeq == Seq(9000L))
   }
 
+  test("a batch replayed after an optimize compacted it is a no-op; a different batch under its id fails by name") {
+    val path = s"${tmpDir("graft_lexidx_replay")}/idx"
+    Lexical.Index.build(corpus.limit(50), "doc_id", "text", path, championSize = 16)
+    def sub(name: String) = spark.read.parquet(Lexical.Index.subDir(spark, path, name))
+    def nDocs(): Long = sub("meta").agg(sum("n_docs")).as[Long].head()
+    def freshDf(): Long = sub("idf").filter(col("term") === "freshterm").agg(coalesce(sum("df"), lit(0L)))
+      .as[Long].head()
+    val batch = Seq((9000L, "freshterm common1")).toDF("doc_id", "text")
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 3L)
+    Lexical.Index.optimize(spark, path, championSize = 16)
+    assert((nDocs(), freshDf()) == ((51L, 1L)))
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 3L)
+    assert((nDocs(), freshDf()) == ((51L, 1L)), "the replayed batch landed a second time")
+    // the compacted id survives a second optimize too
+    Lexical.Index.optimize(spark, path, championSize = 16)
+    val two = Seq((9001L, "freshterm"), (9002L, "freshterm")).toDF("doc_id", "text")
+    val e = intercept[IllegalStateException](
+      Lexical.Index.append(two, "doc_id", "text", path, appendId = 3L))
+    assert(e.getMessage.contains("appendId 3"), e.getMessage)
+    Lexical.Index.append(batch, "doc_id", "text", path, appendId = 3L)
+    assert((nDocs(), freshDf()) == ((51L, 1L)))
+    assert(Lexical.Index.search(spark, path, Seq((1L, "freshterm")).toDF("q_id", "q_text"),
+      "q_id", "q_text", 5).select("id").as[Long].collect().toSeq == Seq(9000L))
+  }
+
   test("append queues behind a held index lease and loses nothing (optimize interleave)") {
     val path = s"${tmpDir("graft_lexidx_lock")}/idx"
     Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
@@ -339,7 +364,7 @@ class LexicalIndexSpec extends SparkTestBase {
   test("concurrently returns only after every sibling finished, then rethrows the failure") {
     val slowDone = new java.util.concurrent.atomic.AtomicBoolean(false)
     val boom = intercept[IllegalStateException] {
-      Lexical.Index.concurrently(
+      graft.core.Concurrently(spark)(
         () => throw new IllegalStateException("boom"),
         () => { Thread.sleep(500); slowDone.set(true) })
     }

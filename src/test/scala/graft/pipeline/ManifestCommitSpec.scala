@@ -291,4 +291,34 @@ class ManifestCommitSpec extends SparkTestBase {
     assert(m.tables.toSet == Set("a", "b"), s"a concurrent commit was lost: ${m.tables}")
     assert(m.read("a").get.count() == 3 && m.read("b").get.count() == 3)
   }
+
+  test("one publish lands two tables at once; the commit lists them in reserved order; a later land fails") {
+    val dest = tmpDir("mani-overlap")
+    val m = new TableManifest(spark, dest)
+    val p = m.publish()
+    p.reserve(Seq("b", "a"))
+    // each land's write job waits, inside the land, for the other land's
+    // to start: a publish-wide monitor around land would time this out
+    val bothStarted = new java.util.concurrent.CountDownLatch(2)
+    def landing(table: String, n: Int): () => Long =
+      () => p.land(rows(n, "v1"), TableHints(table, Disposition.Replace))
+    val counts = LandGate.armed(spark, dest) { table =>
+      bothStarted.countDown()
+      if (!bothStarted.await(20, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException(s"$table landed alone")
+    } { Concurrently(spark)(landing("a", 3), landing("b", 4)) }
+    assert(counts == Seq(3L, 4L))
+    p.commit()
+    val manifest = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(dest, "_manifest.json")), "UTF-8")
+    assert(manifest.indexOf("\"tables.b\"") < manifest.indexOf("\"tables.a\""),
+      s"the commit did not follow the reserved order: $manifest")
+    val late = intercept[IllegalArgumentException](p.land(rows(1, "v2"), TableHints("a", Disposition.Append)))
+    assert(late.getMessage.contains("publish already committed"))
+    // the refused land left no lease behind: a new publish lands the table
+    val p2 = m.publish()
+    p2.land(rows(1, "v2"), TableHints("a", Disposition.Append))
+    p2.commit()
+    assert(m.read("a").get.count() == 4 && m.read("b").get.count() == 4)
+  }
 }

@@ -227,6 +227,66 @@ class PipelineSpec extends SparkTestBase {
     }
   }
 
+  test("routed tables land concurrently: each land's job waits for the other's to start") {
+    val dest = tmpDir("pipe-overlap")
+    val pipe = new Pipeline(spark, "p", dest, tmpDir("pipe-overlap-state"))
+    val res = ResourceDef("ev", TableHints("ev", Disposition.Replace),
+      _ => eventsDf(6), routingColumn = Some("kind"))
+    // one land alone never opens the latch: a run that lands its tables
+    // one after another fails here after the timeout
+    val bothStarted = new java.util.concurrent.CountDownLatch(2)
+    val results = LandGate.armed(spark, dest) { table =>
+      bothStarted.countDown()
+      if (!bothStarted.await(20, java.util.concurrent.TimeUnit.SECONDS))
+        throw new IllegalStateException(s"$table's land ran alone: the other land never started")
+    } { pipe.run(SourceDef("s", Seq(res))) }
+    assert(results == Seq(LoadResult("ev_t0", 3), LoadResult("ev_t1", 3)))
+    assert(spark.read.parquet(s"$dest/ev_t0").count() == 3 && spark.read.parquet(s"$dest/ev_t1").count() == 3)
+  }
+
+  test("a failed routed land rethrows only after its sibling land finished; no table or cursor moves") {
+    val dest = tmpDir("pipe-fail")
+    val stateDir = tmpDir("pipe-fail-state")
+    val pipe = new Pipeline(spark, "p", dest, stateDir, manifestCommit = true)
+    def src(upTo: Int) = SourceDef("s", Seq(ResourceDef("ev",
+      TableHints("ev", Disposition.Append),
+      _ => eventsDf(upTo).withColumn("route", when(col("id") % 2 === 0, "bad").otherwise("slow")),
+      routingColumn = Some("route"),
+      incremental = Some((Incremental(Seq("day")), "day")))))
+    def cursor() = StateStore(stateDir, "p.s").getString("s.ev.cursor")
+    def counts() = Seq("ev_bad", "ev_slow").map(t => pipe.manifest.read(t).get.count())
+    pipe.run(src(4))
+    assert(cursor().contains("2024-01-04") && counts() == Seq(2L, 2L))
+
+    val e = intercept[IllegalStateException] {
+      LandGate.armed(spark, dest) {
+        case "ev_bad" => throw new IllegalStateException("planted land failure")
+        case _        => Thread.sleep(1500)
+      } { pipe.run(src(8)) }
+    }
+    assert(e.getMessage == "planted land failure")
+    // a run landing its tables in order stops at ev_bad, before ev_slow
+    assert(LandGate.done.contains("ev_slow"), "the run rethrew while its sibling land was still running")
+    assert(cursor().contains("2024-01-04"), "a failed run committed its cursor")
+    assert(counts() == Seq(2L, 2L), "a failed run changed a manifest table")
+
+    // the leases were released: the retry lands both tables and the cursor
+    assert(pipe.run(src(8)) == Seq(LoadResult("ev_bad", 4), LoadResult("ev_slow", 4)))
+    assert(cursor().contains("2024-01-08") && counts() == Seq(4L, 4L))
+  }
+
+  test("routed values that normalize to one table land one after another, both batches kept") {
+    val dest = tmpDir("pipe-samename")
+    val pipe = new Pipeline(spark, "p", dest, tmpDir("pipe-samename-state"))
+    val df = Seq((1L, "A b"), (2L, "a_b"), (3L, "a_b"), (4L, "c")).toDF("id", "kind")
+    val res = ResourceDef("ev", TableHints("ev", Disposition.Append), _ => df, routingColumn = Some("kind"))
+    val results = LandGate.armed(spark, dest)(_ => Thread.sleep(300)) { pipe.run(SourceDef("s", Seq(res))) }
+    // "A b" and "a_b" both name ev_a_b: two appends in sorted value order
+    assert(results == Seq(LoadResult("ev_a_b", 1), LoadResult("ev_a_b", 3), LoadResult("ev_c", 1)))
+    assert(LandGate.maxInFlight.get("ev_a_b") == 1, "two lands into one table overlapped")
+    assert(spark.read.parquet(s"$dest/ev_a_b").select("id").as[Long].collect().sorted.toSeq == Seq(1L, 2L, 3L))
+  }
+
   test("cycles and unknown parents are rejected") {
     val pipe = new Pipeline(spark, "p", tmpDir("d"), tmpDir("s"))
     val a = ResourceDef("a", TableHints("a"), _ => Seq(1).toDF("x"), parentName = Some("b"))
@@ -234,5 +294,77 @@ class PipelineSpec extends SparkTestBase {
     intercept[IllegalArgumentException](pipe.run(SourceDef("s", Seq(a, b))))
     val orphan = ResourceDef("o", TableHints("o"), _ => Seq(1).toDF("x"), parentName = Some("ghost"))
     intercept[IllegalArgumentException](pipe.run(SourceDef("s", Seq(orphan))))
+  }
+}
+
+/** A hook on every parquet job a spec's lands run, at the job's output
+  * committer (the staged fan-out evaluates the source once, at staging,
+  * so per-land behaviour has to be planted on the land's own write).
+  * `action` runs on the driver when a land's job sets up, keyed by
+  * table; `done` holds the tables whose land jobs committed, and
+  * `maxInFlight` the most land jobs of one table that were set up and
+  * not yet finished at once.
+  */
+object LandGate {
+  @volatile var root: String = ""
+  @volatile var action: String => Unit = _ => ()
+  val done = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  private val inFlight = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+  val maxInFlight = new java.util.concurrent.ConcurrentHashMap[String, Int]()
+
+  /** Route every parquet write of `body` through the gate for tables
+    * under `dir` (the pipeline's own `__stage` dir excluded).
+    */
+  def armed[T](spark: org.apache.spark.sql.SparkSession, dir: String)(act: String => Unit)(body: => T): T = {
+    val key = "spark.sql.parquet.output.committer.class"
+    val before = spark.conf.getOption(key)
+    root = dir
+    action = act
+    done.clear(); inFlight.clear(); maxInFlight.clear()
+    spark.conf.set(key, classOf[LandGateCommitter].getName)
+    try body
+    finally {
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      action = _ => ()
+    }
+  }
+
+  def tableOf(out: org.apache.hadoop.fs.Path): Option[String] = {
+    val path = out.toUri.getPath
+    val rel = path.stripPrefix(root + "/")
+    if (root.isEmpty || rel == path || rel.startsWith("__stage/")) None
+    else Some(rel.takeWhile(_ != '/').stripSuffix("__stage"))
+  }
+
+  def enter(table: String): Unit = {
+    val n = inFlight.merge(table, 1, _ + _)
+    maxInFlight.merge(table, n, math.max)
+    action(table)
+  }
+
+  def exit(table: String, committed: Boolean): Unit = {
+    inFlight.merge(table, -1, _ + _)
+    if (committed) done.add(table)
+  }
+}
+
+class LandGateCommitter(out: org.apache.hadoop.fs.Path, ctx: org.apache.hadoop.mapreduce.TaskAttemptContext)
+    extends org.apache.parquet.hadoop.ParquetOutputCommitter(out, ctx) {
+  private val table = LandGate.tableOf(out)
+
+  override def setupJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    table.foreach(LandGate.enter)
+    super.setupJob(job)
+  }
+
+  override def commitJob(job: org.apache.hadoop.mapreduce.JobContext): Unit = {
+    super.commitJob(job)
+    table.foreach(LandGate.exit(_, committed = true))
+  }
+
+  override def abortJob(job: org.apache.hadoop.mapreduce.JobContext,
+      state: org.apache.hadoop.mapreduce.JobStatus.State): Unit = {
+    super.abortJob(job, state)
+    table.foreach(LandGate.exit(_, committed = false))
   }
 }
