@@ -574,7 +574,7 @@ object RestEngine {
     */
   private final class IncrementalRead(source: RestSource, resource: RestResource,
       state: Option[StateStore]) {
-    private val stateKey = s"${source.name}.${resource.name}.cursor"
+    private val stateKey = cursorKey(source, resource)
     val lastValue: Option[String] = resource.endpoint.incremental.flatMap(b =>
       state.flatMap(_.getString(stateKey)).orElse(b.initialValue)
         .map(v => Incremental.rewindDays(v, b.lagDays)))
@@ -595,6 +595,20 @@ object RestEngine {
       case _ => df
     }
   }
+
+  private def cursorKey(source: RestSource, resource: RestResource): String =
+    s"${source.name}.${resource.name}.cursor"
+
+  /** Put `read`'s highest cursor value into `state` if it passes the
+    * committed one; the caller commits `state` once its writes succeed. */
+  def advanceCursor(source: RestSource, resource: RestResource, read: DataFrame, state: StateStore): Unit =
+    resource.endpoint.incremental.foreach { b =>
+      val field = leafField(b.cursorPath)
+      if (read.columns.contains(field))
+        Incremental(Seq(field)).nextCursor(read)
+          .filterNot(v => state.getString(cursorKey(source, resource)).exists(Incremental.cursorLeq(v, _)))
+          .foreach(state.put(cursorKey(source, resource), _))
+    }
 
   /** Partition-parallel root-resource read: when the paginator is an
     * Offset/PageNumber with a known total ([[Paginator.Offset.totalPath]]),

@@ -27,20 +27,22 @@ import org.apache.spark.sql.SparkSession
   * intact and fully consistent; re-running the build/optimize overwrites
   * the orphan next-generation dirs and heals.
   *
-  * GC keeps a ONE-GENERATION GRACE: committing generation N deletes
-  * dirs and markers <= N-2, so a reader that resolved N-1 just before
-  * the flip finishes its scan untouched. A reader must not hold a
-  * resolved DataFrame across two full optimize cycles (document-level
-  * contract; queries resolve fresh per call).
+  * GC keeps a grace counted in generations AND in time: committing N
+  * deletes a generation G <= N-2 (dirs and marker) only once its
+  * successor's marker is [[GraceMs]] old, so a reader that resolved G
+  * fails only if two optimize cycles AND GraceMs pass before its collect.
   *
   * Markers follow the TableLock epoch idiom: state transitions are
-  * creates of NEW files — no rename, no delete in the commit path — so
-  * commit is atomic on any filesystem with atomic create.
+  * creates of NEW files ([[EpochFiles.create]]) — no rename, no delete in
+  * the commit path — so commit is atomic on any filesystem with atomic
+  * create.
   */
 object Generations {
 
   private val MarkerPrefix = "_gen.e"
-  private val log = org.slf4j.LoggerFactory.getLogger(Generations.getClass)
+
+  /** How long a superseded generation outlives its successor's commit. */
+  private[graft] val GraceMs: Long = 10L * 60 * 1000
 
   private def fsOf(spark: SparkSession, root: String): (FileSystem, Path) = {
     val p = new Path(root)
@@ -53,14 +55,7 @@ object Generations {
   /** Highest committed generation, if the index has ever been built. */
   def current(spark: SparkSession, root: String): Option[Long] = {
     val (fs, p) = fsOf(spark, root)
-    if (!fs.exists(p)) None
-    else
-      fs.listStatus(p).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isFile && n.startsWith(MarkerPrefix))
-          n.stripPrefix(MarkerPrefix).toLongOption
-        else None
-      }.maxOption
+    EpochFiles.list(fs, p, MarkerPrefix).map(_._1).maxOption
   }
 
   /** The generation a build/optimize should write: current + 1, or 0 on
@@ -87,28 +82,29 @@ object Generations {
   def commit(spark: SparkSession, root: String, gen: Long): Unit = {
     val (fs, p) = fsOf(spark, root)
     fs.mkdirs(p)
-    val out = fs.create(new Path(p, MarkerPrefix + gen), false)
-    out.close()
+    if (!EpochFiles.create(fs, new Path(p, MarkerPrefix + gen), Array.emptyByteArray))
+      throw new IllegalStateException(s"index $root: generation $gen is already committed")
   }
 
-  /** Delete generation dirs and markers <= gen - 2 (one-generation grace
-    * for in-flight readers). Best-effort: a failed delete is logged at
-    * WARN and retried by the next cycle's GC.
+  /** Delete generation dirs and markers <= gen - 2 whose successor's
+    * marker is at least [[GraceMs]] old (the grace for in-flight readers;
+    * a generation whose successor marker is gone is past it). Best-effort
+    * ([[EpochFiles.sweep]]): a failed delete is retried by the next GC.
     */
   def gc(spark: SparkSession, root: String, gen: Long): Unit = {
     val (fs, p) = fsOf(spark, root)
     if (!fs.exists(p)) return
-    fs.listStatus(p).foreach { st =>
+    // (generation, entry): markers are the only files, dirs are `<sub>@g<N>`
+    val entries = fs.listStatus(p).toSeq.flatMap { st =>
       val n = st.getPath.getName
-      val g: Option[Long] =
-        if (st.isFile && n.startsWith(MarkerPrefix))
-          n.stripPrefix(MarkerPrefix).toLongOption
-        else if (st.isDirectory && n.contains("@g"))
-          n.substring(n.lastIndexOf("@g") + 2).toLongOption
-        else None
-      if (g.exists(_ <= gen - 2))
-        try { if (!fs.delete(st.getPath, true)) log.warn(s"gc could not delete ${st.getPath}; the next gc retries") }
-        catch { case e: java.io.IOException => log.warn(s"gc could not delete ${st.getPath}; the next gc retries", e) }
+      (if (st.isFile && n.startsWith(MarkerPrefix)) n.stripPrefix(MarkerPrefix).toLongOption
+       else if (st.isDirectory && n.contains("@g")) n.substring(n.lastIndexOf("@g") + 2).toLongOption
+       else None).map(_ -> st)
+    }
+    val committedAt = entries.collect { case (g, st) if st.isFile => g -> st.getModificationTime }.toMap
+    val graceEnd = System.currentTimeMillis() - GraceMs
+    entries.foreach { case (g, st) =>
+      if (g <= gen - 2 && committedAt.get(g + 1).forall(_ <= graceEnd)) EpochFiles.sweep(fs, st.getPath, "gc")
     }
   }
 }

@@ -1,7 +1,11 @@
 package graft.core
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.node.ObjectNode
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
+import scala.jdk.CollectionConverters._
 
 /** All-or-nothing multi-table commit — closes the one crash window the
   * per-table staged swap leaves open: a run loading N tables swaps each
@@ -14,18 +18,20 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
   * Discipline is the [[graft.ops.UrlFrontier]] pattern generalized to
   * tables: every table's new content LANDS FIRST in a fresh monotonic
   * generation dir (`<root>/<table>/g<N>` — never read by anyone until
-  * referenced), and ONE manifest commit LAST (`<root>/_manifest.json`,
-  * [[StateStore]]'s write-temp + atomic-move) flips every table's
-  * committed generation list together. A crash anywhere before the
-  * commit leaves only orphan dirs no reader ever resolves; after it,
-  * every table is new. Readers go through [[TableManifest.read]] — the
-  * manifest, not a directory glob, is the table.
+  * referenced), and ONE commit LAST — creating the next immutable epoch
+  * file `<root>/_manifest.e<N>` if absent, Delta Lake's put-if-absent log
+  * — flips every table's committed generation list together. A crash
+  * anywhere before the commit leaves only orphan dirs no reader ever
+  * resolves; after it, every table is new. Readers go through
+  * [[TableManifest.read]] — the manifest, not a directory glob, is the
+  * table — and every read and land resolves the newest epoch from disk,
+  * so each sees every commit, whoever made it (a root holding only a
+  * `_manifest.json`, written before epochs, reads it as epoch 0).
   *
-  * Per table the manifest holds three things, flipped together by that
-  * one write: the committed generation list, each generation's row
-  * count and the table's schema (every field nullable, as a parquet read
-  * returns it). Reads and lands resolve a table from them alone — no
-  * footer merge, no count job.
+  * Per table an epoch holds the committed generation list, each
+  * generation's row count and the table's schema (every field nullable,
+  * as a parquet read returns it). Reads and lands resolve a table from
+  * them alone — no footer merge, no count job.
   *
   * Generation lists let append stay O(batch): an append lands a DELTA
   * dir and the new list is `old :+ delta`; merge/replace/scd2 land a
@@ -39,49 +45,48 @@ import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 final class TableManifest(spark: SparkSession, root: String) {
   import TableManifest._
 
-  // the manifest file rides java.nio atomic-rename and the generation
-  // dirs ride Hadoop FileSystem — on a non-local root (hdfs://, s3a://)
-  // those would silently split state, and object stores don't give the
-  // atomic rename the commit guarantee rests on. Refuse loudly.
-  private val rootUri = new org.apache.hadoop.fs.Path(root).toUri
+  // an epoch is published by a no-replace hard link (EpochFiles.link),
+  // which only the local filesystem offers: refuse other roots loudly
+  private val rootUri = new Path(root).toUri
   require(rootUri.getScheme == null || rootUri.getScheme == "file",
-    s"manifestCommit supports local filesystem roots only (got '$root'): the atomic " +
-      "manifest flip is a local rename — use TableWriter (per-table staged swap) for remote roots")
+    s"manifestCommit supports local filesystem roots only (got '$root'): an epoch is " +
+      "published by a local hard link — use TableWriter (per-table staged swap) for remote roots")
   private val localRoot =
     if (rootUri.getScheme == null) root else java.nio.file.Paths.get(rootUri).toString
+  private val dir = new Path(new java.io.File(localRoot).toURI)
+  private def fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private val state = new StateStore(java.nio.file.Paths.get(localRoot, "_manifest.json"))
-
-  /** Every touch of the SHARED StateStore serializes on this monitor —
-    * two in-flight [[Publish]] objects from one TableManifest instance
-    * share `state`, and without the monitor publish B's lease-time
-    * `rollback()` could interleave publish A's commit overlay (rollback +
-    * putList + commit run under the `_manifest` FILE lock, but that lock
-    * only excludes other processes' stores, not this JVM object's other
-    * users), wiping A's staged lists before A writes them. The monitor
-    * holds for microseconds (map reads, one JSON read/write); lock order
-    * is always TableLock -> stateLock, never the reverse, so it cannot
-    * deadlock against the file leases.
+  /** The newest committed epoch (an empty root: an empty epoch 0). One
+    * swept between the listing and its read was superseded twice since:
+    * list again.
     */
-  private val stateLock = new Object
-
-  /** Tables with a committed generation list. */
-  def tables: Seq[String] = stateLock.synchronized {
-    state.keys.filter(_.startsWith(Prefix)).map(_.stripPrefix(Prefix))
+  @annotation.tailrec
+  private def newest(attempt: Int = 1): Epoch = {
+    val top = EpochFiles.list(fs, dir, EpochPrefix).maxByOption(_._1)
+    val file = top.fold(java.nio.file.Paths.get(localRoot, LegacyFile))(e => EpochFiles.nio(e._2.getPath))
+    val doc = try Some(mapper.readTree(java.nio.file.Files.readAllBytes(file)).asInstanceOf[ObjectNode])
+      catch { case _: java.nio.file.NoSuchFileException => None }
+    if (doc.isDefined || (top.isEmpty && attempt > 1)) Epoch(top.fold(0L)(_._1), doc.getOrElse(mapper.createObjectNode()))
+    else if (attempt < 50) newest(attempt + 1)
+    else throw new IllegalStateException(s"manifest $root: commits outpace reading the newest epoch")
   }
 
-  /** Committed generation dirs of one table (empty = table unknown). */
-  def gens(name: String): Seq[String] = stateLock.synchronized(state.getList(Prefix + name))
+  /** Tables with a committed generation list. */
+  def tables: Seq[String] = newest().doc.fieldNames().asScala.toSeq
+    .filter(_.startsWith(Prefix)).map(_.stripPrefix(Prefix))
 
-  /** One table's committed state, all from ONE manifest snapshot so a
-    * reader never pairs one commit's list with another's schema. A
-    * manifest written before counts or schemas were recorded derives
-    * what it lacks from the committed dirs — footer counts, a
-    * mergeSchema read — and the table's next land records both.
+  /** Committed generation dirs of one table (empty = table unknown). */
+  def gens(name: String): Seq[String] = newest().list(Prefix + name)
+
+  /** One table's committed state, all from ONE epoch so a reader never
+    * pairs one commit's list with another's schema. A manifest written
+    * before counts or schemas were recorded derives what it lacks from
+    * the committed dirs — footer counts, a mergeSchema read — and the
+    * table's next land records both.
     */
   private def snapshot(name: String): Option[TableState] = {
-    val (gs, cs, schema) = stateLock.synchronized(
-      (state.getList(Prefix + name), state.getList(CountsPrefix + name), state.getString(SchemaPrefix + name)))
+    val e = newest()
+    val (gs, cs, schema) = (e.list(Prefix + name), e.list(CountsPrefix + name), e.text(SchemaPrefix + name))
     if (gs.isEmpty) None
     else {
       val dirs = gs.map(g => s"$root/$name/$g")
@@ -101,8 +106,8 @@ final class TableManifest(spark: SparkSession, root: String) {
   private def load(name: String, t: TableState): DataFrame =
     spark.read.schema(t.schema).parquet(t.gens.map(g => s"$root/$name/$g"): _*)
 
-  /** The committed table, resolved THROUGH the manifest: its committed
-    * generations read with the schema recorded at their commit.
+  /** The committed table, resolved THROUGH the manifest: the newest
+    * epoch's generations read with the schema recorded at their commit.
     */
   def read(name: String): Option[DataFrame] = snapshot(name).map(load(name, _))
 
@@ -111,26 +116,14 @@ final class TableManifest(spark: SparkSession, root: String) {
     * progresses, then [[Publish.commit]] once — the single point where ANY
     * of it becomes visible.
     *
-    * THREADS: lands into different tables run concurrently; lands into
-    * one table run one at a time, each holding that table's monitor from
-    * its lease through its recorded pending state. The publish's own
-    * monitor guards only the pending states and the committed flag, so a
-    * land that finds the publish committed (at its lease or when it
-    * records) fails, and [[commit]] flips whatever landed before it.
-    *
-    * CONCURRENCY (per-table, not per-root): the first land into a table
-    * takes that TABLE's lease (`<root>/<table>__lock.e<N>`), held through
-    * commit — so two pipelines landing DISJOINT tables under one root run
-    * fully concurrently, while a second writer touching the SAME table
-    * fails fast with LockHeldException at its first land (lands are
-    * read-modify-write of that table's generation list). The shared
-    * manifest file itself is flipped inside a millisecond-scale critical
-    * section (`<root>/_manifest__lock`): re-read the on-disk manifest,
-    * overlay ONLY this publish's tables, one atomic write — so commits of
-    * disjoint publishes serialize for the flip, not for the run, and
-    * neither can lose the other's tables. Overlapping table sets landed
-    * in opposite orders cannot deadlock: lease acquisition is fail-fast,
-    * so one writer errors instead of waiting.
+    * The first land into a table takes that TABLE's lease
+    * (`<root>/<table>__lock.e<N>`), held through commit: publishes of
+    * DISJOINT tables under one root run concurrently, and a second writer
+    * of the SAME table fails fast with LockHeldException at its first land
+    * (lease acquisition never waits, so opposite land orders cannot
+    * deadlock). Within a publish, lands into different tables overlap and
+    * lands into one table run one at a time under its monitor; a land
+    * that finds the publish committed fails.
     */
   final class Publish private[TableManifest] (owner: String) {
     // guarded by this publish's monitor: table -> the state to commit
@@ -157,35 +150,31 @@ final class TableManifest(spark: SparkSession, root: String) {
       */
     def reserve(tables: Seq[String]): Unit = synchronized(tables.foreach(order += Naming.normalize(_)))
 
-    /** First touch of a table in this publish: take the table lease, then
-      * refresh the committed view from disk (under OUR lease this table's
-      * committed list is now stable — only lease holders change it) and
-      * sweep the table's crash orphans before their numbers can be
-      * re-minted (the frontier's entry-sweep rule, now per table so it
-      * can never delete a CONCURRENT publisher's uncommitted landings —
-      * those sit under tables whose leases the other writer holds). A
+    /** First touch of a table in this publish: take the table lease. A
       * lease taken after the commit released its leases is given back.
       */
-    private def leaseTable(name: String): Unit = if (!leases.holds(name)) {
+    private def leaseTable(name: String): Unit = {
       val lease = TableLock.acquire(spark, s"$localRoot/$name", s"manifest-publish:$owner")
       synchronized {
         if (committed) lease.release()
         require(!committed, "publish already committed")
         leases.hold(name, lease)
       }
-      stateLock.synchronized(state.rollback())
-      sweepTable(name)
     }
 
-    private def sweepTable(table: String): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(s"$root/$table")
-      val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(dir)) return
-      val keep = (gens(table) ++ pendingOf(table).fold(Seq.empty[String])(_.gens)).toSet
-      fs.listStatus(dir).filter(_.isDirectory).foreach { g =>
-        val gen = g.getPath.getName
-        if (gen.matches("^g[0-9]+$") && !keep.contains(gen)) fs.delete(g.getPath, true)
-      }
+    /** Delete the table's generation dirs outside `keep`, its committed
+      * list (stable under our lease): crash orphans before their numbers
+      * are re-minted, superseded generations after a publish interval of
+      * reader grace — never another publisher's landings (its tables).
+      */
+    private def sweepTable(table: String, keep: Set[String]): Unit = {
+      val tableDir = new Path(s"$root/$table")
+      val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      if (fs.exists(tableDir))
+        fs.listStatus(tableDir).filter(_.isDirectory).foreach { g =>
+          val gen = g.getPath.getName
+          if (gen.matches("^g[0-9]+$") && !keep.contains(gen)) EpochFiles.sweep(fs, g.getPath, "manifest sweep")
+        }
     }
 
     /** Release every table lease WITHOUT committing — the failed run's
@@ -194,30 +183,14 @@ final class TableManifest(spark: SparkSession, root: String) {
       */
     def abort(): Unit = synchronized { if (!committed) leases.releaseAll() }
 
-    /** The table's CURRENT state: landed in this publish, else committed. */
-    private def current(name: String): Option[TableState] =
-      pendingOf(name).orElse(snapshot(name))
-
-    private def nextGen(name: String): String = {
-      val nums = (gens(name) ++ pendingOf(name).fold(Seq.empty[String])(_.gens))
-        .map(g => g.stripPrefix("g").toLong)
-      s"g${if (nums.isEmpty) 1L else nums.max + 1L}"
-    }
-
     /** Land one table's updates under its disposition
       * ([[MergeEngine.landing]]): a delta lands as a new generation that
       * JOINS the table's list (O(batch)), a rewrite as a generation that
-      * replaces it. Nothing becomes reader-visible until [[commit]].
-      * Returns the table's row count as of this landing (committed +
-      * pending content). The current content is read with its recorded
-      * schema and the new generation's count comes from parquet footer
-      * metadata, so an append runs one Spark job (its write) however
-      * many generations the table has accumulated.
-      *
-      * Thread-safe: lands into different tables overlap; a land into a
-      * table waits for an earlier land into the same table, holding the
-      * table's monitor from its lease to its recorded pending state. A
-      * land that finds the publish committed fails.
+      * replaces it; nothing is reader-visible until [[commit]]. Returns the
+      * table's row count as of this landing. The current content is read
+      * with its recorded schema and the new generation counted from parquet
+      * footers, so an append runs one Spark job (its write) however many
+      * generations the table has.
       */
     def land(updates: DataFrame, hints: TableHints): Long = {
       synchronized(require(!committed, "publish already committed"))
@@ -231,13 +204,20 @@ final class TableManifest(spark: SparkSession, root: String) {
         s"manifest-committed scd2 table '$name' requires hints.scd2LoadTs — a " +
           "wall-clock default would make identical runs land different valid_from stamps")
       monitor(name).synchronized {
-        leaseTable(name)
-        val gen = nextGen(name)
+        // landed in this publish, else committed (stable under our lease)
+        val base = pendingOf(name).orElse {
+          val first = !leases.holds(name)
+          if (first) leaseTable(name)
+          val committedState = snapshot(name)
+          if (first) sweepTable(name, committedState.fold(Set.empty[String])(_.gens.toSet))
+          committedState
+        }
+        // numbers only grow: a pending list's newest is above every committed one
+        val gen = s"g${base.fold(0L)(_.gens.map(_.stripPrefix("g").toLong).max) + 1L}"
         val genPath = s"$root/$name/$gen"
         // overwrite: a crashed publish's orphan with the same number was
-        // swept at cycle start, but a racing retry inside one JVM could
+        // swept at first land, but a racing retry inside one JVM could
         // still leave one — committed generations are never re-targeted
-        val base = current(name)
         // a delta's rows are aligned to the append's merged target, so its
         // schema is the whole table's; a rewrite's is the new table's
         val landed = MergeEngine.landing(base.map(load(name, _)), updates, hints) match {
@@ -259,60 +239,79 @@ final class TableManifest(spark: SparkSession, root: String) {
       }
     }
 
-    /** Flip every landed table's committed pointer in ONE atomic manifest
-      * write. Before this call, readers see the previous state of EVERY
-      * table; after it, the new state of every table. Per-generation row
-      * counts and the table schema commit alongside the lists, so later
-      * reads and publishes never re-derive them.
+    /** Flip every landed table's committed pointer in ONE new epoch.
+      * Before this call, readers see the previous state of EVERY table;
+      * after it, the new state of every table. Per-generation row counts
+      * and the table schema commit alongside the lists, so later reads
+      * and publishes never re-derive them.
       *
-      * The flip runs inside the root's `_manifest` critical section:
-      * re-read the on-disk manifest (a concurrent DISJOINT publish may
-      * have committed since we last read), overlay only THIS publish's
-      * tables, write once — a read-merge-write that would otherwise lose
-      * the other writer's tables to last-write-wins. The section is
-      * milliseconds (one JSON read + write), so contenders poll-wait
-      * rather than fail: the 60 s bound is ~4 orders of magnitude above
-      * the section's cost and exists only to surface a wedged filesystem
-      * loudly.
+      * Epoch N+1 is the newest epoch N with only THIS publish's tables
+      * overlaid, written to `_manifest.tmp-<owner>` and linked without
+      * replace; on a lost race it re-bases on the newest epoch and tries
+      * the next number. Its tables are leased, so an epoch listing its
+      * generations holds the commit. Epochs older than the newest two and
+      * temp files older than the lease's stale age (crashed commits') go.
       */
     def commit(): Unit = synchronized {
       require(!committed, "publish already committed")
-      TableLock.withLock(spark, s"$localRoot/_manifest",
-        s"manifest-commit:$owner", waitMs = 60000L) {
-        stateLock.synchronized {
-          state.rollback()
-          order.foreach(name => pending.get(name).foreach { t =>
-            state.putList(Prefix + name, t.gens)
-            state.putList(CountsPrefix + name, t.counts.map(_.toString))
-            state.put(SchemaPrefix + name, t.schema.json)
-          })
-          state.commit()
+      val mine = order.toSeq.flatMap(name => pending.get(name).map(name -> _))
+      val tmp = java.nio.file.Paths.get(localRoot, TempPrefix + owner)
+      var base = newest()
+      while (!mine.forall { case (name, t) => base.list(Prefix + name) == t.gens }) {
+        val doc = base.doc.deepCopy()
+        mine.foreach { case (name, t) =>
+          doc.set[JsonNode](Prefix + name, mapper.valueToTree(t.gens.asJava))
+          doc.set[JsonNode](CountsPrefix + name, mapper.valueToTree(t.counts.map(_.toString).asJava))
+          doc.put(SchemaPrefix + name, t.schema.json)
         }
+        java.nio.file.Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc))
+        testHookBeforeLink(base.n + 1)
+        EpochFiles.link(tmp, java.nio.file.Paths.get(localRoot, s"$EpochPrefix${base.n + 1}"))
+        base = newest()
       }
+      java.nio.file.Files.deleteIfExists(tmp)
       committed = true
       leases.releaseAll()
+      if (mine.nonEmpty) sweepEpochs(base.n)
     }
   }
 
-  /** Start a publish cycle. Re-reads the on-disk committed manifest
-    * FIRST: a long-lived Pipeline alternating with another writer
-    * process would otherwise sweep the other writer's committed
-    * generation dirs (absent from its stale cached lists) and commit
-    * stale lists over theirs — silent data loss. (Each table's view is
-    * re-read AGAIN under its lease at first land, and the whole manifest
-    * once more inside the commit critical section — this early read just
-    * keeps [[Publish]] helpers honest between those points.)
-    */
-  def publish(): Publish = {
-    stateLock.synchronized(state.rollback())
-    new Publish(java.util.UUID.randomUUID().toString.take(8))
+  private def sweepEpochs(newestEpoch: Long): Unit = {
+    val crashedBefore = System.currentTimeMillis() - TableLock.DefaultStaleMs
+    fs.listStatus(dir).foreach { st =>
+      val n = st.getPath.getName
+      val epoch = if (n == LegacyFile) Some(0L) else Some(n).filter(_.startsWith(EpochPrefix))
+        .flatMap(_.stripPrefix(EpochPrefix).toLongOption)
+      if (epoch.exists(_ < newestEpoch - 1) || (n.startsWith(TempPrefix) && st.getModificationTime < crashedBefore))
+        EpochFiles.sweep(fs, st.getPath, "manifest sweep")
+    }
   }
+
+  /** Start a publish cycle. */
+  def publish(): Publish = new Publish(java.util.UUID.randomUUID().toString.take(8))
 }
 
 object TableManifest {
+  private val EpochPrefix = "_manifest.e"
+  private val TempPrefix = "_manifest.tmp-"
+  private val LegacyFile = "_manifest.json"
   private val Prefix = "tables."
   private val CountsPrefix = "rowcounts."
   private val SchemaPrefix = "schemas."
+
+  private val mapper = new ObjectMapper()
+
+  /** Test seam, run before each epoch link with its number: a spec forces
+    * a race or a crash there. No-op in production.
+    */
+  private[core] var testHookBeforeLink: Long => Unit = _ => ()
+
+  /** One committed epoch: its number and its document. */
+  private final case class Epoch(n: Long, doc: ObjectNode) {
+    def list(key: String): Seq[String] =
+      Option(doc.get(key)).filter(_.isArray).fold(Seq.empty[String])(_.elements().asScala.map(_.asText()).toSeq)
+    def text(key: String): Option[String] = Option(doc.get(key)).filterNot(_.isNull).map(_.asText())
+  }
 
   /** One table as the manifest records it: generation dirs, their row
     * counts (aligned) and the schema every generation is read with.

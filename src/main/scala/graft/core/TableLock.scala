@@ -35,10 +35,9 @@ import java.nio.charset.StandardCharsets
   *    never hit a live lease. The chain therefore stays at a handful of
   *    files regardless of takeover count.
   *
-  * Atomic create-if-absent is server-side on HDFS and object-store FS
-  * shims; on the local scheme Hadoop's `create(overwrite = false)` is a
-  * non-atomic exists-then-open, so we go through NIO `CREATE_NEW`
-  * (O_EXCL), which the kernel arbitrates.
+  * Every create goes through [[EpochFiles.create]], which makes it
+  * atomic per scheme and reports a lost race apart from a failing
+  * filesystem (the latter propagates; it is never "held by another").
   *
   * Staleness: a crashed writer never releases; a max-epoch lease whose
   * mtime is older than `staleMs` is taken over. `withLock` and manifest
@@ -142,9 +141,6 @@ object TableLock {
 
   private def epochPrefix(tablePath: String) = new Path(tablePath).getName + "__lock.e"
 
-  private def isLocal(fs: FileSystem) = "file".equalsIgnoreCase(fs.getScheme)
-  private def nio(p: Path) = java.nio.file.Paths.get(p.toUri.getPath)
-
   private def readFile(fs: FileSystem, p: Path): Option[String] =
     if (!fs.exists(p)) None
     else {
@@ -155,45 +151,18 @@ object TableLock {
   private def isReleased(content: String) = content.linesIterator.contains("released=true")
 
   private def overwriteFile(fs: FileSystem, p: Path, content: String): Unit =
-    if (isLocal(fs)) {
-      java.nio.file.Files.write(nio(p), content.getBytes(StandardCharsets.UTF_8))
+    if (EpochFiles.isLocal(fs)) {
+      java.nio.file.Files.write(EpochFiles.nio(p), content.getBytes(StandardCharsets.UTF_8))
       ()
     } else {
       val out = fs.create(p, true)
       try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
 
-  /** Create-if-absent with a REAL atomicity guarantee per scheme (see
-    * class doc): NIO CREATE_NEW (O_EXCL) locally, server-side
-    * `create(overwrite = false)` elsewhere.
-    */
-  private def atomicCreate(fs: FileSystem, p: Path, content: String): Boolean = {
-    val bytes = content.getBytes(StandardCharsets.UTF_8)
-    if (isLocal(fs))
-      try { java.nio.file.Files.write(nio(p), bytes,
-        java.nio.file.StandardOpenOption.CREATE_NEW); true }
-      catch { case _: java.io.IOException => false }
-    else
-      try {
-        val out = fs.create(p, false)
-        try out.write(bytes) finally out.close()
-        true
-      } catch { case _: java.io.IOException => false }
-  }
-
   /** Epoch files for this lock, as (epoch, path), unsorted. */
-  private def epochFiles(fs: FileSystem, tablePath: String): Seq[(Long, Path)] = {
-    val parent = new Path(tablePath).getParent
-    val prefix = epochPrefix(tablePath)
-    if (parent == null || !fs.exists(parent)) Seq.empty
-    else
-      fs.listStatus(parent).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isFile && n.startsWith(prefix))
-          n.stripPrefix(prefix).toLongOption.map(_ -> st.getPath)
-        else None
-      }
-  }
+  private def epochFiles(fs: FileSystem, tablePath: String): Seq[(Long, Path)] =
+    Option(new Path(tablePath).getParent).fold(Seq.empty[(Long, Path)])(
+      EpochFiles.list(fs, _, epochPrefix(tablePath)).map { case (e, st) => e -> st.getPath })
 
   /** Test seams (package-private): invoked inside `acquire` so a spec can
     * deterministically simulate the lock chain advancing while a taker is
@@ -218,7 +187,7 @@ object TableLock {
     val fs = new Path(tablePath).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (parent != null) fs.mkdirs(parent)
     val token = java.util.UUID.randomUUID().toString
-    val lease = s"owner=$owner\ntoken=$token\n"
+    val lease = s"owner=$owner\ntoken=$token\n".getBytes(StandardCharsets.UTF_8)
 
     def path(epoch: Long) = new Path(parent, epochPrefix(tablePath) + epoch)
 
@@ -298,9 +267,9 @@ object TableLock {
         // Genuinely empty dir. After the first acquire the dir always
         // holds at least one epoch file (release and takeover tombstone,
         // never delete the max), so this is a virgin table where the e0
-        // CREATE_NEW race admits exactly one winner.
+        // create race admits exactly one winner.
         testHookBeforeCreate()
-        if (atomicCreate(fs, path(0L), lease)) verifyMax(0L)
+        if (EpochFiles.create(fs, path(0L), lease)) verifyMax(0L)
         else throw new LockHeldException(
           s"table $tablePath is locked by another writer (lost the e0 create race)")
 
@@ -315,7 +284,7 @@ object TableLock {
             s"table $tablePath is locked by another writer (${c.trim}); " +
               "concurrent write/compaction would corrupt the staged-swap protocol")
         testHookBeforeCreate()
-        if (!atomicCreate(fs, path(maxEpoch + 1), lease))
+        if (!EpochFiles.create(fs, path(maxEpoch + 1), lease))
           throw new LockHeldException(s"lost takeover race for $tablePath")
         val won = verifyMax(maxEpoch + 1)
         // GC: strictly-below-max epochs are settled garbage; epochs only
@@ -326,8 +295,7 @@ object TableLock {
         // this winner's e(max+1) — two live leases (caught by the
         // contended-takeover spec under load).
         files.foreach { case (e, p) =>
-          if (e < maxEpoch)
-            try fs.delete(p, false) catch { case _: java.io.IOException => () }
+          if (e < maxEpoch) EpochFiles.sweep(fs, p, "lease gc")
           else if (e == maxEpoch)
             try {
               if (!isReleased(c))

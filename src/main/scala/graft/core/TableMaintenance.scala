@@ -95,8 +95,8 @@ object TableMaintenance {
       val marker = new Path(dir, s"_compacting_$id")
       val markerTmp = new Path(binScratch, s"_compacting_$id")
       val payload = (outName +: bin.map(_._1.getName)).mkString("\n")
-      val out = fs.create(markerTmp, false)
-      out.write(payload.getBytes(StandardCharsets.UTF_8)); out.close()
+      require(EpochFiles.create(fs, markerTmp, payload.getBytes(StandardCharsets.UTF_8)),
+        s"marker $markerTmp already exists")
       require(fs.rename(markerTmp, marker), s"marker rename failed for $marker")
       // rename returns FALSE (not throws) on most failure modes; deleting
       // the originals after a failed rename would lose the bin's rows, so

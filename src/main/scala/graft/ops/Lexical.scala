@@ -333,7 +333,9 @@ object Lexical {
       }
 
       /** Make batch `ab`'s (fully written) leaves live: one atomic create. */
-      def announce(ab: Long): Unit = fs.create(new Path(announced, ab.toString), false).close()
+      def announce(ab: Long): Unit = require(
+        graft.core.EpochFiles.create(fs, new Path(announced, ab.toString), Array.emptyByteArray),
+        s"batch $ab is already announced")
     }
 
     /** Sub-table dir of the current committed generation (spec access). */

@@ -90,8 +90,9 @@ final class Pipeline(
       * property-tested idempotent-merge path — never the reverse (cursors
       * advanced past data that never landed = silent loss). Readers must
       * resolve tables through the manifest, not `destRoot/<table>`.
-      * `destRoot` must be a local filesystem path: the manifest flip is a
-      * local atomic rename, so [[graft.core.TableManifest]] refuses an
+      * `destRoot` must be a local filesystem path: each commit publishes a
+      * new manifest epoch file by a no-replace hard link, which only the
+      * local filesystem offers, so [[graft.core.TableManifest]] refuses an
       * hdfs:// or s3a:// root (remote roots use the default per-table
       * staged swap).
       */
@@ -105,12 +106,10 @@ final class Pipeline(
   def run(source: SourceDef): Seq[LoadResult] =
     if (!manifestCommit) runInner(source)
     else {
-      // exclusion is PER TABLE, taken inside the publish at each table's
-      // first land and held through the commit flip — two pipelines
-      // landing disjoint tables under one root run concurrently; a
-      // same-table writer fails fast with LockHeldException (the commit
-      // itself merges into the shared manifest inside a millisecond
-      // critical section, so neither writer can lose the other's tables)
+      // exclusion is PER TABLE, taken at each table's first land and held
+      // through the commit: pipelines landing disjoint tables under one
+      // root run concurrently; a same-table writer fails fast with
+      // LockHeldException
       val pub = manifest.publish()
       currentPublish = Some(pub)
       try runInner(source)

@@ -5,9 +5,10 @@ import graft.connectors.rest.RestEngine.{RestResource, RestSource}
 
 /** Bridge: a declarative `RestSource` (the fleet config format) becomes a
   * runnable pipeline `SourceDef` — root resources read through the page
-  * loop with incremental state, parent-bound resources fan out on
-  * executors from their parent's frame. This is the reference's
-  * `pipeline.run(stripe_source(...))` call shape
+  * loop with incremental state and put their new cursor into the run's
+  * state (the pipeline commits it only after every write succeeded),
+  * parent-bound resources fan out on executors from their parent's
+  * frame. This is the reference's `pipeline.run(stripe_source(...))` call shape
   * (sources/stripe_analytics_pipeline.py:27-36) on this engine:
   *
   *   new Pipeline(spark, "p", dest, stateDir)
@@ -22,7 +23,11 @@ object RestPipeline {
           ResourceDef(
             name = res.name,
             hints = res.hints,
-            build = ctx => RestEngine.readResource(ctx.spark, src, res, transportFactory(), Some(ctx.state)),
+            build = ctx => {
+              val read = RestEngine.readResource(ctx.spark, src, res, transportFactory(), Some(ctx.state))
+              RestEngine.advanceCursor(src, res, read, ctx.state)
+              read
+            },
           )
         case Some(binding) =>
           ResourceDef(

@@ -9,8 +9,8 @@ import graft.streaming.StreamingRetrieval
 /** Chaos spec for the generation-pointer contract (Generations.scala):
   * UNLEASED readers probing an index in a tight loop while a writer
   * commits optimize generations must see zero FileNotFound and only
-  * old-complete or new-complete results — the one-generation GC grace is
-  * the claim, proven here under real contention the way TableLockSpec
+  * old-complete or new-complete results — the GC grace is the claim,
+  * proven here under real contention the way TableLockSpec
   * proves the lease arbitration.
   *
   * Timing envelope: a reader resolves the pointer once per probe and
@@ -92,6 +92,7 @@ class GenerationChaosSpec extends SparkTestBase {
       new java.io.File(Generations.dir(dir, "sub", g)).mkdirs()
       Generations.commit(spark, root, g)
     }
+    ageMarkers(dir) // past the time grace: generation 0 is due
     withWarnings { warnings =>
       Generations.gc(spark, root, 2L) // every delete throws; gc must not
       Seq("_gen.e0", "sub@g0").foreach { name =>
@@ -101,6 +102,30 @@ class GenerationChaosSpec extends SparkTestBase {
     }
     assert(new java.io.File(Generations.dir(dir, "sub", 0L)).exists())
     assert(Generations.current(spark, root).contains(2L))
+  }
+
+  private def ageMarkers(dir: String): Unit =
+    new java.io.File(dir).listFiles().filter(_.getName.startsWith("_gen.e"))
+      .foreach(_.setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000))
+
+  test("Generations.gc keeps a superseded generation until its successor's marker is past the time grace") {
+    val root = tmpDir("gen_gc_grace")
+    def present(): Set[String] = new java.io.File(root).list().toSet
+    (0L to 3L).foreach { g =>
+      new java.io.File(Generations.dir(root, "sub", g)).mkdirs()
+      Generations.commit(spark, root, g)
+    }
+    Generations.gc(spark, root, 3L)
+    assert(Set("_gen.e0", "sub@g0", "_gen.e1", "sub@g1").subsetOf(present()),
+      "markers committed just now leave every generation inside the grace")
+    // generation 1's marker ages past the grace; generation 2's does not
+    new java.io.File(root, "_gen.e1")
+      .setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000)
+    Generations.gc(spark, root, 3L)
+    assert(!present().contains("_gen.e0") && !present().contains("sub@g0"))
+    assert(Set("_gen.e1", "sub@g1", "_gen.e2", "sub@g2", "_gen.e3", "sub@g3").subsetOf(present()))
+    val again = intercept[IllegalStateException](Generations.commit(spark, root, 3L))
+    assert(again.getMessage.contains("generation 3 is already committed"), again.getMessage)
   }
 
   test("growing IVF index probes under concurrent optimizeIndex: vectors and centroids pair within one generation") {

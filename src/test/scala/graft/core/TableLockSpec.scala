@@ -313,4 +313,22 @@ class TableLockSpec extends SparkTestBase {
       assert(c.contains("released=true"), s"${st.getPath} must be a released marker")
     }
   }
+
+  test("a failing create surfaces as that I/O error naming the lease file, not as a held lock") {
+    spark.sparkContext.hadoopConfiguration.set("fs.failcreate.impl", classOf[FailingCreateFileSystem].getName)
+    val dir = tmpDir("lock_failcreate")
+    val e = intercept[java.io.IOException](TableLock.acquire(spark, s"failcreate://$dir/t", "writer"))
+    assert(e.getMessage.contains("planted create failure") && e.getMessage.contains(s"$dir/t__lock.e0"),
+      e.getMessage)
+  }
+}
+
+/** A local filesystem whose every create throws: a broken filesystem
+  * under the lease chain. Registered under the `failcreate` scheme.
+  */
+class FailingCreateFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failcreate:///")
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream =
+    throw new java.io.IOException(s"planted create failure: $p")
 }

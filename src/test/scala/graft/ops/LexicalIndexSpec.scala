@@ -125,7 +125,12 @@ class LexicalIndexSpec extends SparkTestBase {
     val path = s"${tmpDir("graft_lexidx_gc")}/idx"
     Lexical.Index.build(corpus, "doc_id", "text", path, championSize = 16)
     val frame = Lexical.Index.search(spark, path, queries, "q_id", "q_text", k = 10)
-    (1 to 2).foreach(_ => Lexical.Index.optimize(spark, path, championSize = 16))
+    // the second optimize deletes generation 0 only once generation 1's
+    // marker is past the gc's time grace: age the markers in between
+    Lexical.Index.optimize(spark, path, championSize = 16)
+    new java.io.File(path).listFiles().filter(_.getName.startsWith("_gen.e"))
+      .foreach(_.setLastModified(System.currentTimeMillis() - graft.core.Generations.GraceMs - 60000))
+    Lexical.Index.optimize(spark, path, championSize = 16)
     val e = intercept[org.apache.spark.SparkException](frame.collect())
     assert(e.getMessage.contains("FILE_NOT_EXIST"), e.getMessage)
   }

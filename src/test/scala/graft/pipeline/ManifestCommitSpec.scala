@@ -310,7 +310,7 @@ class ManifestCommitSpec extends SparkTestBase {
     assert(counts == Seq(3L, 4L))
     p.commit()
     val manifest = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(dest, "_manifest.json")), "UTF-8")
+      ManifestEpochs.newest(dest)), "UTF-8")
     assert(manifest.indexOf("\"tables.b\"") < manifest.indexOf("\"tables.a\""),
       s"the commit did not follow the reserved order: $manifest")
     val late = intercept[IllegalArgumentException](p.land(rows(1, "v2"), TableHints("a", Disposition.Append)))

@@ -120,7 +120,7 @@ class ManifestSchemaSpec extends SparkTestBase {
 
     // strip the schema entry, as a manifest written before schemas were
     // recorded has none
-    val file = java.nio.file.Paths.get(dest, "_manifest.json")
+    def file = ManifestEpochs.newest(dest)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def manifestKeys(): Set[String] = {
       import scala.jdk.CollectionConverters._
