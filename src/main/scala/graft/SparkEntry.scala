@@ -3776,11 +3776,11 @@ object SparkEntry {
       withFewShufflePartitions(s, 8) {
         val docs = streamDocuments(s, dir)
           .filter(col("doc_id") % 9 === 0)
-        val q = StreamingDedupSink.start(docs, s"$root/corpus", s"$root/index",
+        val q = StreamingDedupSink.start(docs, s"$root/sink",
           "doc_id", "text", s"$root/ckpt", threshold = 0.9)
         q.processAllAvailable(); q.stop()
       }
-      s.read.parquet(s"$root/corpus").select("doc_id").orderBy("doc_id")
+      new graft.core.TableManifest(s, s"$root/sink").read("corpus").get.select("doc_id").orderBy("doc_id")
     }),
 
     // continuous quality gate: the stream form of the curation DAG's

@@ -41,9 +41,16 @@ object EventTime {
       case _ => df
     }
 
+  /** A session that may not modify the config (Spark refuses with
+    * CANNOT_MODIFY_CONFIG / CANNOT_MODIFY_STATIC_CONFIG) keeps its own
+    * setting; any other failure propagates.
+    */
   private def enableNanosAsLong(s: SparkSession): Unit =
     try s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    catch { case _: Throwable => () }
+    catch {
+      case e: org.apache.spark.sql.AnalysisException
+          if Set("CANNOT_MODIFY_CONFIG", "CANNOT_MODIFY_STATIC_CONFIG").contains(e.getCondition) => ()
+    }
 
   /** Batch read + ts normalization. */
   def readTable(s: SparkSession, path: String): DataFrame = {

@@ -35,7 +35,11 @@ import scala.jdk.CollectionConverters._
   *
   * Generation lists let append stay O(batch): an append lands a DELTA
   * dir and the new list is `old :+ delta`; merge/replace/scd2 land a
-  * full rewrite and the list shrinks to one entry. Unreferenced dirs
+  * full rewrite and the list shrinks to one entry. A list never holds
+  * more than [[TableManifest.MaxGenerations]]: a delta that would pass
+  * it lands merged with the newest run of small generations
+  * ([[Publish.land]]), so reads open a bounded number of generations
+  * however long a backfill appends. Unreferenced dirs
   * (crash orphans, superseded generations) are swept PER TABLE at the
   * next publish's first land into that table, under the table's lease —
   * a full publish interval of reader grace (the frontier's compaction
@@ -112,20 +116,25 @@ final class TableManifest(spark: SparkSession, root: String) {
   def read(name: String): Option[DataFrame] = snapshot(name).map(load(name, _))
 
   /** One all-or-nothing publish cycle over any number of tables. Callers
-    * [[Publish.land]] each table's updates (any disposition) as the run
-    * progresses, then [[Publish.commit]] once — the single point where ANY
-    * of it becomes visible.
+    * [[Publish.read]] and [[Publish.land]] each table (any disposition) as
+    * the run progresses, then [[Publish.commit]] once — the single point
+    * where ANY of it becomes visible.
     *
-    * The first land into a table takes that TABLE's lease
+    * The first read or land of a table takes that TABLE's lease
     * (`<root>/<table>__lock.e<N>`), held through commit: publishes of
     * DISJOINT tables under one root run concurrently, and a second writer
-    * of the SAME table fails fast with LockHeldException at its first land
-    * (lease acquisition never waits, so opposite land orders cannot
-    * deadlock). Within a publish, lands into different tables overlap and
-    * lands into one table run one at a time under its monitor; a land
-    * that finds the publish committed fails.
+    * of the SAME table fails fast with LockHeldException at its first
+    * touch (lease acquisition never waits, so opposite land orders cannot
+    * deadlock). The leases are owned by the publish's writer identity, so
+    * a writer whose identity outlives its process (a streaming query's
+    * checkpoint) retakes the leases its crashed run left at once. Within a
+    * publish, lands into different tables overlap and lands into one table
+    * run one at a time under its monitor; a land that finds the publish
+    * committed fails.
     */
   final class Publish private[TableManifest] (owner: String) {
+    // the commit's temp file name: the identity may be a path
+    private val tempName = java.util.UUID.nameUUIDFromBytes(owner.getBytes("UTF-8")).toString
     // guarded by this publish's monitor: table -> the state to commit
     // (replaces the committed one), the order the manifest lists new
     // tables in, and whether the commit ran
@@ -177,6 +186,29 @@ final class TableManifest(spark: SparkSession, root: String) {
         }
     }
 
+    /** The table as this publish sees it — its landed state, else the
+      * committed one (stable under our lease). The first touch takes the
+      * table's lease and sweeps its unreferenced generations.
+      */
+    private def current(name: String): Option[TableState] = monitor(name).synchronized {
+      pendingOf(name).orElse {
+        val first = !leases.holds(name)
+        if (first) leaseTable(name)
+        val committedState = snapshot(name)
+        if (first) sweepTable(name, committedState.fold(Set.empty[String])(_.gens.toSet))
+        committedState
+      }
+    }
+
+    /** One table's rows as this publish sees them (None = no table yet),
+      * read under its lease: a writer that derives a land from the table
+      * reads it here, so no other writer can change it before the commit.
+      */
+    def read(table: String): Option[DataFrame] = {
+      val name = Naming.normalize(table)
+      current(name).map(load(name, _))
+    }
+
     /** Release every table lease WITHOUT committing — the failed run's
       * landed dirs become orphans the next lease holder sweeps. No-op
       * after commit (which releases on its own).
@@ -191,6 +223,12 @@ final class TableManifest(spark: SparkSession, root: String) {
       * with its recorded schema and the new generation counted from parquet
       * footers, so an append runs one Spark job (its write) however many
       * generations the table has.
+      *
+      * A delta that would take the list past [[MaxGenerations]] is written
+      * together with the newest run of small generations ([[mergedRun]]) as
+      * one generation that replaces them — still one write job. The merged
+      * generations stay on disk, superseded, until the table's next
+      * publish sweeps them, like any other superseded generation.
       */
     def land(updates: DataFrame, hints: TableHints): Long = {
       synchronized(require(!committed, "publish already committed"))
@@ -204,14 +242,7 @@ final class TableManifest(spark: SparkSession, root: String) {
         s"manifest-committed scd2 table '$name' requires hints.scd2LoadTs — a " +
           "wall-clock default would make identical runs land different valid_from stamps")
       monitor(name).synchronized {
-        // landed in this publish, else committed (stable under our lease)
-        val base = pendingOf(name).orElse {
-          val first = !leases.holds(name)
-          if (first) leaseTable(name)
-          val committedState = snapshot(name)
-          if (first) sweepTable(name, committedState.fold(Set.empty[String])(_.gens.toSet))
-          committedState
-        }
+        val base = current(name)
         // numbers only grow: a pending list's newest is above every committed one
         val gen = s"g${base.fold(0L)(_.gens.map(_.stripPrefix("g").toLong).max) + 1L}"
         val genPath = s"$root/$name/$gen"
@@ -222,10 +253,20 @@ final class TableManifest(spark: SparkSession, root: String) {
         // schema is the whole table's; a rewrite's is the new table's
         val landed = MergeEngine.landing(base.map(load(name, _)), updates, hints) match {
           case Landing.Delta(rows) =>
-            rows.write.mode("overwrite").parquet(genPath)
-            TableState(base.fold(Seq.empty[String])(_.gens) :+ gen,
-              base.fold(Seq.empty[Long])(_.counts) :+ ParquetFooters.rowCount(spark, genPath),
-              nullable(rows.schema))
+            val old = base.fold(Seq.empty[(String, Long)])(t => t.gens.zip(t.counts))
+            val run = mergedRun(old.map(_._2))
+            val schema = nullable(rows.schema)
+            // the run read with the delta's schema (a superset of the
+            // table's) and packed into files of about MergedRowsPerFile
+            // rows: a merged run of small generations is a few files
+            val written = if (run == 0) rows else {
+              val merged = old.takeRight(run)
+              spark.read.schema(schema).parquet(merged.map(g => s"$root/$name/${g._1}"): _*)
+                .coalesce(math.max(1, (merged.map(_._2).sum / MergedRowsPerFile).toInt)).union(rows)
+            }
+            written.write.mode("overwrite").parquet(genPath)
+            val kept = old.dropRight(run)
+            TableState(kept.map(_._1) :+ gen, kept.map(_._2) :+ ParquetFooters.rowCount(spark, genPath), schema)
           case Landing.Rewrite(table) =>
             table.write.mode("overwrite").parquet(genPath)
             TableState(Seq(gen), Seq(ParquetFooters.rowCount(spark, genPath)), nullable(table.schema))
@@ -255,7 +296,7 @@ final class TableManifest(spark: SparkSession, root: String) {
     def commit(): Unit = synchronized {
       require(!committed, "publish already committed")
       val mine = order.toSeq.flatMap(name => pending.get(name).map(name -> _))
-      val tmp = java.nio.file.Paths.get(localRoot, TempPrefix + owner)
+      val tmp = java.nio.file.Paths.get(localRoot, TempPrefix + tempName)
       var base = newest()
       while (!mine.forall { case (name, t) => base.list(Prefix + name) == t.gens }) {
         val doc = base.doc.deepCopy()
@@ -287,8 +328,11 @@ final class TableManifest(spark: SparkSession, root: String) {
     }
   }
 
-  /** Start a publish cycle. */
-  def publish(): Publish = new Publish(java.util.UUID.randomUUID().toString.take(8))
+  /** Start a publish cycle for the writer `owner`: an identity no other
+    * live writer shares — one per pipeline run, or a streaming query's
+    * checkpoint dir, which a restart reuses to retake its crashed leases.
+    */
+  def publish(owner: String): Publish = new Publish(owner)
 }
 
 object TableManifest {
@@ -300,6 +344,30 @@ object TableManifest {
   private val SchemaPrefix = "schemas."
 
   private val mapper = new ObjectMapper()
+
+  /** The most generations a table's list holds (see [[Publish.land]]). */
+  val MaxGenerations = 16
+
+  /** Rows per file a merged run of generations is packed into. */
+  private val MergedRowsPerFile = 1L << 20
+
+  /** How many of the newest generations (row counts `counts`, oldest
+    * first) a delta merges with: none while the list has room; else the
+    * newest, then each older one no larger than the rows merged so far —
+    * size-tiered, so a row is rewritten about once per size tier and a
+    * big old generation is never rewritten for a small delta.
+    */
+  private[core] def mergedRun(counts: Seq[Long]): Int =
+    if (counts.size < MaxGenerations) 0
+    else {
+      var run = 1
+      var rows = counts.last
+      while (run < counts.size && counts(counts.size - 1 - run) <= rows) {
+        rows += counts(counts.size - 1 - run)
+        run += 1
+      }
+      run
+    }
 
   /** Test seam, run before each epoch link with its number: a spec forces
     * a race or a crash there. No-op in production.
@@ -342,6 +410,8 @@ object TableManifest {
   * a cheap driver read at scale.
   */
 private[graft] object ParquetFooters {
+  private val log = org.slf4j.LoggerFactory.getLogger(ParquetFooters.getClass)
+
   def rowCount(spark: org.apache.spark.sql.SparkSession, dir: String): Long = {
     val conf = spark.sessionState.newHadoopConf()
     val root = new org.apache.hadoop.fs.Path(dir)
@@ -362,8 +432,7 @@ private[graft] object ParquetFooters {
     // file — the old scan path failed loudly on a missing/misrouted
     // table, so don't let that failure class silently become rows=0
     if (files.isEmpty)
-      System.err.println(s"[graft] ParquetFooters: no parquet files under $dir — " +
-        "reporting rows=0 (misrouted or failed write?)")
+      log.warn(s"no parquet files under $dir — reporting rows=0 (misrouted or failed write?)")
     files.map { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))

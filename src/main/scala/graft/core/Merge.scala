@@ -269,8 +269,11 @@ object TableWriter {
       }
     }
 
-  /** Run `body` as the table's single writer: take the table lease, then
-    * put back whatever a crashed staged swap left aside. The owner is
+  /** Run `body` as the table's single writer: take the table lease, put
+    * back whatever a crashed staged swap left aside, then finish any
+    * crashed compaction ([[TableMaintenance.repair]]) — before anything
+    * reads the table, so no read sees a compacted file beside the
+    * originals it replaced. The owner is
     * unique PER INVOCATION: same-owner reacquire must never let two batch
     * writers (or maintenance passes) on the same table steal each other's
     * live lease — a crashed one's lease is reclaimed by the stale-age path
@@ -280,6 +283,7 @@ object TableWriter {
   private[core] def leased[T](spark: SparkSession, path: String, kind: String)(body: => T): T =
     TableLock.withLock(spark, path, owner = s"$kind:${java.util.UUID.randomUUID()}") {
       StagedSwap.repair(spark, path)
+      TableMaintenance.repair(spark, path)
       body
     }
 

@@ -32,8 +32,9 @@ import java.nio.charset.StandardCharsets
   * maintenance part of the writer's duty cycle, and that model is
   * ENFORCED by `TableLock`: every pass runs in [[TableWriter.leased]], the
   * section TableWriter's own writes run in (the table lease, then
-  * [[StagedSwap.repair]]), so two pipelines cannot interleave a staged
-  * swap with a compaction rewrite.
+  * [[StagedSwap.repair]] and [[repair]]), so two pipelines cannot
+  * interleave a staged swap with a compaction rewrite, and no write reads
+  * a table a crashed compaction left with rows twice.
   */
 object TableMaintenance {
 
@@ -73,7 +74,6 @@ object TableMaintenance {
   private def compactLocked(spark: SparkSession, path: String,
       targetBytes: Long, minFileBytes: Long): (Int, Int) = {
     val (fs, dir) = fsOf(spark, path)
-    repair(spark, path) // finish any interrupted protocol first
     val all = dataFiles(fs, dir)
     val small = all.filter(_._2 < minFileBytes)
     val bins = pack(small, targetBytes).filter(_.size > 1)
@@ -155,14 +155,14 @@ object TableMaintenance {
       (results.map(_._1).sum, results.map(_._2).sum)
     }
 
-  /** Replay interrupted compaction markers (see protocol above). Safe to
-    * call any time; no-op on a clean table.
+  /** Replay interrupted compaction markers (see protocol above) in every
+    * leaf dir of `path`. No-op on a clean table. [[TableWriter.leased]]
+    * runs it before every write and maintenance pass reads the table.
     */
   def repair(spark: SparkSession, path: String): Unit = {
-    val (fs, dir) = fsOf(spark, path)
-    if (!fs.exists(dir)) return
-    fs.listStatus(dir).filter(s => s.isFile && s.getPath.getName.startsWith("_compacting_"))
-      .foreach { m =>
+    val (fs, root) = fsOf(spark, path)
+    if (fs.exists(root)) leafDirs(fs, root).foreach { dir =>
+      fs.listStatus(dir).filter(s => s.isFile && s.getPath.getName.startsWith("_compacting_")).foreach { m =>
         val in = fs.open(m.getPath)
         val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
         in.close()
@@ -180,7 +180,9 @@ object TableMaintenance {
         }
         fs.delete(m.getPath, false)
       }
+    }
   }
+
   /** OPTIMIZE-style Z-order re-cluster: a full rewrite of the table
     * range-partitioned and sorted by the [[ZOrder]] curve of `cols`, so
     * every output file is a tight box in every listed dimension (the

@@ -405,17 +405,8 @@ object Lexical {
         staged.groupBy("term").agg(count(lit(1)).as("df")),
         docs.count(),
         Map.empty)
-      deleteDir(spark, stage)
-    }
-
-    private def deleteDir(spark: org.apache.spark.sql.SparkSession, dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      try { fs.delete(p, true); () }
-      catch {
-        case e: java.io.IOException =>
-          System.err.println(s"[lexical] could not delete $dir: $e")
-      }
+      val stagePath = new Path(stage)
+      graft.core.EpochFiles.sweep(stagePath.getFileSystem(spark.sparkContext.hadoopConfiguration), stagePath, "lexical build")
     }
 
     /** Append a document batch as batch `appendId` of the current

@@ -109,8 +109,8 @@ final class Pipeline(
       // exclusion is PER TABLE, taken at each table's first land and held
       // through the commit: pipelines landing disjoint tables under one
       // root run concurrently; a same-table writer fails fast with
-      // LockHeldException
-      val pub = manifest.publish()
+      // LockHeldException. The publish's writer identity is this run.
+      val pub = manifest.publish(s"$pipelineName:${java.util.UUID.randomUUID()}")
       currentPublish = Some(pub)
       try runInner(source)
       finally {

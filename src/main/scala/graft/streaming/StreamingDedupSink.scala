@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.core.{Disposition, TableHints, TableManifest}
 import graft.ops.Dedup
 
 /** Continuously-deduplicating corpus sink: each micro-batch runs the full
@@ -12,139 +12,29 @@ import graft.ops.Dedup
   * corpus table and their band rows to the index table. Work per batch is
   * O(batch) signatures + one broadcast pass over the index, never a
   * corpus recompute: the property that lets a crawl stream dedup into a
-  * 100 TB corpus indefinitely.
+  * growing corpus indefinitely. The first batch bootstraps both tables.
   *
-  * First batch bootstraps both tables. foreachBatch gives exactly-once
-  * table updates under the streaming checkpoint (re-delivered batches
-  * re-run the same idempotent cycle: their docs now match the corpus and
-  * drop out).
+  * Both tables are [[TableManifest]] tables under `root` (`corpus` and
+  * `index`; read them with `TableManifest.read`), and each non-empty batch
+  * is ONE publish: it reads both tables under the publish's table leases,
+  * lands the survivors and their band rows as two appends, and commits
+  * once. A crash anywhere before the commit leaves both tables as they
+  * were; a batch re-delivered after it finds its docs in the corpus and
+  * drops them, so foreachBatch's at-least-once replay lands each batch
+  * exactly once. The publish's writer identity is the checkpoint dir —
+  * stable across restarts and unique per query — so a restarted query
+  * retakes its crashed leases at once, while a second query on the same
+  * root fails fast at its first read. The per-batch generations stay
+  * bounded by the manifest's own merging ([[TableManifest.MaxGenerations]]).
   *
-  * Crash safety is an intent/commit marker protocol (tiny `_graft_intent`
-  * / `_graft_meta` files in the index directory — underscore-prefixed, so
-  * parquet readers ignore them): intent is written before the two appends,
-  * the meta sidecar (cumulative row counts) after both, then the intent is
-  * cleared. Steady-state recovery detection is therefore TWO file
-  * existence checks — no `parquet().count()` per micro-batch, which at a
-  * 100 TB corpus with millions of part files would be a per-batch driver
-  * listing/footer storm. Only a detected crash (intent present, or a
-  * pre-protocol table with no sidecar) pays the O(corpus) reconcile — and
-  * that reconcile anti-joins corpus ids against distinct index ids, so
-  * over-counted duplicate index rows from a prior double-append can never
-  * mask missing docs (the old count-comparison could).
+  * `root` must be a local filesystem path, as for every manifest: a
+  * commit publishes an epoch file by a no-replace hard link.
   */
 object StreamingDedupSink {
 
-  private[streaming] final case class Meta(corpusRows: Long, indexRows: Long)
-
-  /** How long a micro-batch queues behind an in-flight index compaction
-    * before failing the stream (mirrors the other index lifecycles'
-    * BatchLockWaitMs; a crashed holder is taken over at the lease's
-    * staleMs regardless).
-    */
-  private val IndexLockWaitMs = 10L * 60 * 1000
-
-  private def metaPath(indexPath: String) = new Path(indexPath, "_graft_meta")
-  private def intentPath(indexPath: String) = new Path(indexPath, "_graft_intent")
-
-  /** Atomic-enough small-file write for a single-writer table: temp file +
-    * rename. (Cross-pipeline exclusion is the lock lease's job, not this.)
-    */
-  private def writeSmallFile(fs: FileSystem, path: Path, content: String): Unit = {
-    fs.mkdirs(path.getParent)
-    val tmp = new Path(path.getParent, path.getName + ".tmp")
-    val out = fs.create(tmp, true)
-    try out.write(content.getBytes("UTF-8")) finally out.close()
-    // Hadoop FileSystem signals failure by RETURNING FALSE, not throwing.
-    // A silently failed rename leaves no meta/commit marker and every
-    // later batch would take the recovery branch — surface it instead.
-    if (fs.exists(path) && !fs.delete(path, false))
-      throw new java.io.IOException(s"delete of $path returned false")
-    if (!fs.rename(tmp, path))
-      throw new java.io.IOException(s"rename $tmp -> $path returned false")
-  }
-
-  private def readMeta(fs: FileSystem, indexPath: String): Option[Meta] = {
-    val p = metaPath(indexPath)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      val kv = s.linesIterator.flatMap { l =>
-        l.split("=", 2) match { case Array(k, v) => Some(k -> v.trim.toLong); case _ => None }
-      }.toMap
-      Some(Meta(kv.getOrElse("corpusRows", 0L), kv.getOrElse("indexRows", 0L)))
-    }
-  }
-
-  private def writeMeta(fs: FileSystem, indexPath: String, m: Meta): Unit =
-    writeSmallFile(fs, metaPath(indexPath), s"corpusRows=${m.corpusRows}\nindexRows=${m.indexRows}\n")
-
-  private def hasData(fs: FileSystem, path: String): Boolean = {
-    val p = new Path(path)
-    fs.exists(p) && fs.listStatus(p).exists(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-  }
-
-  /** Recovery check run at the top of every micro-batch. Steady state
-    * (intent absent, sidecar present) is TWO existence checks and zero
-    * Spark jobs. A detected crash — intent still present (death between
-    * the appends and the commit) or a pre-protocol table with no sidecar —
-    * pays the O(corpus) reconcile once:
-    *
-    *  - index directory empty → full rebuild from the corpus (the corpus
-    *    is the source of truth);
-    *  - otherwise → anti-join corpus ids against DISTINCT index ids and
-    *    re-index only the missing docs. No count comparison: duplicate
-    *    index rows from a prior double-append are harmless (candidates go
-    *    through distinct()) and cannot mask an under-count here.
-    *
-    * Returns true iff a heal ran.
-    */
-  private[streaming] def recoverIfNeeded(
-      s: SparkSession,
-      corpusPath: String,
-      indexPath: String,
-      idCol: String,
-      textCol: String,
-      numHashes: Int,
-      rowsPerBand: Int,
-  ): Boolean = {
-    val fs = new Path(corpusPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val numBands = numHashes / rowsPerBand
-    if (!hasData(fs, corpusPath)) false
-    else if (!hasData(fs, indexPath)) {
-      // no checkpoint of the corpus here: the rebuild scan and the
-      // footer-metadata count() are both cheaper than materializing a
-      // corpus-sized table in the block manager
-      val corpus = s.read.parquet(corpusPath)
-      Dedup.lshIndexRows(corpus, idCol, textCol, numHashes, rowsPerBand)
-        .write.mode(SaveMode.Overwrite).parquet(indexPath)
-      val n = corpus.count()
-      writeMeta(fs, indexPath, Meta(n, n * numBands))
-      fs.delete(intentPath(indexPath), false)
-      true
-    } else if (!fs.exists(intentPath(indexPath)) && fs.exists(metaPath(indexPath))) {
-      false // clean commit marker — nothing to do, no jobs run
-    } else {
-      import org.apache.spark.sql.functions.col
-      val corpus = s.read.parquet(corpusPath)
-      val indexed = s.read.parquet(indexPath).select(col("id").as(idCol)).distinct()
-      val missing = corpus.join(indexed, Seq(idCol), "left_anti").localCheckpoint(true)
-      if (missing.count() > 0)
-        Dedup.lshIndexRows(missing, idCol, textCol, numHashes, rowsPerBand)
-          .write.mode(SaveMode.Append).parquet(indexPath)
-      // recovery-only counts: stamp the sidecar with actual totals
-      writeMeta(fs, indexPath,
-        Meta(corpus.count(), s.read.parquet(indexPath).count()))
-      fs.delete(intentPath(indexPath), false)
-      true
-    }
-  }
-
   def start(
       stream: DataFrame,
-      corpusPath: String,
-      indexPath: String,
+      root: String,
       idCol: String,
       textCol: String,
       checkpointDir: String,
@@ -157,71 +47,31 @@ object StreamingDedupSink {
   ): StreamingQuery = {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          // cross-pipeline exclusion on BOTH tables the batch writes,
-          // shared with TableWriter/compaction. The owner is the
-          // CHECKPOINT DIR — stable across restarts and unique per
-          // pipeline — so a restarted query retakes its own crashed
-          // leases immediately (same-owner reacquire) while a second
-          // pipeline pointed at the same corpus fails fast instead of
-          // corrupting the intent/commit protocol. Leases are taken fresh
-          // per batch; withLock's auto-renew heartbeat keeps them live
-          // for the whole batch, so a data-dependent recovery heal or a
-          // long micro-batch is never exposed to third-party stale
-          // takeover mid-write.
-          //
-          // LOCK ORDER: corpus, then index — every writer that touches
-          // both MUST take them in this order (single-lock holders like
-          // TableMaintenance.compact(indexPath) cannot deadlock against
-          // it). The index lease is keyed on indexPath — the SAME root a
-          // `compact`/`compactPartitioned` of the index locks — so index
-          // compaction cannot interleave its rewrite with this batch's
-          // index probe or its per-batch append; the batch instead queues
-          // (bounded) behind an in-flight compaction. The corpus lease
-          // stays fail-fast: a second pipeline must error, not hang.
-          graft.core.TableLock.withLock(s, corpusPath, owner = s"dedup-sink:$checkpointDir") {
-          graft.core.TableLock.withLock(s, indexPath, owner = s"dedup-sink:$checkpointDir",
-            waitMs = IndexLockWaitMs) {
-          val fs = new Path(corpusPath).getFileSystem(s.sparkContext.hadoopConfiguration)
-          val numBands = numHashes / rowsPerBand
-          recoverIfNeeded(s, corpusPath, indexPath, idCol, textCol, numHashes, rowsPerBand)
-          val bootstrapped = hasData(fs, corpusPath)
-          // the batch feeds two jobs (vs-corpus probe + internal dedup) —
-          // pin it so the streaming source isn't re-pulled per job
-          val pinned = batch.localCheckpoint(true)
-          val survivors =
-            if (bootstrapped) {
-              val corpus = s.read.parquet(corpusPath)
-              val index = s.read.parquet(indexPath)
-              Dedup.incrementalDedup(pinned, corpus, index, idCol, textCol,
-                numHashes, rowsPerBand, threshold, maxBucketSize)._1
-            } else {
-              // bootstrap: the first batch only dedups against itself
-              val inner = Dedup.nearDupPairs(pinned, idCol, textCol,
-                numHashes, rowsPerBand, threshold, maxBucketSize)
-              Dedup.dedupByClusters(pinned, idCol, Dedup.clusterPairs(inner))
+          val pub = new TableManifest(batch.sparkSession, root).publish(checkpointDir)
+          try {
+            val tables = (pub.read("corpus"), pub.read("index"))
+            // the batch feeds two jobs (vs-corpus probe + internal dedup) —
+            // pin it so the streaming source isn't re-pulled per job
+            val pinned = batch.localCheckpoint(true)
+            val survivors = tables match {
+              case (Some(corpus), Some(index)) =>
+                Dedup.incrementalDedup(pinned, corpus, index, idCol, textCol,
+                  numHashes, rowsPerBand, threshold, maxBucketSize)._1
+              case _ =>
+                // bootstrap: the first batch only dedups against itself
+                val inner = Dedup.nearDupPairs(pinned, idCol, textCol,
+                  numHashes, rowsPerBand, threshold, maxBucketSize)
+                Dedup.dedupByClusters(pinned, idCol, Dedup.clusterPairs(inner))
             }
-          // pin the survivor set so the corpus append and the index-delta
-          // append land the SAME rows; append survivors first — a crash
-          // between the appends leaves docs un-indexed (found by the next
-          // batch's reconcile via the still-present intent marker) rather
-          // than index rows pointing at absent docs (verification would
-          // silently drop those matches forever)
-          val pinnedSurv = survivors.localCheckpoint(true)
-          val nSurv = pinnedSurv.count() // free post-checkpoint
-          val prev = readMeta(fs, indexPath).getOrElse(Meta(0L, 0L))
-          writeSmallFile(fs, intentPath(indexPath), s"batch=$batchId\n")
-          pinnedSurv.write.mode(SaveMode.Append).parquet(corpusPath)
-          Dedup.lshIndexRows(pinnedSurv, idCol, textCol, numHashes, rowsPerBand)
-            .write.mode(SaveMode.Append).parquet(indexPath)
-          writeMeta(fs, indexPath,
-            Meta(prev.corpusRows + nSurv, prev.indexRows + nSurv * numBands))
-          fs.delete(intentPath(indexPath), false)
-          ()
-          }
-          }
+            // pinned so the corpus and index lands see the SAME rows
+            val landed = survivors.localCheckpoint(true)
+            pub.land(landed, TableHints("corpus", Disposition.Append))
+            pub.land(Dedup.lshIndexRows(landed, idCol, textCol, numHashes, rowsPerBand),
+              TableHints("index", Disposition.Append))
+            pub.commit()
+          } finally pub.abort()
         }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())

@@ -41,13 +41,13 @@ class ManifestEpochSpec extends SparkTestBase {
 
   test("two publishes forced onto one epoch number both survive, in contiguous epochs") {
     val dest = tmpDir("epoch-race")
-    val seed = new TableManifest(spark, dest).publish()
+    val seed = new TableManifest(spark, dest).publish("seed")
     seed.land(rows(2, "s"), TableHints("seed", Disposition.Replace))
     seed.commit()
     assert(ManifestEpochs.numbers(dest) == Seq(1L))
 
-    val pa = new TableManifest(spark, dest).publish()
-    val pb = new TableManifest(spark, dest).publish()
+    val pa = new TableManifest(spark, dest).publish("a")
+    val pb = new TableManifest(spark, dest).publish("b")
     pa.land(rows(3, "a"), TableHints("a", Disposition.Replace))
     pb.land(rows(4, "b"), TableHints("b", Disposition.Replace))
     // both commits read epoch 1, then meet here before linking epoch 2
@@ -77,7 +77,7 @@ class ManifestEpochSpec extends SparkTestBase {
     val dest = tmpDir("epoch-crash")
     val m = new TableManifest(spark, dest)
     def publishT(n: Int, tag: String): m.Publish = {
-      val p = m.publish()
+      val p = m.publish(tag + "-" + java.util.UUID.randomUUID())
       p.land(rows(n, tag), TableHints("t", Disposition.Replace))
       p
     }
@@ -116,19 +116,84 @@ class ManifestEpochSpec extends SparkTestBase {
     assert(m.tables == Seq("t") && m.gens("t") == Seq("g1"))
     assert(tags(m, "t") == Set("old") && m.read("t").get.count() == 3)
 
-    val p = m.publish()
+    val p = m.publish("writer-1")
     assert(p.land(rows(2, "new"), TableHints("t", Disposition.Append)) == 5L)
     p.commit()
     assert(ManifestEpochs.numbers(dest) == Seq(1L))
     assert(m.gens("t") == Seq("g1", "g2") && tags(m, "t") == Set("old", "new"))
     assert(Files.exists(Paths.get(dest, "_manifest.json")), "epoch 0 is one of the newest two")
 
-    val p2 = m.publish()
+    val p2 = m.publish("writer-2")
     p2.land(rows(1, "newer"), TableHints("t", Disposition.Append))
     p2.commit()
     assert(ManifestEpochs.numbers(dest) == Seq(1L, 2L))
     assert(!Files.exists(Paths.get(dest, "_manifest.json")), "epoch 0 is swept like any older epoch")
     assert(m.read("t").get.count() == 6)
+  }
+
+  test("merged runs are size-tiered: none while the list has room, never a bigger old generation") {
+    val k = TableManifest.MaxGenerations
+    assert(TableManifest.mergedRun(Seq.fill(k - 1)(1L)) == 0)
+    assert(TableManifest.mergedRun(Seq.fill(k)(1L)) == k)
+    assert(TableManifest.mergedRun(Seq(100L) ++ Seq.fill(k - 1)(1L)) == k - 1)
+    assert(TableManifest.mergedRun(Seq.fill(k - 2)(1L) ++ Seq(10L, 3L)) == 1)
+  }
+
+  test("a delta past MaxGenerations merges the newest small generations in one job; a crash before the commit changes nothing; the retry commits") {
+    val dest = tmpDir("epoch-merge")
+    val m = new TableManifest(spark, dest)
+    val k = TableManifest.MaxGenerations
+    def append(n: Int, tag: String): m.Publish = {
+      val p = m.publish(s"writer-$tag-${java.util.UUID.randomUUID()}")
+      p.land(rows(n, tag), TableHints("t", Disposition.Append))
+      p
+    }
+    // one big generation, then small ones up to the bound
+    append(100, "big").commit()
+    (1 until k).foreach(i => append(2, s"s$i").commit())
+    val full = m.gens("t")
+    assert(full.size == k)
+    val allTags = Set("big", "next") ++ (1 until k).map(i => s"s$i")
+
+    val crashed = append(2, "next")
+    TableManifest.testHookBeforeLink = _ => throw new java.io.IOException("planted crash before the link")
+    try intercept[java.io.IOException](crashed.commit())
+    finally TableManifest.testHookBeforeLink = _ => ()
+    crashed.abort()
+    assert(m.gens("t") == full && m.read("t").get.count() == 100 + 2 * (k - 1))
+
+    val p = m.publish("writer-retry")
+    val jobs = jobsFor("epoch-merge-land") { p.land(rows(2, "next"), TableHints("t", Disposition.Append)) }
+    p.commit()
+    assert(jobs == 1, s"a merging land ran $jobs Spark jobs")
+    // the small generations merged with the delta; the big one stays
+    val merged = m.gens("t")
+    assert(merged.size == 2 && merged.head == full.head, s"list after the merge: $merged")
+    assert(m.read("t").get.count() == 100 + 2 * k && tags(m, "t") == allTags)
+    def parquetFiles(gen: String) = new java.io.File(s"$dest/t/$gen").list().count(_.endsWith(".parquet"))
+    assert(parquetFiles(merged.last) < k - 1, "the merged run is packed into a few files")
+
+    // the merged generations keep a publish interval of reader grace
+    assert(full.tail.forall(g => Files.exists(Paths.get(dest, "t", g))))
+    append(1, "later").commit()
+    assert(full.tail.forall(g => !Files.exists(Paths.get(dest, "t", g))))
+    assert(m.read("t").get.count() == 100 + 2 * k + 1)
+  }
+
+  /** Spark jobs `body` runs. */
+  private def jobsFor(group: String)(body: => Any): Int = {
+    val sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try body finally sc.clearJobGroup()
+    // the status tracker fills from the asynchronous listener bus: once
+    // a later marker job shows there, every job of `group` does too
+    val marker = s"$group-marker"
+    sc.setJobGroup(marker, marker)
+    try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+    val deadline = System.currentTimeMillis() + 30000L
+    while (sc.statusTracker.getJobIdsForGroup(marker).isEmpty && System.currentTimeMillis() < deadline)
+      Thread.sleep(10)
+    sc.statusTracker.getJobIdsForGroup(group).length
   }
 }
 

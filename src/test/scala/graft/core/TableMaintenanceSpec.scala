@@ -118,6 +118,30 @@ class TableMaintenanceSpec extends SparkTestBase {
     assert(b == 2 && a == 1)
   }
 
+  test("a merge after a crashed compaction finishes the compaction first: no key is kept twice") {
+    val root = tmpDir("compact_then_merge")
+    val dir = s"$root/t"
+    landSmallFiles(dir, 2)
+    val fs = fsFor(dir)
+    // the compaction died after renaming its output in, before deleting
+    // the originals: every row is in the table twice
+    val origs = parquetFiles(dir)
+    spark.read.parquet(dir).coalesce(1).write.parquet(s"$dir/.compact_scratch/bin_0")
+    val produced = fs.listStatus(new Path(s"$dir/.compact_scratch/bin_0"))
+      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
+    val marker = new Path(dir, "_compacting_crashed")
+    val out = fs.create(marker, false)
+    out.write(("compacted-crashed.parquet" +: origs).mkString("\n").getBytes("UTF-8")); out.close()
+    fs.rename(produced, new Path(dir, "compacted-crashed.parquet"))
+
+    TableWriter.write(spark, Seq((5L, "new")).toDF("id", "v"), root,
+      TableHints("t", Disposition.Merge, primaryKey = Seq("id")))
+    val rows = spark.read.parquet(dir).select("id", "v").as[(Long, String)].collect().toSeq
+    val (n, keys) = (rows.size, rows.map(_._1).distinct.size)
+    assert(n == 200 && keys == 200, s"$n rows of $keys keys after the merge")
+    assert(rows.toMap.apply(5L) == "new")
+  }
+
   test("compact repairs leftover markers before planning new bins") {
     val dir = tmpDir("compact_auto")
     landSmallFiles(dir, 3)

@@ -208,8 +208,8 @@ class ManifestCommitSpec extends SparkTestBase {
     val dest = tmpDir("mani-disjoint")
     val mA = new TableManifest(spark, dest)
     val mB = new TableManifest(spark, dest)
-    val pA = mA.publish()
-    val pB = mB.publish() // both publishes open before either lands
+    val pA = mA.publish("writer-a")
+    val pB = mB.publish("writer-b") // both publishes open before either lands
 
     pA.land(rows(3, "va"), TableHints("a", Disposition.Replace))
     pB.land(rows(4, "vb"), TableHints("b", Disposition.Replace)) // disjoint: no exclusion
@@ -226,7 +226,7 @@ class ManifestCommitSpec extends SparkTestBase {
     assert(m.read("a").get.count() == 3)
     assert(m.read("b").get.count() == 4)
     // leases fully released: both tables writable again
-    val p2 = m.publish()
+    val p2 = m.publish("writer-both")
     p2.land(rows(1, "v2"), TableHints("a", Disposition.Append))
     p2.land(rows(1, "v2"), TableHints("b", Disposition.Append))
     p2.commit()
@@ -248,7 +248,7 @@ class ManifestCommitSpec extends SparkTestBase {
       def run(table: String, n: Int): java.util.concurrent.Future[Unit] =
         pool.submit(new java.util.concurrent.Callable[Unit] {
           def call(): Unit = {
-            val p = m.publish()
+            val p = m.publish(s"writer-$table-$round")
             gate.await(30, java.util.concurrent.TimeUnit.SECONDS)
             p.land(rows(n, s"v$round"), TableHints(table, Disposition.Replace))
             p.commit()
@@ -295,7 +295,7 @@ class ManifestCommitSpec extends SparkTestBase {
   test("one publish lands two tables at once; the commit lists them in reserved order; a later land fails") {
     val dest = tmpDir("mani-overlap")
     val m = new TableManifest(spark, dest)
-    val p = m.publish()
+    val p = m.publish("writer-1")
     p.reserve(Seq("b", "a"))
     // each land's write job waits, inside the land, for the other land's
     // to start: a publish-wide monitor around land would time this out
@@ -316,7 +316,7 @@ class ManifestCommitSpec extends SparkTestBase {
     val late = intercept[IllegalArgumentException](p.land(rows(1, "v2"), TableHints("a", Disposition.Append)))
     assert(late.getMessage.contains("publish already committed"))
     // the refused land left no lease behind: a new publish lands the table
-    val p2 = m.publish()
+    val p2 = m.publish("writer-2")
     p2.land(rows(1, "v2"), TableHints("a", Disposition.Append))
     p2.commit()
     assert(m.read("a").get.count() == 4 && m.read("b").get.count() == 4)

@@ -98,7 +98,7 @@ class ManifestSchemaSpec extends SparkTestBase {
 
     // a table landed straight through a publish, with non-null nested
     // fields, array elements and map values
-    val pub = m.publish()
+    val pub = m.publish("writer")
     pub.land(spark.range(3).select(col("id"), array(col("id")).as("arr"),
       map(lit("k"), col("id")).as("kv"), struct(col("id").as("s")).as("st")),
       TableHints("raw", Disposition.Replace))

@@ -1,251 +1,136 @@
 package graft.streaming
 
 import graft.SparkTestBase
+import graft.core.{TableLock, TableManifest}
+import graft.pipeline.LandGate
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StreamingDedupSinkSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def corpusIds(path: String): Set[Long] =
-    spark.read.parquet(path).select("doc_id").as[Long].collect().toSet
+  private def table(root: String, name: String): DataFrame =
+    new TableManifest(spark, root).read(name).get
+
+  private def corpusIds(root: String): Set[Long] =
+    table(root, "corpus").select("doc_id").as[Long].collect().toSet
+
+  private def indexIds(root: String): Set[Long] =
+    table(root, "index").select("id").as[Long].collect().toSet
 
   test("stream dedups each micro-batch against the growing corpus+index across restarts") {
     implicit val sq = spark.sqlContext
     val root = tmpDir("sdedup")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
+    val ckpt = s"$root/ckpt"
     val input = MemoryStream[(Long, String)]
     val stream = input.toDF().toDF("doc_id", "text")
 
     // wave 1 bootstraps: batch-internal dup collapses
     input.addData((1L, "a b c d"), (2L, "a b c d"), (3L, "x y z w"))
-    val q1 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
+    val q1 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
     q1.processAllAvailable(); q1.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 3L))
+    assert(corpusIds(root) == Set(1L, 3L))
 
     // wave 2 through a RESTARTED query (same checkpoint): corpus dup
     // dropped, fresh doc kept, batch-internal dup collapsed
     input.addData((10L, "a b c d"), (11L, "p q r s"), (12L, "p q r s"))
-    val q2 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
+    val q2 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
     q2.processAllAvailable(); q2.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 3L, 11L))
+    assert(corpusIds(root) == Set(1L, 3L, 11L))
 
     // wave 3: a re-send of wave-2 content is now a corpus dup
     input.addData((20L, "p q r s"))
-    val q3 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
+    val q3 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
     q3.processAllAvailable(); q3.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 3L, 11L))
+    assert(corpusIds(root) == Set(1L, 3L, 11L))
 
     // index rows track exactly the surviving docs
-    val indexIds = spark.read.parquet(indexPath).select("id").as[Long].collect().toSet
-    assert(indexIds == Set(1L, 3L, 11L))
+    assert(indexIds(root) == Set(1L, 3L, 11L))
   }
 
-  test("steady-state recovery detection runs ZERO Spark jobs (no corpus count per batch)") {
+  test("a batch whose index land fails changes neither table; its re-delivery lands both exactly once") {
     implicit val sq = spark.sqlContext
-    val root = tmpDir("sdedup_steady")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
+    val root = tmpDir("sdedup_fail")
+    val ckpt = s"$root/ckpt"
     val input = MemoryStream[(Long, String)]
+    val stream = input.toDF().toDF("doc_id", "text")
     input.addData((1L, "a b c d"), (2L, "x y z w"))
-    val q = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
-    q.processAllAvailable(); q.stop()
+    val q1 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
+    q1.processAllAvailable(); q1.stop()
 
-    // after a clean cycle the check must be pure file-existence: count
-    // jobs around it with a listener and demand zero
-    @volatile var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
+    // the next batch's corpus land succeeds, then its index land fails
+    input.addData((5L, "p q r s"), (6L, "a b c d"))
+    LandGate.armed(spark, root) {
+      case "index" => throw new IllegalStateException("planted index land failure")
+      case _       => ()
+    } {
+      val q2 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
+      intercept[Exception](q2.processAllAvailable())
+      q2.stop()
     }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val healed = StreamingDedupSink.recoverIfNeeded(
-        spark, corpusPath, indexPath, "doc_id", "text", 4, 2)
-      assert(!healed, "clean commit marker must not trigger a heal")
-      Thread.sleep(500) // listener bus drains asynchronously
-      assert(jobs == 0, s"steady-state detection ran $jobs Spark jobs, must run none")
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
+    assert(LandGate.done.contains("corpus"), "the corpus land ran before the index land failed")
+    assert(corpusIds(root) == Set(1L, 2L), "the failed batch's corpus append must stay invisible")
+    assert(indexIds(root) == Set(1L, 2L))
 
-  test("intent marker left by a crash between the appends triggers the anti-join heal") {
-    implicit val sq = spark.sqlContext
-    val root = tmpDir("sdedup_intent")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
-    val input = MemoryStream[(Long, String)]
-    input.addData((1L, "a b c d"), (2L, "x y z w"))
-    val q1 = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
-    q1.processAllAvailable(); q1.stop()
-
-    // simulate: corpus append landed, index delta did not, intent survives
-    Seq((5L, "p q r s")).toDF("doc_id", "text")
-      .write.mode("append").parquet(corpusPath)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val intent = new org.apache.hadoop.fs.Path(indexPath, "_graft_intent")
-    val out = fs.create(intent, true); out.write("batch=99\n".getBytes); out.close()
-
-    // next batch: the un-indexed doc 5 must be healed into the index
-    // BEFORE dedup, so its re-send is dropped
-    input.addData((10L, "p q r s"), (11L, "fresh words here now"))
-    val q2 = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
-    q2.processAllAvailable(); q2.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 2L, 5L, 11L))
-    val indexIds = spark.read.parquet(indexPath).select("id").as[Long].collect().toSet
-    assert(indexIds == Set(1L, 2L, 5L, 11L))
-    assert(!fs.exists(intent), "intent must be cleared after the healed cycle commits")
-  }
-
-  test("duplicate index rows from a double-append cannot mask a missing doc") {
-    implicit val sq = spark.sqlContext
-    val root = tmpDir("sdedup_mask")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
-    val input = MemoryStream[(Long, String)]
-    input.addData((1L, "a b c d"), (2L, "x y z w"))
-    val q1 = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
-    q1.processAllAvailable(); q1.stop()
-
-    // over-count the index (double-append of doc 1's band rows), then a
-    // corpus append with NO index rows — a row-count comparison would see
-    // index >= corpus x bands and skip the heal; the id anti-join must not
-    import org.apache.spark.sql.functions.col
-    spark.read.parquet(indexPath).filter(col("id") === 1L)
-      .write.mode("append").parquet(indexPath)
-    Seq((5L, "p q r s")).toDF("doc_id", "text")
-      .write.mode("append").parquet(corpusPath)
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val intent = new org.apache.hadoop.fs.Path(indexPath, "_graft_intent")
-    val out = fs.create(intent, true); out.write("batch=99\n".getBytes); out.close()
-
-    val healed = StreamingDedupSink.recoverIfNeeded(
-      spark, corpusPath, indexPath, "doc_id", "text", 4, 2)
-    assert(healed)
-    val indexIds = spark.read.parquet(indexPath).select("id").as[Long].collect().toSet
-    assert(indexIds == Set(1L, 2L, 5L), "doc 5 must be indexed despite the over-count")
+    // the restarted query re-delivers the batch: doc 5 lands in both
+    // tables once, its duplicate of doc 1 is dropped
+    val q3 = StreamingDedupSink.start(stream, root, "doc_id", "text", ckpt, threshold = 0.9)
+    q3.processAllAvailable(); q3.stop()
+    val corpus = table(root, "corpus").select("doc_id").as[Long].collect().toSeq
+    assert(corpus.sorted == Seq(1L, 2L, 5L), "each doc is in the corpus exactly once")
+    val bandsPerDoc = table(root, "index").groupBy("id").count().as[(Long, Long)].collect().toMap
+    assert(bandsPerDoc == Map(1L -> 2L, 2L -> 2L, 5L -> 2L), "each doc has its band rows exactly once")
   }
 
   test("sink holds the table lease: a second pipeline is excluded, a restart retakes its own") {
     implicit val sq = spark.sqlContext
     val root = tmpDir("sdedup_lock")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
+    val ckpt = s"$root/ckpt"
     val input = MemoryStream[(Long, String)]
     input.addData((1L, "a b c d"))
     val q1 = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
+      root, "doc_id", "text", ckpt, threshold = 0.9)
     q1.processAllAvailable(); q1.stop()
 
     // simulate a crash that left this pipeline's lease behind: the
     // restarted query (same checkpoint = same owner) must proceed
-    graft.core.TableLock.acquire(spark, corpusPath, s"dedup-sink:$ckpt")
+    TableLock.acquire(spark, s"$root/corpus", s"manifest-publish:$ckpt")
     input.addData((2L, "p q r s"))
     val q2 = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", ckpt, threshold = 0.9)
+      root, "doc_id", "text", ckpt, threshold = 0.9)
     q2.processAllAvailable(); q2.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 2L))
+    assert(corpusIds(root) == Set(1L, 2L))
 
     // a DIFFERENT pipeline (other checkpoint) on the same corpus: its
     // batch must fail on the held lease, corpus untouched
-    val held = graft.core.TableLock.acquire(spark, corpusPath, "other-holder")
+    val held = TableLock.acquire(spark, s"$root/corpus", "other-holder")
     val input3 = MemoryStream[(Long, String)]
     input3.addData((3L, "x y z w"))
     val q3 = StreamingDedupSink.start(input3.toDF().toDF("doc_id", "text"),
-      corpusPath, indexPath, "doc_id", "text", s"$root/ckpt2", threshold = 0.9)
+      root, "doc_id", "text", s"$root/ckpt2", threshold = 0.9)
     val failed = intercept[Exception] { q3.processAllAvailable() }
     assert(failed.getMessage != null)
     q3.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 2L), "excluded pipeline must not write")
+    assert(corpusIds(root) == Set(1L, 2L), "excluded pipeline must not write")
     held.release()
   }
 
-  test("index compaction and live batches exclude each other; compaction loses nothing") {
-    // The sink leases BOTH tables per batch (corpus, then index). The
-    // index lease is keyed on indexPath — the same root
-    // TableMaintenance.compact(indexPath) locks — so compacting the
-    // per-batch small files of the index can never interleave its
-    // rewrite with a live batch's index probe or append.
+  test("many batches keep each table's generation list within MaxGenerations") {
     implicit val sq = spark.sqlContext
-    val root = tmpDir("sdedup_compact")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
+    val root = tmpDir("sdedup_many")
     val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-
-    input.addData((1L, "a b c d"), (2L, "a b c d"), (3L, "x y z w"))
-    val q1 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
-    q1.processAllAvailable(); q1.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 3L))
-
-    // an in-flight compaction holds the index lease: the next wave's
-    // batch must QUEUE behind it (bounded wait), not fail the stream and
-    // not skip its index append
-    val held = graft.core.TableLock.acquire(spark, indexPath, "compaction")
-    val releaser = new Thread(() => { Thread.sleep(1500); held.release(); () })
-    releaser.start()
-    input.addData((10L, "a b c d"), (11L, "p q r s"))
-    val q2 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
-    q2.processAllAvailable(); q2.stop()
-    releaser.join(10000)
-    assert(corpusIds(corpusPath) == Set(1L, 3L, 11L),
-      "the batch must complete after the compaction lease is released")
-    assert(spark.read.parquet(indexPath).select("id").as[Long].collect().toSet
-      == Set(1L, 3L, 11L), "the queued batch's index append must land")
-
-    // the inverse: a batch in flight (index lease held) excludes compaction
-    val batchLease = graft.core.TableLock.acquire(spark, indexPath, "dedup-sink:other")
-    intercept[graft.core.TableLock.LockHeldException] {
-      graft.core.TableMaintenance.compact(spark, indexPath)
-    }
-    batchLease.release()
-
-    // compaction between waves: per-batch small files shrink, the
-    // meta/intent sidecar survives (steady-state detection stays a pure
-    // existence check), and the next wave still dedups correctly
-    val (before, after) =
-      graft.core.TableMaintenance.compact(spark, indexPath, minFileBytes = 1024 * 1024)
-    assert(after < before, s"expected the per-batch small files to compact ($before -> $after)")
-    assert(!StreamingDedupSink.recoverIfNeeded(
-      spark, corpusPath, indexPath, "doc_id", "text", 4, 2),
-      "compaction must not destroy the commit sidecar (no heal afterwards)")
-    input.addData((20L, "p q r s"), (21L, "fresh words entirely new"))
-    val q3 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
-    q3.processAllAvailable(); q3.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 3L, 11L, 21L),
-      "post-compaction: corpus dup dropped, fresh doc kept")
-  }
-
-  test("a lost index is rebuilt from the corpus before the next batch dedups") {
-    implicit val sq = spark.sqlContext
-    val root = tmpDir("sdedup_heal")
-    val (corpusPath, indexPath, ckpt) = (s"$root/corpus", s"$root/index", s"$root/ckpt")
-    val input = MemoryStream[(Long, String)]
-    val stream = input.toDF().toDF("doc_id", "text")
-
-    input.addData((1L, "a b c d"), (2L, "x y z w"))
-    val q1 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
-    q1.processAllAvailable(); q1.stop()
-
-    // simulate a crash that landed the corpus but never the index
-    val fs = new org.apache.hadoop.fs.Path(indexPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(indexPath), true)
-
-    // next batch: a dup of corpus doc 1 must STILL be caught (index
-    // rebuilt from the corpus), fresh doc kept
-    input.addData((10L, "a b c d"), (11L, "p q r s"))
-    val q2 = StreamingDedupSink.start(stream, corpusPath, indexPath,
-      "doc_id", "text", ckpt, threshold = 0.9)
-    q2.processAllAvailable(); q2.stop()
-    assert(corpusIds(corpusPath) == Set(1L, 2L, 11L))
-    val indexIds = spark.read.parquet(indexPath).select("id").as[Long].collect().toSet
-    assert(indexIds == Set(1L, 2L, 11L))
+    val q = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
+      root, "doc_id", "text", s"$root/ckpt", threshold = 0.9, availableNow = false, triggerIntervalMs = 0)
+    val batches = TableManifest.MaxGenerations + 2
+    val m = new TableManifest(spark, root)
+    val longest = try (1 to batches).map { i =>
+      input.addData((i.toLong, s"doc$i words only here w$i"))
+      q.processAllAvailable()
+      m.gens("index").size
+    }.max finally q.stop()
+    assert(longest <= TableManifest.MaxGenerations, s"index list reached $longest generations")
+    assert(m.gens("corpus").size <= TableManifest.MaxGenerations)
+    assert(corpusIds(root) == (1 to batches).map(_.toLong).toSet)
+    assert(indexIds(root) == (1 to batches).map(_.toLong).toSet)
   }
 }
