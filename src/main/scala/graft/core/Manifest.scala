@@ -37,14 +37,18 @@ import scala.jdk.CollectionConverters._
   * dir and the new list is `old :+ delta`; merge/replace/scd2 land a
   * full rewrite and the list shrinks to one entry. A list never holds
   * more than [[TableManifest.MaxGenerations]]: a delta that would pass
-  * it lands merged with the newest run of small generations
-  * ([[Publish.land]]), so reads open a bounded number of generations
-  * however long a backfill appends. Unreferenced dirs
-  * (crash orphans, superseded generations) are swept PER TABLE at the
-  * next publish's first land into that table, under the table's lease —
-  * a full publish interval of reader grace (the frontier's compaction
-  * sweep policy), and never a concurrent publisher's uncommitted
-  * landings (its tables are leased).
+  * it lands merged with at most [[TableManifest.MaxMergedGenerations]]
+  * of the newest small generations ([[Publish.land]]), so reads open a
+  * bounded number of generations however long a backfill appends.
+  * Unreferenced dirs are swept PER TABLE at a publish's first touch of
+  * that table, under the table's lease, so never a concurrent
+  * publisher's uncommitted landings (its tables are leased). Crash
+  * orphans and generations a rewrite superseded go at once (a full
+  * publish interval of reader grace, the frontier's compaction sweep
+  * policy); generations a merge absorbed go once the generation that
+  * absorbed them was committed [[Generations.GraceMs]] ago, so a reader
+  * of an append-only table keeps its files that long whatever the
+  * publish rate.
   */
 final class TableManifest(spark: SparkSession, root: String) {
   import TableManifest._
@@ -171,19 +175,28 @@ final class TableManifest(spark: SparkSession, root: String) {
       }
     }
 
-    /** Delete the table's generation dirs outside `keep`, its committed
-      * list (stable under our lease): crash orphans before their numbers
-      * are re-minted, superseded generations after a publish interval of
-      * reader grace — never another publisher's landings (its tables).
+    /** Delete the table's unreferenced generation dirs — `committed` is
+      * its committed list, stable under our lease: crash orphans (above
+      * every committed number) before their numbers are re-minted, and
+      * generations a rewrite superseded (below every committed number).
+      * A generation a merge absorbed (committed numbers on both sides) is
+      * kept until the generation that absorbed it — the lowest committed
+      * one above it, its mtime stamped at commit — is [[Generations.GraceMs]] old.
       */
-    private def sweepTable(table: String, keep: Set[String]): Unit = {
+    private def sweepTable(table: String, committed: Seq[String]): Unit = {
       val tableDir = new Path(s"$root/$table")
       val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(tableDir))
-        fs.listStatus(tableDir).filter(_.isDirectory).foreach { g =>
-          val gen = g.getPath.getName
-          if (gen.matches("^g[0-9]+$") && !keep.contains(gen)) EpochFiles.sweep(fs, g.getPath, "manifest sweep")
-        }
+      val gens = if (fs.exists(tableDir)) fs.listStatus(tableDir).filter(g =>
+        g.isDirectory && g.getPath.getName.matches("^g[0-9]+$")).toSeq else Nil
+      val mtime = gens.map(g => g.getPath.getName -> g.getModificationTime).toMap
+      val graceEnd = System.currentTimeMillis() - Generations.GraceMs
+      val nums = committed.map(genNumber)
+      gens.filterNot(g => committed.contains(g.getPath.getName)).foreach { g =>
+        val n = genNumber(g.getPath.getName)
+        val absorbedBy = if (nums.exists(_ < n)) committed.filter(genNumber(_) > n).minByOption(genNumber) else None
+        if (!absorbedBy.exists(a => mtime.get(a).exists(_ > graceEnd)))
+          EpochFiles.sweep(fs, g.getPath, "manifest sweep")
+      }
     }
 
     /** The table as this publish sees it — its landed state, else the
@@ -195,7 +208,7 @@ final class TableManifest(spark: SparkSession, root: String) {
         val first = !leases.holds(name)
         if (first) leaseTable(name)
         val committedState = snapshot(name)
-        if (first) sweepTable(name, committedState.fold(Set.empty[String])(_.gens.toSet))
+        if (first) sweepTable(name, committedState.fold(Seq.empty[String])(_.gens))
         committedState
       }
     }
@@ -225,10 +238,12 @@ final class TableManifest(spark: SparkSession, root: String) {
       * generations the table has.
       *
       * A delta that would take the list past [[MaxGenerations]] is written
-      * together with the newest run of small generations ([[mergedRun]]) as
-      * one generation that replaces them — still one write job. The merged
-      * generations stay on disk, superseded, until the table's next
-      * publish sweeps them, like any other superseded generation.
+      * together with a bounded run of the newest small generations
+      * ([[mergedRun]]) as one generation that replaces them — still one
+      * write job, packed into files of about `spark.sql.files.maxPartitionBytes`
+      * by the run's bytes on disk. The absorbed generations stay on disk
+      * for [[Generations.GraceMs]] after the commit, for readers that
+      * resolved the table before it.
       */
     def land(updates: DataFrame, hints: TableHints): Long = {
       synchronized(require(!committed, "publish already committed"))
@@ -244,7 +259,7 @@ final class TableManifest(spark: SparkSession, root: String) {
       monitor(name).synchronized {
         val base = current(name)
         // numbers only grow: a pending list's newest is above every committed one
-        val gen = s"g${base.fold(0L)(_.gens.map(_.stripPrefix("g").toLong).max) + 1L}"
+        val gen = s"g${base.fold(0L)(_.gens.map(genNumber).max) + 1L}"
         val genPath = s"$root/$name/$gen"
         // overwrite: a crashed publish's orphan with the same number was
         // swept at first land, but a racing retry inside one JVM could
@@ -257,12 +272,14 @@ final class TableManifest(spark: SparkSession, root: String) {
             val run = mergedRun(old.map(_._2))
             val schema = nullable(rows.schema)
             // the run read with the delta's schema (a superset of the
-            // table's) and packed into files of about MergedRowsPerFile
-            // rows: a merged run of small generations is a few files
+            // table's) and packed by its bytes on disk: a merged run of
+            // small generations is a few files
             val written = if (run == 0) rows else {
-              val merged = old.takeRight(run)
-              spark.read.schema(schema).parquet(merged.map(g => s"$root/$name/${g._1}"): _*)
-                .coalesce(math.max(1, (merged.map(_._2).sum / MergedRowsPerFile).toInt)).union(rows)
+              val dirs = old.takeRight(run).map(g => new Path(s"$root/$name/${g._1}"))
+              val bytes = dirs.map(d => d.getFileSystem(spark.sparkContext.hadoopConfiguration)
+                .getContentSummary(d).getLength).sum
+              spark.read.schema(schema).parquet(dirs.map(_.toString): _*)
+                .coalesce((bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt).union(rows)
             }
             written.write.mode("overwrite").parquet(genPath)
             val kept = old.dropRight(run)
@@ -311,6 +328,10 @@ final class TableManifest(spark: SparkSession, root: String) {
         base = newest()
       }
       java.nio.file.Files.deleteIfExists(tmp)
+      // each landed generation's mtime is its commit time: the reader
+      // grace of the generations a merge absorbed counts from it
+      val now = System.currentTimeMillis()
+      mine.foreach { case (name, t) => new java.io.File(s"$localRoot/$name/${t.gens.last}").setLastModified(now) }
       committed = true
       leases.releaseAll()
       if (mine.nonEmpty) sweepEpochs(base.n)
@@ -348,21 +369,25 @@ object TableManifest {
   /** The most generations a table's list holds (see [[Publish.land]]). */
   val MaxGenerations = 16
 
-  /** Rows per file a merged run of generations is packed into. */
-  private val MergedRowsPerFile = 1L << 20
+  /** The most generations one merging land absorbs: a merge rewrites a
+    * bounded slice of the table, never the whole list.
+    */
+  val MaxMergedGenerations = 4
+
+  private def genNumber(gen: String): Long = gen.stripPrefix("g").toLong
 
   /** How many of the newest generations (row counts `counts`, oldest
     * first) a delta merges with: none while the list has room; else the
-    * newest, then each older one no larger than the rows merged so far —
-    * size-tiered, so a row is rewritten about once per size tier and a
-    * big old generation is never rewritten for a small delta.
+    * newest, then each older one no larger than the rows merged so far,
+    * up to [[MaxMergedGenerations]] — size-tiered, so a big old
+    * generation is never rewritten for a small delta.
     */
   private[core] def mergedRun(counts: Seq[Long]): Int =
     if (counts.size < MaxGenerations) 0
     else {
       var run = 1
       var rows = counts.last
-      while (run < counts.size && counts(counts.size - 1 - run) <= rows) {
+      while (run < math.min(counts.size, MaxMergedGenerations) && counts(counts.size - 1 - run) <= rows) {
         rows += counts(counts.size - 1 - run)
         run += 1
       }

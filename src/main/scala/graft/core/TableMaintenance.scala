@@ -20,8 +20,8 @@ import java.nio.charset.StandardCharsets
   *
   *   1. the bin's rows are written to a scratch dir and the output file
   *      is renamed to its final name ONLY after a `_compacting_<id>`
-  *      marker (listing the new file + the originals it replaces) is in
-  *      place;
+  *      marker at the table root (listing the new file + the originals
+  *      it replaces, relative to the root) is in place;
   *   2. originals are deleted after the new file is in;
   *   3. the marker is deleted last.
   *
@@ -69,11 +69,16 @@ object TableMaintenance {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    TableWriter.leased(spark, path, "compaction")(compactLocked(spark, path, targetBytes, minFileBytes))
+    TableWriter.leased(spark, path, "compaction")(compactLocked(spark, path, "", targetBytes, minFileBytes))
 
-  private def compactLocked(spark: SparkSession, path: String,
+  /** Compact the leaf dir `leaf` (relative to the table root `path`, ""
+    * for the root itself). Markers go to the root and name root-relative
+    * paths, so [[repair]] lists one dir however many partitions exist.
+    */
+  private def compactLocked(spark: SparkSession, path: String, leaf: String,
       targetBytes: Long, minFileBytes: Long): (Int, Int) = {
-    val (fs, dir) = fsOf(spark, path)
+    val (fs, root) = fsOf(spark, path)
+    val dir = if (leaf.isEmpty) root else new Path(root, leaf)
     val all = dataFiles(fs, dir)
     val small = all.filter(_._2 < minFileBytes)
     val bins = pack(small, targetBytes).filter(_.size > 1)
@@ -92,9 +97,10 @@ object TableMaintenance {
       // the marker itself must appear atomically: write it in scratch,
       // rename into place (a crash mid-write would otherwise leave a
       // truncated marker that repair can't interpret)
-      val marker = new Path(dir, s"_compacting_$id")
+      val marker = new Path(root, s"_compacting_$id")
       val markerTmp = new Path(binScratch, s"_compacting_$id")
-      val payload = (outName +: bin.map(_._1.getName)).mkString("\n")
+      val prefix = if (leaf.isEmpty) "" else s"$leaf/"
+      val payload = (outName +: bin.map(_._1.getName)).map(prefix + _).mkString("\n")
       require(EpochFiles.create(fs, markerTmp, payload.getBytes(StandardCharsets.UTF_8)),
         s"marker $markerTmp already exists")
       require(fs.rename(markerTmp, marker), s"marker rename failed for $marker")
@@ -113,20 +119,23 @@ object TableMaintenance {
     (all.size, dataFiles(fs, dir).size)
   }
 
-  /** Leaf partition directories: dirs under `root` that directly hold
-    * `.parquet` data files (the root itself counts when unpartitioned).
-    * Hidden/metadata entries (`_`/`.` prefixed) are skipped, so markers,
-    * staged-swap scratch and `_SUCCESS` never register as partitions.
+  /** Leaf partition directories, relative to `dir` ("" = `dir` itself):
+    * dirs that directly hold `.parquet` data files (the root itself counts
+    * when unpartitioned). Hidden/metadata entries (`_`/`.` prefixed) are
+    * skipped, so markers, staged-swap scratch and `_SUCCESS` never
+    * register as partitions.
     */
-  private def leafDirs(fs: FileSystem, dir: Path): Seq[Path] = {
+  private def leafDirs(fs: FileSystem, dir: Path, rel: String = ""): Seq[String] = {
     val st = fs.listStatus(dir).toSeq.filterNot { s =>
       val n = s.getPath.getName
       n.startsWith("_") || n.startsWith(".")
     }
     val here =
-      if (st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))) Seq(dir)
+      if (st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))) Seq(rel)
       else Seq.empty
-    here ++ st.filter(_.isDirectory).flatMap(s => leafDirs(fs, s.getPath))
+    here ++ st.filter(_.isDirectory).flatMap { s =>
+      leafDirs(fs, s.getPath, if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}")
+    }
   }
 
   /** [[compact]] for PARTITIONED tables — every growing table here is
@@ -151,18 +160,20 @@ object TableMaintenance {
     TableWriter.leased(spark, path, "compaction") {
       val (fs, dir) = fsOf(spark, path)
       val results = leafDirs(fs, dir)
-        .map(l => compactLocked(spark, l.toString, targetBytes, minFileBytes))
+        .map(l => compactLocked(spark, path, l, targetBytes, minFileBytes))
       (results.map(_._1).sum, results.map(_._2).sum)
     }
 
-  /** Replay interrupted compaction markers (see protocol above) in every
-    * leaf dir of `path`. No-op on a clean table. [[TableWriter.leased]]
-    * runs it before every write and maintenance pass reads the table.
+  /** Replay interrupted compaction markers (see protocol above): one
+    * listing of the table root, where every marker lives, so a clean
+    * table costs one `listStatus` however many partitions it has.
+    * [[TableWriter.leased]] runs it before every write and maintenance
+    * pass reads the table.
     */
   def repair(spark: SparkSession, path: String): Unit = {
     val (fs, root) = fsOf(spark, path)
-    if (fs.exists(root)) leafDirs(fs, root).foreach { dir =>
-      fs.listStatus(dir).filter(s => s.isFile && s.getPath.getName.startsWith("_compacting_")).foreach { m =>
+    if (fs.exists(root))
+      fs.listStatus(root).filter(s => s.isFile && s.getPath.getName.startsWith("_compacting_")).foreach { m =>
         val in = fs.open(m.getPath)
         val lines = scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
         in.close()
@@ -172,15 +183,14 @@ object TableMaintenance {
         // is defense in depth, not an expected state)
         lines match {
           case newName :: olds =>
-            if (fs.exists(new Path(dir, newName)))
+            if (fs.exists(new Path(root, newName)))
               // new file landed: finish deleting the originals it replaced
-              olds.foreach(o => fs.delete(new Path(dir, o), false))
+              olds.foreach(o => fs.delete(new Path(root, o), false))
           // else: rename never happened — originals are intact
           case Nil => ()
         }
         fs.delete(m.getPath, false)
       }
-    }
   }
 
   /** OPTIMIZE-style Z-order re-cluster: a full rewrite of the table

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.core.{Disposition, TableHints, TableManifest}
@@ -28,7 +29,10 @@ import graft.ops.Dedup
   * bounded by the manifest's own merging ([[TableManifest.MaxGenerations]]).
   *
   * `root` must be a local filesystem path, as for every manifest: a
-  * commit publishes an epoch file by a no-replace hard link.
+  * commit publishes an epoch file by a no-replace hard link. `start`
+  * refuses a root whose `corpus` or `index` dir holds parquet files but
+  * that has no manifest (tables written before the sink committed
+  * through one).
   */
 object StreamingDedupSink {
 
@@ -45,6 +49,17 @@ object StreamingDedupSink {
       availableNow: Boolean = true,
       triggerIntervalMs: Long = 10000,
   ): StreamingQuery = {
+    // a corpus written before the sink committed through a manifest keeps
+    // its parquet files directly in the table dir: refuse it, rather than
+    // bootstrap beside it and accept its documents again
+    if (new TableManifest(stream.sparkSession, root).tables.isEmpty) {
+      val fs = new Path(root).getFileSystem(stream.sparkSession.sparkContext.hadoopConfiguration)
+      Seq("corpus", "index").map(new Path(root, _)).filter(fs.exists).foreach { dir =>
+        require(!fs.listStatus(dir).exists(_.getPath.getName.endsWith(".parquet")),
+          s"$dir holds parquet files outside any manifest (no manifest epoch under $root): " +
+            "the sink reads only manifest tables, so it would accept those documents again")
+      }
+    }
     val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>

@@ -131,18 +131,22 @@ class ManifestEpochSpec extends SparkTestBase {
     assert(m.read("t").get.count() == 6)
   }
 
-  test("merged runs are size-tiered: none while the list has room, never a bigger old generation") {
+  test("merged runs are size-tiered and bounded: none while the list has room, never a bigger old generation") {
     val k = TableManifest.MaxGenerations
+    val most = TableManifest.MaxMergedGenerations
+    assert(most < k)
     assert(TableManifest.mergedRun(Seq.fill(k - 1)(1L)) == 0)
-    assert(TableManifest.mergedRun(Seq.fill(k)(1L)) == k)
-    assert(TableManifest.mergedRun(Seq(100L) ++ Seq.fill(k - 1)(1L)) == k - 1)
+    assert(TableManifest.mergedRun(Seq.fill(k)(1L)) == most)
+    assert(TableManifest.mergedRun(Seq(100L) ++ Seq.fill(k - 1)(1L)) == most)
     assert(TableManifest.mergedRun(Seq.fill(k - 2)(1L) ++ Seq(10L, 3L)) == 1)
+    assert(TableManifest.mergedRun(Seq.fill(k - 3)(9L) ++ Seq(2L, 1L, 1L)) == 3)
   }
 
-  test("a delta past MaxGenerations merges the newest small generations in one job; a crash before the commit changes nothing; the retry commits") {
+  test("a delta past MaxGenerations merges a bounded run of the newest generations in one job; a crash before the commit changes nothing; the retry commits") {
     val dest = tmpDir("epoch-merge")
     val m = new TableManifest(spark, dest)
     val k = TableManifest.MaxGenerations
+    val most = TableManifest.MaxMergedGenerations
     def append(n: Int, tag: String): m.Publish = {
       val p = m.publish(s"writer-$tag-${java.util.UUID.randomUUID()}")
       p.land(rows(n, tag), TableHints("t", Disposition.Append))
@@ -162,22 +166,33 @@ class ManifestEpochSpec extends SparkTestBase {
     crashed.abort()
     assert(m.gens("t") == full && m.read("t").get.count() == 100 + 2 * (k - 1))
 
+    // a reader resolves the table before the merge and collects after it
+    val before = m.read("t").get
     val p = m.publish("writer-retry")
     val jobs = jobsFor("epoch-merge-land") { p.land(rows(2, "next"), TableHints("t", Disposition.Append)) }
     p.commit()
     assert(jobs == 1, s"a merging land ran $jobs Spark jobs")
-    // the small generations merged with the delta; the big one stays
+    // the newest generations merged with the delta; the older ones stay
     val merged = m.gens("t")
-    assert(merged.size == 2 && merged.head == full.head, s"list after the merge: $merged")
+    val absorbed = full.takeRight(most)
+    assert(merged.init == full.dropRight(most) && merged.size == k - most + 1, s"list after the merge: $merged")
     assert(m.read("t").get.count() == 100 + 2 * k && tags(m, "t") == allTags)
     def parquetFiles(gen: String) = new java.io.File(s"$dest/t/$gen").list().count(_.endsWith(".parquet"))
-    assert(parquetFiles(merged.last) < k - 1, "the merged run is packed into a few files")
+    assert(parquetFiles(merged.last) < absorbed.map(parquetFiles).sum, "the merged run is packed into fewer files")
 
-    // the merged generations keep a publish interval of reader grace
-    assert(full.tail.forall(g => Files.exists(Paths.get(dest, "t", g))))
+    // the absorbed generations outlive later publishes while the merge
+    // is younger than the grace, so the early reader still collects
     append(1, "later").commit()
-    assert(full.tail.forall(g => !Files.exists(Paths.get(dest, "t", g))))
-    assert(m.read("t").get.count() == 100 + 2 * k + 1)
+    append(1, "later2").commit()
+    assert(absorbed.forall(g => Files.exists(Paths.get(dest, "t", g))))
+    assert(before.count() == 100 + 2 * (k - 1))
+    // once the merge is older than the grace, the next publish sweeps them
+    assert(new java.io.File(s"$dest/t/${merged.last}")
+      .setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000L))
+    append(1, "last").commit()
+    assert(absorbed.forall(g => !Files.exists(Paths.get(dest, "t", g))))
+    assert(m.gens("t").forall(g => Files.exists(Paths.get(dest, "t", g))))
+    assert(m.read("t").get.count() == 100 + 2 * k + 3)
   }
 
   /** Spark jobs `body` runs. */

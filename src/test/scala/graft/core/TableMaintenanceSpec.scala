@@ -142,6 +142,34 @@ class TableMaintenanceSpec extends SparkTestBase {
     assert(rows.toMap.apply(5L) == "new")
   }
 
+  test("a crashed compaction of a partition is replayed from its marker at the table root") {
+    val dir = tmpDir("compact_part_crash")
+    (0 until 2).foreach { b =>
+      (0 until 2).foreach { i =>
+        (i * 50 until (i + 1) * 50).map(j => (j.toLong, b.toLong)).toDF("id", "batch_id")
+          .repartition(1).write.mode("append").partitionBy("batch_id").parquet(dir)
+      }
+    }
+    val fs = fsFor(dir)
+    val leaf = s"$dir/batch_id=1"
+    val origs = parquetFiles(leaf)
+    spark.read.parquet(leaf).coalesce(1).write.parquet(s"$leaf/.compact_scratch/bin_0")
+    val produced = fs.listStatus(new Path(s"$leaf/.compact_scratch/bin_0"))
+      .filter(_.getPath.getName.endsWith(".parquet")).head.getPath
+    val marker = new Path(dir, "_compacting_crashed")
+    val out = fs.create(marker, false)
+    out.write(("compacted-crashed.parquet" +: origs).map("batch_id=1/" + _).mkString("\n").getBytes("UTF-8"))
+    out.close()
+    fs.rename(produced, new Path(leaf, "compacted-crashed.parquet"))
+    assert(spark.read.parquet(dir).count() == 300)
+
+    TableMaintenance.repair(spark, dir)
+    assert(!fs.exists(marker))
+    assert(parquetFiles(leaf) == Seq("compacted-crashed.parquet"))
+    val rows = spark.read.parquet(dir).select("id", "batch_id").as[(Long, Long)].collect().toSeq
+    assert(rows.size == 200 && rows.distinct.size == 200)
+  }
+
   test("compact repairs leftover markers before planning new bins") {
     val dir = tmpDir("compact_auto")
     landSmallFiles(dir, 3)

@@ -115,22 +115,41 @@ class StreamingDedupSinkSpec extends SparkTestBase {
     held.release()
   }
 
-  test("many batches keep each table's generation list within MaxGenerations") {
+  test("many batches keep each table's generation list within MaxGenerations; a read resolved before a merge still collects") {
     implicit val sq = spark.sqlContext
     val root = tmpDir("sdedup_many")
     val input = MemoryStream[(Long, String)]
     val q = StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"),
       root, "doc_id", "text", s"$root/ckpt", threshold = 0.9, availableNow = false, triggerIntervalMs = 0)
-    val batches = TableManifest.MaxGenerations + 2
+    val k = TableManifest.MaxGenerations
+    val batches = k + 3
     val m = new TableManifest(spark, root)
+    var early: DataFrame = null
     val longest = try (1 to batches).map { i =>
       input.addData((i.toLong, s"doc$i words only here w$i"))
       q.processAllAvailable()
+      // a long corpus scan resolved at the full list: the next batch
+      // merges generations it reads, later batches sweep unreferenced ones
+      if (i == k) early = table(root, "corpus")
       m.gens("index").size
     }.max finally q.stop()
-    assert(longest <= TableManifest.MaxGenerations, s"index list reached $longest generations")
-    assert(m.gens("corpus").size <= TableManifest.MaxGenerations)
+    assert(longest <= k, s"index list reached $longest generations")
+    assert(m.gens("corpus").size <= k)
+    assert(early.select("doc_id").as[Long].collect().toSet == (1 to k).map(_.toLong).toSet)
     assert(corpusIds(root) == (1 to batches).map(_.toLong).toSet)
     assert(indexIds(root) == (1 to batches).map(_.toLong).toSet)
+  }
+
+  test("a root whose corpus holds parquet files outside any manifest is refused at start") {
+    implicit val sq = spark.sqlContext
+    val root = tmpDir("sdedup_legacy")
+    Seq((1L, "a b c d")).toDF("doc_id", "text").write.parquet(s"$root/corpus")
+    val input = MemoryStream[(Long, String)]
+    input.addData((1L, "a b c d"))
+    val err = intercept[IllegalArgumentException] {
+      StreamingDedupSink.start(input.toDF().toDF("doc_id", "text"), root, "doc_id", "text", s"$root/ckpt")
+    }
+    assert(err.getMessage.contains("outside any manifest"))
+    assert(new TableManifest(spark, root).tables.isEmpty)
   }
 }
