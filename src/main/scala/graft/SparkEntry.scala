@@ -228,11 +228,9 @@ object SparkEntry {
     df.select(col("q_id"), col("rank").cast("long").as("rank"), col("n_id"))
       .orderBy("q_id", "rank")
 
-  /** A fresh frontier root and its state store. */
-  private def frontierRoot(prefix: String): (String, StateStore) = {
-    val dest = java.nio.file.Files.createTempDirectory(prefix).toString
-    (dest, new StateStore(java.nio.file.Paths.get(dest, "state.json")))
-  }
+  /** A fresh frontier root. */
+  private def frontierRoot(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   /** The frontier contracts' fetch: each to-do URL lands as a page tagged
     * with its `wave`, so a page re-fetched in a later wave duplicates its
@@ -264,8 +262,8 @@ object SparkEntry {
       .agg(coalesce(max("count"), lit(0L))).head().getLong(0)
 
   /** The committed pages archive as (host, wave, url_canon). */
-  private def hostPages(s: SparkSession, dest: String, state: StateStore): DataFrame =
-    UrlFrontier.committedPages(s, dest, state)
+  private def hostPages(s: SparkSession, dest: String): DataFrame =
+    UrlFrontier.committedPages(s, dest)
       .select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"),
         col("wave"), col("url_canon"))
 
@@ -282,12 +280,12 @@ object SparkEntry {
     */
   private def crawlUnderRobots(s: SparkSession, prefix: String, planned: DataFrame,
       rules: DataFrame): DataFrame = {
-    val (dest, state) = frontierRoot(prefix)
-    UrlFrontier.runWave(s, dest, state, planned, "url", robots = Some(rules))(fetchWave(1))
-    UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(2))
-    require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(3)).isEmpty,
+    val dest = frontierRoot(prefix)
+    UrlFrontier.runWave(s, dest, planned, "url", robots = Some(rules))(fetchWave(1))
+    UrlFrontier.runWave(s, dest, planned, "url")(fetchWave(2))
+    require(UrlFrontier.runWave(s, dest, planned, "url")(fetchWave(3)).isEmpty,
       "frontier not drained after the rules lifted")
-    hostPages(s, dest, state).orderBy("url_canon")
+    hostPages(s, dest).orderBy("url_canon")
   }
 
   /** The q_fleet_* fixture: documents with doc_id < 250 as GitHub issue
@@ -1616,48 +1614,47 @@ object SparkEntry {
     // fetch-exactly-once holds ACROSS the compaction. The membership
     // check is a distributed left_anti join against the parquet seen
     // generations (a frontier's key set is billions at corpus scale —
-    // never driver state), and the state pointer commits atomically
-    // AFTER the landing. The wave tag pins re-fetches: a seen page
+    // never driver state), and each wave's tables commit in one manifest
+    // epoch AFTER the landing. The wave tag pins re-fetches: a seen page
     // re-fetched in a later wave would duplicate its url_canon and flip
     // its wave, breaking the hash. Finally the PAGES archive itself —
     // the user-facing artifact — is bin-packed (compactPages, cardinality
-    // asserted preserved), the superseded dirs swept, and the RESULT is
-    // read back through the committed pages list (committedPages): the
-    // exactly-once read path a raw pages/* glob does not provide.
+    // asserted preserved), and the RESULT is read back through the
+    // manifest (committedPages): the exactly-once read path a raw pages/*
+    // glob, which still sees the superseded generations, does not provide.
     "q_url_frontier" -> ((s, dir) => {
-      val (dest, state) = frontierRoot("graft_frontier")
+      val dest = frontierRoot("graft_frontier")
       def listing(maxId: Long) =
         t(s, dir, "events").filter(col("event_id") < maxId)
           .select(col("event_id"), plantedUrl("event_id"))
-      val w1 = UrlFrontier.runWave(s, dest, state, listing(1500), "url")(fetchWaveHashed(1))
-      val w2 = UrlFrontier.runWave(s, dest, state, listing(3000), "url")(fetchWaveHashed(2))
+      val w1 = UrlFrontier.runWave(s, dest, listing(1500), "url")(fetchWaveHashed(1))
+      val w2 = UrlFrontier.runWave(s, dest, listing(3000), "url")(fetchWaveHashed(2))
       // compact the two committed seen generations into one, then prove
       // fetch-exactly-once ACROSS the compaction: wave 3 re-lists
       // everything and must fetch only the genuinely new pages (the
       // oracle's one-row-per-canonical-URL shape enforces it)
-      val before = UrlFrontier.seenSet(s, dest, state).count()
-      val compacted = UrlFrontier.compactSeen(s, dest, state)
+      val before = UrlFrontier.seenSet(s, dest).count()
+      val compacted = UrlFrontier.compactSeen(s, dest)
       require(compacted.size == 1,
         s"compaction must leave a single seen generation, got $compacted")
-      require(UrlFrontier.seenSet(s, dest, state).count() == before,
+      require(UrlFrontier.seenSet(s, dest).count() == before,
         "compaction changed the seen-set cardinality")
-      val w3 = UrlFrontier.runWave(s, dest, state, listing(4000), "url")(fetchWaveHashed(3))
+      val w3 = UrlFrontier.runWave(s, dest, listing(4000), "url")(fetchWaveHashed(3))
       require(w1.columns.sameElements(w3.columns) && w2.columns.sameElements(w3.columns),
         "wave schema drifted")
       // the archive is the user-facing artifact: bin-pack the per-wave
-      // pages dirs (same crash discipline, multiplicity preserved), sweep
-      // the superseded dirs, and read the RESULT through the committed
-      // pages list — the exactly-once read path a raw pages/* glob does
-      // not provide. The oracle's one-row-per-canonical-URL shape (with
-      // the wave tag pinned) proves exactly-once survived the rewrite.
-      val pagesBefore = UrlFrontier.committedPages(s, dest, state).count()
-      val pGens = UrlFrontier.compactPages(s, dest, state)
+      // pages generations (same crash discipline, multiplicity preserved)
+      // and read the RESULT through the manifest — the exactly-once read
+      // path a raw pages/* glob does not provide. The oracle's
+      // one-row-per-canonical-URL shape (with the wave tag pinned) proves
+      // exactly-once survived the rewrite.
+      val pagesBefore = UrlFrontier.committedPages(s, dest).count()
+      val pGens = UrlFrontier.compactPages(s, dest)
       require(pGens.size == 1,
         s"pages compaction must leave a single generation, got $pGens")
-      UrlFrontier.gc(s, dest, state)
-      require(UrlFrontier.committedPages(s, dest, state).count() == pagesBefore,
+      require(UrlFrontier.committedPages(s, dest).count() == pagesBefore,
         "pages compaction changed the archive cardinality")
-      UrlFrontier.committedPages(s, dest, state).orderBy("url_canon")
+      UrlFrontier.committedPages(s, dest).orderBy("url_canon")
     }),
 
     // per-host crawl politeness: three capped waves over a 7-host URL set
@@ -1671,17 +1668,17 @@ object SparkEntry {
     // across all four waves (one row per canonical URL, wave tag pinned)
     "q_url_frontier_polite" -> ((s, dir) => {
       val cap = 150
-      val (dest, state) = frontierRoot("graft_polite")
+      val dest = frontierRoot("graft_polite")
       val planned = politePlan(s, dir)
       (1 to 3).foreach { w =>
-        val landed = UrlFrontier.runWave(s, dest, state, planned, "url", Some(cap))(fetchWave(w))
+        val landed = UrlFrontier.runWave(s, dest, planned, "url", Some(cap))(fetchWave(w))
         val worst = busiestHost(landed)
         require(worst <= cap, s"wave $w fetched $worst URLs from one host (cap $cap)")
       }
-      UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(4))
-      require(UrlFrontier.runWave(s, dest, state, planned, "url")(fetchWave(5)).isEmpty,
+      UrlFrontier.runWave(s, dest, planned, "url")(fetchWave(4))
+      require(UrlFrontier.runWave(s, dest, planned, "url")(fetchWave(5)).isEmpty,
         "frontier not drained after the uncapped wave")
-      hostWaveCounts(hostPages(s, dest, state))
+      hostWaveCounts(hostPages(s, dest))
     }),
 
     // crawl politeness in TIME on the frontier's logical wave clock: with
@@ -1695,10 +1692,10 @@ object SparkEntry {
     // fetch-exactly-once across all nine waves in one hash
     "q_url_frontier_gap" -> ((s, dir) => {
       val cap = 150
-      val (dest, state) = frontierRoot("graft_gap")
+      val dest = frontierRoot("graft_gap")
       val planned = politePlan(s, dir)
       (1 to 9).foreach { w =>
-        val landed = UrlFrontier.runWave(s, dest, state, planned, "url",
+        val landed = UrlFrontier.runWave(s, dest, planned, "url",
           maxPerHost = Some(cap), minWaveGapPerHost = 1)(fetchWave(w))
         if (w % 2 == 0)
           require(landed.isEmpty,
@@ -1708,7 +1705,7 @@ object SparkEntry {
           require(worst <= cap, s"wave $w fetched $worst URLs from one host (cap $cap)")
         } else require(landed.isEmpty, "frontier not drained by wave 7 (500 URLs/host at 150/wave)")
       }
-      hostWaveCounts(hostPages(s, dest, state))
+      hostWaveCounts(hostPages(s, dest))
     }),
 
     // robots.txt politeness on the frontier (RFC 9309, completing the
@@ -3620,7 +3617,6 @@ object SparkEntry {
       val warcDir = java.nio.file.Files.createTempDirectory("graft_swarc").toString
       val ckpt = java.nio.file.Files.createTempDirectory("graft_swarc_ck").toString
       val dest = java.nio.file.Files.createTempDirectory("graft_swarc_land").toString
-      val state = new StateStore(java.nio.file.Paths.get(dest, "state.json"))
       val docs = t(s, dir, "documents").filter(col("doc_id") < 3000).select(col("doc_id"),
         concat(lit("<html><body><ul><li><a href=/d"), col("doc_id"),
           lit("><b>doc "), col("doc_id"), lit("</b></a></li></ul><p>"),
@@ -3663,7 +3659,7 @@ object SparkEntry {
           .select(Url.canonicalize(col("url")).as("url_canon"),
             col("text"), col("n_chars"), col("link_density"))
           .localCheckpoint(true)
-        UrlFrontier.runWave(s, dest, state, ext.select("url_canon"), "url_canon")(
+        UrlFrontier.runWave(s, dest, ext.select("url_canon"), "url_canon")(
           todo => todo.join(ext, Seq("url_canon")).withColumn("wave", lit(tag)))
       }
       def runStream(): Unit = withFewShufflePartitions(s, 8) {
@@ -3703,7 +3699,7 @@ object SparkEntry {
       // high half is canonically new; the rest must dedup via the frontier
       writeWave(1, lit(true))
       runStream()
-      val afterRun2 = UrlFrontier.committedPages(s, dest, state).count()
+      val afterRun2 = UrlFrontier.committedPages(s, dest).count()
       require(afterRun2 == nDocsAll,
         s"expected $nDocsAll canonical pages landed after run 2, got $afterRun2")
       // replay-idempotence: re-deliver run 2's batch (same files, same
@@ -3712,9 +3708,9 @@ object SparkEntry {
       landBatch(new java.io.File(warcDir).listFiles().map(_.getPath).toSeq
         .filter(_.contains("w1_")).sorted, 99L)
       runStream()
-      require(UrlFrontier.committedPages(s, dest, state).count() == afterRun2,
+      require(UrlFrontier.committedPages(s, dest).count() == afterRun2,
         "replayed batch / idle stream run changed the landed archive")
-      UrlFrontier.committedPages(s, dest, state)
+      UrlFrontier.committedPages(s, dest)
         .select(
           regexp_extract(col("url_canon"), "^site(\\d+)\\.", 1).cast("long").as("doc_id"),
           col("url_canon"), col("wave"), col("text"), col("n_chars"), col("link_density"))

@@ -15,18 +15,19 @@ import scala.jdk.CollectionConverters._
   * commit-on-success contract at sources/chess/__init__.py:96-97 commits
   * state once after ALL loads).
   *
-  * Discipline is the [[graft.ops.UrlFrontier]] pattern generalized to
-  * tables: every table's new content LANDS FIRST in a fresh monotonic
-  * generation dir (`<root>/<table>/g<N>` — never read by anyone until
-  * referenced), and ONE commit LAST — creating the next immutable epoch
-  * file `<root>/_manifest.e<N>` if absent, Delta Lake's put-if-absent log
-  * — flips every table's committed generation list together. A crash
-  * anywhere before the commit leaves only orphan dirs no reader ever
-  * resolves; after it, every table is new. Readers go through
+  * Discipline: every table's new content LANDS FIRST in a fresh
+  * monotonic generation dir (`<root>/<table>/g<N>` — never read by
+  * anyone until referenced), and ONE commit LAST — creating the next
+  * immutable epoch file `<root>/_manifest.e<N>` if absent, Delta Lake's
+  * put-if-absent log — flips every table's committed generation list
+  * together. A crash anywhere before the commit leaves only orphan dirs
+  * no reader ever resolves; after it, every table is new. Readers go through
   * [[TableManifest.read]] — the manifest, not a directory glob, is the
   * table — and every read and land resolves the newest epoch from disk,
   * so each sees every commit, whoever made it (a root holding only a
   * `_manifest.json`, written before epochs, reads it as epoch 0).
+  * Its writers: `Pipeline(manifestCommit = true)`,
+  * [[graft.streaming.StreamingDedupSink]] and [[graft.ops.UrlFrontier]].
   *
   * Per table an epoch holds the committed generation list, each
   * generation's row count and the table's schema (every field nullable,
@@ -44,11 +45,10 @@ import scala.jdk.CollectionConverters._
   * that table, under the table's lease, so never a concurrent
   * publisher's uncommitted landings (its tables are leased). Crash
   * orphans and generations a rewrite superseded go at once (a full
-  * publish interval of reader grace, the frontier's compaction sweep
-  * policy); generations a merge absorbed go once the generation that
-  * absorbed them was committed [[Generations.GraceMs]] ago, so a reader
-  * of an append-only table keeps its files that long whatever the
-  * publish rate.
+  * publish interval of reader grace); generations a merge absorbed go
+  * once the generation that absorbed them was committed
+  * [[Generations.GraceMs]] ago, so a reader of an append-only table
+  * keeps its files that long whatever the publish rate.
   */
 final class TableManifest(spark: SparkSession, root: String) {
   import TableManifest._

@@ -159,6 +159,13 @@ object TableLock {
       try out.write(content.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
 
+  /** Best-effort rewrite of a lease file as released: a failure is
+    * logged at WARN and left to the chain (a higher epoch supersedes it).
+    */
+  private def tombstone(fs: FileSystem, p: Path, content: String): Unit =
+    try overwriteFile(fs, p, content)
+    catch { case e: java.io.IOException => log.warn(s"lease tombstone: rewrite of $p failed", e) }
+
   /** Epoch files for this lock, as (epoch, path), unsorted. */
   private def epochFiles(fs: FileSystem, tablePath: String): Seq[(Long, Path)] =
     Option(new Path(tablePath).getParent).fold(Seq.empty[(Long, Path)])(
@@ -243,18 +250,14 @@ object TableLock {
         catch { case _: java.io.IOException => Thread.sleep(20L * verifyAttempts) }
       }
       if (after.isEmpty) {
-        try overwriteFile(fs, path(myEpoch),
-          s"released=true\nlost-verify-listing\nowner=$owner\ntoken=$token\n")
-        catch { case _: java.io.IOException => () }
+        tombstone(fs, path(myEpoch), s"released=true\nlost-verify-listing\nowner=$owner\ntoken=$token\n")
         throw new LockHeldException(
           s"table $tablePath: post-create max-epoch verification could not list the " +
             s"lock dir after $verifyAttempts attempts; tombstoned e$myEpoch and backing off")
       }
       val maxAfter = if (after.get.isEmpty) myEpoch else after.get.max
       if (maxAfter > myEpoch) {
-        try overwriteFile(fs, path(myEpoch),
-          s"released=true\nlost-verify-to=e$maxAfter\nowner=$owner\ntoken=$token\n")
-        catch { case _: java.io.IOException => () }
+        tombstone(fs, path(myEpoch), s"released=true\nlost-verify-to=e$maxAfter\nowner=$owner\ntoken=$token\n")
         throw new LockHeldException(
           s"table $tablePath: takeover of e$myEpoch was superseded by e$maxAfter " +
             "during the create window; backing off")
@@ -274,11 +277,17 @@ object TableLock {
           s"table $tablePath is locked by another writer (lost the e0 create race)")
 
       case (files, Some((maxEpoch, maxPath, c))) =>
-        val takeable =
-          isReleased(c) ||
-            c.linesIterator.contains(s"owner=$owner") ||
-            (try System.currentTimeMillis() - fs.getFileStatus(maxPath).getModificationTime > staleMs
-             catch { case _: java.io.IOException => true })
+        // a lease that vanished since the read was superseded: the chain
+        // moved on and verifyMax arbitrates. One whose age cannot be read
+        // may be live, so it is held.
+        def stale: Boolean =
+          try System.currentTimeMillis() - fs.getFileStatus(maxPath).getModificationTime > staleMs
+          catch {
+            case _: java.io.FileNotFoundException => true
+            case e: java.io.IOException => throw new LockHeldException(
+              s"table $tablePath: cannot read the age of lease $maxPath ($e); treating it as held")
+          }
+        val takeable = isReleased(c) || c.linesIterator.contains(s"owner=$owner") || stale
         if (!takeable)
           throw new LockHeldException(
             s"table $tablePath is locked by another writer (${c.trim}); " +
@@ -296,12 +305,8 @@ object TableLock {
         // contended-takeover spec under load).
         files.foreach { case (e, p) =>
           if (e < maxEpoch) EpochFiles.sweep(fs, p, "lease gc")
-          else if (e == maxEpoch)
-            try {
-              if (!isReleased(c))
-                overwriteFile(fs, p,
-                  s"released=true\nsuperseded-by=e${maxEpoch + 1}\n")
-            } catch { case _: java.io.IOException => () }
+          else if (e == maxEpoch && !isReleased(c))
+            tombstone(fs, p, s"released=true\nsuperseded-by=e${maxEpoch + 1}\n")
         }
         won
     }

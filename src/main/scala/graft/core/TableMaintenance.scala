@@ -150,9 +150,9 @@ object TableMaintenance {
     *
     * IMPORTANT: `path` must be the SAME root the table's writers lock —
     * for the IVF growing index that is the index ROOT (its data lives in
-    * `<root>/vectors`, and this pass descends into it), never a subdir:
-    * a lease keyed on `<root>/vectors` would not exclude a batch holding
-    * the `<root>` lease, and the rewrite could race its probe.
+    * the committed generation's `<root>/vectors@g<N>`), never a subdir:
+    * a lease keyed on `<root>/vectors@g<N>` would not exclude a batch
+    * holding the `<root>` lease, and the rewrite could race its probe.
     */
   def compactPartitioned(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,

@@ -175,8 +175,9 @@ object Lexical {
     * marker — one atomic create — so an UNLEASED reader (`search` takes
     * no lock) resolves either the old complete generation or the new
     * one, never a half-swapped directory and never postings/idf/meta
-    * from different snapshots; GC keeps a one-generation grace for
-    * readers that resolved just before the flip.
+    * from different snapshots; GC keeps a superseded generation for one
+    * more optimize and until its successor is [[graft.core.Generations.GraceMs]]
+    * old, for readers that resolved just before the flip.
     *
     * Append contract — all or nothing: a batch writes its three leaves
     * (empty ones for an empty batch, so the announcement's name is all a
@@ -466,7 +467,7 @@ object Lexical {
       * NEXT generation, then commits it with one atomic marker create: no
       * window where a concurrent reader can see a half-replaced directory
       * or mismatched postings/idf/meta (reads of the old generation stay
-      * valid through the one-generation GC grace). Leaves of an
+      * valid through GC's grace, one more optimize and `GraceMs`). Leaves of an
       * unannounced batch are not live, so they are not compacted. The
       * compacted batches' ids and doc counts join those of earlier
       * optimizes in the new generation's `_compacted` file.
@@ -495,10 +496,11 @@ object Lexical {
       * but against the persisted table.
       *
       * READ LIFETIME: the returned DataFrame is lazy and pinned to the
-      * live leaves resolved at CALL time; `Generations.gc` keeps only a
-      * one-generation grace behind the current pointer, so collect the
-      * result promptly — a frame collected after TWO optimize cycles
-      * scans GC'd files and fails (a missing-file error on collect),
+      * live leaves resolved at CALL time; `Generations.gc` keeps a
+      * superseded generation for one more optimize and until its
+      * successor is `Generations.GraceMs` old, so collect the result
+      * promptly — a frame collected after TWO optimize cycles AND that
+      * grace scans GC'd files and fails (a missing-file error on collect),
       * never returning a partial answer. Callers that must hold results
       * across optimizes should `localCheckpoint(true)` the (k-bounded,
       * small) frame immediately.
@@ -520,7 +522,8 @@ object Lexical {
       // GC grace): postings, idf and meta all come from the same
       // committed generation and the same announced batches, whose leaves
       // no writer rewrites — an optimize flipping the pointer mid-search
-      // leaves them in place through GC's one-generation grace
+      // leaves them in place through GC's grace (one more optimize and
+      // Generations.GraceMs)
       val live = new Live(spark, path)
       val postings = read(spark, postingsSchema(spark, live.dir("postings")),
         live.postings(stats.getSeq[Long](1).toSet))

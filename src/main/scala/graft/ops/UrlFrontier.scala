@@ -1,9 +1,10 @@
 package graft.ops
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
-import graft.core.StateStore
+import graft.core.{Disposition, TableHints, TableManifest}
 
 /** Cross-run batch URL frontier — the recurring-crawl shape of the
   * reference's seen-archives pattern (sources/chess/__init__.py:95-124:
@@ -13,115 +14,89 @@ import graft.core.StateStore
   * ([[Url.canonicalize]]), anti-joins the committed seen-set, and fetches
   * only never-seen pages.
   *
-  * Scale posture: a crawl frontier at corpus scale holds billions of
-  * canonical keys, so the seen SET lives columnar — parquet generation
-  * dirs under `dest/seen/g<N>` — and membership is a distributed
-  * `left_anti` join, never a driver-side collection. The driver-side
-  * [[StateStore]] holds only the committed GENERATION LISTS — one for the
-  * seen-set and one for the pages archive, since compaction advances them
-  * independently: a wave writes its landed pages and its seen additions
-  * to fresh generation dirs FIRST and commits the state pointer LAST
-  * (StateStore.commit is write-temp + atomic move), so a crash mid-wave
-  * leaves orphan uncommitted dirs that no future run ever reads — the
-  * landing and the seen-set advance atomically, together.
+  * The frontier is a [[TableManifest]] writer rooted at `dest`, with four
+  * tables:
+  *  - `seen`: the canonical keys ever fetched (`url_canon`). At corpus
+  *    scale it holds billions of keys, so it lives columnar and membership
+  *    is a distributed `left_anti` join, never a driver-side collection;
+  *  - `pages`: the archive, with the schema the fetch defines;
+  *  - `hosts`: (host, wave) of the hosts fetched within the trailing
+  *    politeness window;
+  *  - `waves`: one row per committed wave — its row count is the logical
+  *    wave clock.
   *
-  * The pages archive is the user-facing artifact (the reference's chess
-  * source lands exactly such an archives table,
-  * sources/chess/__init__.py:95-124) and carries the same exactly-once
-  * guarantee as the seen-set — but ONLY through [[committedPages]]. A raw
-  * glob over `pages/` can transiently see superseded dirs a pages
-  * compaction retained for reader grace; the committed list is what
-  * resolves the archive, same as [[seenSet]] on the membership side.
+  * Each verb ([[runWave]], [[compactSeen]], [[compactPages]]) is ONE
+  * publish: it lands what it changes as fresh generations and commits
+  * them in one manifest epoch, so a crash anywhere before the commit
+  * leaves every table — and the clock — as it was, and the retry sees
+  * only orphan dirs the manifest sweeps. Writers exclude each other per
+  * table: a publish leases each table at its first touch (auto-renewed,
+  * so an arbitrarily long fetch is never exposed to stale takeover), and
+  * a second writer of a table fails fast with LockHeldException.
+  *
+  * The archive is the user-facing artifact (the reference's chess source
+  * lands exactly such an archives table, sources/chess/__init__.py:95-124)
+  * and carries the same exactly-once guarantee as the seen-set — but ONLY
+  * through [[committedPages]]. A raw glob over `pages/` can see orphans and
+  * the generations a compaction superseded: those stay for the manifest's
+  * reader grace, until the next publish that touches the table.
+  *
+  * `dest` must be a local filesystem path, as for every manifest. A
+  * `dest` in the layout written before the frontier was a manifest writer
+  * (generation dirs under `seen/` or `pages/`, no manifest epoch, no
+  * `waves/` dir) is refused by every verb, naming it: a publish would
+  * sweep its archive as orphans. A new frontier's crashed first wave
+  * always leaves `waves/` (its row lands first), so it is never refused.
   */
 object UrlFrontier {
-  private val SeenKey  = "frontier.generations"
-  private val PagesKey = "frontier.pages.generations"
-  /** Logical wave clock: increments once per committed wave. */
-  private val WaveKey  = "frontier.wave"
-  /** Committed per-wave host dirs (`hosts/w<N>`), retained only for the
-    * trailing exclusion window.
+
+  /** The frontier's manifest, once `dest` is known not to be in the
+    * pre-manifest layout.
     */
-  private val HostsKey = "frontier.hosts.generations"
-
-  private val GenName = "^g([0-9]+)$".r
-  private val WaveName = "^w([0-9]+)$".r
-
-  private def waveNum(w: String): Long = w match {
-    case WaveName(n) => n.toLong
-    case _ => throw new IllegalStateException(
-      s"malformed wave name '$w' in state list '$HostsKey' — expected w<N>")
-  }
-
-  /** Numeric suffix of a generation name ("g12" -> 12), validated: a
-    * hand-edited or corrupted state list must fail with a message naming
-    * the malformed entry and the state key, not a bare
-    * NumberFormatException from deep inside nextGen.
-    */
-  private def genNum(stateKey: String)(g: String): Long = g match {
-    case GenName(n) => n.toLong
-    case _ => throw new IllegalStateException(
-      s"malformed generation name '$g' in state list '$stateKey' — expected g<N>")
-  }
-
-  private def seenGens(state: StateStore): Seq[String] = state.getList(SeenKey)
-
-  /** Committed pages generations. States written before pages tracking
-    * landed have no PagesKey; until the first new-code commit the pages
-    * dirs are exactly the seen generations (a wave writes both under one
-    * name), so fall back to the seen list rather than treating the whole
-    * archive as unreadable/garbage.
-    */
-  private def pagesGens(state: StateStore): Seq[String] =
-    if (state.keys.contains(PagesKey)) state.getList(PagesKey)
-    else state.getList(SeenKey)
-
-  /** Next generation name: monotonic over the committed MAX across BOTH
-    * lists, not the list size — compaction shrinks a list to one element,
-    * and the seen and pages lists advance independently once either side
-    * compacts, so only the global max guarantees a fresh name never
-    * re-targets a committed dir on either side.
-    */
-  private def nextGen(state: StateStore): String = {
-    val nums = seenGens(state).map(genNum(SeenKey)) ++
-      pagesGens(state).map(genNum(PagesKey))
-    s"g${if (nums.isEmpty) 1L else nums.max + 1L}"
+  private def manifest(spark: SparkSession, dest: String): TableManifest = {
+    val m = new TableManifest(spark, dest)
+    if (m.tables.isEmpty) {
+      val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      def hasGens(table: String): Boolean = {
+        val dir = new Path(dest, table)
+        fs.exists(dir) && fs.listStatus(dir).exists(st => st.isDirectory && st.getPath.getName.matches("g[0-9]+"))
+      }
+      require(fs.exists(new Path(dest, "waves")) || !Seq("seen", "pages").exists(hasGens),
+        s"$dest is a URL frontier in the pre-manifest layout (generation dirs under seen/ or pages/, " +
+          "no manifest epoch): its first publish would sweep that archive as orphans")
+    }
+    m
   }
 
   private def emptyKeys(spark: SparkSession): DataFrame =
     spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(Seq(StructField("url_canon", StringType))))
 
-  /** Committed seen-set of canonical keys: the union of committed
-    * generations (empty single-column frame before the first commit).
+  /** Committed seen-set of canonical keys (empty single-column frame
+    * before the first commit).
     */
-  def seenSet(spark: SparkSession, dest: String, state: StateStore): DataFrame = {
-    val gens = seenGens(state)
-    if (gens.isEmpty) emptyKeys(spark)
-    else spark.read.parquet(gens.map(g => s"$dest/seen/$g"): _*)
-  }
+  def seenSet(spark: SparkSession, dest: String): DataFrame =
+    manifest(spark, dest).read("seen").getOrElse(emptyKeys(spark))
 
-  /** The committed pages archive: the union of committed pages
-    * generations, each canonical URL's content exactly once (possibly
-    * many rows per page if the wave's fetch emitted one row per extracted
-    * item — row multiplicity is the fetch's contract, never duplicated by
-    * the frontier). This — not a raw glob over `pages/` — is the read
-    * path for the archive: the glob can see dirs a pages compaction
-    * superseded but retained for in-flight readers. Empty keys-only frame
-    * before the first commit (the page schema is fetch-defined).
+  /** The committed pages archive: each canonical URL's content exactly
+    * once (possibly many rows per page if the wave's fetch emitted one row
+    * per extracted item — row multiplicity is the fetch's contract, never
+    * duplicated by the frontier). This — not a raw glob over `pages/` — is
+    * the read path for the archive. Empty keys-only frame before the first
+    * commit (the page schema is fetch-defined).
     */
-  def committedPages(spark: SparkSession, dest: String, state: StateStore): DataFrame = {
-    val gens = pagesGens(state)
-    if (gens.isEmpty) emptyKeys(spark)
-    else spark.read.parquet(gens.map(g => s"$dest/pages/$g"): _*)
-  }
+  def committedPages(spark: SparkSession, dest: String): DataFrame =
+    manifest(spark, dest).read("pages").getOrElse(emptyKeys(spark))
 
-  /** One crawl wave. `planned` carries raw candidate URLs in `urlCol`
-    * (surface-form duplicates welcome — canonicalization collapses them);
-    * `fetch` maps the deduped unseen frame (single `url_canon` column) to
-    * the landed page rows and must keep `url_canon`. Pages land in
-    * `dest/pages/g<N>`, the wave's seen additions in `dest/seen/g<N>`,
-    * and the generation pointers (both lists, one commit) commit last.
-    * Returns the landed frame.
+  /** One crawl wave, one publish. `planned` carries raw candidate URLs in
+    * `urlCol` (surface-form duplicates welcome — canonicalization collapses
+    * them); `fetch` maps the deduped unseen frame (single `url_canon`
+    * column) to the page rows and must keep `url_canon`. The wave's
+    * `waves` row lands first (its count is the wave number W), then the
+    * fetched pages, their keys as the `seen` delta and the rewritten
+    * `hosts` window; one commit publishes all of them. Returns the landed
+    * frame. The fetch runs once per URL: its output is pinned, and every
+    * land reads the pin.
     *
     * Per-host politeness: `maxPerHost = Some(k)` caps the wave's fetch
     * set at k URLs per canonical host — a real crawl must not hand a
@@ -144,28 +119,18 @@ object UrlFrontier {
     * W+g+1 (the behavior class of the reference's per-connector
     * retry/backoff discipline, sources/facebook_ads/helpers.py:188-221,
     * expressed on the frontier's own LOGICAL clock — the committed wave
-    * counter — so it is deterministic and oracle-replayable). Exclusion
+    * count — so it is deterministic and oracle-replayable). Exclusion
     * composes with `maxPerHost` (gap first, then the per-wave cap) and
-    * costs nothing when 0: per-wave host sets land columnar under
-    * `dest/hosts/w<N>` only while a gap is in use, the state retains only
-    * the trailing g dirs, and excluded URLs never enter the seen-set so
-    * they carry over exactly like cap overflow. A frontier that changes
-    * its gap mid-life degrades gracefully: history older than the
-    * retained window reads as "not recently fetched", and a gap=0 wave
-    * DRAINS the host-set archive entirely (dirs + state entries) — so
-    * host history accumulates only across consecutive gap>0 waves, and
-    * re-raising the gap later starts its exclusion window fresh.
-    *
-    * Single-writer per frontier, ENFORCED: the generation lists are
-    * read-modify-write state, so a wave racing another wave (or a
-    * compaction) could commit a list built from a stale read — dropping
-    * the other writer's generation or resurrecting superseded dirs. The
-    * whole wave runs under the frontier root's [[graft.core.TableLock]]
-    * lease (auto-renewed, so an arbitrarily long fetch is never exposed
-    * to stale takeover); a concurrent writer fails fast with
-    * LockHeldException instead of corrupting the pointer.
+    * costs nothing when 0: the `hosts` table keeps only the trailing g
+    * waves' hosts, and excluded URLs never enter the seen-set so they
+    * carry over exactly like cap overflow. A frontier that changes its gap
+    * mid-life degrades gracefully: history older than the retained window
+    * reads as "not recently fetched", and a gap=0 wave DRAINS an existing
+    * `hosts` table to empty — so host history accumulates only across
+    * consecutive gap>0 waves, and re-raising the gap later starts its
+    * exclusion window fresh.
     */
-  def runWave(spark: SparkSession, dest: String, state: StateStore,
+  def runWave(spark: SparkSession, dest: String,
       planned: DataFrame, urlCol: String, maxPerHost: Option[Int] = None,
       minWaveGapPerHost: Int = 0,
       /** Per-host allow/disallow rules ([[robotsRules]] schema: host,
@@ -179,11 +144,66 @@ object UrlFrontier {
         * and gap exclusion.
         */
       robots: Option[DataFrame] = None)(
-      fetch: DataFrame => DataFrame): DataFrame =
-    graft.core.TableLock.withLock(spark, dest, s"url-frontier-wave:${java.util.UUID.randomUUID()}") {
-      runWaveLocked(spark, dest, state, planned, urlCol, maxPerHost, minWaveGapPerHost,
-        robots)(fetch)
-    }
+      fetch: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
+    val pub = manifest(spark, dest).publish(s"url-frontier:${java.util.UUID.randomUUID()}")
+    try {
+      // the clock commits with the data: land count = this wave's number
+      val wave = pub.land(Seq((maxPerHost, minWaveGapPerHost)).toDF("max_per_host", "min_wave_gap_per_host"),
+        TableHints("waves"))
+      val seen = pub.read("seen").getOrElse(emptyKeys(spark))
+      val hosts = pub.read("hosts")
+      // lease the archive before fetching: a concurrent pages compaction
+      // fails this wave now, not after its fetch
+      pub.read("pages")
+      val canon = planned.select(Url.canonicalize(col(urlCol)).as("url_canon")).distinct()
+      val unseen0 = canon.join(seen, Seq("url_canon"), "left_anti")
+      // robots exclusion is the HARDEST rule: applied before the gap and
+      // the per-host budget so a disallowed URL never consumes either
+      val unseen = robots.map(applyRobots(unseen0, "url_canon", _)).getOrElse(unseen0)
+      // gap exclusion FIRST (an excluded host fetches nothing this wave),
+      // then the per-wave cap on what remains
+      val eligible = hosts.filter(_ => minWaveGapPerHost > 0).fold(unseen) { h =>
+        // hosts fetched within the gap window: a bounded frame (one row
+        // per recently-fetched host), anti-joined distributively — at
+        // corpus scale it broadcasts, never collects
+        val recentHosts = h.filter(col("wave") >= wave - minWaveGapPerHost).select(col("host")).distinct()
+        unseen.withColumn("host", regexp_extract(col("url_canon"), "^[^/?]+", 0))
+          .join(recentHosts, Seq("host"), "left_anti")
+          .select("url_canon")
+      }
+      val todo = maxPerHost match {
+        case None => eligible
+        case Some(k) =>
+          require(k > 0, s"maxPerHost must be positive, got $k")
+          eligible.select(col("url_canon")).as[String]
+            .groupByKey(hostOf)
+            .agg(graft.functions.MinK.minK(k).name("urls"))
+            .flatMap(_._2)
+            .toDF("url_canon")
+      }
+      val fetched = fetch(todo)
+      require(fetched.columns.contains("url_canon"),
+        "fetch must keep the url_canon column — it is the frontier key")
+      // one fetch per URL, ever: every land below reads this pin
+      val landed = fetched.localCheckpoint(true)
+      pub.land(landed, TableHints("pages"))
+      // distinct: fetch may legally emit many rows per page (one per
+      // extracted item) — the seen delta stores each frontier KEY once,
+      // or the build side of every future wave's anti-join inflates
+      // unboundedly at corpus scale
+      pub.land(landed.select("url_canon").distinct(), TableHints("seen"))
+      // hosts: the trailing window the NEXT wave's exclusion reads
+      // (wave > W - gap) plus this wave's hosts; a gap=0 wave keeps
+      // neither, so it rewrites an existing table to empty
+      val window = hosts.map(_.filter(col("wave") > wave - minWaveGapPerHost))
+      val mine = Option.when(minWaveGapPerHost > 0)(
+        landed.select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"), lit(wave).as("wave")).distinct())
+      (window ++ mine).reduceOption(_ union _).foreach(h => pub.land(h, TableHints("hosts", Disposition.Replace)))
+      pub.commit()
+      landed
+    } finally pub.abort()
+  }
 
   /** Canonical host of a canonical URL (scheme already stripped by
     * [[Url.canonicalize]]): everything before the first '/' or '?'.
@@ -322,180 +342,26 @@ object UrlFrontier {
     df.join(disallowed, Seq(urlCol), "left_anti")
   }
 
-  private def runWaveLocked(spark: SparkSession, dest: String, state: StateStore,
-      planned: DataFrame, urlCol: String, maxPerHost: Option[Int],
-      minWaveGapPerHost: Int,
-      robots: Option[DataFrame] = None)(
-      fetch: DataFrame => DataFrame): DataFrame = {
-    val wave = state.getLong(WaveKey).getOrElse(0L) + 1L
-    val canon = planned.select(Url.canonicalize(col(urlCol)).as("url_canon")).distinct()
-    val unseen0 = canon.join(seenSet(spark, dest, state), Seq("url_canon"), "left_anti")
-    // robots exclusion is the HARDEST rule: applied before the gap and
-    // the per-host budget so a disallowed URL never consumes either
-    val unseen = robots.map(applyRobots(unseen0, "url_canon", _)).getOrElse(unseen0)
-    // gap exclusion FIRST (an excluded host fetches nothing this wave),
-    // then the per-wave cap on what remains
-    val eligible =
-      if (minWaveGapPerHost <= 0) unseen
-      else {
-        val recent = state.getList(HostsKey).filter(waveNum(_) >= wave - minWaveGapPerHost)
-        if (recent.isEmpty) unseen
-        else {
-          // hosts fetched within the gap window: a bounded frame (one row
-          // per recently-fetched host), anti-joined distributively — at
-          // corpus scale it broadcasts, never collects
-          val recentHosts = spark.read.parquet(recent.map(w => s"$dest/hosts/$w"): _*)
-            .select(col("host")).distinct()
-          unseen
-            .withColumn("host", regexp_extract(col("url_canon"), "^[^/?]+", 0))
-            .join(recentHosts, Seq("host"), "left_anti")
-            .select("url_canon")
-        }
-      }
-    val todo = maxPerHost match {
-      case None => eligible
-      case Some(k) =>
-        require(k > 0, s"maxPerHost must be positive, got $k")
-        import spark.implicits._
-        eligible.select(col("url_canon")).as[String]
-          .groupByKey(hostOf)
-          .agg(graft.functions.MinK.minK(k).name("urls"))
-          .flatMap(_._2)
-          .toDF("url_canon")
-    }
-    val fetched = fetch(todo)
-    require(fetched.columns.contains("url_canon"),
-      "fetch must keep the url_canon column — it is the frontier key")
-    val gen = nextGen(state)
-    // overwrite: a crash between landing and commit leaves orphan dirs
-    // for this SAME generation name — the retry must replace them, not
-    // fail on path-exists (committed generations are never re-targeted,
-    // so overwrite can only ever hit uncommitted orphans)
-    fetched.write.mode("overwrite").parquet(s"$dest/pages/$gen")
-    // derive the seen additions from the LANDED files, not by re-running
-    // the fetch plan — one fetch per URL, ever
-    val landed = spark.read.parquet(s"$dest/pages/$gen")
-    // distinct: fetch may legally emit many rows per page (one per
-    // extracted item) — the seen generation stores each frontier KEY once,
-    // or the build side of every future wave's anti-join inflates
-    // unboundedly at corpus scale
-    landed.select("url_canon").distinct()
-      .write.mode("overwrite").parquet(s"$dest/seen/$gen")
-    // gap tracking: land this wave's host set (one row per host — tiny)
-    // under the same crash discipline as seen/pages: dir first, pointer
-    // in the same commit below. A crash orphan with this wave number is
-    // overwritten on the retry (the wave clock never committed).
-    val droppedHostDirs: Seq[String] =
-      if (minWaveGapPerHost <= 0) {
-        // gap turned off: drain the whole host-set archive now rather than
-        // letting stale hosts/w<N> dirs (and their HostsKey entries) linger
-        // until an explicit gc(). Consequence, documented on runWave: host
-        // history only accumulates across CONSECUTIVE gap>0 waves — a
-        // later re-increase of the gap starts its exclusion window fresh
-        // (which is also what gap=0 waves imply, since they record no
-        // hosts of their own).
-        val stale = state.getList(HostsKey)
-        if (stale.nonEmpty) state.putList(HostsKey, Nil)
-        stale
-      } else {
-        landed.select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host")).distinct()
-          .write.mode("overwrite").parquet(s"$dest/hosts/w$wave")
-        // retain exactly the trailing window the NEXT wave's exclusion
-        // reads (num > wave - gap); older dirs leave the committed list
-        // and are deleted after the commit (hosts dirs are only ever read
-        // under this lease, so no reader grace is needed)
-        val (keep, dropped) = (state.getList(HostsKey) :+ s"w$wave")
-          .partition(waveNum(_) > wave - minWaveGapPerHost)
-        state.putList(HostsKey, keep)
-        dropped
-      }
-    // snapshot BOTH lists before mutating either: the pages fallback
-    // resolves through the seen list on pre-PagesKey state, so writing
-    // SeenKey first would double-count the new generation
-    val (seenBefore, pagesBefore) = (seenGens(state), pagesGens(state))
-    state.putList(SeenKey, seenBefore :+ gen)
-    state.putList(PagesKey, pagesBefore :+ gen)
-    state.put(WaveKey, wave)
-    state.commit()
-    if (droppedHostDirs.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(dest)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      droppedHostDirs.foreach(w =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$dest/hosts/$w"), true))
-    }
-    landed
-  }
-
   /** Bin-pack ALL committed seen generations into one. A recurring crawl
-    * accumulates one parquet dir per wave, so [[seenSet]] unions an
+    * accumulates one generation per wave, so [[seenSet]] unions an
     * ever-wider dir list with an ever-worse small-files profile at the
     * anti-join's build side; the reference rewrites its seen-archives
     * list wholesale each run (sources/chess/__init__.py:95-124) — this is
-    * the columnar variant's explicit equivalent. Same crash discipline as
-    * a wave: the merged generation lands FIRST under a fresh monotonic
-    * name, the pointer (now a single-element seen list) commits LAST. The
-    * superseded dirs are NOT deleted here: a reader that resolved the old
-    * generation list may still be scanning them, so deletion is deferred
-    * to the unreferenced-dir sweep that runs at the START of the next
-    * compaction (a full compaction interval of grace) or to an explicit
-    * [[gc]] once in-flight readers have drained. The same sweep also
-    * reclaims crash leftovers on BOTH sides: a compaction that dies
-    * before its commit leaves an orphan merged dir the next writer
-    * targeting that number simply overwrites, one that dies after the
-    * commit leaves unreferenced old dirs no run ever reads again (numbers
-    * are monotonic over the committed max, so they can never be
-    * re-targeted), and a wave that died mid-landing leaves orphan
-    * seen/pages dirs whose number a later compaction may have consumed —
-    * the entry sweep removes them before they can shadow the archive.
-    *
-    * Output file count is sized off the real input bytes at
-    * `targetFileBytes` per file, so hundreds of small wave files become a
-    * handful of full scan-friendly ones. Returns the new seen list.
+    * the columnar variant's explicit equivalent, one publish landing the
+    * merged keys as a `Replace` of `seen`. Distinct is defensive
+    * (committed generations partition the key space by construction).
+    * Sizing: repartition, NOT coalesce — a coalesce here would collapse
+    * the distinct's final aggregation itself to the file count (the most
+    * expensive part of a corpus-scale compaction), whereas one extra
+    * exchange of the already-deduped keys is cheap and keeps the
+    * aggregation at full parallelism. Returns the new seen list.
     */
-  def compactSeen(spark: SparkSession, dest: String, state: StateStore,
-      targetFileBytes: Long = 128L << 20): Seq[String] =
-    // same enforced single-writer discipline as a wave: compaction
-    // rewrites the generation list, so it must never interleave with a
-    // wave's read-modify-write of the same pointer
-    graft.core.TableLock.withLock(spark, dest, s"url-frontier-compact:${java.util.UUID.randomUUID()}") {
-      compactSeenLocked(spark, dest, state, targetFileBytes)
-    }
-
-  private def compactSeenLocked(spark: SparkSession, dest: String, state: StateStore,
-      targetFileBytes: Long): Seq[String] = {
-    // sweep FIRST (under the same lease): everything unreferenced by the
-    // committed lists is garbage — generations a previous compaction
-    // superseded (left for reader grace, see scaladoc) and crash orphans.
-    // Sweeping only one's own inputs after the commit would leak the
-    // whole old seen-set on a crash between commit and delete, forever.
-    gcLocked(spark, dest, state)
-    val gens = seenGens(state)
-    if (gens.size <= 1) return gens
-    val gen = nextGen(state)
-    // distinct is defensive (committed generations partition the key
-    // space by construction). Sizing: repartition, NOT coalesce — a
-    // coalesce here would collapse the distinct's final aggregation
-    // itself to nFiles tasks (the most expensive part of a corpus-scale
-    // compaction), whereas one extra exchange of the already-deduped
-    // keys is cheap and keeps the aggregation at full parallelism.
-    seenSet(spark, dest, state).distinct()
-      .repartition(sizedFileCount(spark, gens.map(g => s"$dest/seen/$g"), targetFileBytes))
-      .write.mode("overwrite").parquet(s"$dest/seen/$gen")
-    // materialize the pages list unchanged BEFORE shrinking the seen
-    // list: a pre-PagesKey state resolves pages through the seen list
-    state.putList(PagesKey, pagesGens(state))
-    state.putList(SeenKey, Seq(gen))
-    state.commit()
-    Seq(gen)
-  }
+  def compactSeen(spark: SparkSession, dest: String): Seq[String] =
+    compact(spark, dest, "seen")((seen, files) => seen.distinct().repartition(files))
 
   /** Bin-pack ALL committed pages generations into one — the archive-side
     * twin of [[compactSeen]], on the much bigger side of the frontier: a
-    * long crawl accumulates one pages dir per wave forever. Identical
-    * crash discipline (merged dir lands first under a fresh monotonic
-    * name, single-element pages list commits last, superseded dirs
-    * retained for reader grace until the next compaction's entry sweep or
-    * an explicit [[gc]]), identical single-writer lease. Unlike the seen
+    * long crawl accumulates one pages generation per wave. Unlike the seen
     * side there is NO distinct — the archive's row multiplicity is the
     * fetch's contract (many rows per page is legal) and must survive the
     * rewrite bit-for-bit — and therefore no aggregation to keep parallel:
@@ -504,78 +370,32 @@ object UrlFrontier {
     * rather than paying a full exchange of the page CONTENT, the heaviest
     * column in the system. Returns the new pages list.
     */
-  def compactPages(spark: SparkSession, dest: String, state: StateStore,
-      targetFileBytes: Long = 128L << 20): Seq[String] =
-    graft.core.TableLock.withLock(spark, dest, s"url-frontier-compact-pages:${java.util.UUID.randomUUID()}") {
-      compactPagesLocked(spark, dest, state, targetFileBytes)
-    }
+  def compactPages(spark: SparkSession, dest: String): Seq[String] =
+    compact(spark, dest, "pages")((pages, files) => pages.coalesce(files))
 
-  private def compactPagesLocked(spark: SparkSession, dest: String, state: StateStore,
-      targetFileBytes: Long): Seq[String] = {
-    gcLocked(spark, dest, state)
-    val gens = pagesGens(state)
-    if (gens.size <= 1) return gens
-    val gen = nextGen(state)
-    committedPages(spark, dest, state)
-      .coalesce(sizedFileCount(spark, gens.map(g => s"$dest/pages/$g"), targetFileBytes))
-      .write.mode("overwrite").parquet(s"$dest/pages/$gen")
-    state.putList(PagesKey, Seq(gen))
-    // keep the seen list explicit in the same commit (no-op for content,
-    // but the commit is the unit of crash atomicity for both pointers)
-    state.putList(SeenKey, seenGens(state))
-    state.commit()
-    Seq(gen)
-  }
-
-  /** Output file count for a bin-pack rewrite: real input bytes at
-    * `targetFileBytes` per file.
+  /** One publish rewriting `table`'s committed generations into one, in
+    * files of about `spark.sql.files.maxPartitionBytes` by the bytes
+    * being rewritten (the manifest merge's rule). The table's first touch
+    * sweeps its orphans and the generations a previous compaction
+    * superseded; the ones this compaction supersedes stay for readers that
+    * resolved the old list, until the next publish that touches the
+    * table. A table of at most one generation is left as it is.
     */
-  private def sizedFileCount(spark: SparkSession, dirs: Seq[String],
-      targetFileBytes: Long): Int = {
-    val fs = new org.apache.hadoop.fs.Path(dirs.head)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val totalBytes = dirs.flatMap(d => fs.listStatus(new org.apache.hadoop.fs.Path(d)).toSeq
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .map(_.getLen)).sum
-    math.max(1L, (totalBytes + targetFileBytes - 1) / targetFileBytes).toInt
-  }
-
-  /** Delete every seen AND pages dir not in its committed generation
-    * list: crash leftovers from landed-but-uncommitted waves/compactions
-    * (an orphan pages dir is not just waste — once a compaction consumes
-    * its generation number, no wave ever overwrites it, and its rows
-    * re-land in a later wave, so a raw glob over `pages/` would show
-    * duplicates forever), and generations superseded by a compaction
-    * (retained so readers that resolved the old list keep their files —
-    * call this once in-flight readers have drained, or rely on the sweep
-    * every compaction performs on entry). Runs under the frontier lease.
-    * Returns the deleted dirs as `seen/g<N>` / `pages/g<N>` names.
-    *
-    * The pages sweep only engages once the pages list has been explicitly
-    * committed (every new-code commit writes it): on a pre-PagesKey state
-    * the committed pages dirs are not individually recorded, and sweeping
-    * against the fallback would delete a legacy compacted frontier's
-    * archive.
-    */
-  def gc(spark: SparkSession, dest: String, state: StateStore): Seq[String] =
-    graft.core.TableLock.withLock(spark, dest, s"url-frontier-gc:${java.util.UUID.randomUUID()}") {
-      gcLocked(spark, dest, state)
-    }
-
-  private def gcLocked(spark: SparkSession, dest: String, state: StateStore): Seq[String] = {
-    def sweep(root: String, committed: Set[String]): Seq[String] = {
-      val fs = new org.apache.hadoop.fs.Path(dest)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val rootPath = new org.apache.hadoop.fs.Path(s"$dest/$root")
-      if (!fs.exists(rootPath)) return Nil
-      val garbage = fs.listStatus(rootPath).toSeq.map(_.getPath)
-        .filter(p => !committed.contains(p.getName))
-      garbage.foreach(p => fs.delete(p, true))
-      garbage.map(p => s"$root/${p.getName}")
-    }
-    sweep("seen", seenGens(state).toSet) ++
-      (if (state.keys.contains(PagesKey)) sweep("pages", state.getList(PagesKey).toSet)
-       else Nil) ++
-      sweep("hosts", state.getList(HostsKey).toSet)
+  private def compact(spark: SparkSession, dest: String, table: String)(
+      rewrite: (DataFrame, Int) => DataFrame): Seq[String] = {
+    val m = manifest(spark, dest)
+    val pub = m.publish(s"url-frontier:${java.util.UUID.randomUUID()}")
+    try {
+      val current = pub.read(table)
+      val gens = m.gens(table)
+      if (gens.size > 1) {
+        val fs = new Path(dest).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val bytes = gens.map(g => fs.getContentSummary(new Path(s"$dest/$table/$g")).getLength).sum
+        val files = (bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt
+        pub.land(rewrite(current.get, files), TableHints(table, Disposition.Replace))
+      }
+      pub.commit()
+      m.gens(table)
+    } finally pub.abort()
   }
 }

@@ -54,10 +54,10 @@ import graft.ops.{Embedding, Similarity}
   *
   * Single-writer discipline: the per-batch index append and
   * `optimizeIndex` both run under the same [[graft.core.TableLock]]
-  * lease keyed on `indexPath`, so an OPTIMIZE staged swap (which
-  * replaces the whole vectors/ dir) can never race a live stream's
-  * delta append — an unlocked interleave would silently drop the
-  * in-flight `batch_id=N` partition. Micro-batches WAIT (bounded) for
+  * lease keyed on `indexPath`, so an OPTIMIZE (which writes the next
+  * generation and creates its marker) can never race a live stream's
+  * delta append — an unlocked interleave would leave the in-flight
+  * `batch_id=N` partition behind in the superseded generation. Micro-batches WAIT (bounded) for
   * an in-flight optimize rather than failing the stream.
   */
 object StreamingRetrieval {
@@ -228,15 +228,16 @@ object StreamingRetrieval {
     * z-order table pass: re-train centroids on the CURRENT contents
     * (deterministic k-means: id-ordered init, fixed iterations),
     * re-assign every vector, and compact all delta partitions into one
-    * fresh `batch_id=-1` seed via the staged swap — then persist the new
-    * centroids in `meta/` so every later probe (including a process
-    * restart) reads the matching centroids from disk. Run it when stream
+    * fresh `batch_id=-1` seed in the NEXT generation (`vectors@g<N+1>`,
+    * with the new centroids in `meta@g<N+1>`), committed by creating its
+    * marker — so every later probe (including a process restart) reads
+    * the matching centroids from disk. Run it when stream
     * growth has drifted the cell balance (hot cells degrade probe
     * pruning exactly like an unbalanced LSH bucket); after it, probes
     * scan one balanced partition set and the next stream batch appends
     * from `batch_id=0` semantics again. Runs under the index lease:
-    * a live stream's delta append queues behind the swap instead of
-    * being silently dropped by it. The wait is deliberately asymmetric:
+    * a live stream's delta append queues behind the optimize instead of
+    * landing in the generation it supersedes. The wait is deliberately asymmetric:
     * batches queue (bounded) behind an in-flight optimize, but an
     * optimize racing a live batch fails FAST (`waitMs = 0`) — a
     * maintenance verb should report contention to its operator, not

@@ -52,15 +52,15 @@ object StreamingSpanDedup {
       .toDF("__id", "__pos", "__g")
   }
 
-  /** Process one micro-batch: cut seen/duplicate spans, land rewritten
-    * docs under `outPath/batch_id=<id>`, append new grams to
-    * `indexPath`.
-    */
   /** Gram table dir of the current committed generation (spec access). */
   private[graft] def subDir(spark: org.apache.spark.sql.SparkSession,
       indexPath: String, sub: String = "grams"): String =
     graft.core.Generations.resolve(spark, indexPath, sub)
 
+  /** Process one micro-batch: cut seen/duplicate spans, land rewritten
+    * docs under `outPath/batch_id=<id>`, append new grams to
+    * `indexPath`.
+    */
   def landBatch(
       batch: DataFrame,
       batchId: Long,
@@ -146,8 +146,9 @@ object StreamingSpanDedup {
       owner = s"span-dedup-optimize:${java.util.UUID.randomUUID()}") {
       // write the merged NEXT generation, then commit it with one atomic
       // marker create — no staged swap, and any concurrent unleased
-      // reader keeps scanning the old generation (one-generation GC
-      // grace) instead of hitting a half-replaced directory
+      // reader keeps scanning the old generation (GC keeps it one more
+      // optimize and Generations.GraceMs) instead of hitting a
+      // half-replaced directory
       val gen = graft.core.Generations.currentOrFail(spark, indexPath)
       val all = spark.read.parquet(graft.core.Generations.dir(indexPath, "grams", gen))
       val merged = all.filter(col("batch_id") < upToBatch)

@@ -367,10 +367,9 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dest = tmpDir("plan_polite")
-    val state = new graft.core.StateStore(java.nio.file.Paths.get(dest, "s.json"))
     val urls = (0 until 40).map(i => s"http://h${i % 4}.test/p$i").toDF("url")
     var selectionPlan = ""
-    graft.ops.UrlFrontier.runWave(spark, dest, state, urls, "url", Some(3)) { todo =>
+    graft.ops.UrlFrontier.runWave(spark, dest, urls, "url", Some(3)) { todo =>
       todo.collect() // finalize AQE before reading the plan
       selectionPlan = todo.queryExecution.executedPlan.toString
       todo.select(col("url_canon"))
@@ -390,12 +389,11 @@ class PlanAuditSpec extends SparkTestBase {
     import org.apache.spark.sql.functions._
     import spark.implicits._
     val dest = tmpDir("plan_gap")
-    val state = new graft.core.StateStore(java.nio.file.Paths.get(dest, "s.json"))
     val urls = (0 until 40).map(i => s"http://h${i % 4}.test/p$i").toDF("url")
-    graft.ops.UrlFrontier.runWave(spark, dest, state, urls.limit(20), "url",
+    graft.ops.UrlFrontier.runWave(spark, dest, urls.limit(20), "url",
       minWaveGapPerHost = 1)(todo => todo.select(col("url_canon")))
     var exclusionPlan = ""
-    graft.ops.UrlFrontier.runWave(spark, dest, state, urls, "url",
+    graft.ops.UrlFrontier.runWave(spark, dest, urls, "url",
       minWaveGapPerHost = 1) { todo =>
       todo.collect() // finalize AQE before reading the plan
       exclusionPlan = todo.queryExecution.executedPlan.toString

@@ -314,6 +314,35 @@ class TableLockSpec extends SparkTestBase {
     }
   }
 
+  test("a live lease whose age cannot be read is held, not taken over; a failed tombstone logs at WARN") {
+    spark.sparkContext.hadoopConfiguration.set("fs.flakylease.impl", classOf[FlakyLeaseFileSystem].getName)
+    val dir = tmpDir("lock_flaky_stat")
+    val table = s"flakylease://$dir/t"
+    def epochs: Seq[Long] = new java.io.File(dir).list().toSeq
+      .filter(_.startsWith("t__lock.e")).map(_.stripPrefix("t__lock.e").toLong)
+    val holder = TableLock.acquire(spark, table, "holder")
+    FlakyLeaseFileSystem.failStat = true
+    val e = try intercept[TableLock.LockHeldException](TableLock.acquire(spark, table, "taker"))
+      finally FlakyLeaseFileSystem.failStat = false
+    assert(e.getMessage.contains(s"$dir/t__lock.e0"), e.getMessage)
+    assert(epochs.max == 0, s"the holder's epoch must stay the max: $epochs")
+    val content = new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "t__lock.e0")), "UTF-8")
+    assert(!content.contains("released=true") && content.contains("owner=holder"), content)
+
+    // once the holder is stale, a takeover wins e1; the superseded e0
+    // cannot be rewritten, and that is logged with its path
+    holder.fs.setTimes(holder.path, System.currentTimeMillis() - 60000, -1)
+    withWarnings { warnings =>
+      FlakyLeaseFileSystem.failRewrite = true
+      val taker = try TableLock.acquire(spark, table, "taker", staleMs = 1000)
+        finally FlakyLeaseFileSystem.failRewrite = false
+      assert(taker.path.getName == "t__lock.e1")
+      assert(warnings().exists(w => w.contains("lease tombstone") && w.contains(s"$dir/t__lock.e0")),
+        s"a failed tombstone must be logged; saw ${warnings().mkString(" | ")}")
+      assert(taker.release())
+    }
+  }
+
   test("a failing create surfaces as that I/O error naming the lease file, not as a held lock") {
     spark.sparkContext.hadoopConfiguration.set("fs.failcreate.impl", classOf[FailingCreateFileSystem].getName)
     val dir = tmpDir("lock_failcreate")
@@ -321,6 +350,40 @@ class TableLockSpec extends SparkTestBase {
     assert(e.getMessage.contains("planted create failure") && e.getMessage.contains(s"$dir/t__lock.e0"),
       e.getMessage)
   }
+}
+
+/** A local filesystem whose lease files (`*__lock.e<N>`) fail while the
+  * matching flag is set: `failStat` fails reading a lease's status
+  * (except the status reads `exists`, `open` and `listStatus` make
+  * inside), `failRewrite` fails overwriting one. Registered under the
+  * `flakylease` scheme.
+  */
+class FlakyLeaseFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  import FlakyLeaseFileSystem._
+  private val inner = new ThreadLocal[Boolean] { override def initialValue(): Boolean = false }
+  private def inside[T](f: => T): T = {
+    val was = inner.get
+    inner.set(true)
+    try f finally inner.set(was)
+  }
+  private def isLease(p: Path) = p.getName.contains("__lock.e")
+
+  override def getUri: java.net.URI = java.net.URI.create("flakylease:///")
+  override def exists(p: Path): Boolean = inside(super.exists(p))
+  override def open(p: Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = inside(super.open(p, bufferSize))
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = inside(super.listStatus(p))
+  override def getFileStatus(p: Path): org.apache.hadoop.fs.FileStatus =
+    if (failStat && isLease(p) && !inner.get) throw new java.io.IOException(s"planted stat failure: $p")
+    else super.getFileStatus(p)
+  override def create(p: Path, overwrite: Boolean, bufferSize: Int, replication: Short, blockSize: Long,
+      progress: org.apache.hadoop.util.Progressable): org.apache.hadoop.fs.FSDataOutputStream =
+    if (failRewrite && overwrite && isLease(p)) throw new java.io.IOException(s"planted rewrite failure: $p")
+    else super.create(p, overwrite, bufferSize, replication, blockSize, progress)
+}
+
+object FlakyLeaseFileSystem {
+  @volatile var failStat = false
+  @volatile var failRewrite = false
 }
 
 /** A local filesystem whose every create throws: a broken filesystem

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import graft.SparkTestBase
+import graft.{LandGate, SparkTestBase}
 import graft.core._
 import org.apache.spark.sql.functions._
 

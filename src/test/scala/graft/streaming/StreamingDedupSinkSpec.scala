@@ -1,8 +1,7 @@
 package graft.streaming
 
-import graft.SparkTestBase
+import graft.{LandGate, SparkTestBase}
 import graft.core.{TableLock, TableManifest}
-import graft.pipeline.LandGate
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
