@@ -1248,7 +1248,7 @@ object SparkEntry {
           .schema(StructType(Seq(
             StructField("doc_id", LongType), StructField("text", StringType))))
           .parquet(s"$root/stream")
-        // probe centroids come from the index's own meta/ — no caller state
+        // probe centroids come from the index's own centroids table — no caller state
         val q1 = StreamingRetrieval.startIndexed(stream, s"$root/index", "doc_id", "text",
           dim = 32, nProbe = 2, k = 5, s"$root/out", s"$root/ckpt")
         q1.processAllAvailable() // batch 0 = wave 1 (all files pre-exist)
@@ -1257,7 +1257,7 @@ object SparkEntry {
         // wave across micro-batches — and for a growing index, batch
         // membership IS the result contract. The restart resumes from
         // the checkpoint and takes the whole wave as batch 1 (and
-        // exercises exactly the restart path the meta/ centroids serve).
+        // exercises exactly the restart path the persisted centroids serve).
         q1.stop()
         docs.filter(col("doc_id") % 200 === 100).select("doc_id", "text")
           .write.mode("append").parquet(s"$root/stream")

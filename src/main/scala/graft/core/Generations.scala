@@ -3,8 +3,12 @@ package graft.core
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Generation-pointer manifest for optimizable index tables (the
-  * persisted inverted index, the growing IVF index, the gram index).
+/** Generation-pointer manifest of the persisted inverted index
+  * (`Lexical.Index`), its only user. The gram and IVF stream indexes
+  * commit through [[TableManifest]] instead; Lexical stays here because
+  * its postings generation is `__tb`-partitioned and its appends commit
+  * by per-batch announcements, neither of which a manifest land writes.
+  * [[GraceMs]] is also the manifest's reader grace.
   *
   * Problem: an index OPTIMIZE compacts/re-ranks its sub-tables with a
   * staged directory swap. WRITERS are serialized by the

@@ -27,7 +27,9 @@ import scala.jdk.CollectionConverters._
   * so each sees every commit, whoever made it (a root holding only a
   * `_manifest.json`, written before epochs, reads it as epoch 0).
   * Its writers: `Pipeline(manifestCommit = true)`,
-  * [[graft.streaming.StreamingDedupSink]] and [[graft.ops.UrlFrontier]].
+  * [[graft.streaming.StreamingDedupSink]], [[graft.ops.UrlFrontier]],
+  * [[graft.streaming.StreamingSpanDedup]]'s gram index and
+  * [[graft.streaming.StreamingRetrieval]]'s growing IVF index.
   *
   * Per table an epoch holds the committed generation list, each
   * generation's row count and the table's schema (every field nullable,
@@ -43,12 +45,13 @@ import scala.jdk.CollectionConverters._
   * bounded number of generations however long a backfill appends.
   * Unreferenced dirs are swept PER TABLE at a publish's first touch of
   * that table, under the table's lease, so never a concurrent
-  * publisher's uncommitted landings (its tables are leased). Crash
-  * orphans and generations a rewrite superseded go at once (a full
-  * publish interval of reader grace); generations a merge absorbed go
-  * once the generation that absorbed them was committed
-  * [[Generations.GraceMs]] ago, so a reader of an append-only table
-  * keeps its files that long whatever the publish rate.
+  * publisher's uncommitted landings (its tables are leased). One grace
+  * rule: a commit stamps the mtime of every generation it drops from a
+  * list (rewritten, merged or optimized away), and the sweep deletes it
+  * once that mtime is [[Generations.GraceMs]] old, so a reader that
+  * resolved the table before the commit keeps its files that long
+  * whatever the publish rate. Crash orphans (numbered above every
+  * committed generation) go at once.
   */
 final class TableManifest(spark: SparkSession, root: String) {
   import TableManifest._
@@ -86,14 +89,13 @@ final class TableManifest(spark: SparkSession, root: String) {
   /** Committed generation dirs of one table (empty = table unknown). */
   def gens(name: String): Seq[String] = newest().list(Prefix + name)
 
-  /** One table's committed state, all from ONE epoch so a reader never
-    * pairs one commit's list with another's schema. A manifest written
-    * before counts or schemas were recorded derives what it lacks from
-    * the committed dirs — footer counts, a mergeSchema read — and the
+  /** One table's committed state in epoch `e`, so a reader never pairs
+    * one commit's list with another's schema. A manifest written before
+    * counts or schemas were recorded derives what it lacks from the
+    * committed dirs — footer counts, a mergeSchema read — and the
     * table's next land records both.
     */
-  private def snapshot(name: String): Option[TableState] = {
-    val e = newest()
+  private def snapshot(name: String, e: Epoch = newest()): Option[TableState] = {
     val (gs, cs, schema) = (e.list(Prefix + name), e.list(CountsPrefix + name), e.text(SchemaPrefix + name))
     if (gs.isEmpty) None
     else {
@@ -117,7 +119,16 @@ final class TableManifest(spark: SparkSession, root: String) {
   /** The committed table, resolved THROUGH the manifest: the newest
     * epoch's generations read with the schema recorded at their commit.
     */
-  def read(name: String): Option[DataFrame] = snapshot(name).map(load(name, _))
+  def read(name: String): Option[DataFrame] = readAll(Seq(name)).head
+
+  /** Several committed tables, all resolved from ONE epoch: an unleased
+    * reader of tables one publish flips together (an index's vectors and
+    * the centroids they are assigned under) never pairs two commits.
+    */
+  def readAll(names: Seq[String]): Seq[Option[DataFrame]] = {
+    val e = newest()
+    names.map(name => snapshot(name, e).map(load(name, _)))
+  }
 
   /** One all-or-nothing publish cycle over any number of tables. Callers
     * [[Publish.read]] and [[Publish.land]] each table (any disposition) as
@@ -176,25 +187,20 @@ final class TableManifest(spark: SparkSession, root: String) {
     }
 
     /** Delete the table's unreferenced generation dirs — `committed` is
-      * its committed list, stable under our lease: crash orphans (above
-      * every committed number) before their numbers are re-minted, and
-      * generations a rewrite superseded (below every committed number).
-      * A generation a merge absorbed (committed numbers on both sides) is
-      * kept until the generation that absorbed it — the lowest committed
-      * one above it, its mtime stamped at commit — is [[Generations.GraceMs]] old.
+      * its committed list, stable under our lease. A crash orphan
+      * (numbered above every committed generation) goes at once, before
+      * its number is re-minted; any other was dropped by a commit that
+      * stamped its mtime, and goes once that is [[Generations.GraceMs]] old.
       */
     private def sweepTable(table: String, committed: Seq[String]): Unit = {
       val tableDir = new Path(s"$root/$table")
       val fs = tableDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
       val gens = if (fs.exists(tableDir)) fs.listStatus(tableDir).filter(g =>
         g.isDirectory && g.getPath.getName.matches("^g[0-9]+$")).toSeq else Nil
-      val mtime = gens.map(g => g.getPath.getName -> g.getModificationTime).toMap
+      val top = committed.map(genNumber).maxOption
       val graceEnd = System.currentTimeMillis() - Generations.GraceMs
-      val nums = committed.map(genNumber)
       gens.filterNot(g => committed.contains(g.getPath.getName)).foreach { g =>
-        val n = genNumber(g.getPath.getName)
-        val absorbedBy = if (nums.exists(_ < n)) committed.filter(genNumber(_) > n).minByOption(genNumber) else None
-        if (!absorbedBy.exists(a => mtime.get(a).exists(_ > graceEnd)))
+        if (top.forall(genNumber(g.getPath.getName) > _) || g.getModificationTime <= graceEnd)
           EpochFiles.sweep(fs, g.getPath, "manifest sweep")
       }
     }
@@ -242,8 +248,8 @@ final class TableManifest(spark: SparkSession, root: String) {
       * ([[mergedRun]]) as one generation that replaces them — still one
       * write job, packed into files of about `spark.sql.files.maxPartitionBytes`
       * by the run's bytes on disk. The absorbed generations stay on disk
-      * for [[Generations.GraceMs]] after the commit, for readers that
-      * resolved the table before it.
+      * for [[Generations.GraceMs]] after the commit, like every generation
+      * a commit drops, for readers that resolved the table before it.
       */
     def land(updates: DataFrame, hints: TableHints): Long = {
       synchronized(require(!committed, "publish already committed"))
@@ -307,8 +313,12 @@ final class TableManifest(spark: SparkSession, root: String) {
       * overlaid, written to `_manifest.tmp-<owner>` and linked without
       * replace; on a lost race it re-bases on the newest epoch and tries
       * the next number. Its tables are leased, so an epoch listing its
-      * generations holds the commit. Epochs older than the newest two and
-      * temp files older than the lease's stale age (crashed commits') go.
+      * generations holds the commit. Before each link it stamps the
+      * mtime of every generation the epoch drops from a list, so the
+      * reader grace of [[sweepTable]] counts from a time no reader can
+      * have resolved the epoch before. Epochs older than the newest two
+      * and temp files older than the lease's stale age (crashed
+      * commits') go.
       */
     def commit(): Unit = synchronized {
       require(!committed, "publish already committed")
@@ -323,15 +333,14 @@ final class TableManifest(spark: SparkSession, root: String) {
           doc.put(SchemaPrefix + name, t.schema.json)
         }
         java.nio.file.Files.write(tmp, mapper.writerWithDefaultPrettyPrinter().writeValueAsBytes(doc))
+        val now = System.currentTimeMillis()
+        mine.foreach { case (name, t) => base.list(Prefix + name).filterNot(t.gens.contains)
+          .foreach(g => new java.io.File(s"$localRoot/$name/$g").setLastModified(now)) }
         testHookBeforeLink(base.n + 1)
         EpochFiles.link(tmp, java.nio.file.Paths.get(localRoot, s"$EpochPrefix${base.n + 1}"))
         base = newest()
       }
       java.nio.file.Files.deleteIfExists(tmp)
-      // each landed generation's mtime is its commit time: the reader
-      // grace of the generations a merge absorbed counts from it
-      val now = System.currentTimeMillis()
-      mine.foreach { case (name, t) => new java.io.File(s"$localRoot/$name/${t.gens.last}").setLastModified(now) }
       committed = true
       leases.releaseAll()
       if (mine.nonEmpty) sweepEpochs(base.n)
@@ -354,6 +363,29 @@ final class TableManifest(spark: SparkSession, root: String) {
     * checkpoint dir, which a restart reuses to retake its crashed leases.
     */
   def publish(owner: String): Publish = new Publish(owner)
+
+  /** `body` run in one publish by `owner`, then committed; a failed body
+    * releases the leases. A publish that meets another writer's lease is
+    * retried whole, in a fresh publish, for up to `waitMs` (0: fails fast).
+    */
+  private[graft] def publishing[T](owner: String, waitMs: Long = 0L)(body: Publish => T): T = {
+    val deadline = System.currentTimeMillis() + waitMs
+    var result: Option[T] = None
+    while (result.isEmpty) {
+      val pub = publish(owner)
+      try {
+        val r = body(pub)
+        pub.commit()
+        result = Some(r)
+      } catch {
+        case e: TableLock.LockHeldException if System.currentTimeMillis() < deadline =>
+          log.info(s"manifest $root: ${e.getMessage}; retrying the publish for " +
+            s"${deadline - System.currentTimeMillis()} ms more")
+          Thread.sleep(200)
+      } finally pub.abort()
+    }
+    result.get
+  }
 }
 
 object TableManifest {
@@ -365,6 +397,7 @@ object TableManifest {
   private val SchemaPrefix = "schemas."
 
   private val mapper = new ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger(classOf[TableManifest])
 
   /** The most generations a table's list holds (see [[Publish.land]]). */
   val MaxGenerations = 16

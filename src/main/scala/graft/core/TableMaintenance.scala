@@ -21,9 +21,10 @@ import java.nio.charset.StandardCharsets
   *   1. the bin's rows are written to a scratch dir and the output file
   *      is renamed to its final name ONLY after a `_compacting_<id>`
   *      marker at the table root (listing the new file + the originals
-  *      it replaces, relative to the root) is in place;
+  *      it replaces) is in place;
   *   2. originals are deleted after the new file is in;
-  *   3. the marker is deleted last.
+  *   3. the marker is deleted last, and only once every original is
+  *      gone: a delete that leaves one keeps the marker and fails.
   *
   * `repair` replays an interrupted protocol from the marker: if the new
   * file made it in, finish deleting the originals (idempotent); if not,
@@ -69,106 +70,61 @@ object TableMaintenance {
   def compact(spark: SparkSession, path: String,
       targetBytes: Long = 128L * 1024 * 1024,
       minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
-    TableWriter.leased(spark, path, "compaction")(compactLocked(spark, path, "", targetBytes, minFileBytes))
-
-  /** Compact the leaf dir `leaf` (relative to the table root `path`, ""
-    * for the root itself). Markers go to the root and name root-relative
-    * paths, so [[repair]] lists one dir however many partitions exist.
-    */
-  private def compactLocked(spark: SparkSession, path: String, leaf: String,
-      targetBytes: Long, minFileBytes: Long): (Int, Int) = {
-    val (fs, root) = fsOf(spark, path)
-    val dir = if (leaf.isEmpty) root else new Path(root, leaf)
-    val all = dataFiles(fs, dir)
-    val small = all.filter(_._2 < minFileBytes)
-    val bins = pack(small, targetBytes).filter(_.size > 1)
-    val scratch = new Path(dir, ".compact_scratch")
-    bins.zipWithIndex.foreach { case (bin, i) =>
-      val id = java.util.UUID.randomUUID().toString.take(8)
-      val outName = s"compacted-$id.parquet"
-      // one output file per bin: the bin was sized to targetBytes
-      val binScratch = new Path(scratch, s"bin_$i")
-      spark.read.option("mergeSchema", "true")
-        .parquet(bin.map(_._1.toString): _*)
-        .coalesce(1)
-        .write.mode(SaveMode.Overwrite).parquet(binScratch.toString)
-      val produced = dataFiles(fs, binScratch)
-      require(produced.size == 1, s"expected one part file, got ${produced.size}")
-      // the marker itself must appear atomically: write it in scratch,
-      // rename into place (a crash mid-write would otherwise leave a
-      // truncated marker that repair can't interpret)
-      val marker = new Path(root, s"_compacting_$id")
-      val markerTmp = new Path(binScratch, s"_compacting_$id")
-      val prefix = if (leaf.isEmpty) "" else s"$leaf/"
-      val payload = (outName +: bin.map(_._1.getName)).map(prefix + _).mkString("\n")
-      require(EpochFiles.create(fs, markerTmp, payload.getBytes(StandardCharsets.UTF_8)),
-        s"marker $markerTmp already exists")
-      require(fs.rename(markerTmp, marker), s"marker rename failed for $marker")
-      // rename returns FALSE (not throws) on most failure modes; deleting
-      // the originals after a failed rename would lose the bin's rows, so
-      // back out (drop the marker, keep the originals) and fail loudly
-      if (!fs.rename(produced.head._1, new Path(dir, outName))) {
-        fs.delete(marker, false)
-        throw new java.io.IOException(
-          s"compaction rename failed for $outName; originals left in place")
-      }
-      bin.foreach { case (p, _) => fs.delete(p, false) }
-      fs.delete(marker, false)
-    }
-    if (fs.exists(scratch)) fs.delete(scratch, true)
-    (all.size, dataFiles(fs, dir).size)
-  }
-
-  /** Leaf partition directories, relative to `dir` ("" = `dir` itself):
-    * dirs that directly hold `.parquet` data files (the root itself counts
-    * when unpartitioned). Hidden/metadata entries (`_`/`.` prefixed) are
-    * skipped, so markers, staged-swap scratch and `_SUCCESS` never
-    * register as partitions.
-    */
-  private def leafDirs(fs: FileSystem, dir: Path, rel: String = ""): Seq[String] = {
-    val st = fs.listStatus(dir).toSeq.filterNot { s =>
-      val n = s.getPath.getName
-      n.startsWith("_") || n.startsWith(".")
-    }
-    val here =
-      if (st.exists(s => s.isFile && s.getPath.getName.endsWith(".parquet"))) Seq(rel)
-      else Seq.empty
-    here ++ st.filter(_.isDirectory).flatMap { s =>
-      leafDirs(fs, s.getPath, if (rel.isEmpty) s.getPath.getName else s"$rel/${s.getPath.getName}")
-    }
-  }
-
-  /** [[compact]] for PARTITIONED tables — every growing table here is
-    * one (merge targets, the streaming sinks' `batch_id=N` layouts, the
-    * gram/vector index deltas), and per-batch appends make each
-    * partition its own small-file factory. Each leaf partition dir runs
-    * the same marker-protocol bin-pack (partition values live in the
-    * dir name, not the files, so rewriting within the dir preserves
-    * them); ONE table lease covers the whole pass, the same lease the
-    * streaming batches take — compaction can never interleave with a
-    * live probe-then-append. Returns summed (filesBefore, filesAfter).
-    *
-    * IMPORTANT: `path` must be the SAME root the table's writers lock —
-    * for the IVF growing index that is the index ROOT (its data lives in
-    * the committed generation's `<root>/vectors@g<N>`), never a subdir:
-    * a lease keyed on `<root>/vectors@g<N>` would not exclude a batch
-    * holding the `<root>` lease, and the rewrite could race its probe.
-    */
-  def compactPartitioned(spark: SparkSession, path: String,
-      targetBytes: Long = 128L * 1024 * 1024,
-      minFileBytes: Long = 16L * 1024 * 1024): (Int, Int) =
     TableWriter.leased(spark, path, "compaction") {
       val (fs, dir) = fsOf(spark, path)
-      val results = leafDirs(fs, dir)
-        .map(l => compactLocked(spark, path, l, targetBytes, minFileBytes))
-      (results.map(_._1).sum, results.map(_._2).sum)
+      val all = dataFiles(fs, dir)
+      val small = all.filter(_._2 < minFileBytes)
+      val bins = pack(small, targetBytes).filter(_.size > 1)
+      val scratch = new Path(dir, ".compact_scratch")
+      bins.zipWithIndex.foreach { case (bin, i) =>
+        val id = java.util.UUID.randomUUID().toString.take(8)
+        val outName = s"compacted-$id.parquet"
+        // one output file per bin: the bin was sized to targetBytes
+        val binScratch = new Path(scratch, s"bin_$i")
+        spark.read.option("mergeSchema", "true")
+          .parquet(bin.map(_._1.toString): _*)
+          .coalesce(1)
+          .write.mode(SaveMode.Overwrite).parquet(binScratch.toString)
+        val produced = dataFiles(fs, binScratch)
+        require(produced.size == 1, s"expected one part file, got ${produced.size}")
+        // the marker itself must appear atomically: write it in scratch,
+        // rename into place (a crash mid-write would otherwise leave a
+        // truncated marker that repair can't interpret)
+        val marker = new Path(dir, s"_compacting_$id")
+        val markerTmp = new Path(binScratch, s"_compacting_$id")
+        val payload = (outName +: bin.map(_._1.getName)).mkString("\n")
+        require(EpochFiles.create(fs, markerTmp, payload.getBytes(StandardCharsets.UTF_8)),
+          s"marker $markerTmp already exists")
+        require(fs.rename(markerTmp, marker), s"marker rename failed for $marker")
+        // rename returns FALSE (not throws) on most failure modes; deleting
+        // the originals after a failed rename would lose the bin's rows, so
+        // back out (drop the marker, keep the originals) and fail loudly
+        if (!fs.rename(produced.head._1, new Path(dir, outName))) {
+          fs.delete(marker, false)
+          throw new java.io.IOException(
+            s"compaction rename failed for $outName; originals left in place")
+        }
+        bin.foreach { case (p, _) => deleteOriginal(fs, p, marker) }
+        fs.delete(marker, false)
+      }
+      if (fs.exists(scratch)) fs.delete(scratch, true)
+      (all.size, dataFiles(fs, dir).size)
     }
+
+  /** Delete an original the compacted file `marker` names replaced. A
+    * delete that leaves it in place would keep the bin's rows twice: the
+    * marker stays for the next leased [[repair]] to retry, and this fails
+    * naming the file.
+    */
+  private def deleteOriginal(fs: FileSystem, original: Path, marker: Path): Unit =
+    if (!fs.delete(original, false) && fs.exists(original))
+      throw new java.io.IOException(
+        s"compaction could not delete the replaced file $original; $marker is kept for the next repair")
 
   /** Replay interrupted compaction markers (see protocol above): one
     * listing of the table root, where every marker lives, so a clean
-    * table costs one `listStatus` however many partitions it has.
-    * [[TableWriter.leased]] runs it before every write and maintenance
-    * pass reads the table.
+    * table costs one `listStatus`. [[TableWriter.leased]] runs it before
+    * every write and maintenance pass reads the table.
     */
   def repair(spark: SparkSession, path: String): Unit = {
     val (fs, root) = fsOf(spark, path)
@@ -185,7 +141,7 @@ object TableMaintenance {
           case newName :: olds =>
             if (fs.exists(new Path(root, newName)))
               // new file landed: finish deleting the originals it replaced
-              olds.foreach(o => fs.delete(new Path(root, o), false))
+              olds.foreach(o => deleteOriginal(fs, new Path(root, o), m.getPath))
           // else: rename never happened — originals are intact
           case Nil => ()
         }

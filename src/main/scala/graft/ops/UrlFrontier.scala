@@ -39,7 +39,7 @@ import graft.core.{Disposition, TableHints, TableManifest}
   * and carries the same exactly-once guarantee as the seen-set — but ONLY
   * through [[committedPages]]. A raw glob over `pages/` can see orphans and
   * the generations a compaction superseded: those stay for the manifest's
-  * reader grace, until the next publish that touches the table.
+  * reader grace ([[graft.core.Generations.GraceMs]] after the compaction).
   *
   * `dest` must be a local filesystem path, as for every manifest. A
   * `dest` in the layout written before the frontier was a manifest writer
@@ -146,8 +146,7 @@ object UrlFrontier {
       robots: Option[DataFrame] = None)(
       fetch: DataFrame => DataFrame): DataFrame = {
     import spark.implicits._
-    val pub = manifest(spark, dest).publish(s"url-frontier:${java.util.UUID.randomUUID()}")
-    try {
+    manifest(spark, dest).publishing(s"url-frontier:${java.util.UUID.randomUUID()}") { pub =>
       // the clock commits with the data: land count = this wave's number
       val wave = pub.land(Seq((maxPerHost, minWaveGapPerHost)).toDF("max_per_host", "min_wave_gap_per_host"),
         TableHints("waves"))
@@ -200,9 +199,8 @@ object UrlFrontier {
       val mine = Option.when(minWaveGapPerHost > 0)(
         landed.select(regexp_extract(col("url_canon"), "^[^/?]+", 0).as("host"), lit(wave).as("wave")).distinct())
       (window ++ mine).reduceOption(_ union _).foreach(h => pub.land(h, TableHints("hosts", Disposition.Replace)))
-      pub.commit()
       landed
-    } finally pub.abort()
+    }
   }
 
   /** Canonical host of a canonical URL (scheme already stripped by
@@ -377,15 +375,14 @@ object UrlFrontier {
     * files of about `spark.sql.files.maxPartitionBytes` by the bytes
     * being rewritten (the manifest merge's rule). The table's first touch
     * sweeps its orphans and the generations a previous compaction
-    * superseded; the ones this compaction supersedes stay for readers that
-    * resolved the old list, until the next publish that touches the
-    * table. A table of at most one generation is left as it is.
+    * superseded past the manifest's reader grace; the ones this
+    * compaction supersedes stay that long for readers that resolved the
+    * old list. A table of at most one generation is left as it is.
     */
   private def compact(spark: SparkSession, dest: String, table: String)(
       rewrite: (DataFrame, Int) => DataFrame): Seq[String] = {
     val m = manifest(spark, dest)
-    val pub = m.publish(s"url-frontier:${java.util.UUID.randomUUID()}")
-    try {
+    m.publishing(s"url-frontier:${java.util.UUID.randomUUID()}") { pub =>
       val current = pub.read(table)
       val gens = m.gens(table)
       if (gens.size > 1) {
@@ -394,8 +391,7 @@ object UrlFrontier {
         val files = (bytes / spark.sessionState.conf.filesMaxPartitionBytes + 1).toInt
         pub.land(rewrite(current.get, files), TableHints(table, Disposition.Replace))
       }
-      pub.commit()
-      m.gens(table)
-    } finally pub.abort()
+    }
+    m.gens(table)
   }
 }

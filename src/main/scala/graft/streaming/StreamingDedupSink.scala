@@ -26,7 +26,7 @@ import graft.ops.Dedup
   * stable across restarts and unique per query — so a restarted query
   * retakes its crashed leases at once, while a second query on the same
   * root fails fast at its first read. The per-batch generations stay
-  * bounded by the manifest's own merging ([[TableManifest.MaxGenerations]]).
+  * bounded by the manifest's own merging ([[TableManifest#Publish.land]]).
   *
   * `root` must be a local filesystem path, as for every manifest: a
   * commit publishes an epoch file by a no-replace hard link. `start`
@@ -63,30 +63,27 @@ object StreamingDedupSink {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val pub = new TableManifest(batch.sparkSession, root).publish(checkpointDir)
-          try {
-            val tables = (pub.read("corpus"), pub.read("index"))
-            // the batch feeds two jobs (vs-corpus probe + internal dedup) —
-            // pin it so the streaming source isn't re-pulled per job
-            val pinned = batch.localCheckpoint(true)
-            val survivors = tables match {
-              case (Some(corpus), Some(index)) =>
-                Dedup.incrementalDedup(pinned, corpus, index, idCol, textCol,
-                  numHashes, rowsPerBand, threshold, maxBucketSize)._1
-              case _ =>
-                // bootstrap: the first batch only dedups against itself
-                val inner = Dedup.nearDupPairs(pinned, idCol, textCol,
-                  numHashes, rowsPerBand, threshold, maxBucketSize)
-                Dedup.dedupByClusters(pinned, idCol, Dedup.clusterPairs(inner))
-            }
-            // pinned so the corpus and index lands see the SAME rows
-            val landed = survivors.localCheckpoint(true)
-            pub.land(landed, TableHints("corpus", Disposition.Append))
-            pub.land(Dedup.lshIndexRows(landed, idCol, textCol, numHashes, rowsPerBand),
-              TableHints("index", Disposition.Append))
-            pub.commit()
-          } finally pub.abort()
+        if (!batch.isEmpty) new TableManifest(batch.sparkSession, root).publishing(checkpointDir) { pub =>
+          val tables = (pub.read("corpus"), pub.read("index"))
+          // the batch feeds two jobs (vs-corpus probe + internal dedup) —
+          // pin it so the streaming source isn't re-pulled per job
+          val pinned = batch.localCheckpoint(true)
+          val survivors = tables match {
+            case (Some(corpus), Some(index)) =>
+              Dedup.incrementalDedup(pinned, corpus, index, idCol, textCol,
+                numHashes, rowsPerBand, threshold, maxBucketSize)._1
+            case _ =>
+              // bootstrap: the first batch only dedups against itself
+              val inner = Dedup.nearDupPairs(pinned, idCol, textCol,
+                numHashes, rowsPerBand, threshold, maxBucketSize)
+              Dedup.dedupByClusters(pinned, idCol, Dedup.clusterPairs(inner))
+          }
+          // pinned so the corpus and index lands see the SAME rows
+          val landed = survivors.localCheckpoint(true)
+          pub.land(landed, TableHints("corpus", Disposition.Append))
+          pub.land(Dedup.lshIndexRows(landed, idCol, textCol, numHashes, rowsPerBand),
+            TableHints("index", Disposition.Append))
+          ()
         }
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow())

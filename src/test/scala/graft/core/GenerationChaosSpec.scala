@@ -6,10 +6,11 @@ import graft.SparkTestBase
 import graft.ops.{Embedding, Lexical, Similarity}
 import graft.streaming.StreamingRetrieval
 
-/** Chaos spec for the generation-pointer contract (Generations.scala):
+/** Chaos spec for the generation-pointer contract (Generations.scala,
+  * Lexical's index) and the manifest's one-epoch read (the IVF index):
   * UNLEASED readers probing an index in a tight loop while a writer
   * commits optimize generations must see zero FileNotFound and only
-  * old-complete or new-complete results — the GC grace is the claim,
+  * old-complete or new-complete results — the reader grace is the claim,
   * proven here under real contention the way TableLockSpec
   * proves the lease arbitration.
   *
@@ -137,17 +138,15 @@ class GenerationChaosSpec extends SparkTestBase {
     val cents = Seq(0 -> Array(1.0, 0.0, 0.0, 0.0), 1 -> Array(0.0, 1.0, 0.0, 0.0))
     StreamingRetrieval.bootstrapIndex(Similarity.ivfAssign(corpus, "n_vec", cents), cents, path)
 
-    // an unleased reader resolves the pointer ONCE and reads vectors and
-    // meta at that generation — the marker commits them together, so the
-    // invariants below hold for ANY committed generation: the full vector
-    // set is present, and every assigned cell has its centroid
+    // an unleased reader resolves vectors and centroids from ONE manifest
+    // epoch — each optimize commits them together, so the invariants
+    // below hold for ANY committed epoch: the full vector set is present
+    // (the generations an optimize drops outlive it by the reader grace),
+    // and every assigned cell has its centroid
     def probe(): (Long, Boolean) = {
-      val gen = Generations.currentOrFail(spark, path)
-      val vecs = spark.read.parquet(Generations.dir(path, "vectors", gen))
-      val meta = spark.read.parquet(Generations.dir(path, "meta", gen))
-      val centCells = meta.select("cell").as[Int].collect().toSet
+      val (vecs, cents) = StreamingRetrieval.readIndex(spark, path)
       val vecCells = vecs.select("__cell").distinct().as[Int].collect().toSet
-      (vecs.count(), vecCells.subsetOf(centCells))
+      (vecs.count(), vecCells.subsetOf(cents.map(_._1).toSet))
     }
 
     val (seen, n) = race(probe) {

@@ -31,7 +31,7 @@ class ManifestEpochSpec extends SparkTestBase {
     writer.run(merge("v1"))
     val reader = new TableManifest(spark, dest)
     assert(tags(reader, "t") == Set("v1"))
-    // the second rewrite's first land sweeps the generation v1 lived in
+    // the generation v1 lived in outlives both rewrites by the reader grace
     writer.run(merge("v2"))
     writer.run(merge("v3"))
     assert(tags(reader, "t") == Set("v3"))
@@ -187,12 +187,36 @@ class ManifestEpochSpec extends SparkTestBase {
     assert(absorbed.forall(g => Files.exists(Paths.get(dest, "t", g))))
     assert(before.count() == 100 + 2 * (k - 1))
     // once the merge is older than the grace, the next publish sweeps them
-    assert(new java.io.File(s"$dest/t/${merged.last}")
-      .setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000L))
+    assert(absorbed.forall(g => new java.io.File(s"$dest/t/$g")
+      .setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000L)))
     append(1, "last").commit()
     assert(absorbed.forall(g => !Files.exists(Paths.get(dest, "t", g))))
     assert(m.gens("t").forall(g => Files.exists(Paths.get(dest, "t", g))))
     assert(m.read("t").get.count() == 100 + 2 * k + 3)
+  }
+
+  test("a reader resolved before a Replace still collects after the next publish; the dropped generation goes past the grace") {
+    val dest = tmpDir("epoch-replace-grace")
+    val m = new TableManifest(spark, dest)
+    def publishT(n: Int, tag: String, d: Disposition): Unit = {
+      val p = m.publish(s"writer-$tag")
+      p.land(rows(n, tag), TableHints("t", d))
+      p.commit()
+    }
+    publishT(3, "v1", Disposition.Replace)
+    val dropped = m.gens("t")
+    val before = m.read("t").get
+    publishT(5, "v2", Disposition.Replace)
+    // the next publish's first touch of t sweeps what is past the grace only
+    publishT(1, "v3", Disposition.Append)
+    assert(before.collect().map(_.getString(1)).toSet == Set("v1"),
+      "a reader resolved before the Replace must still collect")
+    assert(dropped.forall(g => Files.exists(Paths.get(dest, "t", g))))
+    dropped.foreach(g => assert(new java.io.File(s"$dest/t/$g")
+      .setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000L)))
+    publishT(1, "v4", Disposition.Append)
+    assert(dropped.forall(g => !Files.exists(Paths.get(dest, "t", g))))
+    assert(tags(m, "t") == Set("v2", "v3", "v4") && m.read("t").get.count() == 7)
   }
 
   /** Spark jobs `body` runs. */

@@ -34,27 +34,23 @@ class TableMaintenanceSpec extends SparkTestBase {
     assert(!fsFor(dir).exists(new Path(dir, ".compact_scratch")))
   }
 
-  test("compactPartitioned bin-packs every leaf partition, preserving partition values") {
-    val dir = tmpDir("compact_part")
-    // three batch_id partitions, five small files each
-    (0 until 3).foreach { b =>
-      (0 until 5).foreach { i =>
-        (i * 50 until (i + 1) * 50).map(j => (j.toLong, b.toLong))
-          .toDF("id", "batch_id").repartition(1)
-          .write.mode("append")
-          .partitionBy("batch_id").parquet(dir)
-      }
+  test("a compaction whose delete of an original returns false keeps its marker and fails naming the file; the next repair finishes it") {
+    spark.sparkContext.hadoopConfiguration.set("fs.falsedelete.impl", classOf[FalseDeleteFileSystem].getName)
+    val dir = tmpDir("compact_false_delete")
+    landSmallFiles(dir, 3)
+    val expect = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getString(1))).toSet
+    val err = intercept[java.io.IOException] {
+      TableMaintenance.compact(spark, s"falsedelete://$dir", targetBytes = 1L << 30, minFileBytes = 1L << 30)
     }
-    val before = spark.read.parquet(dir)
-      .select("id", "batch_id").as[(Long, Long)].collect().sorted.toSeq
-    val (nBefore, nAfter) = TableMaintenance.compactPartitioned(spark, dir,
-      targetBytes = 1L << 30, minFileBytes = 1L << 30)
-    assert(nBefore == 15 && nAfter == 3, s"$nBefore -> $nAfter")
-    val after = spark.read.parquet(dir)
-      .select("id", "batch_id").as[(Long, Long)].collect().sorted.toSeq
-    assert(after == before)
-    // rows stayed in their partitions (dir names carry the values)
-    assert(parquetFiles(s"$dir/batch_id=1").size == 1)
+    assert(err.getMessage.contains("could not delete") && err.getMessage.contains(dir), err.getMessage)
+    val fs = fsFor(dir)
+    assert(fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith("_compacting_")),
+      "the marker must stay while an original it replaced is still there")
+    // the next leased pass replays the marker before it plans: each row once
+    TableMaintenance.compact(spark, dir, targetBytes = 1L << 30, minFileBytes = 1L << 30)
+    assert(!fs.listStatus(new Path(dir)).exists(_.getPath.getName.startsWith("_compacting_")))
+    val rows = spark.read.parquet(dir).collect().map(r => (r.getLong(0), r.getString(1))).toSeq
+    assert(rows.size == expect.size && rows.toSet == expect, s"${rows.size} rows of ${expect.size}")
   }
 
   test("right-sized files are left alone; a lone small file is not rewritten") {
@@ -182,4 +178,13 @@ class TableMaintenanceSpec extends SparkTestBase {
     assert(b == 3 && a == 1)
     assert(!fs.exists(marker))
   }
+}
+
+/** A local filesystem whose every delete returns false and deletes
+  * nothing, as `FileSystem.delete` may on failure. Registered under the
+  * `falsedelete` scheme by the spec.
+  */
+class FalseDeleteFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("falsedelete:///")
+  override def delete(p: Path, recursive: Boolean): Boolean = false
 }

@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.{LandGate, SparkTestBase}
-import graft.core.{TableLock, TableManifest}
+import graft.core.{Generations, TableLock, TableManifest}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,6 +21,13 @@ class UrlFrontierSpec extends SparkTestBase {
   /** The committed `hosts` table as (host, wave). */
   private def hostRows(dest: String): Set[(String, Long)] =
     new TableManifest(spark, dest).read("hosts").fold(Set.empty[(String, Long)])(_.as[(String, Long)].collect().toSet)
+
+  /** Age every generation dir of `table` past the manifest's reader
+    * grace, as if the commits that dropped them were that old.
+    */
+  private def ageGenerations(dest: String, table: String): Unit =
+    new java.io.File(s"$dest/$table").listFiles().filter(f => f.isDirectory && f.getName.matches("g[0-9]+"))
+      .foreach(f => assert(f.setLastModified(System.currentTimeMillis() - Generations.GraceMs - 60000L)))
 
   test("wave 2 fetches only unseen canonical URLs; surface variants collapse before the anti-join") {
     val dest = tmpDir("frontier")
@@ -88,7 +95,9 @@ class UrlFrontierSpec extends SparkTestBase {
       "seen compaction must leave the committed pages archive intact")
 
     // the wave AFTER the compaction still fetches exactly the unseen pages,
-    // and its first touch of seen sweeps the superseded generations
+    // and once the compaction is past the reader grace its first touch of
+    // seen sweeps the superseded generations
+    ageGenerations(dest, "seen")
     val w11 = UrlFrontier.runWave(spark, dest, listing(60), "url")(fetchCount(fetched))
     assert(w11.count() == 10 && fetched.get() == 60, "compaction broke fetch-exactly-once")
     assert(seenDirs == Seq("g11", "g12"), s"superseded seen generations survived the next wave: $seenDirs")
@@ -128,6 +137,7 @@ class UrlFrontierSpec extends SparkTestBase {
     def seenDirs = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dest/seen"))
       .map(_.getPath.getName).sorted.toSeq
     assert(seenDirs == Seq("g1", "g2", "g3", "g4"))
+    ageGenerations(dest, "seen")
     assert(UrlFrontier.runWave(spark, dest, listing(10), "url")(fetchCount(fetched)).isEmpty)
     assert(seenDirs == Seq("g4", "g5"))
     assert(UrlFrontier.seenSet(spark, dest).count() == 10)
@@ -165,9 +175,10 @@ class UrlFrontierSpec extends SparkTestBase {
     assert(spark.read.parquet(s"$dest/pages/g3").count() == 8,
       "the orphan's rows survived into the merged generation")
 
-    // the retry wave sweeps the seen orphan and the superseded pages
-    // generations, and the archive — committed view AND raw glob — holds
-    // each URL exactly once
+    // the retry wave sweeps the seen orphan and (past the reader grace)
+    // the superseded pages generations, and the archive — committed view
+    // AND raw glob — holds each URL exactly once
+    ageGenerations(dest, "pages")
     val w3 = UrlFrontier.runWave(spark, dest, listing(10), "url")(fetchCount(fetched))
     assert(w3.count() == 2 && fetched.get() == 10)
     val archive = UrlFrontier.committedPages(spark, dest)
@@ -220,8 +231,10 @@ class UrlFrontierSpec extends SparkTestBase {
     // seen side untouched: one dir per wave, membership intact
     assert(UrlFrontier.seenSet(spark, dest).count() == 40)
 
-    // fetch-exactly-once holds ACROSS the pages compaction, and the next
-    // wave's first touch of pages sweeps the superseded generations
+    // fetch-exactly-once holds ACROSS the pages compaction, and past the
+    // reader grace the next wave's first touch of pages sweeps the
+    // superseded generations
+    ageGenerations(dest, "pages")
     val fetched = new java.util.concurrent.atomic.AtomicLong()
     val w9 = UrlFrontier.runWave(spark, dest, listing(45), "url")(fetchCount(fetched))
     assert(w9.count() == 5 && fetched.get() == 5, "pages compaction broke fetch-exactly-once")
@@ -477,8 +490,10 @@ class UrlFrontierSpec extends SparkTestBase {
     assert(hostRows(dest).isEmpty, s"stale host rows survived a gap=0 wave: ${hostRows(dest)}")
 
     // re-raising the gap starts its window FRESH (documented): hosts a,b,c
-    // are all eligible; this wave records its own host set again, and its
-    // first touch of hosts sweeps the drained rows off disk
+    // are all eligible; this wave records its own host set again, and
+    // (past the reader grace) its first touch of hosts sweeps the drained
+    // rows off disk
+    ageGenerations(dest, "hosts")
     val w4 = UrlFrontier.runWave(spark, dest,
       urls("http://a.test/2", "http://c.test/2"), "url",
       minWaveGapPerHost = 3)(fetchCount(fetched))

@@ -48,7 +48,10 @@ class ManifestCommitSpec extends SparkTestBase {
       .map(_.getName).toSet
     assert(dirs().contains(v1Gen),
       "a superseded generation gets one publish interval of reader grace")
-    // the NEXT publish's entry sweep reclaims it; only live + just-superseded remain
+    // once its commit-time stamp is past the reader grace, the NEXT
+    // publish's entry sweep reclaims it; only live + just-superseded remain
+    assert(new java.io.File(evA, v1Gen)
+      .setLastModified(System.currentTimeMillis() - graft.core.Generations.GraceMs - 60000L))
     pipe.run(src("v3", boom = false))
     assert(!dirs().contains(v1Gen), "the following publish must sweep the superseded generation")
     assert(dirs().intersect(pipe.manifest.gens("ev_a").toSet) == pipe.manifest.gens("ev_a").toSet)

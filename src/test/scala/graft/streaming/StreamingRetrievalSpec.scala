@@ -3,7 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.SparkTestBase
+import graft.{LandGate, SparkTestBase}
+import graft.core.{Disposition, TableHints, TableLock, TableManifest}
 import graft.ops.{Embedding, Similarity}
 
 /** Continuous retrieval: micro-batch-boundary independence (the landed
@@ -12,8 +13,12 @@ import graft.ops.{Embedding, Similarity}
   */
 class StreamingRetrievalSpec extends SparkTestBase {
   import spark.implicits._
+  import scala.jdk.CollectionConverters._
 
   private val cents = Seq(0 -> Array(1.0, 0.0, 0.0, 0.0), 1 -> Array(0.0, 1.0, 0.0, 0.0))
+
+  /** The committed vectors table of the index at `idx`. */
+  private def vectors(idx: String) = StreamingRetrieval.readIndex(spark, idx)._1
 
   test("streamed probes across multiple micro-batches equal the one-shot batch ivfTopK") {
     val root = tmpDir("sretr")
@@ -107,7 +112,7 @@ class StreamingRetrievalSpec extends SparkTestBase {
     // batch-0 index delta rather than the bootstrap partition alone.
     assert(landed == Set((200L, 1L, 100L)), s"landed=$landed")
     // index now holds base + both deltas, partition-pruned by batch_id
-    val idx = spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/index", "vectors"))
+    val idx = vectors(s"$root/index")
     assert(idx.count() == 12)
     assert(idx.filter(col("batch_id") === -1L).count() == 10)
     // the probe centroids are the index's own, persisted at bootstrap
@@ -127,13 +132,13 @@ class StreamingRetrievalSpec extends SparkTestBase {
     StreamingRetrieval.landAndIndexBatch(b0, 0L, s"$root/index", "doc_id", "text",
       4, 1, 3, s"$root/out")
     val out1 = spark.read.parquet(s"$root/out").collect().toSeq.sortBy(_.toString)
-    val idx1 = spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/index", "vectors")).count()
+    val idx1 = vectors(s"$root/index").count()
     // crash between write and checkpoint commit => same batch re-delivered;
     // the probe must NOT see the crashed attempt's own index delta
     StreamingRetrieval.landAndIndexBatch(b0, 0L, s"$root/index", "doc_id", "text",
       4, 1, 3, s"$root/out")
     assert(spark.read.parquet(s"$root/out").collect().toSeq.sortBy(_.toString) == out1)
-    assert(spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/index", "vectors")).count() == idx1)
+    assert(vectors(s"$root/index").count() == idx1)
   }
 
   test("ivfTopKPreAssigned gated off broadcast returns identical results") {
@@ -172,12 +177,15 @@ class StreamingRetrievalSpec extends SparkTestBase {
     val delta = vecs.drop(40).toDF("n_id", "n_vec")
     StreamingRetrieval.bootstrapIndex(
       Similarity.ivfAssign(base, "n_vec", cents), cents, s"$root/idx")
-    Similarity.ivfAssign(delta, "n_vec", cents).withColumn("batch_id", lit(3L))
-      .write.mode("append").partitionBy("batch_id")
-      .parquet(StreamingRetrieval.subDir(spark, s"$root/idx", "vectors"))
+    val pub = new TableManifest(spark, s"$root/idx").publish("spec-delta")
+    // the vectors as the index records them (an array that may hold
+    // nulls, as a parquet read returns it)
+    pub.land(Similarity.ivfAssign(delta.withColumn("n_vec", col("n_vec").cast("array<double>")), "n_vec", cents)
+      .withColumn("batch_id", lit(3L)), TableHints("vectors", Disposition.Append))
+    pub.commit()
 
     val newCents = StreamingRetrieval.optimizeIndex(spark, s"$root/idx", k = 2)
-    val back = spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/idx", "vectors"))
+    val back = vectors(s"$root/idx")
     // one seed partition, every vector present exactly once
     assert(back.select("batch_id").distinct().as[Long].collect().toSeq == Seq(-1L))
     assert(back.count() == 60L && back.select("n_id").distinct().count() == 60L)
@@ -228,7 +236,7 @@ class StreamingRetrievalSpec extends SparkTestBase {
     val queries = Embedding.embedDocuments(b0, "doc_id", "text", dim = 4)
       .select(col("doc_id").as("q_id"), col("embedding").as("q_vec"))
     val expect = Similarity.ivfTopKPreAssigned(
-      spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/idx", "vectors"))
+      vectors(s"$root/idx")
         .filter(col("batch_id") === -1L).select("n_id", "n_vec", "__cell"),
       queries, "n_id", "n_vec", "q_id", "q_vec", diskCents, nProbe = 1, k = 3)
       .select(col("q_id"), col("rank").cast("long"), col("n_id"))
@@ -237,11 +245,11 @@ class StreamingRetrievalSpec extends SparkTestBase {
   }
 
   test("a crashed optimize (uncommitted next generation) leaves probes consistent; re-run heals") {
-    // the generation marker commits vectors and centroids TOGETHER: a
-    // crash after writing part of generation 1 but before its marker
-    // leaves generation 0 current — probes keep reading a fully
-    // consistent vectors+centroids pair instead of failing or
-    // mis-probing; re-running the optimize overwrites the orphan dirs
+    // one commit flips vectors and centroids TOGETHER: a crash after
+    // landing the next vectors generation but before the commit leaves
+    // the bootstrap current — probes keep reading a fully consistent
+    // vectors+centroids pair instead of failing or mis-probing; the next
+    // publish sweeps the orphan and re-running the optimize commits
     val root = tmpDir("sretr_crashopt")
     val corpus = Embedding.embedDocuments(
       (1L to 20L).map(i => (i, if (i % 2 == 0) "alpha alpha" else "zeta zeta"))
@@ -249,13 +257,13 @@ class StreamingRetrievalSpec extends SparkTestBase {
       .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
     StreamingRetrieval.bootstrapIndex(
       Similarity.ivfAssign(corpus, "n_vec", cents), cents, s"$root/idx")
-    // simulate the crash window: generation-1 vectors written (garbage,
-    // to prove no reader touches them), centroids and marker never landed
-    Seq((999L, Seq(9.0, 9.0, 9.0, 9.0), -1L)).toDF("n_id", "n_vec", "batch_id")
-      .write.partitionBy("batch_id")
-      .parquet(graft.core.Generations.dir(s"$root/idx", "vectors", 1L))
-    // probes still resolve generation 0: the bootstrap centroids, the
-    // bootstrap vectors, nothing from the orphan
+    // simulate the crash window: the next vectors generation landed
+    // (garbage, to prove no reader touches it), centroids and commit never
+    val m = new TableManifest(spark, s"$root/idx")
+    Seq((999L, Seq(9.0, 9.0, 9.0, 9.0), 0, -1L)).toDF("n_id", "n_vec", "__cell", "batch_id")
+      .write.parquet(s"$root/idx/vectors/g${m.gens("vectors").size + 1}")
+    // probes still resolve the bootstrap: its centroids, its vectors,
+    // nothing from the orphan
     assert(StreamingRetrieval.readCentroids(spark, s"$root/idx")
       .map { case (c, v) => (c, v.toSeq) } == cents.map { case (c, v) => (c, v.toSeq) })
     StreamingRetrieval.landAndIndexBatch(
@@ -263,28 +271,108 @@ class StreamingRetrievalSpec extends SparkTestBase {
       "doc_id", "text", 4, 1, 3, s"$root/out")
     assert(!spark.read.parquet(s"$root/out").select("n_id").as[Long]
       .collect().contains(999L), "no probe may read the uncommitted generation")
-    // re-running the optimize overwrites the orphan generation and commits
+    // re-running the optimize commits one new generation of each table
+    val before = (m.gens("vectors"), m.gens("centroids"))
     StreamingRetrieval.optimizeIndex(spark, s"$root/idx", k = 2)
-    assert(graft.core.Generations.current(spark, s"$root/idx").contains(1L))
+    assert(m.gens("vectors").size == 1 && m.gens("centroids").size == 1 &&
+      !before._1.contains(m.gens("vectors").head) && !before._2.contains(m.gens("centroids").head))
     assert(StreamingRetrieval.readCentroids(spark, s"$root/idx").size == 2)
-    val vecs = spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/idx", "vectors"))
+    val vecs = vectors(s"$root/idx")
     assert(!vecs.select("n_id").as[Long].collect().contains(999L),
       "the healed generation is re-derived from committed data only")
   }
 
   test("index lease exclusion: optimize cannot start while another writer holds the index") {
+    // an optimize racing a batch fails fast; a batch queues behind an optimize
     val root = tmpDir("sretr_lock")
     val corpus = (1L to 10L).map(i => (i, Seq(1.0, 0.0, 0.0, 0.0))).toDF("n_id", "n_vec")
     StreamingRetrieval.bootstrapIndex(
       Similarity.ivfAssign(corpus, "n_vec", cents), cents, s"$root/idx")
-    val lease = graft.core.TableLock.acquire(spark, s"$root/idx", owner = "spec-holder")
+    val lease = TableLock.acquire(spark, s"$root/idx/vectors", owner = "spec-holder")
     try {
-      intercept[graft.core.TableLock.LockHeldException] {
+      intercept[TableLock.LockHeldException] {
         StreamingRetrieval.optimizeIndex(spark, s"$root/idx", k = 2)
       }
     } finally lease.release()
     // released => the same optimize proceeds
     StreamingRetrieval.optimizeIndex(spark, s"$root/idx", k = 2)
-    assert(spark.read.parquet(StreamingRetrieval.subDir(spark, s"$root/idx", "vectors")).count() == 10L)
+    assert(vectors(s"$root/idx").count() == 10L)
+    // an optimize holds the centroids lease: the batch waits for it, then lands
+    val optimizeLease = TableLock.acquire(spark, s"$root/idx/centroids", owner = "spec-optimize")
+    @volatile var batchErr: Option[Throwable] = None
+    val batch = new Thread(() => try StreamingRetrieval.landAndIndexBatch(
+      Seq((100L, "alpha beta")).toDF("doc_id", "text"), 0L, s"$root/idx",
+      "doc_id", "text", 4, 1, 3, s"$root/out") catch { case t: Throwable => batchErr = Some(t) })
+    try {
+      batch.start()
+      Thread.sleep(2000)
+      assert(batch.isAlive, s"the batch must queue behind the optimize (error: $batchErr)")
+    } finally optimizeLease.release()
+    batch.join(120000L)
+    assert(!batch.isAlive && batchErr.isEmpty, s"the queued batch failed: $batchErr")
+    assert(vectors(s"$root/idx").count() == 11L)
+  }
+
+  test("a batch whose vectors land fails leaves the index unchanged; its re-delivery lands each delta once") {
+    val corpus = Embedding.embedDocuments(
+      (1L to 10L).map(i => (i, "alpha")).toDF("doc_id", "text"), "doc_id", "text", dim = 4)
+      .select(col("doc_id").as("n_id"), col("embedding").as("n_vec"))
+    val batches = Seq(Seq((100L, "alpha beta")), Seq((200L, "alpha gamma")), Seq((300L, "beta gamma")))
+    def run(root: String, failAt: Option[Int]): (Seq[String], Seq[String]) = {
+      StreamingRetrieval.bootstrapIndex(
+        Similarity.ivfAssign(corpus, "n_vec", cents), cents, s"$root/idx")
+      def land(i: Int): Unit = StreamingRetrieval.landAndIndexBatch(batches(i).toDF("doc_id", "text"),
+        i.toLong, s"$root/idx", "doc_id", "text", 4, 1, 3, s"$root/out")
+      batches.indices.foreach { i =>
+        if (failAt.contains(i)) {
+          val m = new TableManifest(spark, s"$root/idx")
+          val before = (m.gens("vectors"), vectors(s"$root/idx").collect().map(_.toString).sorted.toSeq)
+          LandGate.armed(spark, s"$root/idx") { t =>
+            if (t == "vectors") throw new IllegalStateException("planted vectors land failure")
+          } {
+            intercept[Exception](land(i))
+          }
+          assert((m.gens("vectors"), vectors(s"$root/idx").collect().map(_.toString).sorted.toSeq) == before,
+            "a failed land must leave the index as it was")
+        }
+        land(i) // the stream (re-)delivers the batch
+      }
+      (spark.read.parquet(s"$root/out").collect().map(_.toString).sorted.toSeq,
+        vectors(s"$root/idx").collect().map(_.toString).sorted.toSeq)
+    }
+    val crashFree = run(tmpDir("sretr_landfail_ref"), None)
+    assert(run(tmpDir("sretr_landfail"), Some(1)) == crashFree)
+    assert(crashFree._2.size == 13, "the index holds the corpus and each batch once")
+  }
+
+  test("an index root in the pre-manifest layout is refused by every verb, naming it") {
+    val root = tmpDir("sretr_old")
+    val idx = s"$root/idx"
+    Seq((1L, Seq(1.0, 0.0, 0.0, 0.0), 0, -1L)).toDF("n_id", "n_vec", "__cell", "batch_id")
+      .write.parquet(s"$idx/vectors@g0")
+    Seq((0, Seq(1.0, 0.0, 0.0, 0.0))).toDF("cell", "vec").write.parquet(s"$idx/meta@g0")
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(idx, "_gen.e0"))
+    Seq((100L, "alpha beta")).toDF("doc_id", "text").write.parquet(s"$root/in")
+    def files: Seq[String] = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
+      try walk.iterator().asScala.map(_.toString).toSeq.sorted finally walk.close()
+    }
+    val before = files
+    val corpus = Seq((1L, Seq(1.0, 0.0, 0.0, 0.0))).toDF("n_id", "n_vec")
+    val verbs = Seq[() => Any](
+      () => StreamingRetrieval.bootstrapIndex(Similarity.ivfAssign(corpus, "n_vec", cents), cents, idx),
+      () => StreamingRetrieval.landAndIndexBatch(Seq((100L, "alpha beta")).toDF("doc_id", "text"), 0L, idx,
+        "doc_id", "text", 4, 1, 3, s"$root/out"),
+      () => StreamingRetrieval.optimizeIndex(spark, idx, k = 2),
+      () => StreamingRetrieval.readIndex(spark, idx),
+      () => StreamingRetrieval.readCentroids(spark, idx),
+      () => StreamingRetrieval.startIndexed(
+        spark.readStream.schema("doc_id LONG, text STRING").parquet(s"$root/in"), idx,
+        "doc_id", "text", 4, 1, 3, s"$root/out", s"$root/ckpt"))
+    verbs.foreach { verb =>
+      val e = intercept[IllegalArgumentException](verb())
+      assert(e.getMessage.contains(idx) && e.getMessage.contains("pre-manifest layout"), e.getMessage)
+    }
+    assert(files == before, "a refused root must be left as it was")
   }
 }
